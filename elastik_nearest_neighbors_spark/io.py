@@ -62,6 +62,16 @@ def fs_isdir(spark: SparkSession, path: str) -> bool:
     return os.path.isdir(path)
 
 
+def fs_list(spark: SparkSession, path: str) -> list[str]:
+    """Names of a directory's entries ([] if it is absent), any scheme."""
+    if is_uri(path):
+        fs, hpath = _hadoop_fs(spark, path)
+        if not fs.exists(hpath):
+            return []
+        return [st.getPath().getName() for st in fs.listStatus(hpath)]
+    return os.listdir(path) if os.path.isdir(path) else []
+
+
 def fs_delete(spark: SparkSession, path: str) -> None:
     """Recursive delete, silent if absent — the upsert ops' emptied-partition
     removal, portable to object stores (shutil.rmtree would no-op against

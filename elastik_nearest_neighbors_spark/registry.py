@@ -325,9 +325,9 @@ _ORACLES: dict[str, Callable[[str], str]] = {
     "graph_delete": oracles_vector.graph_delete,
     "graph_rebuild": oracles_vector.graph_rebuild,
     "ivfpq_upsert": oracles_vector.ivfpq_upsert,
-    # the HTTP wire round-trip is bit-identical to the in-memory search
+    # the HTTP wire round-trip over the partition-pruned store is
+    # bit-identical to the in-memory search (both keys, one server)
     "aknn_http_search": oracles_vector.ann_search_lsh,
-    # ... and so is the partition-pruned store-backed serving mode
     "aknn_http_search_store": oracles_vector.ann_search_lsh,
     # wire replace-on-index ≡ a full rebuild on the updated table — the
     # same contract (and oracle) as the batch index_upsert

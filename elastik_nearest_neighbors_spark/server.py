@@ -33,8 +33,9 @@ parameter names and document field names, using only the Python stdlib
   DELETE /{index}/{id} (r12) → remove one stored document (200
       "deleted" / 404 "not_found" — ES delete-by-id parity); bulk form
       POST /_aknn_delete {"_index": ..., "ids": [...]} → {"deleted": n}.
-      Store mode patches only the doomed ids' term/docs directories
-      (knn.index_delete's pruned-dynamic-overwrite pattern).
+      Only the doomed ids' term/docs directories are patched
+      (knn.index_delete's pruned-dynamic-overwrite pattern). Deleting the
+      last doc leaves an empty index: searches answer 200 with zero hits.
 
   DELETE /{index} (r12) → drop the whole index (ES delete-index), and
       the recovery path for a torn index (see below).
@@ -50,55 +51,49 @@ parameter names and document field names, using only the Python stdlib
       (measured on the 200k-vector step-up — BASELINE.md r12).
 
 Every mutation runs under a per-index dirty marker: parquet has no
-transaction log, so a crash mid-commit could leave a half-overwritten
-flat dir or mutually-inconsistent docs/ and terms/ — the marker turns
-that into a DETECTED state (search and further mutations answer 503
-TornIndexError; DELETE /{index} + re-index recovers) instead of silent
-recall loss.
+transaction log, so a crash mid-commit could leave mutually-inconsistent
+docs/ and terms/ — the marker turns that into a DETECTED state (search
+and further mutations answer 503 TornIndexError; DELETE /{index} +
+re-index recovers) instead of silent recall loss. An index that was never
+written answers 404 index_not_found, like ES.
 
 Deployment shape: the server is a DRIVER-side facade — each request plans
 a Spark job over the parquet-backed index (candidate generation is the
-broadcast hash join; the corpus never shuffles per query). Two store
-layouts behind the SAME wire protocol, selected by a constructor flag
-(r10 verdict item 2 — previously the pruned mode was promised in prose
-only):
+broadcast hash join; the corpus never shuffles per query). Every index is
+stored in ONE layout, the partition-pruned store — the reference's
+keyword-field term index re-expressed as parquet directories:
+`/_aknn_index` writes the hashed docs under `docs/` partitioned by
+id_bucket = pmod(xxhash64(_id), n) (doc-by-id lookup prunes to ONE
+directory) and the exploded terms under `terms/` partitioned by
+(tbl, bucket = pmod(hash, n)) — exactly sources.index_store's layout,
+read back through its load_lsh_partitions. A search touches ≤ T of the
+T·n_buckets term directories plus one docs directory; only the
+≤ k1-candidate re-rank gather reads the docs table un-pruned (the same
+shape the gated batch ann_search_lsh_store pays). tests/test_server.py
+asserts the PartitionFilters in the served plan.
 
-- flat (default): one parquet dir per index; every search scans it.
-  Right for small indexes — zero layout overhead.
-- store_backed=True: the 100 TB layout. `/_aknn_index` appends the
-  hashed docs under `docs/` partitioned by id_bucket =
-  pmod(xxhash64(_id), n) (doc-by-id lookup prunes to ONE directory) and
-  the exploded terms under `terms/` partitioned by
-  (tbl, bucket = pmod(hash, n)) — exactly sources.index_store's layout,
-  read back through its load_lsh_partitions. A search touches ≤ T of
-  the T·n_buckets term directories plus one docs directory; only the
-  ≤ k1-candidate re-rank gather reads the docs table un-pruned (the
-  same shape the gated batch ann_search_lsh_store pays).
-  tests/test_server.py asserts the PartitionFilters in the served plan.
-
-Registry entries `aknn_http_search` (flat) and `aknn_http_search_store`
-(pruned) drive all three endpoints over a real localhost socket and gate
-the round-trip against the shared ann_search_lsh oracle.
+Registry entries `aknn_http_search` and `aknn_http_search_store` drive
+all three endpoints over a real localhost socket (one shared server) and
+gate the round-trip against the shared ann_search_lsh oracle.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .api import (
-    ID_FIELD,
-    VECTOR_FIELD,
-    AknnModelRegistry,
-    aknn_index,
-    aknn_search,
-)
+from .api import ID_FIELD, VECTOR_FIELD, AknnModelRegistry, aknn_index
 from .constants import ANN_K1, ANN_K2, LSH_BITS, LSH_TABLES
+
+# stored-doc cache entries across all indexes (FIFO): a scan over many
+# distinct ids can't grow it unboundedly
+DOC_CACHE_ENTRIES = 4096
 
 
 def _refresh_bulk_rows() -> int:
@@ -118,6 +113,16 @@ class TornIndexError(RuntimeError):
     index (DELETE /{index}) and re-index."""
 
 
+class IndexNotFoundError(LookupError):
+    """The index has no stored docs (never indexed, or dropped); mapped to
+    HTTP 404 index_not_found, ES's answer, naming the index — never the
+    server's storage path."""
+
+    def __init__(self, index: str):
+        super().__init__(f"no such index [{index}]")
+        self.index = index
+
+
 class AknnHttpServer:
     """Three-endpoint EsAknn server over a SparkSession.
 
@@ -128,30 +133,26 @@ class AknnHttpServer:
     driver behind a load balancer, each replica reading the same store).
     """
 
-    def __init__(self, spark: SparkSession, root: str, store_backed: bool = False):
+    def __init__(self, spark: SparkSession, root: str, store_backed: bool = True):
+        # the partition-pruned store is the only layout; the flag is still
+        # accepted because existing callers pass store_backed=True
+        if not store_backed:
+            raise ValueError("the partition-pruned store is the only index layout")
         self.spark = spark
         self.root = root
-        self.store_backed = store_backed
         self.registry = AknnModelRegistry(os.path.join(root, "models"))
         # per-index docs/terms DataFrames, invalidated on append: a
         # DataFrame's FileIndex snapshots the directory listing, so reusing
         # one across searches skips the per-request re-list + footer read
-        # of the partitioned stores (measured ~2× per-search latency in
-        # store mode). Searches prune the SNAPSHOT via PartitionFilters —
-        # for a long-lived server this is the right 100 TB trade: one
-        # listing amortized over every request, versus load_lsh_partitions'
+        # of the partitioned stores (measured ~2× per-search latency).
+        # Searches prune the SNAPSHOT via PartitionFilters — for a
+        # long-lived server this is the right 100 TB trade: one listing
+        # amortized over every request, versus load_lsh_partitions'
         # per-call explicit-directory read, which is built for one-shot
-        # batch jobs. An append makes the snapshot stale, so index() drops
+        # batch jobs. A mutation makes the snapshot stale, so _forget drops
         # the entries.
         self._docs_cache: dict[str, DataFrame] = {}
         self._terms_cache: dict[str, DataFrame] = {}
-        # base path -> parquet schema for _pruned_dirs_df: a schema-less
-        # read pays a one-task footer-inference Spark job per call, which
-        # on the msearch point-update path is pure driver latency (guide
-        # §5). Keyed by store base path; popped with the sibling caches on
-        # every mutation/drop, so a recreated index with a different
-        # mapping can never see a stale schema.
-        self._pruned_schema: dict[str, object] = {}
         # next batch_seq per index for refresh=false staging; a cache miss
         # re-derives it from the staged parquet (max+1), so staged batches
         # survive a server restart with their order intact
@@ -166,13 +167,14 @@ class AknnHttpServer:
         # staging pins from its first STAGED batch); cleared on refresh
         # (the live store takes over) and on drop_index
         self._staged_id_type: dict[str, str] = {}
-        # doc-by-id lookup cache (r12): a store-mode search is two Spark
-        # jobs — fetch the stored query doc, then rank its candidates; a
-        # repeated GET of the same doc (the ES hot-query reality) need not
-        # re-run the fetch. Invalidated per-index on every mutation,
-        # exactly like the snapshot caches; FIFO-capped so a scan over
-        # many distinct ids can't grow it unboundedly.
-        self._doc_cache: dict[tuple, list] = {}
+        # doc-by-id lookup cache (r12): a search is two Spark jobs — fetch
+        # the stored query doc, then rank its candidates; a repeated GET of
+        # the same doc (the ES hot-query reality) need not re-run the
+        # fetch. (index, id) -> stored row, or None for an id the index
+        # lacks. Invalidated per-index on every mutation, exactly like the
+        # snapshot caches; filled only by _fetch_docs, which applies the
+        # DOC_CACHE_ENTRIES cap.
+        self._doc_cache: dict[tuple, object] = {}
         # indexes with a mutation in flight (all ops serialize under the
         # lock): their own dirty marker must not trip _check_clean when a
         # snapshot cache misses mid-mutation
@@ -193,8 +195,6 @@ class AknnHttpServer:
     # ---- endpoint logic (HTTP-independent; the handler is a thin shim) ----
 
     def _index_path(self, index: str) -> str:
-        import re
-
         if not re.fullmatch(r"[A-Za-z0-9._-]+", index):
             raise ValueError(f"bad index name: {index!r}")
         return os.path.join(self.root, "indexes", index)
@@ -207,10 +207,12 @@ class AknnHttpServer:
         )
 
     def _docs_path(self, index: str) -> str:
-        """Where the (_id, _aknn_vector, hashes) doc rows live for `index` —
-        the flat dir itself, or the store layout's docs/ side."""
-        path = self._index_path(index)
-        return os.path.join(path, "docs") if self.store_backed else path
+        """Where the (_id, _aknn_vector, hashes, id_bucket) doc rows of
+        `index` live: the store's docs/ side."""
+        return os.path.join(self._index_path(index), "docs")
+
+    def _terms_path(self, index: str) -> str:
+        return os.path.join(self._index_path(index), "terms")
 
     def _stored_id_type(self, index: str) -> str | None:
         """The _id dtype already persisted for this index, or None if the
@@ -220,16 +222,13 @@ class AknnHttpServer:
         every append batch (the exact cost the caches exist to avoid).
         LIVE store only — staged (unrefreshed) batches don't count; use
         _pinned_id_type where they must."""
-        from . import io
-
         t = self._id_type_cache.get(index)
         if t is not None:
             return t
-        if index not in self._docs_cache and not io.fs_isdir(
-            self.spark, self._docs_path(index)
-        ):
+        try:
+            t = dict(self._cached_docs(index).dtypes)[ID_FIELD]
+        except IndexNotFoundError:
             return None
-        t = dict(self._cached_docs(index).dtypes)[ID_FIELD]
         self._id_type_cache[index] = t
         return t
 
@@ -307,12 +306,10 @@ class AknnHttpServer:
             # not destroy the stored doc when the incoming one is invalid
             # (wrong dimension etc. — the hash matmul fails HERE, with the
             # store untouched and the dirty marker unset)
-            hashed = aknn_index(docs, model)
-            if self.store_backed:
-                hashed = hashed.withColumn(
-                    "id_bucket",
-                    F.pmod(F.xxhash64(F.col(ID_FIELD)), F.lit(DEFAULT_HASH_BUCKETS)),
-                )
+            hashed = aknn_index(docs, model).withColumn(
+                "id_bucket",
+                F.pmod(F.xxhash64(F.col(ID_FIELD)), F.lit(DEFAULT_HASH_BUCKETS)),
+            )
             if body.get("refresh", True) is False:
                 # bulk-load path: hash + ONE narrow staging append, no
                 # store jobs; /_aknn_refresh merges. No checkpoint needed —
@@ -330,17 +327,11 @@ class AknnHttpServer:
                 # _pin_id_type may have cast an int batch onto a string-
                 # pinned index; mirror that cast on the raw posted ids
                 ids = [str(i) for i in ids]
-            self._mutate(
-                name,
-                self._replace_store if self.store_backed else self._replace_flat,
-                name,
-                ids,
-                hashed,
-            )
+            self._mutate(name, self._replace_store, name, ids, hashed)
         return {"acknowledged": True, "_index": body["_index"], "indexed": len(body["docs"])}
 
     # ---- torn-write detection (ADVICE r11): parquet has no transaction
-    # log, so a crash mid-mutation can leave a half-overwritten flat dir or
+    # log, so a crash mid-mutation can leave a half-overwritten side or
     # mutually-inconsistent docs/ and terms/. Every mutation runs under a
     # marker; a surviving marker turns silent recall loss into a refused,
     # diagnosable state. ----
@@ -365,10 +356,10 @@ class AknnHttpServer:
     def _mutate(self, index: str, fn, *args):
         """Run a store mutation under the torn-write marker: set it, run,
         clear it only on success. The marker sits OUTSIDE the data dir (a
-        flat-mode overwrite deletes the whole index dir first — a marker
-        inside it would vanish with the files it guards). Snapshot caches
-        are dropped in all cases: a failure after files were rewritten
-        must not leave them pointing at deleted parquet."""
+        bulk merge swaps whole docs/ and terms/ sides — a marker inside
+        them would vanish with the files it guards). Snapshot caches are
+        dropped in all cases: a failure after files were rewritten must
+        not leave them pointing at deleted parquet."""
         from . import io
 
         self._check_clean(index)
@@ -379,14 +370,17 @@ class AknnHttpServer:
             out = fn(*args)
         finally:
             self._mutating.discard(index)
-            self._docs_cache.pop(index, None)
-            self._terms_cache.pop(index, None)
-            for k in [k for k in self._pruned_schema if self._index_path(index) in k]:
-                del self._pruned_schema[k]
-            for k in [k for k in self._doc_cache if k[0] == index]:
-                del self._doc_cache[k]
+            self._forget(index)
         io.fs_delete(self.spark, marker)
         return out
+
+    def _forget(self, index: str) -> None:
+        """Drop what a mutation of `index` made stale: its snapshot caches
+        and its doc-cache entries (keys match `index` exactly)."""
+        self._docs_cache.pop(index, None)
+        self._terms_cache.pop(index, None)
+        for k in [k for k in self._doc_cache if k[0] == index]:
+            del self._doc_cache[k]
 
     def _ids_df(self, ids: list, id_type: str) -> DataFrame:
         return self.spark.createDataFrame([(i,) for i in ids], f"{ID_FIELD} {id_type}")
@@ -411,41 +405,10 @@ class AknnHttpServer:
                 dirs.append(d)
         if not dirs:
             return None
-        schema = self._pruned_schema.get(base)
-        reader = self.spark.read.option("basePath", base)
-        if schema is not None:
-            reader = reader.schema(schema)
-        df = reader.parquet(*dirs)
-        if schema is None:
-            self._pruned_schema[base] = df.schema
-        return df
-
-    def _replace_flat(self, index: str, ids: list, hashed: DataFrame) -> None:
-        """Flat-mode replace-on-index, FUSED (r12): one overwrite writes
-        survivors ∪ new batch, so the stored doc has no absent window
-        between a purge and an append (r11 purged then appended — two
-        writes and a crash between them lost the old doc for good; now a
-        crash leaves either the old dir or a detected-dirty one). An
-        all-new batch stays a plain append."""
-        path = self._index_path(index)
-        if self._stored_id_type(index) is None:
-            hashed.write.mode("append").parquet(path)
-            return
-        ids_df = self._ids_df(ids, dict(hashed.dtypes)[ID_FIELD])
-        existing = self._cached_docs(index)
-        doomed = existing.join(F.broadcast(ids_df), ID_FIELD, "left_semi")
-        if not doomed.limit(1).count():
-            hashed.write.mode("append").parquet(path)
-            return
-        patched = (
-            existing.join(F.broadcast(ids_df), ID_FIELD, "left_anti")
-            .unionByName(hashed)
-            .localCheckpoint()
-        )
-        patched.write.mode("overwrite").parquet(path)
+        return self.spark.read.option("basePath", base).parquet(*dirs)
 
     def _replace_store(self, index: str, ids: list, hashed: DataFrame) -> None:
-        """Store-mode replace-on-index, FUSED purge+append (r12): each
+        """Replace-on-index, FUSED purge+append (r12): each
         side (terms/, docs/) transitions old→new in ONE pruned dynamic
         overwrite carrying survivors ∪ new rows, instead of r11's purge
         overwrite followed by an append — fewer Spark jobs per request
@@ -461,7 +424,6 @@ class AknnHttpServer:
         )
 
         n = DEFAULT_HASH_BUCKETS
-        path = self._index_path(index)
         if self._stored_id_type(index) is None:
             self._append_store(index, hashed)
             return
@@ -476,7 +438,7 @@ class AknnHttpServer:
         # read exactly those via explicit paths (no store-wide listing;
         # see _pruned_dirs_df)
         pruned = self._pruned_dirs_df(
-            os.path.join(path, "docs"), ["id_bucket"], buckets
+            self._docs_path(index), ["id_bucket"], buckets
         )
         if pruned is None:
             self._append_store(index, hashed)
@@ -502,7 +464,7 @@ class AknnHttpServer:
         # the dynamic overwrite would drop them. Explicit-dir read of the
         # touched dirs only (the partition_key_filter predicate stays on
         # top as the correctness guard, same as load_lsh_partitions).
-        terms = self._pruned_dirs_df(os.path.join(path, "terms"), ["tbl", "bucket"], touched)
+        terms = self._pruned_dirs_df(self._terms_path(index), ["tbl", "bucket"], touched)
         new_terms = explode_hashes(
             hashed.select(ID_FIELD, "hashes"), ID_FIELD, "vec_id"
         ).select(
@@ -532,7 +494,7 @@ class AknnHttpServer:
         # the emptied-dir sweep stays ON unless the new parts cover it
         pruned_dynamic_overwrite(
             self.spark,
-            os.path.join(path, "terms"),
+            self._terms_path(index),
             live_terms,
             ["tbl", "bucket"],
             touched,
@@ -549,32 +511,15 @@ class AknnHttpServer:
         )
         pruned_dynamic_overwrite(
             self.spark,
-            os.path.join(path, "docs"),
+            self._docs_path(index),
             live_docs,
             ["id_bucket"],
             buckets,
             assume_live=True,
         )
 
-    def _replace_flat_bulk(self, index: str, latest: DataFrame) -> None:
-        """Flat-mode whole-corpus merge for bulk refreshes: survivors via
-        a distributed anti-join against the staged-id DATAFRAME (no
-        broadcast of an O(corpus) id set), one overwrite."""
-        path = self._index_path(index)
-        if self._stored_id_type(index) is None:
-            latest.write.mode("overwrite").parquet(path)
-            return
-        ids_df = latest.select(ID_FIELD)
-        patched = (
-            self._cached_docs(index)
-            .join(ids_df, ID_FIELD, "left_anti")
-            .unionByName(latest)
-            .localCheckpoint()
-        )
-        patched.write.mode("overwrite").parquet(path)
-
     def _replace_store_bulk(self, index: str, latest: DataFrame) -> None:
-        """Store-mode whole-store merge for bulk refreshes (r13, ADVICE
+        """Whole-store merge for bulk refreshes (r13, ADVICE
         r12): when the staged batch is corpus-sized, per-id pruning is
         pointless (it touches ~every directory anyway) and collecting the
         staged ids/hashes driver-side is O(corpus) driver memory. Merge
@@ -589,7 +534,6 @@ class AknnHttpServer:
         from .sources.index_store import DEFAULT_HASH_BUCKETS, clustered_overwrite_swap
 
         n = DEFAULT_HASH_BUCKETS
-        path = self._index_path(index)
         new_terms = explode_hashes(
             latest.select(ID_FIELD, "hashes"), ID_FIELD, "vec_id"
         ).select(
@@ -628,17 +572,17 @@ class AknnHttpServer:
                 .unionByName(new_terms)
             )
         clustered_overwrite_swap(
-            self.spark, os.path.join(path, "docs"), live_docs, ["id_bucket"]
+            self.spark, self._docs_path(index), live_docs, ["id_bucket"]
         )
         clustered_overwrite_swap(
-            self.spark, os.path.join(path, "terms"), live_terms, ["tbl", "bucket"]
+            self.spark, self._terms_path(index), live_terms, ["tbl", "bucket"]
         )
 
     # ---- refresh=false staging + /_aknn_refresh (r12, ES NRT parity):
     # staged batches are hashed but NOT searchable/deletable until refresh
     # — exactly ES's near-real-time contract. Staging lives OUTSIDE the
     # data dir ('#' is outside the legal index-name alphabet, like the
-    # dirty marker) so flat-mode reads and overwrites never see it. ----
+    # dirty marker) so store reads and bulk swaps never see it. ----
 
     def _staging_path(self, index: str) -> str:
         return os.path.join(self.root, "indexes", f"{index}#staging")
@@ -687,30 +631,19 @@ class AknnHttpServer:
             if n_staged > _refresh_bulk_rows():
                 # corpus-sized merge (r13, ADVICE r12): never collect the
                 # staged ids — distributed anti-join + clustered swap
-                def _merge_bulk() -> None:
-                    (
-                        self._replace_store_bulk
-                        if self.store_backed
-                        else self._replace_flat_bulk
-                    )(index, latest)
-                    io.fs_delete(self.spark, path)
-
-                self._mutate(index, _merge_bulk)
-                self._staging_seq.pop(index, None)
-                self._staged_id_type.pop(index, None)
-                return {"_index": index, "refreshed": True, "merged": n_staged}
-            ids = [r[0] for r in latest.select(ID_FIELD).collect()]
+                replace, args = self._replace_store_bulk, (index, latest)
+            else:
+                ids = [r[0] for r in latest.select(ID_FIELD).collect()]
+                replace, args = self._replace_store, (index, ids, latest)
 
             def _merge() -> None:
-                (self._replace_store if self.store_backed else self._replace_flat)(
-                    index, ids, latest
-                )
+                replace(*args)
                 io.fs_delete(self.spark, path)
 
             self._mutate(index, _merge)
             self._staging_seq.pop(index, None)
             self._staged_id_type.pop(index, None)
-            return {"_index": index, "refreshed": True, "merged": len(ids)}
+            return {"_index": index, "refreshed": True, "merged": n_staged}
 
     def compact(self, index: str) -> dict:
         """POST /_aknn_compact — rewrite the index's accumulated append
@@ -721,25 +654,21 @@ class AknnHttpServer:
         serving drives). Runs compact_in_place on docs/ (by id_bucket)
         and terms/ (by (tbl, bucket)) under the torn-write marker; served
         rows are unchanged — same content, same partition values, fewer
-        files — so the gated results are identical by construction. Flat
-        mode stores are a single overwrite layout already: acknowledged,
-        nothing to do."""
-        from . import io
+        files — so the gated results are identical by construction."""
         from .sources.index_store import compact_in_place
 
         with self._lock:
-            if not io.fs_isdir(self.spark, self._docs_path(index)):
-                raise ValueError(f"no such index: {index!r}")
-            if not self.store_backed:
-                return {"_index": index, "acknowledged": True, "compacted": False}
+            # _cached_docs raises IndexNotFoundError for an unknown index
+            sides = [
+                (self._docs_path(index), ["id_bucket"], self._cached_docs(index).schema),
+                (self._terms_path(index), ["tbl", "bucket"], self._cached_terms(index).schema),
+            ]
 
             def _run() -> None:
-                compact_in_place(self.spark, self._docs_path(index), ["id_bucket"])
-                compact_in_place(
-                    self.spark,
-                    os.path.join(self._index_path(index), "terms"),
-                    ["tbl", "bucket"],
-                )
+                for path, part_cols, schema in sides:
+                    compact_in_place(self.spark, path, part_cols)
+                    # an index emptied by deletes compacts to no files
+                    self._keep_schema(path, part_cols, schema)
 
             self._mutate(index, _run)
             return {"_index": index, "acknowledged": True, "compacted": True}
@@ -748,45 +677,18 @@ class AknnHttpServer:
         """Bulk document delete — ES DELETE-parity (r11 verdict item 1):
         the purge half of replace-on-index with no append, shared by the
         single-doc DELETE /{index}/{id} endpoint and the bulk POST
-        /_aknn_delete. Ids are coerced to the index's pinned _id type (a
-        non-numeric id cannot exist in a bigint-pinned index — it counts
-        as not-found, like any unknown doc). Returns the number of stored
-        docs actually removed (0 → HTTP 404 at the wire)."""
+        /_aknn_delete. Ids go through _coerce_ids (an id that cannot exist
+        under the index's pinned _id type counts as not-found, like any
+        unknown doc). Returns the number of stored docs actually removed
+        (0 → HTTP 404 at the wire)."""
         with self._lock:
             pinned = self._stored_id_type(index)
             if pinned is None:
                 return 0
-            ids = []
-            for i in raw_ids:
-                if pinned == "string":
-                    ids.append(str(i))
-                else:
-                    try:
-                        ids.append(int(i))
-                    except (TypeError, ValueError):
-                        pass
+            ids = self._coerce_ids(pinned, raw_ids)
             if not ids:
                 return 0
-            return self._mutate(
-                index,
-                self._delete_store if self.store_backed else self._delete_flat,
-                index,
-                ids,
-                pinned,
-            )
-
-    def _delete_flat(self, index: str, ids: list, id_type: str) -> int:
-        existing = self._cached_docs(index)
-        ids_df = self._ids_df(ids, id_type)
-        n_doomed = existing.join(F.broadcast(ids_df), ID_FIELD, "left_semi").count()
-        if not n_doomed:
-            return 0
-        survivors = existing.join(
-            F.broadcast(ids_df), ID_FIELD, "left_anti"
-        ).localCheckpoint()
-        # deleting the last doc leaves a legal empty (schema-only) dir
-        survivors.write.mode("overwrite").parquet(self._index_path(index))
-        return n_doomed
+            return self._mutate(index, self._delete_store, index, ids, pinned)
 
     def _delete_store(self, index: str, ids: list, id_type: str) -> int:
         """knn.index_delete's pattern behind the wire: the doomed ids'
@@ -800,7 +702,6 @@ class AknnHttpServer:
         )
 
         n = DEFAULT_HASH_BUCKETS
-        path = self._index_path(index)
         ids_df = self._ids_df(ids, id_type)
         buckets = [
             int(r.id_bucket)
@@ -814,7 +715,7 @@ class AknnHttpServer:
         # doomed ids can only live in their own id_bucket dirs, and the
         # doomed terms only in the stored hashes' (tbl, bucket) dirs
         pruned = self._pruned_dirs_df(
-            os.path.join(path, "docs"), ["id_bucket"], buckets
+            self._docs_path(index), ["id_bucket"], buckets
         )
         if pruned is None:
             return 0
@@ -830,7 +731,7 @@ class AknnHttpServer:
         )
         doomed_buckets = sorted({int(r.id_bucket) for r in doomed_rows})
         terms = self._pruned_dirs_df(
-            os.path.join(path, "terms"), ["tbl", "bucket"], doomed_parts
+            self._terms_path(index), ["tbl", "bucket"], doomed_parts
         )
         if terms is not None:
             live_terms = (
@@ -843,15 +744,44 @@ class AknnHttpServer:
                 )
             )
             pruned_dynamic_overwrite(
-                self.spark, os.path.join(path, "terms"), live_terms, ["tbl", "bucket"], doomed_parts
+                self.spark, self._terms_path(index), live_terms, ["tbl", "bucket"], doomed_parts
             )
         live_docs = pruned.where(F.col("id_bucket").isin(doomed_buckets)).join(
             F.broadcast(ids_df), ID_FIELD, "left_anti"
         )
         pruned_dynamic_overwrite(
-            self.spark, os.path.join(path, "docs"), live_docs, ["id_bucket"], doomed_buckets
+            self.spark, self._docs_path(index), live_docs, ["id_bucket"], doomed_buckets
         )
+        self._keep_schema(self._docs_path(index), ["id_bucket"], pruned.schema)
+        if terms is not None:
+            self._keep_schema(self._terms_path(index), ["tbl", "bucket"], terms.schema)
         return len(doomed_rows)
+
+    def _keep_schema(self, path: str, part_cols: list[str], schema) -> None:
+        """Spark infers a store side's schema from its parquet files. A
+        side whose last row was deleted has no partition directory left,
+        so every later read would fail UNABLE_TO_INFER_SCHEMA, and after a
+        restart the pinned _id type would be lost. Keep a zero-row file
+        under the all-zero partition directory instead: the emptied index
+        answers searches with 200 and zero hits, and keeps its _id type.
+        (The purge removes emptied leaf directories only, so a terms/ side
+        can keep empty tbl= parents: look for a full-depth leaf.)"""
+        from . import io
+
+        leaves = [path]
+        for c in part_cols:
+            leaves = [
+                io.fs_join(d, e)
+                for d in leaves
+                for e in io.fs_list(self.spark, d)
+                if e.startswith(f"{c}=")
+            ]
+        if leaves:
+            return
+        empty = self.spark.createDataFrame([], schema).drop(*part_cols)
+        empty.write.mode("overwrite").parquet(
+            io.fs_join(path, *[f"{c}=0" for c in part_cols])
+        )
 
     def drop_index(self, index: str) -> bool:
         """DELETE /{index} — ES's delete-index, and the documented recovery
@@ -865,15 +795,10 @@ class AknnHttpServer:
             io.fs_delete(self.spark, path)
             io.fs_delete(self.spark, self._dirty_marker(index))
             io.fs_delete(self.spark, self._staging_path(index))
+            self._forget(index)
             self._staging_seq.pop(index, None)
             self._staged_id_type.pop(index, None)
             self._id_type_cache.pop(index, None)
-            self._docs_cache.pop(index, None)
-            self._terms_cache.pop(index, None)
-            for k in [k for k in self._pruned_schema if self._index_path(index) in k]:
-                del self._pruned_schema[k]
-            for k in [k for k in self._doc_cache if k[0] == index]:
-                del self._doc_cache[k]
         return existed
 
     def _append_store(self, index: str, hashed: DataFrame) -> None:
@@ -889,12 +814,11 @@ class AknnHttpServer:
         from .operators.lsh import explode_hashes
         from .sources.index_store import DEFAULT_HASH_BUCKETS, clustered
 
-        path = self._index_path(index)
         (
             clustered(hashed, "id_bucket")
             .write.mode("append")
             .partitionBy("id_bucket")
-            .parquet(os.path.join(path, "docs"))
+            .parquet(self._docs_path(index))
         )
         terms = explode_hashes(
             hashed.select(ID_FIELD, "hashes"), ID_FIELD, "vec_id"
@@ -903,17 +827,22 @@ class AknnHttpServer:
             clustered(terms, "tbl", "bucket")
             .write.mode("append")
             .partitionBy("tbl", "bucket")
-            .parquet(os.path.join(path, "terms"))
+            .parquet(self._terms_path(index))
         )
 
     def _cached_docs(self, index: str) -> DataFrame:
+        from . import io
+
         df = self._docs_cache.get(index)
         if df is None:
             # cache miss is the one per-mutation re-entry point (every
             # mutation pops the caches), so the torn-write check here
             # covers all serving paths at zero cost to cached requests
             self._check_clean(index)
-            df = self.spark.read.parquet(self._docs_path(index))
+            path = self._docs_path(index)
+            if not io.fs_isdir(self.spark, path):
+                raise IndexNotFoundError(index)
+            df = self.spark.read.parquet(path)
             self._docs_cache[index] = df
         return df
 
@@ -921,47 +850,74 @@ class AknnHttpServer:
         df = self._terms_cache.get(index)
         if df is None:
             self._check_clean(index)
-            df = self.spark.read.parquet(os.path.join(self._index_path(index), "terms"))
+            df = self.spark.read.parquet(self._terms_path(index))
             self._terms_cache[index] = df
         return df
 
-    def _query_doc_df(self, index: str, doc_id) -> DataFrame:
-        """The stored query doc, read from its SINGLE id_bucket directory:
-        xxhash64(lit) constant-folds, so the bucket predicate lands in the
-        scan's PartitionFilters (asserted by tests/test_server.py). The lit
-        is cast to the pinned id type — xxhash64 is type-sensitive, so an
-        int literal probing a bigint-written bucket column must hash as
+    def _coerce_ids(self, id_type: str, doc_ids: list) -> list:
+        """The one wire-id coercion rule: `doc_ids` in the index's pinned
+        _id type, in request order. A string-pinned index takes str(id)
+        (an int id posted to it was stored as its string, see
+        _pin_id_type). A bigint-pinned index takes only ints and integer
+        strings in range; any other id (non-numeric, a JSON 1.5 or true)
+        cannot exist there and is dropped, so it reads as not-found
+        instead of being truncated onto another doc."""
+        if id_type == "string":
+            return [str(d) for d in doc_ids]
+        out = []
+        for d in doc_ids:
+            if isinstance(d, str) and re.fullmatch(r"-?[0-9]+", d):
+                d = int(d)
+            if type(d) is int and -(2**63) <= d < 2**63:
+                out.append(d)
+        return out
+
+    def _fetch_df(self, index: str, ids: list) -> DataFrame:
+        """The stored docs of the (coerced, non-empty) `ids`, read from
+        their id_bucket directories only: per id (id_bucket ==
+        pmod(xxhash64(lit), n)) & (_id == lit), OR-ed. xxhash64 of a
+        literal constant-folds, so the scan's PartitionFilters see only
+        literal bucket equalities (asserted by tests/test_server.py). The
+        literal is cast to the pinned id type — xxhash64 is type-sensitive,
+        so an int probing a bigint-written bucket column must hash as
         bigint."""
         from .sources.index_store import DEFAULT_HASH_BUCKETS
 
         docs = self._cached_docs(index)
-        qlit = F.lit(doc_id).cast(dict(docs.dtypes)[ID_FIELD])
-        return docs.where(
-            (F.col("id_bucket") == F.pmod(F.xxhash64(qlit), F.lit(DEFAULT_HASH_BUCKETS)))
-            & (F.col(ID_FIELD) == qlit)
-        )
+        id_type = dict(docs.dtypes)[ID_FIELD]
+        pred = None
+        for d in ids:
+            qlit = F.lit(d).cast(id_type)
+            c = (
+                F.col("id_bucket") == F.pmod(F.xxhash64(qlit), F.lit(DEFAULT_HASH_BUCKETS))
+            ) & (F.col(ID_FIELD) == qlit)
+            pred = c if pred is None else pred | c
+        return docs.where(pred)
 
-    def _coerce_ids(self, id_type: str, doc_ids: list) -> list:
-        """Wire ids coerced to the pinned id type; a non-numeric id probing
-        a bigint-pinned index cannot exist there — it keeps the 200 /
-        zero-hits contract and is simply dropped from the Spark-side
-        batch (the response builder emits its empty hit list)."""
-        if id_type != "bigint":
-            return list(doc_ids)
-        out = []
-        for d in doc_ids:
-            try:
-                out.append(int(d))
-            except ValueError:
-                continue
+    def _fetch_docs(self, index: str, ids: list) -> dict:
+        """id -> stored row, or None where the index lacks the id, for the
+        coerced `ids`: cache hits first, then ONE pruned read (_fetch_df)
+        for every miss. The only writer of _doc_cache, so the FIFO cap is
+        applied here."""
+        out = {d: self._doc_cache[(index, d)] for d in ids if (index, d) in self._doc_cache}
+        missing = [d for d in dict.fromkeys(ids) if d not in out]
+        if missing:
+            got = dict.fromkeys(missing)
+            for r in self._fetch_df(index, missing).collect():
+                got[r[ID_FIELD]] = r
+            for d, r in got.items():
+                if len(self._doc_cache) >= DOC_CACHE_ENTRIES:
+                    self._doc_cache.pop(next(iter(self._doc_cache)))
+                self._doc_cache[(index, d)] = r
+            out.update(got)
         return out
 
-    def _msearch_store(self, index: str, doc_ids: list, k1: int, k2: int) -> DataFrame:
-        """The pruned serving read (store_backed mode) for a BATCH of query
-        ids, returned BEFORE the collect so tests can assert its physical
-        plan: the query docs come from their ≤ |batch| id_bucket
-        directories (xxhash64(lit) folds per id to a literal
-        PartitionFilter, OR-ed), candidates from the ≤ Q·T probed
+    def _msearch_df(self, index: str, ids: list, k1: int, k2: int) -> DataFrame | None:
+        """The pruned serving read for a BATCH of (coerced) query ids,
+        returned BEFORE the collect so tests can assert its physical plan;
+        None when no id is stored (every response is then a 200 with zero
+        hits). The query docs come from their ≤ |batch| id_bucket
+        directories (_fetch_docs), candidates from the ≤ Q·T probed
         (tbl, bucket) term directories of the cached terms snapshot; only
         the ≤ Q·k1 re-rank vector gather touches docs/ un-pruned.
 
@@ -971,39 +927,14 @@ class AknnHttpServer:
         each, and per-query results are bit-identical to the single-id
         path because every rank window partitions by query_id."""
         from .operators.knn import rank_term_matches
-        from .sources.index_store import DEFAULT_HASH_BUCKETS
+        from .sources.index_store import DEFAULT_HASH_BUCKETS, partition_key_filter
 
         n = DEFAULT_HASH_BUCKETS
         docs = self._cached_docs(index)
         id_type = dict(docs.dtypes)[ID_FIELD]
-        empty = f"query_id {id_type}, neighbor_id {id_type}, n_match bigint, distance double"
-        ids = self._coerce_ids(id_type, doc_ids)
-        missing = [d for d in ids if (index, d) not in self._doc_cache]
-        if missing:
-            # ONE pruned read for every cache miss: OR of the single-id
-            # shape (id_bucket == folded-literal) & (id == literal), so
-            # partition pruning still sees only literal bucket equalities
-            pred = None
-            for d in missing:
-                qlit = F.lit(d).cast(id_type)
-                c = (
-                    F.col("id_bucket")
-                    == F.pmod(F.xxhash64(qlit), F.lit(DEFAULT_HASH_BUCKETS))
-                ) & (F.col(ID_FIELD) == qlit)
-                pred = c if pred is None else pred | c
-            got: dict = {d: [] for d in missing}
-            for r in docs.where(pred).collect():
-                got[r[ID_FIELD]].append(r)
-            for d in missing:
-                if len(self._doc_cache) >= 4096:  # FIFO cap
-                    self._doc_cache.pop(next(iter(self._doc_cache)))
-                self._doc_cache[(index, d)] = got[d]
-        found = [(d, self._doc_cache[(index, d)][0]) for d in ids if self._doc_cache[(index, d)]]
+        found = [(d, q) for d, q in self._fetch_docs(index, ids).items() if q is not None]
         if not found:
-            # wire-protocol parity with flat mode: an unknown doc id is a
-            # 200 with zero hits there (aknn_search over an empty query
-            # set), so the pruned layout must not turn it into a 400
-            return self.spark.createDataFrame([], empty)
+            return None
         q_exp = self.spark.createDataFrame(
             [(d, t, int(h)) for d, q in found for t, h in enumerate(q["hashes"])],
             f"query_id {id_type}, tbl int, hash bigint",
@@ -1015,8 +946,6 @@ class AknnHttpServer:
         # buckets. (r13: was an OR-of-literals tree — building that
         # ~Q·T-way Column tree cost seconds of py4j round-trips per
         # msearch batch at T=16; packed IN is one expression.)
-        from .sources.index_store import partition_key_filter
-
         pairs = sorted({(t, int(h) % n) for _d, q in found for t, h in enumerate(q["hashes"])})
         idx_exp = (
             self._cached_terms(index)
@@ -1037,32 +966,17 @@ class AknnHttpServer:
             counts, docs, query_df, k1, k2, ID_FIELD, VECTOR_FIELD
         )
 
-    def _search_store(self, index: str, doc_id, k1: int, k2: int) -> DataFrame:
-        """Single-id form of _msearch_store (kept as the plan-contract
-        surface tests/test_server.py asserts on)."""
-        return self._msearch_store(index, [doc_id], k1, k2)
-
     def msearch(self, index: str, doc_ids: list, k1: int = ANN_K1, k2: int = ANN_K2) -> dict:
         """Batched search — ES `_msearch` parity, JSON-body form: one
         response per requested id, in request order, each identical to the
         single-id GET's payload. Q queries cost ONE ranked-collect job
         (plus one batched stored-doc fetch on cache miss) instead of Q."""
         with self._lock:
-            rows = []
             id_type = dict(self._cached_docs(index).dtypes)[ID_FIELD]
-            if self.store_backed:
-                ranked = self._msearch_store(index, doc_ids, k1, k2)
-            else:
-                coerced = self._coerce_ids(id_type, doc_ids)
-                ranked = (
-                    aknn_search(self._cached_docs(index), coerced, k1, k2)
-                    if coerced
-                    else None
-                )
-            if ranked is not None:
-                rows = ranked.orderBy(
-                    F.asc("query_id"), F.asc("distance"), F.asc("neighbor_id")
-                ).collect()
+            ranked = self._msearch_df(index, self._coerce_ids(id_type, doc_ids), k1, k2)
+            rows = [] if ranked is None else ranked.orderBy(
+                F.asc("query_id"), F.asc("distance"), F.asc("neighbor_id")
+            ).collect()
         by_qid: dict = {}
         for r in rows:
             by_qid.setdefault(r.query_id, []).append(r)
@@ -1089,39 +1003,22 @@ class AknnHttpServer:
 
     def get_doc(self, index: str, doc_id) -> dict | None:
         """ES GET /{index}/{id} parity (r13, #163): the stored document's
-        source vector, or None → the handler's 404. Store mode reads the
-        id's single pruned id_bucket directory through the same per-id
-        cache the serving path warms; flat mode filters the cached
-        snapshot. JSON round-trips the doubles exactly, so the wire doc
-        equals the stored doc bit-for-bit."""
+        source vector, or None → the handler's 404. Reads the id's single
+        pruned id_bucket directory through the same per-id cache the
+        serving path warms (_fetch_docs). JSON round-trips the doubles
+        exactly, so the wire doc equals the stored doc bit-for-bit."""
         with self._lock:
-            docs = self._cached_docs(index)
-            id_type = dict(docs.dtypes)[ID_FIELD]
+            id_type = dict(self._cached_docs(index).dtypes)[ID_FIELD]
             ids = self._coerce_ids(id_type, [doc_id])
-            if not ids:
-                return None
-            d = ids[0]
-            if self.store_backed:
-                ck = (index, d)
-                qrows = self._doc_cache.get(ck)
-                if qrows is None:
-                    qrows = self._query_doc_df(index, d).collect()
-                    if len(self._doc_cache) >= 4096:  # FIFO cap
-                        self._doc_cache.pop(next(iter(self._doc_cache)))
-                    self._doc_cache[ck] = qrows
-            else:
-                qrows = docs.where(
-                    F.col(ID_FIELD) == F.lit(d).cast(id_type)
-                ).collect()
-            if not qrows:
-                return None
-            q = qrows[0]
-            return {
-                "_index": index,
-                "_id": q[ID_FIELD],
-                "found": True,
-                "_source": {VECTOR_FIELD: list(q[VECTOR_FIELD])},
-            }
+            q = self._fetch_docs(index, ids)[ids[0]] if ids else None
+        if q is None:
+            return None
+        return {
+            "_index": index,
+            "_id": q[ID_FIELD],
+            "found": True,
+            "_source": {VECTOR_FIELD: list(q[VECTOR_FIELD])},
+        }
 
     def models(self) -> dict:
         return {"models": self.registry.names()}
@@ -1139,6 +1036,24 @@ def _make_handler(server: AknnHttpServer):
             self.send_header("Content-Length", str(len(body)))
             self.end_headers()
             self.wfile.write(body)
+
+        def _fail(self, exc: Exception) -> None:
+            if isinstance(exc, IndexNotFoundError):
+                # ES's index_not_found shape: names the index, not a path
+                self._reply(
+                    404,
+                    {
+                        "error": {
+                            "type": "index_not_found_exception",
+                            "reason": str(exc),
+                            "index": exc.index,
+                        },
+                        "status": 404,
+                    },
+                )
+            else:
+                code = 503 if isinstance(exc, TornIndexError) else 400
+                self._reply(code, {"error": f"{type(exc).__name__}: {exc}"})
 
         def _body(self) -> dict:
             n = int(self.headers.get("Content-Length", "0"))
@@ -1177,10 +1092,8 @@ def _make_handler(server: AknnHttpServer):
                     )
                 else:
                     self._reply(404, {"error": f"no such endpoint: {self.path}"})
-            except TornIndexError as exc:
-                self._reply(503, {"error": f"{type(exc).__name__}: {exc}"})
             except Exception as exc:  # noqa: BLE001 — wire boundary
-                self._reply(400, {"error": f"{type(exc).__name__}: {exc}"})
+                self._fail(exc)
 
         def do_GET(self) -> None:
             try:
@@ -1213,10 +1126,8 @@ def _make_handler(server: AknnHttpServer):
                         self._reply(200, doc)
                 else:
                     self._reply(404, {"error": f"no such endpoint: {self.path}"})
-            except TornIndexError as exc:
-                self._reply(503, {"error": f"{type(exc).__name__}: {exc}"})
             except Exception as exc:  # noqa: BLE001 — wire boundary
-                self._reply(400, {"error": f"{type(exc).__name__}: {exc}"})
+                self._fail(exc)
 
         def do_DELETE(self) -> None:
             # ES wire parity: DELETE /{index} drops the index (also the
@@ -1239,15 +1150,13 @@ def _make_handler(server: AknnHttpServer):
                     )
                 else:
                     self._reply(404, {"error": f"no such endpoint: {self.path}"})
-            except TornIndexError as exc:
-                self._reply(503, {"error": f"{type(exc).__name__}: {exc}"})
             except Exception as exc:  # noqa: BLE001 — wire boundary
-                self._reply(400, {"error": f"{type(exc).__name__}: {exc}"})
+                self._fail(exc)
 
     return Handler
 
 
-# server + indexed store, once per (SparkContext, sf_dir, mode) — the
+# server + indexed store, once per (SparkContext, sf_dir, tag) — the
 # facade's create+index phase is index MAINTENANCE; repeat calls measure
 # serving
 _SERVER_CACHE: dict[tuple, AknnHttpServer] = {}
@@ -1282,23 +1191,25 @@ def aknn_http_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry (SURVEY §2 #156): the three HTTP endpoints driven
     over a real localhost socket — model fit via POST /_aknn_create (the
     canonical 2·T·B sample posted in the body), the full embeddings table
-    POSTed through /_aknn_index in batches, and the canonical query ids
-    searched via GET /{index}/{id}/_aknn_search — then the JSON hit lists
-    reassembled into the (query_id, neighbor_id, n_match, distance)
-    frame. Gated by the shared ann_search_lsh oracle: the wire round-trip
-    (JSON floats both directions — exact, shortest-repr) must be
-    bit-identical to the in-memory search path."""
-    return _drive_endpoints(spark, sf_dir, store_backed=False)
+    POSTed through /_aknn_index in batches into the partition-pruned
+    store, and the canonical query ids searched in one POST
+    /{index}/_aknn_msearch — then the JSON hit lists reassembled into the
+    (query_id, neighbor_id, n_match, distance) frame. Gated by the shared
+    ann_search_lsh oracle: the wire round-trip (JSON floats both
+    directions — exact, shortest-repr) must be bit-identical to the
+    in-memory search path. Reads the same built server as
+    aknn_http_search_store (shared _SERVER_CACHE entry, no second
+    index load)."""
+    return _drive_endpoints(spark, sf_dir)
 
 
 def aknn_http_search_store(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Registry entry (SURVEY §2 #157, r11): the SAME three endpoints and
-    the same wire payloads served from the partition-pruned store layout
-    (store_backed=True — docs/ by id_bucket, terms/ by (tbl, bucket)).
-    Gated by the same shared ann_search_lsh oracle as the flat-mode twin:
-    the pruned serving path must be bit-identical to the in-memory search,
-    proving the 100 TB layout is lossless behind an unchanged protocol."""
-    return _drive_endpoints(spark, sf_dir, store_backed=True)
+    """Registry entry (SURVEY §2 #157, r11): the same drive as
+    aknn_http_search over the same server — docs/ by id_bucket, terms/ by
+    (tbl, bucket). Gated by the same shared ann_search_lsh oracle: the
+    pruned serving path must be bit-identical to the in-memory search,
+    proving the 100 TB layout is lossless behind the wire protocol."""
+    return _drive_endpoints(spark, sf_dir)
 
 
 def aknn_http_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1306,7 +1217,7 @@ def aknn_http_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics over the wire. An ES index op with an existing _id replaces
     the stored document — so `/_aknn_index` purges incoming ids from the
     store before appending (pruned dynamic overwrite of the ≤ |batch|
-    docs directories and the doomed ids' term directories in store mode).
+    docs directories and the doomed ids' term directories).
     The drive posts the full table, then RE-POSTS the canonical update set
     (vec_id % UPSERT_MOD == 0, every component doubled — IEEE-exact, and
     JSON round-trips doubles exactly) through the same endpoint against
@@ -1328,9 +1239,7 @@ def aknn_http_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             if d[ID_FIELD] % UPSERT_MOD == 0
         ]
 
-    return _drive_endpoints(
-        spark, sf_dir, store_backed=True, tag="upsert", repost=update
-    )
+    return _drive_endpoints(spark, sf_dir, tag="upsert", repost=update)
 
 
 def aknn_http_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1341,7 +1250,7 @@ def aknn_http_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     the canonical purge set (vec_id % DELETE_MOD == DELETE_REM) over the
     wire via POST /_aknn_delete — the single-doc DELETE /{index}/{id}
     endpoint runs the same delete_ids path with 200 deleted / 404
-    not_found semantics, unit-tested both modes — then searches every
+    not_found semantics, unit-tested — then searches every
     canonical query id. Gated by the shared index_delete oracle: the wire
     purge must equal a full rebuild on the filtered corpus; a purged QUERY
     id returns zero hits (unknown-id semantics) and so contributes no rows
@@ -1358,7 +1267,7 @@ def aknn_http_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"wire delete removed {out['deleted']} of {len(doomed)} docs"
             )
 
-    return _drive_endpoints(spark, sf_dir, store_backed=True, tag="delete", mutate=purge)
+    return _drive_endpoints(spark, sf_dir, tag="delete", mutate=purge)
 
 
 def aknn_http_doc_get(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1376,7 +1285,7 @@ def aknn_http_doc_get(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .constants import N_QUERIES
 
-    srv = _ensure_server(spark, sf_dir, store_backed=True)
+    srv = _ensure_server(spark, sf_dir)
     rows = []
     for qid in range(N_QUERIES):
         res = _http_get(srv.port, f"/vectors/{qid}")
@@ -1404,35 +1313,30 @@ def aknn_http_bulk_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle like the other serving keys: searches over the bulk-loaded
     store must be bit-identical to the in-memory search path, so a doc
     lost (or duplicated) anywhere in stage → merge fails the hash gate."""
-    return _drive_endpoints(spark, sf_dir, store_backed=True, tag="bulk", bulk=True)
+    return _drive_endpoints(spark, sf_dir, tag="bulk", bulk=True)
 
 
 def _ensure_server(
     spark: SparkSession,
     sf_dir: str,
-    store_backed: bool,
     tag: str | None = None,
     repost=None,
     mutate=None,
     bulk: bool = False,
 ) -> AknnHttpServer:
     """Build (or reuse from _SERVER_CACHE) the drive server for one
-    (mode, tag) — create + index + optional mutate + compact. Split out
+    tag — create + index + optional mutate + compact. Split out
     of _drive_endpoints (r13) so non-search drives (doc GET) share the
     same built store instead of paying a second load."""
     from . import io
     from .session import configure
 
     configure(spark)
-    key = (spark.sparkContext.applicationId, sf_dir, store_backed, tag)
+    key = (spark.sparkContext.applicationId, sf_dir, tag)
     srv = _SERVER_CACHE.get(key)
     if srv is None:
-        kind = f"aknn_http_{tag}" if tag else (
-            "aknn_http_store" if store_backed else "aknn_http"
-        )
-        srv = AknnHttpServer(
-            spark, io.scratch_dir(kind, sf_dir), store_backed=store_backed
-        ).start()
+        kind = f"aknn_http_{tag}" if tag else "aknn_http_store"
+        srv = AknnHttpServer(spark, io.scratch_dir(kind, sf_dir)).start()
         try:
             emb = io.table(spark, sf_dir, "embeddings", widen=True)
             docs = [
@@ -1453,13 +1357,12 @@ def _ensure_server(
                 _http_post(srv.port, "/_aknn_refresh", {"_index": "vectors"})
             if mutate is not None:
                 mutate(srv.port, docs)
-            if store_backed:
-                # r13: close the maintenance loop the r12 verdict flagged —
-                # the batched appends (and any purge/replace churn) leave
-                # one file per touched directory per request; a real
-                # operator compacts after a load, so the drives do too.
-                # Served rows are unchanged (same oracle gates them).
-                _http_post(srv.port, "/_aknn_compact", {"_index": "vectors"})
+            # r13: close the maintenance loop the r12 verdict flagged —
+            # the batched appends (and any purge/replace churn) leave one
+            # file per touched directory per request; a real operator
+            # compacts after a load, so the drives do too. Served rows are
+            # unchanged (same oracle gates them).
+            _http_post(srv.port, "/_aknn_compact", {"_index": "vectors"})
         except BaseException:
             # ADVICE r11: never cache a partially-built server — a same-
             # session retry would skip indexing and gate against a partial
@@ -1473,7 +1376,6 @@ def _ensure_server(
 def _drive_endpoints(
     spark: SparkSession,
     sf_dir: str,
-    store_backed: bool,
     tag: str | None = None,
     repost=None,
     mutate=None,
@@ -1481,12 +1383,12 @@ def _drive_endpoints(
 ) -> DataFrame:
     from .constants import N_QUERIES
 
-    srv = _ensure_server(spark, sf_dir, store_backed, tag, repost, mutate, bulk)
+    srv = _ensure_server(spark, sf_dir, tag, repost, mutate, bulk)
     # r13: the canonical queries go over the wire as ONE _aknn_msearch
     # request — Q queries share one ranked-collect job instead of paying
     # Q × fixed per-request driver cost (the r12 verdict's job-count
     # item); per-query payloads are identical to the per-id GET's (the
-    # endpoint is unit-tested equal both modes), so the gate is unchanged
+    # endpoint is unit-tested equal), so the gate is unchanged
     rows = []
     res = _http_post(
         srv.port,

@@ -34,6 +34,7 @@ SMOKE_KEYS = [
     "q1_pricing_summary",      # TPC-H aggregate
     "events_sessionize",       # events window family
     "multimodal_featurize",    # multimodal decode path
+    "aknn_http_search_store",  # server.py wire path over the pruned store
 ]
 
 KEYS = (

@@ -1,7 +1,9 @@
 """HTTP serving-layer contracts beyond the basic endpoint test
-(tests/test_operators.py::test_aknn_http_server_endpoints): the r11
-store-backed mode (flat vs pruned layout equivalence + PartitionFilters in
-the served plan) and the id-type pinning rule (ADVICE r10)."""
+(tests/test_operators.py::test_aknn_http_server_endpoints): the
+partition-pruned store equals the in-memory search and carries
+PartitionFilters in the served plan, the id-type pinning rule (ADVICE
+r10), replace/delete/refresh semantics, torn-write and unknown-index
+errors, and per-index cache invalidation."""
 
 from __future__ import annotations
 
@@ -10,8 +12,11 @@ import tempfile
 import urllib.error
 import urllib.request
 
+import pytest
+
 from elastik_nearest_neighbors_spark import io as eio
 from elastik_nearest_neighbors_spark import plans
+from elastik_nearest_neighbors_spark.api import aknn_index, aknn_search
 from elastik_nearest_neighbors_spark.server import AknnHttpServer, _http_get, _http_post
 from tests.conftest import SF_SMALL
 
@@ -24,14 +29,12 @@ def _sample_docs(spark, n=300):
     ]
 
 
-def _serve(spark, docs, store_backed, batches=1, sample=None):
+def _serve(spark, docs, batches=1, sample=None):
     """sample: the /_aknn_create fit docs — defaults to docs[:24], but a
     comparison server indexing MUTATED docs must fit from the SAME sample
     as its twin, or the two servers hold different LSH models and any
     result equality is a data coincidence."""
-    srv = AknnHttpServer(
-        spark, tempfile.mkdtemp(prefix="enn_http_test_"), store_backed=store_backed
-    ).start()
+    srv = AknnHttpServer(spark, tempfile.mkdtemp(prefix="enn_http_test_")).start()
     _http_post(
         srv.port,
         "/_aknn_create",
@@ -48,29 +51,54 @@ def _serve(spark, docs, store_backed, batches=1, sample=None):
     return srv
 
 
+def _reference(spark, srv, docs, qids, k1=50, k2=5):
+    """The wire response each of `qids` must get, computed by the in-memory
+    api.aknn_search over the server's own model and the same docs."""
+    frame = spark.createDataFrame(
+        [(d["_id"], d["_source"]["_aknn_vector"]) for d in docs],
+        "_id bigint, _aknn_vector array<double>",
+    )
+    indexed = aknn_index(frame, srv.registry.get("m"))
+    rows = aknn_search(indexed, qids, k1, k2).orderBy(
+        "query_id", "distance", "neighbor_id"
+    ).collect()
+    out = {q: [] for q in qids}
+    for r in rows:
+        out[r.query_id].append(
+            {"_id": r.neighbor_id, "_score": r.distance, "n_match": r.n_match}
+        )
+    return {
+        q: {"timed_out": False, "hits": {"total": len(h), "hits": h}}
+        for q, h in out.items()
+    }
+
+
 def test_http_store_mode_matches_flat_and_prunes(spark):
-    """r11 (#157): the store-backed server must return byte-identical wire
-    responses to the flat server (same model, same docs, MULTI-batch append
-    on the store side), and its serving plan must carry PartitionFilters on
-    both pruned reads (terms by (tbl, bucket), query doc by id_bucket)."""
+    """r11 (#157): the store-backed server (MULTI-batch append) must return
+    exactly the wire responses the in-memory api.aknn_search gives over the
+    same model and docs, and its serving plan must carry PartitionFilters
+    on both pruned reads (terms by (tbl, bucket), query doc by id_bucket).
+    The store is the only layout: asking for another one is an error."""
+    with pytest.raises(ValueError):
+        AknnHttpServer(spark, tempfile.mkdtemp(prefix="enn_http_test_"), store_backed=False)
     docs = _sample_docs(spark)
-    flat = _serve(spark, docs, store_backed=False)
-    store = _serve(spark, docs, store_backed=True, batches=3)
+    store = _serve(spark, docs, batches=3)
     try:
-        for qid in (docs[0]["_id"], docs[7]["_id"], docs[123]["_id"]):
-            a = _http_get(flat.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5")
-            b = _http_get(store.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5")
-            assert a == b, (qid, a, b)
+        qids = [docs[0]["_id"], docs[7]["_id"], docs[123]["_id"]]
+        want = _reference(spark, store, docs, qids)
+        for qid in qids:
+            got = _http_get(store.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5")
+            assert got == want[qid], (qid, got, want[qid])
+            assert got["hits"]["total"] == 5
         # the pruned plans: literal PartitionFilters on BOTH store reads —
         # candidate terms by (tbl, bucket), query doc by id_bucket
-        df = store._search_store("idx", docs[0]["_id"], 50, 5)
+        df = store._msearch_df("idx", [docs[0]["_id"]], 50, 5)
         pf = " ".join(plans.partition_filters(df))
         assert "tbl" in pf and "bucket" in pf, plans.formatted_plan(df)
-        qdf = store._query_doc_df("idx", docs[0]["_id"])
+        qdf = store._fetch_df("idx", [docs[0]["_id"]])
         qpf = " ".join(plans.partition_filters(qdf))
         assert "id_bucket" in qpf and "=" in qpf, plans.formatted_plan(qdf)
     finally:
-        flat.stop()
         store.stop()
 
 
@@ -87,38 +115,47 @@ def test_http_index_id_type_pinned(spark):
     """ADVICE r10: the index's FIRST batch pins the _id type. A string-id
     batch against a bigint-pinned index must 400 (not append a torn
     schema); an int-id batch against a string-pinned index is cast and
-    stays searchable."""
+    stays searchable — by GET and by msearch with JSON int ids, which
+    must answer exactly what the per-id GETs do. On a bigint-pinned index
+    a JSON 1.5 or true is not an id: zero hits, not doc 1's."""
     docs = _sample_docs(spark, n=64)
-    for store_backed in (False, True):
-        srv = _serve(spark, docs[:32], store_backed=store_backed)
+    srv = _serve(spark, docs[:32])
+    try:
+        bad = [{"_id": f"doc-{i}", "_source": d["_source"]} for i, d in enumerate(docs[32:48])]
         try:
-            bad = [{"_id": f"doc-{i}", "_source": d["_source"]} for i, d in enumerate(docs[32:48])]
-            try:
-                _post_raw(srv.port, "/_aknn_index", {"model": "m", "_index": "idx", "docs": bad})
-                raise AssertionError("expected 400 for string ids on bigint-pinned index")
-            except urllib.error.HTTPError as e:
-                assert e.code == 400
-                assert "pins _id type bigint" in _json.loads(e.read())["error"]
-            # the rejected batch must not have corrupted the store
-            res = _http_get(srv.port, f"/idx/{docs[0]['_id']}/_aknn_search?k1=50&k2=5")
-            assert res["hits"]["total"] == 5
+            _post_raw(srv.port, "/_aknn_index", {"model": "m", "_index": "idx", "docs": bad})
+            raise AssertionError("expected 400 for string ids on bigint-pinned index")
+        except urllib.error.HTTPError as e:
+            assert e.code == 400
+            assert "pins _id type bigint" in _json.loads(e.read())["error"]
+        # the rejected batch must not have corrupted the store
+        res = _http_get(srv.port, f"/idx/{docs[0]['_id']}/_aknn_search?k1=50&k2=5")
+        assert res["hits"]["total"] == 5
+        assert docs[1]["_id"] == 1
+        out = _http_post(srv.port, "/idx/_aknn_msearch", {"ids": [1.5, True, 1], "k1": 50, "k2": 5})
+        assert [r["hits"]["total"] for r in out["responses"]] == [0, 0, 5], out
 
-            # string-pinned index: first batch has a string id -> later
-            # all-int batches are cast losslessly and searchable
-            first = [dict(docs[0], _id="s-0")] + docs[1:8]
-            _http_post(srv.port, "/_aknn_index", {"model": "m", "_index": "sidx", "docs": first})
-            _http_post(srv.port, "/_aknn_index", {"model": "m", "_index": "sidx", "docs": docs[8:32]})
-            res = _http_get(srv.port, "/sidx/s-0/_aknn_search?k1=50&k2=5")
-            assert res["hits"]["total"] == 5
-            res2 = _http_get(srv.port, f"/sidx/{docs[9]['_id']}/_aknn_search?k1=50&k2=5")
-            assert res2["hits"]["total"] == 5
-        finally:
-            srv.stop()
+        # string-pinned index: first batch has a string id -> later
+        # all-int batches are cast losslessly and searchable
+        first = [dict(docs[0], _id="s-0")] + docs[1:8]
+        _http_post(srv.port, "/_aknn_index", {"model": "m", "_index": "sidx", "docs": first})
+        _http_post(srv.port, "/_aknn_index", {"model": "m", "_index": "sidx", "docs": docs[8:32]})
+        res = _http_get(srv.port, "/sidx/s-0/_aknn_search?k1=50&k2=5")
+        assert res["hits"]["total"] == 5
+        res2 = _http_get(srv.port, f"/sidx/{docs[9]['_id']}/_aknn_search?k1=50&k2=5")
+        assert res2["hits"]["total"] == 5
+        ids = [docs[9]["_id"], "s-0", docs[20]["_id"], 999999]
+        out = _http_post(srv.port, "/sidx/_aknn_msearch", {"ids": ids, "k1": 50, "k2": 5})
+        for d, r in zip(ids, out["responses"]):
+            assert r == _http_get(srv.port, f"/sidx/{d}/_aknn_search?k1=50&k2=5"), d
+        assert out["responses"][0] == res2
+    finally:
+        srv.stop()
 
 
 def test_http_index_replaces_by_id(spark):
     """r11 (#160): ES replace-on-index semantics — re-posting an _id must
-    replace the stored doc in BOTH modes, and the result must equal a
+    replace the stored doc, and the result must equal a
     fresh server indexed with the final state; within a batch the last
     occurrence wins."""
     docs = _sample_docs(spark, n=96)
@@ -128,72 +165,68 @@ def test_http_index_replaces_by_id(spark):
         for d in docs[:16]
     ]
     final = moved + docs[16:]
-    for store_backed in (False, True):
-        srv = _serve(spark, docs, store_backed=store_backed, batches=2)
-        # the reference server indexes the FINAL state but must fit its
-        # model from the same original sample as srv (review r11: fitting
-        # from `final` gives a different model, and equality would hold
-        # only by data coincidence)
-        fresh = _serve(spark, final, store_backed=store_backed, batches=2, sample=docs[:24])
-        try:
-            # re-post the moved docs; also exercise last-wins within batch
-            # (a stale copy of each doc precedes its moved version)
-            _http_post(srv.port, "/_aknn_index",
-                       {"model": "m", "_index": "idx", "docs": docs[:16] + moved})
-            for qid in (docs[0]["_id"], docs[5]["_id"], docs[40]["_id"]):
-                a = _http_get(srv.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5")
-                b = _http_get(fresh.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5")
-                assert a == b, (store_backed, qid, a, b)
-        finally:
-            srv.stop()
-            fresh.stop()
+    srv = _serve(spark, docs, batches=2)
+    # the reference server indexes the FINAL state but must fit its
+    # model from the same original sample as srv (fitting from `final`
+    # gives a different model, and equality would hold only by data
+    # coincidence)
+    fresh = _serve(spark, final, batches=2, sample=docs[:24])
+    try:
+        # re-post the moved docs; also exercise last-wins within batch
+        # (a stale copy of each doc precedes its moved version)
+        _http_post(srv.port, "/_aknn_index",
+                   {"model": "m", "_index": "idx", "docs": docs[:16] + moved})
+        for qid in (docs[0]["_id"], docs[5]["_id"], docs[40]["_id"]):
+            a = _http_get(srv.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5")
+            b = _http_get(fresh.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5")
+            assert a == b, (qid, a, b)
+    finally:
+        srv.stop()
+        fresh.stop()
 
 
 def test_http_unknown_doc_is_200_empty_in_both_modes(spark):
-    """r11: an unknown doc id must be a 200 with zero hits in BOTH modes
-    (the pruned layout previously turned it into a 400 KeyError)."""
+    """r11: an unknown doc id must be a 200 with zero hits (the pruned
+    layout once turned it into a 400 KeyError)."""
     docs = _sample_docs(spark, n=32)
-    for store_backed in (False, True):
-        srv = _serve(spark, docs, store_backed=store_backed)
-        try:
-            res = _http_get(srv.port, "/idx/999999/_aknn_search?k1=50&k2=5")
-            assert res == {"timed_out": False, "hits": {"total": 0, "hits": []}}, res
-        finally:
-            srv.stop()
+    srv = _serve(spark, docs)
+    try:
+        res = _http_get(srv.port, "/idx/999999/_aknn_search?k1=50&k2=5")
+        assert res == {"timed_out": False, "hits": {"total": 0, "hits": []}}, res
+    finally:
+        srv.stop()
 
 
 def test_http_failed_repost_preserves_stored_doc(spark):
     """r11 review: a replace must NOT destroy on failure — a re-post whose
     vector has the wrong dimension 400s with the store (and the old doc)
-    intact, in both modes."""
+    intact."""
     docs = _sample_docs(spark, n=32)
-    for store_backed in (False, True):
-        srv = _serve(spark, docs, store_backed=store_backed)
+    srv = _serve(spark, docs)
+    try:
+        before = _http_get(srv.port, f"/idx/{docs[0]['_id']}/_aknn_search?k1=50&k2=5")
+        bad = [{"_id": docs[0]["_id"], "_source": {"_aknn_vector": [1.0, 2.0]}}]
         try:
-            before = _http_get(srv.port, f"/idx/{docs[0]['_id']}/_aknn_search?k1=50&k2=5")
-            bad = [{"_id": docs[0]["_id"], "_source": {"_aknn_vector": [1.0, 2.0]}}]
-            try:
-                _post_raw(srv.port, "/_aknn_index", {"model": "m", "_index": "idx", "docs": bad})
-                raise AssertionError("expected 400 for wrong-dimension vector")
-            except urllib.error.HTTPError as e:
-                assert e.code == 400
-            after = _http_get(srv.port, f"/idx/{docs[0]['_id']}/_aknn_search?k1=50&k2=5")
-            assert after == before, (store_backed, before, after)
-        finally:
-            srv.stop()
+            _post_raw(srv.port, "/_aknn_index", {"model": "m", "_index": "idx", "docs": bad})
+            raise AssertionError("expected 400 for wrong-dimension vector")
+        except urllib.error.HTTPError as e:
+            assert e.code == 400
+        after = _http_get(srv.port, f"/idx/{docs[0]['_id']}/_aknn_search?k1=50&k2=5")
+        assert after == before, (before, after)
+    finally:
+        srv.stop()
 
 
 def test_http_non_numeric_unknown_id_is_200_empty(spark):
     """r11 review: a NON-NUMERIC unknown id on a bigint-pinned index must
     also take the 200/zero-hits path (not a 400 from int())."""
     docs = _sample_docs(spark, n=32)
-    for store_backed in (False, True):
-        srv = _serve(spark, docs, store_backed=store_backed)
-        try:
-            res = _http_get(srv.port, "/idx/not-a-number/_aknn_search?k1=50&k2=5")
-            assert res == {"timed_out": False, "hits": {"total": 0, "hits": []}}, res
-        finally:
-            srv.stop()
+    srv = _serve(spark, docs)
+    try:
+        res = _http_get(srv.port, "/idx/not-a-number/_aknn_search?k1=50&k2=5")
+        assert res == {"timed_out": False, "hits": {"total": 0, "hits": []}}, res
+    finally:
+        srv.stop()
 
 
 def _delete_raw(port, path):
@@ -204,44 +237,37 @@ def _delete_raw(port, path):
 def test_http_delete_doc_200_404_and_matches_fresh(spark):
     """r12 (#161): DELETE /{index}/{id} removes the stored doc (200
     result:deleted), a repeat or unknown id is a 404 result:not_found, and
-    post-delete searches equal a fresh server indexed without the doc —
-    in BOTH modes."""
+    post-delete searches equal a fresh server indexed without the doc."""
     docs = _sample_docs(spark, n=96)
     victim = docs[3]["_id"]
-    for store_backed in (False, True):
-        srv = _serve(spark, docs, store_backed=store_backed, batches=2)
-        fresh = _serve(
-            spark,
-            [d for d in docs if d["_id"] != victim],
-            store_backed=store_backed,
-            sample=docs[:24],
-        )
-        try:
-            res = _json.loads(_delete_raw(srv.port, f"/idx/{victim}").read())
-            assert res["result"] == "deleted", res
-            for bad in (victim, 999999, "not-a-number"):
-                try:
-                    _delete_raw(srv.port, f"/idx/{bad}")
-                    raise AssertionError(f"expected 404 deleting {bad!r}")
-                except urllib.error.HTTPError as e:
-                    assert e.code == 404
-                    assert _json.loads(e.read())["result"] == "not_found"
-            # deleted doc searches as unknown: 200 with zero hits
-            res = _http_get(srv.port, f"/idx/{victim}/_aknn_search?k1=50&k2=5")
-            assert res["hits"]["total"] == 0, res
-            # remaining corpus serves exactly like a never-indexed-it twin
-            for qid in (docs[0]["_id"], docs[40]["_id"]):
-                a = _http_get(srv.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5")
-                b = _http_get(fresh.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5")
-                assert a == b, (store_backed, qid, a, b)
-        finally:
-            srv.stop()
-            fresh.stop()
+    srv = _serve(spark, docs, batches=2)
+    fresh = _serve(spark, [d for d in docs if d["_id"] != victim], sample=docs[:24])
+    try:
+        res = _json.loads(_delete_raw(srv.port, f"/idx/{victim}").read())
+        assert res["result"] == "deleted", res
+        for bad in (victim, 999999, "not-a-number"):
+            try:
+                _delete_raw(srv.port, f"/idx/{bad}")
+                raise AssertionError(f"expected 404 deleting {bad!r}")
+            except urllib.error.HTTPError as e:
+                assert e.code == 404
+                assert _json.loads(e.read())["result"] == "not_found"
+        # deleted doc searches as unknown: 200 with zero hits
+        res = _http_get(srv.port, f"/idx/{victim}/_aknn_search?k1=50&k2=5")
+        assert res["hits"]["total"] == 0, res
+        # remaining corpus serves exactly like a never-indexed-it twin
+        for qid in (docs[0]["_id"], docs[40]["_id"]):
+            a = _http_get(srv.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5")
+            b = _http_get(fresh.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5")
+            assert a == b, (qid, a, b)
+    finally:
+        srv.stop()
+        fresh.stop()
 
 
 def test_http_bulk_delete_empties_directories(spark):
     """r12: POST /_aknn_delete purges a whole id set in one request and
-    reports the count; in store mode a docs id_bucket directory emptied by
+    reports the count; a docs id_bucket directory emptied by
     the purge is physically removed (the index_store helper's emptied-dir
     contract) while surviving buckets keep serving."""
     import os as _os
@@ -249,7 +275,7 @@ def test_http_bulk_delete_empties_directories(spark):
     from pyspark.sql import functions as F
 
     docs = _sample_docs(spark, n=64)
-    srv = _serve(spark, docs, store_backed=True, batches=2)
+    srv = _serve(spark, docs, batches=2)
     try:
         stored = srv._cached_docs("idx").select("_id", "id_bucket").collect()
         by_bucket: dict[int, list] = {}
@@ -280,39 +306,38 @@ def test_http_torn_marker_503_and_drop_recovers(spark):
     """r12 (ADVICE r11): a surviving dirty marker (crash mid-mutation) must
     turn every serving and mutating request into a DETECTED 503, not
     silently-served recall loss; DELETE /{index} is the recovery path —
-    it drops data + marker and a re-index serves again. Both modes."""
+    it drops data + marker and a re-index serves again."""
     docs = _sample_docs(spark, n=32)
-    for store_backed in (False, True):
-        srv = _serve(spark, docs, store_backed=store_backed)
-        try:
-            qid = docs[0]["_id"]
-            assert _http_get(srv.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5")["hits"]["total"] == 5
-            # simulate the crash: marker on disk, snapshot caches gone
-            # (every real mutation pops them before the marker could stay)
-            open(srv._dirty_marker("idx"), "w").close()
-            srv._docs_cache.clear()
-            srv._terms_cache.clear()
-            for req in (
-                lambda: _http_get(srv.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5"),
-                lambda: _post_raw(srv.port, "/_aknn_index", {"model": "m", "_index": "idx", "docs": docs[:4]}),
-                lambda: _delete_raw(srv.port, f"/idx/{qid}"),
-            ):
-                try:
-                    req()
-                    raise AssertionError("expected 503 on a torn index")
-                except urllib.error.HTTPError as e:
-                    assert e.code == 503, e.code
-                    assert "TornIndexError" in _json.loads(e.read())["error"]
-            # recovery: drop the index (works WHILE torn), then re-index
-            assert _json.loads(_delete_raw(srv.port, "/idx").read())["acknowledged"]
-            _http_post(srv.port, "/_aknn_index", {"model": "m", "_index": "idx", "docs": docs})
-            assert _http_get(srv.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5")["hits"]["total"] == 5
-            # a successful mutation leaves no marker behind
-            import os as _os
+    srv = _serve(spark, docs)
+    try:
+        qid = docs[0]["_id"]
+        assert _http_get(srv.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5")["hits"]["total"] == 5
+        # simulate the crash: marker on disk, snapshot caches gone
+        # (every real mutation pops them before the marker could stay)
+        open(srv._dirty_marker("idx"), "w").close()
+        srv._docs_cache.clear()
+        srv._terms_cache.clear()
+        for req in (
+            lambda: _http_get(srv.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5"),
+            lambda: _post_raw(srv.port, "/_aknn_index", {"model": "m", "_index": "idx", "docs": docs[:4]}),
+            lambda: _delete_raw(srv.port, f"/idx/{qid}"),
+        ):
+            try:
+                req()
+                raise AssertionError("expected 503 on a torn index")
+            except urllib.error.HTTPError as e:
+                assert e.code == 503, e.code
+                assert "TornIndexError" in _json.loads(e.read())["error"]
+        # recovery: drop the index (works WHILE torn), then re-index
+        assert _json.loads(_delete_raw(srv.port, "/idx").read())["acknowledged"]
+        _http_post(srv.port, "/_aknn_index", {"model": "m", "_index": "idx", "docs": docs})
+        assert _http_get(srv.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5")["hits"]["total"] == 5
+        # a successful mutation leaves no marker behind
+        import os as _os
 
-            assert not _os.path.exists(srv._dirty_marker("idx"))
-        finally:
-            srv.stop()
+        assert not _os.path.exists(srv._dirty_marker("idx"))
+    finally:
+        srv.stop()
 
 
 def test_http_bulk_ingest_stage_refresh(spark):
@@ -320,7 +345,7 @@ def test_http_bulk_ingest_stage_refresh(spark):
     (searches keep serving the pre-stage state — ES NRT), /_aknn_refresh
     merges with last-staged-occurrence-of-an-id-wins across batches, the
     merged server equals a fresh immediate-mode twin indexed with the
-    final state, and an empty refresh is a no-op. Both modes."""
+    final state, and an empty refresh is a no-op."""
     docs = _sample_docs(spark, n=96)
     moved = [
         {"_id": d["_id"],
@@ -333,34 +358,33 @@ def test_http_bulk_ingest_stage_refresh(spark):
         for d in docs[:8]
     ]
     final = moved + docs[16:]
-    for store_backed in (False, True):
-        srv = _serve(spark, docs, store_backed=store_backed, batches=2)
-        fresh = _serve(spark, final, store_backed=store_backed, batches=2, sample=docs[:24])
-        try:
-            qid = docs[0]["_id"]
-            before = _http_get(srv.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5")
-            # stage two batches: the stale versions first, the real moved
-            # versions second — refresh must apply the LATER batch
-            for batch in (stale, moved):
-                out = _http_post(
-                    srv.port,
-                    "/_aknn_index",
-                    {"model": "m", "_index": "idx", "docs": batch, "refresh": False},
-                )
-                assert out["staged"] == len(batch), out
-            # staged batches are invisible until refresh (ES NRT)
-            assert _http_get(srv.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5") == before
-            out = _http_post(srv.port, "/_aknn_refresh", {"_index": "idx"})
-            assert out["merged"] == len(moved), out
-            for q in (docs[0]["_id"], docs[5]["_id"], docs[40]["_id"]):
-                a = _http_get(srv.port, f"/idx/{q}/_aknn_search?k1=50&k2=5")
-                b = _http_get(fresh.port, f"/idx/{q}/_aknn_search?k1=50&k2=5")
-                assert a == b, (store_backed, q, a, b)
-            # nothing staged -> refresh is a cheap no-op
-            assert _http_post(srv.port, "/_aknn_refresh", {"_index": "idx"})["merged"] == 0
-        finally:
-            srv.stop()
-            fresh.stop()
+    srv = _serve(spark, docs, batches=2)
+    fresh = _serve(spark, final, batches=2, sample=docs[:24])
+    try:
+        qid = docs[0]["_id"]
+        before = _http_get(srv.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5")
+        # stage two batches: the stale versions first, the real moved
+        # versions second — refresh must apply the LATER batch
+        for batch in (stale, moved):
+            out = _http_post(
+                srv.port,
+                "/_aknn_index",
+                {"model": "m", "_index": "idx", "docs": batch, "refresh": False},
+            )
+            assert out["staged"] == len(batch), out
+        # staged batches are invisible until refresh (ES NRT)
+        assert _http_get(srv.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5") == before
+        out = _http_post(srv.port, "/_aknn_refresh", {"_index": "idx"})
+        assert out["merged"] == len(moved), out
+        for q in (docs[0]["_id"], docs[5]["_id"], docs[40]["_id"]):
+            a = _http_get(srv.port, f"/idx/{q}/_aknn_search?k1=50&k2=5")
+            b = _http_get(fresh.port, f"/idx/{q}/_aknn_search?k1=50&k2=5")
+            assert a == b, (q, a, b)
+        # nothing staged -> refresh is a cheap no-op
+        assert _http_post(srv.port, "/_aknn_refresh", {"_index": "idx"})["merged"] == 0
+    finally:
+        srv.stop()
+        fresh.stop()
 
 
 def test_http_bulk_staging_survives_restart_and_drop_clears_it(spark):
@@ -378,7 +402,7 @@ def test_http_bulk_staging_survives_restart_and_drop_clears_it(spark):
         for d in docs[:8]
     ]
     root = _tempfile.mkdtemp(prefix="enn_http_test_")
-    srv = AknnHttpServer(spark, root, store_backed=True).start()
+    srv = AknnHttpServer(spark, root).start()
     try:
         _http_post(srv.port, "/_aknn_create",
                    {"_id": "m", "nb_tables": 4, "nb_bits_per_table": 3, "docs": docs[:24]})
@@ -394,8 +418,8 @@ def test_http_bulk_staging_survives_restart_and_drop_clears_it(spark):
             assert e.code == 400
     finally:
         srv.stop()
-    srv2 = AknnHttpServer(spark, root, store_backed=True).start()
-    fresh = _serve(spark, moved + docs[8:], store_backed=True, sample=docs[:24])
+    srv2 = AknnHttpServer(spark, root).start()
+    fresh = _serve(spark, moved + docs[8:], sample=docs[:24])
     try:
         # staged AFTER the restart, must still sort after the first batch
         _http_post(srv2.port, "/_aknn_index",
@@ -430,15 +454,14 @@ def test_http_concurrent_searches_during_mutations(spark):
          "_source": {"_aknn_vector": [2.0 * x for x in d["_source"]["_aknn_vector"]]}}
         for d in docs[:8]
     ]
-    srv = _serve(spark, docs, store_backed=True, batches=2)
+    srv = _serve(spark, docs, batches=2)
     # twins for the two post-mutation states, built up front so every
     # racing response can be checked against a LINEARIZABLE state:
     # s1 = initial, s2 = after the replace, s3 = after the delete
-    mid = _serve(spark, moved + docs[8:], store_backed=True, sample=docs[:24])
+    mid = _serve(spark, moved + docs[8:], sample=docs[:24])
     post = _serve(
         spark,
         [d for d in (moved + docs[8:]) if d["_id"] != docs[9]["_id"]],
-        store_backed=True,
         sample=docs[:24],
     )
     try:
@@ -491,45 +514,45 @@ def test_http_concurrent_searches_during_mutations(spark):
 def test_http_msearch_matches_per_id_both_modes(spark):
     """r13 (the r12 verdict's job-count item): POST /{index}/_aknn_msearch
     must return, per id and in request order, exactly the per-id GET's
-    payload — in both serving modes — with unknown and non-numeric ids
-    keeping the 200/zero-hits contract inside a batch; and the batched
-    store plan must keep literal PartitionFilters on the pruned reads."""
-    from elastik_nearest_neighbors_spark import plans
-
+    payload — with unknown and non-numeric ids keeping the 200/zero-hits
+    contract inside a batch and a repeated id answered like its GET — and
+    the batched plan must keep literal PartitionFilters on the pruned
+    reads."""
     docs = _sample_docs(spark)
-    for mode in (False, True):
-        srv = _serve(spark, docs, store_backed=mode, batches=2 if mode else 1)
-        try:
-            ids = [docs[0]["_id"], 99999999, docs[7]["_id"], "zzz", docs[123]["_id"]]
-            out = _http_post(
-                srv.port, "/idx/_aknn_msearch", {"ids": ids, "k1": 50, "k2": 5}
-            )
-            assert len(out["responses"]) == len(ids)
-            for d, r in zip(ids, out["responses"]):
-                single = _http_get(srv.port, f"/idx/{d}/_aknn_search?k1=50&k2=5")
-                assert r == single, (mode, d)
-            assert out["responses"][1]["hits"]["total"] == 0
-            assert out["responses"][3]["hits"]["total"] == 0
-            assert out["responses"][0]["hits"]["total"] > 0
-            if mode:
-                df = srv._msearch_store("idx", [docs[0]["_id"], docs[7]["_id"]], 50, 5)
-                pf = " ".join(plans.partition_filters(df))
-                assert "tbl" in pf and "bucket" in pf, plans.formatted_plan(df)
-        finally:
-            srv.stop()
+    srv = _serve(spark, docs, batches=2)
+    try:
+        ids = [docs[0]["_id"], 99999999, docs[7]["_id"], "zzz", docs[123]["_id"], docs[0]["_id"]]
+        out = _http_post(
+            srv.port, "/idx/_aknn_msearch", {"ids": ids, "k1": 50, "k2": 5}
+        )
+        assert len(out["responses"]) == len(ids)
+        for d, r in zip(ids, out["responses"]):
+            single = _http_get(srv.port, f"/idx/{d}/_aknn_search?k1=50&k2=5")
+            assert r == single, d
+        assert out["responses"][1]["hits"]["total"] == 0
+        assert out["responses"][3]["hits"]["total"] == 0
+        assert out["responses"][0]["hits"]["total"] > 0
+        df = srv._msearch_df("idx", [docs[0]["_id"], docs[7]["_id"]], 50, 5)
+        pf = " ".join(plans.partition_filters(df))
+        assert "tbl" in pf and "bucket" in pf, plans.formatted_plan(df)
+        qdf = srv._fetch_df("idx", [docs[0]["_id"], docs[7]["_id"]])
+        qpf = " ".join(plans.partition_filters(qdf))
+        assert "id_bucket" in qpf, plans.formatted_plan(qdf)
+    finally:
+        srv.stop()
 
 
 def test_http_compact_shrinks_files_and_preserves_results(spark):
     """r13 (#163 wire compaction): POST /_aknn_compact must rewrite a
     multi-batch store's docs/ and terms/ into one file per partition
-    directory with byte-identical search responses, report compacted:
-    False on a flat-mode index (single-overwrite layout already), and
-    400 an unknown index."""
+    directory with search responses unchanged and equal to the in-memory
+    api.aknn_search over the same model and docs, and 404 an unknown
+    index."""
     import glob
     import os
 
     docs = _sample_docs(spark)
-    srv = _serve(spark, docs, store_backed=True, batches=5)
+    srv = _serve(spark, docs, batches=5)
     try:
         qids = [docs[0]["_id"], docs[7]["_id"], docs[123]["_id"]]
         before = [
@@ -556,27 +579,119 @@ def test_http_compact_shrinks_files_and_preserves_results(spark):
             _http_get(srv.port, f"/idx/{q}/_aknn_search?k1=50&k2=5") for q in qids
         ]
         assert before == after
+        want = _reference(spark, srv, docs, qids)
+        assert after == [want[q] for q in qids]
         try:
             _http_post(srv.port, "/_aknn_compact", {"_index": "nope"})
-            raise AssertionError("unknown index must 400")
+            raise AssertionError("unknown index must 404")
         except urllib.error.HTTPError as e:
-            assert e.code == 400
+            assert e.code == 404
     finally:
         srv.stop()
 
-    flat = _serve(spark, docs[:60], store_backed=False)
+
+def test_http_unknown_index_is_404_index_not_found(spark):
+    """ES answers a request on a missing index with 404
+    index_not_found_exception. Search, msearch, doc GET and compact must
+    do the same, and the body names the index but never the server's
+    storage path."""
+    docs = _sample_docs(spark, n=32)
+    srv = _serve(spark, docs)
     try:
-        out = _http_post(flat.port, "/_aknn_compact", {"_index": "idx"})
-        assert out["compacted"] is False
+        base = f"http://127.0.0.1:{srv.port}"
+        for req in (
+            lambda: urllib.request.urlopen(f"{base}/nope/1/_aknn_search?k1=50&k2=5"),
+            lambda: urllib.request.urlopen(f"{base}/nope/1"),
+            lambda: _post_raw(srv.port, "/nope/_aknn_msearch", {"ids": [1]}),
+            lambda: _post_raw(srv.port, "/_aknn_compact", {"_index": "nope"}),
+        ):
+            try:
+                req()
+                raise AssertionError("unknown index must 404")
+            except urllib.error.HTTPError as e:
+                assert e.code == 404
+                raw = e.read().decode()
+                body = _json.loads(raw)
+                assert body["error"]["type"] == "index_not_found_exception", body
+                assert body["error"]["index"] == "nope", body
+                assert srv.root not in raw, raw
+        # the existing index keeps serving
+        assert _http_get(srv.port, f"/idx/{docs[0]['_id']}")["found"] is True
     finally:
-        flat.stop()
+        srv.stop()
+
+
+def test_http_cache_invalidation_is_per_index(spark):
+    """A mutation or drop of index `v` must not drop index `v2`'s
+    doc-cache entries (`v` is a prefix of `v2`), and must drop its own."""
+    docs = _sample_docs(spark, n=32)
+    srv = _serve(spark, docs)
+    try:
+        for name in ("v", "v2"):
+            _http_post(srv.port, "/_aknn_index", {"model": "m", "_index": name, "docs": docs})
+            _http_get(srv.port, f"/{name}/{docs[5]['_id']}")
+        assert {("v", docs[5]["_id"]), ("v2", docs[5]["_id"])} <= set(srv._doc_cache)
+        _http_post(srv.port, "/_aknn_index", {"model": "m", "_index": "v", "docs": docs[2:4]})
+        assert ("v", docs[5]["_id"]) not in srv._doc_cache
+        assert ("v2", docs[5]["_id"]) in srv._doc_cache
+        _http_get(srv.port, f"/v/{docs[5]['_id']}")
+        _delete_raw(srv.port, "/v")
+        assert ("v", docs[5]["_id"]) not in srv._doc_cache
+        assert ("v2", docs[5]["_id"]) in srv._doc_cache
+    finally:
+        srv.stop()
+
+
+def test_http_delete_all_docs_keeps_index_searchable(spark):
+    """Deleting every doc leaves an empty index, not a broken one: search,
+    msearch and compact answer 200 with zero hits, a doc GET is a doc-level
+    404. After a restart the index keeps its pinned _id type, and a
+    re-index serves exactly like the in-memory search."""
+    docs = _sample_docs(spark, n=48)
+    srv = _serve(spark, docs, batches=2)
+    root = srv.root
+    empty = {"timed_out": False, "hits": {"total": 0, "hits": []}}
+    q = docs[0]["_id"]
+    try:
+        out = _http_post(srv.port, "/_aknn_delete", {"_index": "idx", "ids": [d["_id"] for d in docs]})
+        assert out["deleted"] == len(docs), out
+        assert _http_get(srv.port, f"/idx/{q}/_aknn_search?k1=50&k2=5") == empty
+        assert _http_post(srv.port, "/idx/_aknn_msearch", {"ids": [q, 7]}) == {
+            "responses": [empty, empty]
+        }
+        try:
+            urllib.request.urlopen(f"http://127.0.0.1:{srv.port}/idx/{q}")
+            raise AssertionError("a deleted doc must 404")
+        except urllib.error.HTTPError as e:
+            assert e.code == 404
+            assert _json.loads(e.read())["found"] is False
+        assert _http_post(srv.port, "/_aknn_compact", {"_index": "idx"})["compacted"]
+        assert _http_get(srv.port, f"/idx/{q}/_aknn_search?k1=50&k2=5") == empty
+    finally:
+        srv.stop()
+    srv = AknnHttpServer(spark, root).start()
+    try:
+        assert _http_get(srv.port, f"/idx/{q}/_aknn_search?k1=50&k2=5") == empty
+        bad = [{"_id": "s-0", "_source": docs[0]["_source"]}]
+        try:
+            _post_raw(srv.port, "/_aknn_index", {"model": "m", "_index": "idx", "docs": bad})
+            raise AssertionError("the emptied index must stay bigint-pinned")
+        except urllib.error.HTTPError as e:
+            assert e.code == 400
+        _http_post(srv.port, "/_aknn_index", {"model": "m", "_index": "idx", "docs": docs})
+        qids = [q, docs[30]["_id"]]
+        want = _reference(spark, srv, docs, qids)
+        for d in qids:
+            assert _http_get(srv.port, f"/idx/{d}/_aknn_search?k1=50&k2=5") == want[d]
+    finally:
+        srv.stop()
 
 
 def test_http_refresh_bulk_merge_path_matches_pruned(spark, monkeypatch):
     """r13 (ADVICE r12): with ENN_REFRESH_BULK_ROWS forced to 1 the
     refresh merge runs the fully distributed whole-store path (no
     driver-side id list) — wire responses must equal a fresh
-    immediate-mode twin indexed with the final state, in both modes,
+    immediate-mode twin indexed with the final state,
     including replace-of-existing + brand-new ids; and the swapped store
     lands compacted (one file per directory)."""
     import glob
@@ -595,54 +710,50 @@ def test_http_refresh_bulk_merge_path_matches_pruned(spark, monkeypatch):
     ]
     final = moved + docs[16:] + extra
     monkeypatch.setenv("ENN_REFRESH_BULK_ROWS", "1")
-    for store_backed in (False, True):
-        srv = _serve(spark, docs, store_backed=store_backed, batches=2)
-        fresh = _serve(spark, final, store_backed=store_backed, batches=2, sample=docs[:24])
-        try:
-            out = _http_post(
-                srv.port,
-                "/_aknn_index",
-                {"model": "m", "_index": "idx", "docs": moved + extra, "refresh": False},
-            )
-            assert out["staged"] == len(moved) + len(extra), out
-            out = _http_post(srv.port, "/_aknn_refresh", {"_index": "idx"})
-            assert out["merged"] == len(moved) + len(extra), out
-            for q in (docs[0]["_id"], docs[40]["_id"], extra[0]["_id"]):
-                a = _http_get(srv.port, f"/idx/{q}/_aknn_search?k1=50&k2=5")
-                b = _http_get(fresh.port, f"/idx/{q}/_aknn_search?k1=50&k2=5")
-                assert a == b, (store_backed, q, a, b)
-            if store_backed:
-                for sub in ("docs", "terms"):
-                    base = os.path.join(srv.root, "indexes", "idx", sub)
-                    for d, _s, files in os.walk(base):
-                        pq = [f for f in files if f.endswith(".parquet")]
-                        assert len(pq) <= 1, (sub, d, pq)
-        finally:
-            srv.stop()
-            fresh.stop()
+    srv = _serve(spark, docs, batches=2)
+    fresh = _serve(spark, final, batches=2, sample=docs[:24])
+    try:
+        out = _http_post(
+            srv.port,
+            "/_aknn_index",
+            {"model": "m", "_index": "idx", "docs": moved + extra, "refresh": False},
+        )
+        assert out["staged"] == len(moved) + len(extra), out
+        out = _http_post(srv.port, "/_aknn_refresh", {"_index": "idx"})
+        assert out["merged"] == len(moved) + len(extra), out
+        for q in (docs[0]["_id"], docs[40]["_id"], extra[0]["_id"]):
+            a = _http_get(srv.port, f"/idx/{q}/_aknn_search?k1=50&k2=5")
+            b = _http_get(fresh.port, f"/idx/{q}/_aknn_search?k1=50&k2=5")
+            assert a == b, (q, a, b)
+        for sub in ("docs", "terms"):
+            base = os.path.join(srv.root, "indexes", "idx", sub)
+            for d, _s, files in os.walk(base):
+                pq = [f for f in files if f.endswith(".parquet")]
+                assert len(pq) <= 1, (sub, d, pq)
+    finally:
+        srv.stop()
+        fresh.stop()
 
 
 def test_http_doc_get_200_404_both_modes(spark):
     """r13 (#163): GET /{index}/{id} returns the stored doc (found: true,
-    exact vector round-trip) and 404s an unknown or non-numeric id, in
-    both store modes."""
+    exact vector round-trip) and 404s an unknown or non-numeric id."""
     docs = _sample_docs(spark, n=48)
-    for store_backed in (False, True):
-        srv = _serve(spark, docs, store_backed=store_backed)
-        try:
-            d = docs[7]
-            res = _http_get(srv.port, f"/idx/{d['_id']}")
-            assert res["found"] is True and res["_id"] == d["_id"]
-            assert res["_source"]["_aknn_vector"] == d["_source"]["_aknn_vector"]
-            for missing in ("999999", "zzz"):
-                try:
-                    urllib.request.urlopen(f"http://127.0.0.1:{srv.port}/idx/{missing}")
-                    raise AssertionError("unknown id must 404")
-                except urllib.error.HTTPError as e:
-                    assert e.code == 404
-                    assert _json.loads(e.read())["found"] is False
-        finally:
-            srv.stop()
+    srv = _serve(spark, docs)
+    try:
+        d = docs[7]
+        res = _http_get(srv.port, f"/idx/{d['_id']}")
+        assert res["found"] is True and res["_id"] == d["_id"]
+        assert res["_source"]["_aknn_vector"] == d["_source"]["_aknn_vector"]
+        for missing in ("999999", "zzz"):
+            try:
+                urllib.request.urlopen(f"http://127.0.0.1:{srv.port}/idx/{missing}")
+                raise AssertionError("unknown id must 404")
+            except urllib.error.HTTPError as e:
+                assert e.code == 404
+                assert _json.loads(e.read())["found"] is False
+    finally:
+        srv.stop()
 
 
 def test_http_concurrent_mutations_on_different_indexes(spark):
@@ -655,9 +766,7 @@ def test_http_concurrent_mutations_on_different_indexes(spark):
     import threading as _threading
 
     docs = _sample_docs(spark, n=48)
-    srv = AknnHttpServer(
-        spark, tempfile.mkdtemp(prefix="enn_http_test_"), store_backed=True
-    ).start()
+    srv = AknnHttpServer(spark, tempfile.mkdtemp(prefix="enn_http_test_")).start()
     _http_post(srv.port, "/_aknn_create",
                {"_id": "m", "nb_tables": 4, "nb_bits_per_table": 3, "docs": docs[:24]})
     for idx in ("ia", "ib"):
@@ -669,9 +778,9 @@ def test_http_concurrent_mutations_on_different_indexes(spark):
     ]
     doomed_a, doomed_b = docs[9]["_id"], docs[11]["_id"]
     twin_a = _serve(spark, [d for d in (moved + docs[6:]) if d["_id"] != doomed_a],
-                    store_backed=True, sample=docs[:24])
+                    sample=docs[:24])
     twin_b = _serve(spark, [d for d in (moved + docs[6:]) if d["_id"] != doomed_b],
-                    store_backed=True, sample=docs[:24])
+                    sample=docs[:24])
     errors: list = []
 
     def mutate(idx, doomed):
@@ -703,8 +812,8 @@ def test_http_refresh_racing_bulk_stage(spark):
     import threading as _threading
 
     docs = _sample_docs(spark, n=48)
-    srv = _serve(spark, docs[:24], store_backed=True)
-    twin = _serve(spark, docs, store_backed=True, sample=docs[:24])
+    srv = _serve(spark, docs[:24])
+    twin = _serve(spark, docs, sample=docs[:24])
     errors: list = []
 
     def stage(batch):

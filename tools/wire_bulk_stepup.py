@@ -72,9 +72,7 @@ def main() -> None:
     ]
     report: dict = {"sf_dir": sf_dir, "n_docs": len(docs)}
 
-    bulk_srv = AknnHttpServer(
-        spark, tempfile.mkdtemp(prefix="enn_wire_bulk_"), store_backed=True
-    ).start()
+    bulk_srv = AknnHttpServer(spark, tempfile.mkdtemp(prefix="enn_wire_bulk_")).start()
     b = _load(bulk_srv.port, docs, _http_post, bulk=True)
     report["bulk_stage_s"] = b["stage_s"]
     report["bulk_refresh_s"] = b["refresh_s"]
@@ -88,9 +86,7 @@ def main() -> None:
         report["immediate_source"] = "r11 committed step-up (same corpus/batching)"
         bulk_srv.stop()
     else:
-        imm_srv = AknnHttpServer(
-            spark, tempfile.mkdtemp(prefix="enn_wire_imm_"), store_backed=True
-        ).start()
+        imm_srv = AknnHttpServer(spark, tempfile.mkdtemp(prefix="enn_wire_imm_")).start()
         report["immediate_s"] = _load(imm_srv.port, docs, _http_post, bulk=False)["total_s"]
         # both arms must serve identically before either server goes away
         qids = [docs[100]["_id"], docs[2025]["_id"], docs[77]["_id"]]

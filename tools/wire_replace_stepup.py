@@ -46,9 +46,7 @@ def main() -> None:
         {"_id": int(r.vec_id), "_source": {"_aknn_vector": list(r.embedding)}}
         for r in emb.select("vec_id", "embedding").orderBy("vec_id").collect()
     ]
-    srv = AknnHttpServer(
-        spark, tempfile.mkdtemp(prefix="enn_wire_replace_"), store_backed=True
-    ).start()
+    srv = AknnHttpServer(spark, tempfile.mkdtemp(prefix="enn_wire_replace_")).start()
     need = 2 * LSH_TABLES * LSH_BITS
     t0 = time.perf_counter()
     _http_post(srv.port, "/_aknn_create", {"_id": "m", "docs": docs[:need]})
