@@ -366,7 +366,8 @@ MEMBERS_PRUNE_MIN = 4096
 # DataFrame + clustered sibling-write swap — no driver-side id list)
 # once the staged count exceeds this. Gated SFs stage fewer rows, so the
 # oracle-gated drive keeps the pruned path; the bulk path is asserted
-# result-identical by forcing the threshold down (ENN_REFRESH_BULK_ROWS).
+# result-identical by a test that patches this constant down (the server
+# reads it at call time).
 REFRESH_BULK_ROWS = 100_000
 # Sample size for _prune_levels' level-0 center fit — the pruning
 # hierarchy's quality knob (its exactness is unconditional; see

@@ -95,12 +95,6 @@ def word_shingles(toks: Column, n: int = 3) -> Column:
     return acc
 
 
-def char_ngrams(text: Column, n: int) -> Column:
-    """Character n-gram array (positions 1..len-n+1)."""
-    idx = F.sequence(F.lit(1), F.greatest(F.length(text) - (n - 1), F.lit(0)))
-    return F.transform(idx, lambda i: text.substr(i, F.lit(n)))
-
-
 def fingerprint(toks: Column) -> Column:
     """Polynomial rolling hash over token hashes (order-sensitive)."""
     tok_h = F.transform(toks, lambda t: md5_hash60(t) % F.lit(1_000_000_007))

@@ -45,10 +45,5 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two bigint bit-signatures."""
-    return F.bit_count(a.bitwiseXOR(b))
-
-
 def rounded(c: Column, places: int = DIST_ROUND) -> Column:
     return F.round(c, places)

@@ -10,7 +10,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
 
-from . import TABLES
 from .session import configure
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -257,11 +256,3 @@ def scratch_dir(kind: str, sf_dir: str) -> str:
         _TMP_DIRS[key] = d
     return d
 
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

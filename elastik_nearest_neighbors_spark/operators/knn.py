@@ -658,7 +658,7 @@ def search_lsh_store(
     streaming-appended store (streaming/ingest.streaming_index_store), the
     compacted store, and the upserted store (which passes the UPDATED
     vector table as `emb`) — one search path, four index producers."""
-    from ..sources.index_store import DEFAULT_HASH_BUCKETS, load_lsh_partitions
+    from ..sources.index_store import load_lsh_partitions, lsh_terms
 
     canonical = emb is None
     if canonical:
@@ -666,7 +666,8 @@ def search_lsh_store(
         parts_tag = "canonical"
     model = _model_for(_emb(spark, sf_dir), sf_dir)
     queries = emb.where(F.col("vec_id") < N_QUERIES)
-    q_exp = explode_hashes(build_index(queries, model), "vec_id", "query_id")
+    q_hashed = build_index(queries, model)
+    q_exp = explode_hashes(q_hashed, "vec_id", "query_id")
     # the query batch's (tbl, bucket) set: ≤ Q·T entries, KB-sized — the
     # same justified driver-side collect as the IVF probe list
     cache_key = (
@@ -676,9 +677,8 @@ def search_lsh_store(
     if parts is None:
         parts = [
             (r.tbl, r.bucket)
-            for r in q_exp.select(
-                "tbl", F.pmod("hash", F.lit(DEFAULT_HASH_BUCKETS)).alias("bucket")
-            )
+            for r in lsh_terms(q_hashed, "vec_id")
+            .select("tbl", "bucket")
             .distinct()
             .collect()
         ]
@@ -750,12 +750,7 @@ def index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     At 100 TB this is the daily reality of an index: a delta of D changed
     vectors touches ≤ D·T directories of the T·n_buckets total."""
-    from ..sources.index_store import (
-        DEFAULT_HASH_BUCKETS,
-        partition_key_filter,
-        pruned_dynamic_overwrite,
-        save_lsh_index,
-    )
+    from ..sources.index_store import lsh_terms, patch_lsh_terms, save_lsh_index
     from ..constants import UPSERT_MOD
 
     emb = _emb(spark, sf_dir)
@@ -767,23 +762,9 @@ def index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not io.fs_exists(spark, io.fs_join(store, "_SUCCESS")):
         save_lsh_index(lsh_index(spark, sf_dir), store)
     if not io.fs_exists(spark, marker):
-        changed_old = explode_hashes(
-            build_index(emb.where(F.col("vec_id") % UPSERT_MOD == 0), model),
-            "vec_id",
-            "vec_id",
-        )
-        changed_new = explode_hashes(
-            build_index(memb.where(F.col("vec_id") % UPSERT_MOD == 0), model),
-            "vec_id",
-            "vec_id",
-        )
-        bucket = lambda df: df.select(
-            "vec_id",
-            F.col("tbl").cast("int").alias("tbl"),
-            "hash",
-            F.pmod("hash", F.lit(DEFAULT_HASH_BUCKETS)).cast("int").alias("bucket"),
-        )
-        old_b, new_b = bucket(changed_old), bucket(changed_new)
+        changed = F.col("vec_id") % UPSERT_MOD == 0
+        old_b = lsh_terms(build_index(emb.where(changed), model), "vec_id")
+        new_b = lsh_terms(build_index(memb.where(changed), model), "vec_id")
         parts = [
             (r.tbl, r.bucket)
             for r in old_b.select("tbl", "bucket")
@@ -791,17 +772,18 @@ def index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .collect()
         ]
-        # packed-key IN over the partition columns (partition_key_filter):
-        # stays a PartitionFilter without the O(dirs)-deep OR-tree that
+        # the whole-store read is narrowed by patch_lsh_terms' packed-key
+        # IN (a PartitionFilter, without the O(dirs)-deep OR-tree that
         # load_lsh_partitions' literal list would build here — a ~6% delta
-        # × T tables touches most buckets at this scale
-        existing = (
-            io.read_parquet(spark, store)
-            .where(partition_key_filter(["tbl", "bucket"], parts))
-            .select("vec_id", "tbl", "hash", "bucket")
+        # × T tables touches most buckets at this scale)
+        patch_lsh_terms(
+            spark,
+            store,
+            parts,
+            io.read_parquet(spark, store),
+            emb.where(changed).select("vec_id"),
+            new_b,
         )
-        patched = existing.where(F.col("vec_id") % UPSERT_MOD != 0).unionByName(new_b)
-        pruned_dynamic_overwrite(spark, store, patched, ["tbl", "bucket"], parts)
         io.fs_touch(spark, marker)
     # the updated table is deterministic per sf_dir, so its probe set is
     # cacheable under its own tag (repeat searches skip the collect job)
@@ -828,12 +810,7 @@ def index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (query_id, neighbor_id, n_match, distance)."""
     from ..constants import DELETE_MOD, DELETE_REM
-    from ..sources.index_store import (
-        DEFAULT_HASH_BUCKETS,
-        partition_key_filter,
-        pruned_dynamic_overwrite,
-        save_lsh_index,
-    )
+    from ..sources.index_store import lsh_terms, patch_lsh_terms, save_lsh_index
 
     emb = _emb(spark, sf_dir)
     model = _model_for(emb, sf_dir)
@@ -844,23 +821,17 @@ def index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         save_lsh_index(lsh_index(spark, sf_dir), store)
     doomed_pred = F.col("vec_id") % DELETE_MOD == DELETE_REM
     if not io.fs_exists(spark, marker):
-        doomed = explode_hashes(
-            build_index(emb.where(doomed_pred), model), "vec_id", "vec_id"
-        ).select(
-            "vec_id",
-            F.col("tbl").cast("int").alias("tbl"),
-            F.pmod("hash", F.lit(DEFAULT_HASH_BUCKETS)).cast("int").alias("bucket"),
-        )
+        doomed = lsh_terms(build_index(emb.where(doomed_pred), model), "vec_id")
         parts = [
             (r.tbl, r.bucket) for r in doomed.select("tbl", "bucket").distinct().collect()
         ]
-        existing = (
-            io.read_parquet(spark, store)
-            .where(partition_key_filter(["tbl", "bucket"], parts))
-            .select("vec_id", "tbl", "hash", "bucket")
+        patch_lsh_terms(
+            spark,
+            store,
+            parts,
+            io.read_parquet(spark, store),
+            emb.where(doomed_pred).select("vec_id"),
         )
-        patched = existing.where(~doomed_pred)
-        pruned_dynamic_overwrite(spark, store, patched, ["tbl", "bucket"], parts)
         io.fs_touch(spark, marker)
     # deterministic surviving-id query batch → cacheable probe set
     return search_lsh_store(

@@ -92,7 +92,9 @@ _QUERIES: dict[str, QueryFn] = {
     "ann_recall_graph_sweep": graph.ann_recall_graph_sweep,
     "knn_graph_multiprobe": graph.knn_graph_multiprobe,
     "bm25_doc_search": search.bm25_doc_search,
-    "hybrid_search_rrf": search.hybrid_search_rrf,
+    # promoted: its stream-append store and search_lsh_store now build the
+    # layout through index_store.lsh_terms
+    "streaming_index_store": ingest.streaming_index_store,
     # ---- GATE WINDOW BOUNDARY: the driver gates EXACTLY the first 50
     # entries (measured r3-r13: each CORRECTNESS json holds 50 keys). Keep
     # new/changed keys ABOVE this line and push an equal number below;
@@ -107,7 +109,6 @@ _QUERIES: dict[str, QueryFn] = {
     "streaming_dedup_state": ingest.streaming_dedup_state,
     "streaming_events_hourly": ingest.streaming_events_hourly,
     "streaming_index": ingest.streaming_index,
-    "streaming_index_store": ingest.streaming_index_store,
     "streaming_ann_search": ingest.streaming_ann_search,
     "streaming_graph_search": ingest.streaming_graph_search,
     "ann_recall_matryoshka": knn.ann_recall_matryoshka,
@@ -214,6 +215,9 @@ _QUERIES: dict[str, QueryFn] = {
     "ann_recall_graph_beam": graph.ann_recall_graph_beam_q,
     "bm25_doc_search_char": search.bm25_doc_search_char,
     "phrase_match": search.phrase_match,
+    # -- displaced from the r14 window by streaming_index_store (driver-
+    # green r14, its own operator unchanged since) --
+    "hybrid_search_rrf": search.hybrid_search_rrf,
 }
 
 # oracle builders: sf_dir -> SQL

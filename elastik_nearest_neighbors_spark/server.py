@@ -33,9 +33,12 @@ parameter names and document field names, using only the Python stdlib
   DELETE /{index}/{id} (r12) → remove one stored document (200
       "deleted" / 404 "not_found" — ES delete-by-id parity); bulk form
       POST /_aknn_delete {"_index": ..., "ids": [...]} → {"deleted": n}.
-      Only the doomed ids' term/docs directories are patched
-      (knn.index_delete's pruned-dynamic-overwrite pattern). Deleting the
-      last doc leaves an empty index: searches answer 200 with zero hits.
+      Replace-on-index and delete are ONE mutation path (_replace_store;
+      a delete is a replace with no new rows): only the dropped ids'
+      docs/ and terms/ directories are patched, the terms side through
+      index_store.patch_lsh_terms like knn.index_upsert/index_delete.
+      Deleting the last doc leaves an empty index: searches answer 200
+      with zero hits.
 
   DELETE /{index} (r12) → drop the whole index (ES delete-index), and
       the recovery path for a torn index (see below).
@@ -63,14 +66,14 @@ broadcast hash join; the corpus never shuffles per query). Every index is
 stored in ONE layout, the partition-pruned store — the reference's
 keyword-field term index re-expressed as parquet directories:
 `/_aknn_index` writes the hashed docs under `docs/` partitioned by
-id_bucket = pmod(xxhash64(_id), n) (doc-by-id lookup prunes to ONE
+id_bucket (index_store.doc_bucket; doc-by-id lookup prunes to ONE
 directory) and the exploded terms under `terms/` partitioned by
-(tbl, bucket = pmod(hash, n)) — exactly sources.index_store's layout,
-read back through its load_lsh_partitions. A search touches ≤ T of the
-T·n_buckets term directories plus one docs directory; only the
-≤ k1-candidate re-rank gather reads the docs table un-pruned (the same
-shape the gated batch ann_search_lsh_store pays). tests/test_server.py
-asserts the PartitionFilters in the served plan.
+(tbl, bucket) (index_store.lsh_terms) — sources.index_store owns the
+layout and its bucket count; this module never names it. A search
+touches ≤ T of the T·n_buckets term directories plus one docs
+directory; only the ≤ k1-candidate re-rank gather reads the docs table
+un-pruned (the same shape the gated batch ann_search_lsh_store pays).
+tests/test_server.py asserts the PartitionFilters in the served plan.
 
 Registry entries `aknn_http_search` and `aknn_http_search_store` drive
 all three endpoints over a real localhost socket (one shared server) and
@@ -84,26 +87,18 @@ import os
 import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import constants
 from .api import ID_FIELD, VECTOR_FIELD, AknnModelRegistry, aknn_index
 from .constants import ANN_K1, ANN_K2, LSH_BITS, LSH_TABLES
 
 # stored-doc cache entries across all indexes (FIFO): a scan over many
 # distinct ids can't grow it unboundedly
 DOC_CACHE_ENTRIES = 4096
-
-
-def _refresh_bulk_rows() -> int:
-    """Staged-row count above which /_aknn_refresh merges fully
-    distributed (constants.REFRESH_BULK_ROWS; ENN_REFRESH_BULK_ROWS lets
-    tests force the bulk path on a KB-sized staging)."""
-    from .constants import REFRESH_BULK_ROWS
-
-    env = os.environ.get("ENN_REFRESH_BULK_ROWS")
-    return int(env) if env else REFRESH_BULK_ROWS
 
 
 class TornIndexError(RuntimeError):
@@ -290,7 +285,7 @@ class AknnHttpServer:
         }
 
     def index(self, body: dict) -> dict:
-        from .sources.index_store import DEFAULT_HASH_BUCKETS
+        from .sources.index_store import doc_bucket
 
         with self._lock:
             model = self.registry.get(body["model"])
@@ -307,8 +302,7 @@ class AknnHttpServer:
             # (wrong dimension etc. — the hash matmul fails HERE, with the
             # store untouched and the dirty marker unset)
             hashed = aknn_index(docs, model).withColumn(
-                "id_bucket",
-                F.pmod(F.xxhash64(F.col(ID_FIELD)), F.lit(DEFAULT_HASH_BUCKETS)),
+                "id_bucket", doc_bucket(F.col(ID_FIELD))
             )
             if body.get("refresh", True) is False:
                 # bulk-load path: hash + ONE narrow staging append, no
@@ -407,116 +401,103 @@ class AknnHttpServer:
             return None
         return self.spark.read.option("basePath", base).parquet(*dirs)
 
-    def _replace_store(self, index: str, ids: list, hashed: DataFrame) -> None:
-        """Replace-on-index, FUSED purge+append (r12): each
-        side (terms/, docs/) transitions old→new in ONE pruned dynamic
-        overwrite carrying survivors ∪ new rows, instead of r11's purge
-        overwrite followed by an append — fewer Spark jobs per request
-        (the serving keys' cost is per-request driver overhead, r11
-        verdict) and no window where a replaced doc is absent. Bounds
-        unchanged: ≤ |batch| id_bucket docs dirs, ≤ |batch|·T (tbl,
-        bucket) term dirs (old ∪ new hashes), everything else untouched."""
-        from .operators.lsh import explode_hashes
+    def _replace_store(self, index: str, ids: list, hashed: DataFrame | None = None) -> int:
+        """The one store mutation: drop the stored docs of `ids` and add
+        `hashed`'s rows (replace-on-index and refresh), or add nothing (a
+        delete). Each side (docs/, terms/) transitions old→new in ONE
+        pruned dynamic overwrite carrying survivors ∪ new rows, so a
+        replaced doc is never absent. Bounds: ≤ |ids| id_bucket docs
+        dirs, ≤ |ids|·T (tbl, bucket) term dirs (old ∪ new hashes), and a
+        delete rewrites only the dirs that held a doomed id; everything
+        else is untouched. Returns the number of stored docs dropped."""
         from .sources.index_store import (
-            DEFAULT_HASH_BUCKETS,
-            partition_key_filter,
+            doc_bucket,
+            lsh_terms,
+            patch_lsh_terms,
             pruned_dynamic_overwrite,
+            term_part,
         )
 
-        n = DEFAULT_HASH_BUCKETS
-        if self._stored_id_type(index) is None:
+        id_type = self._stored_id_type(index)
+        if id_type is None:
             self._append_store(index, hashed)
-            return
-        # ONE collect over the checkpointed batch gives the pruning all it
-        # needs driver-side: the ids' docs buckets and the NEW hashes'
-        # term directories (≤ |batch|·T ints — no vectors)
-        brows = hashed.select("id_bucket", "hashes").collect()
-        buckets = sorted({int(r.id_bucket) for r in brows})
-        new_parts = {(t, int(h) % n) for r in brows for t, h in enumerate(r.hashes)}
-        ids_df = self._ids_df(ids, dict(hashed.dtypes)[ID_FIELD])
-        # r12: the batch's ids can only live in its own id_bucket dirs —
-        # read exactly those via explicit paths (no store-wide listing;
-        # see _pruned_dirs_df)
-        pruned = self._pruned_dirs_df(
-            self._docs_path(index), ["id_bucket"], buckets
-        )
-        if pruned is None:
-            self._append_store(index, hashed)
-            return
+            return 0
+        ids_df = self._ids_df(ids, id_type)
+        # ONE collect gives the pruning all it needs driver-side: the ids'
+        # docs buckets and the NEW hashes' term directories (≤ |ids|·T
+        # ints — no vectors). A delete's collect is a projection of a
+        # local relation, which Spark answers without a job.
+        if hashed is None:
+            new_buckets, new_parts = set(), set()
+            buckets = {
+                int(r.id_bucket)
+                for r in ids_df.select(doc_bucket(F.col(ID_FIELD)).alias("id_bucket")).collect()
+            }
+        else:
+            brows = hashed.select("id_bucket", "hashes").collect()
+            new_buckets = buckets = {int(r.id_bucket) for r in brows}
+            new_parts = {term_part(t, h) for r in brows for t, h in enumerate(r.hashes)}
+        # r12: the ids can only live in their own id_bucket dirs — read
+        # exactly those via explicit paths (no store-wide listing; see
+        # _pruned_dirs_df)
+        pruned = self._pruned_dirs_df(self._docs_path(index), ["id_bucket"], sorted(buckets))
         # the overlap probe doubles as doomed-terms discovery: the stored
-        # hashes of the replaced ids name the term dirs to patch (fused
-        # from r11's three jobs — doomed checkpoint, limit-count, parts
-        # collect)
+        # hashes of the dropped ids name the term dirs to patch
         doomed_rows = (
-            pruned.join(F.broadcast(ids_df), ID_FIELD, "left_semi")
-            .select("hashes")
+            []
+            if pruned is None
+            else pruned.join(F.broadcast(ids_df), ID_FIELD, "left_semi")
+            .select("hashes", "id_bucket")
             .collect()
         )
         if not doomed_rows:
-            self._append_store(index, hashed)
-            return
-        doomed_parts = {
-            (t, int(h) % n) for r in doomed_rows for t, h in enumerate(r.hashes)
-        }
+            if hashed is not None:
+                self._append_store(index, hashed)
+            return 0
+        doomed_parts = {term_part(t, h) for r in doomed_rows for t, h in enumerate(r.hashes)}
+        doomed_buckets = {int(r.id_bucket) for r in doomed_rows}
+        # terms side: explicit-dir read of the touched dirs only. A dir
+        # only a dropped id's old hash names can empty, so the emptied-dir
+        # sweep stays ON unless the new terms cover it.
         touched = sorted(doomed_parts | new_parts)
-        # terms side: survivors of EVERY touched dir ∪ the new batch's
-        # terms — a new-only dir must fold its existing rows in too, or
-        # the dynamic overwrite would drop them. Explicit-dir read of the
-        # touched dirs only (the partition_key_filter predicate stays on
-        # top as the correctness guard, same as load_lsh_partitions).
         terms = self._pruned_dirs_df(self._terms_path(index), ["tbl", "bucket"], touched)
-        new_terms = explode_hashes(
-            hashed.select(ID_FIELD, "hashes"), ID_FIELD, "vec_id"
-        ).select(
-            "vec_id",
-            F.col("tbl").cast("int").alias("tbl"),
-            "hash",
-            F.pmod(F.col("hash"), F.lit(n)).cast("int").alias("bucket"),
-        )
-        live_terms = new_terms
-        if terms is not None:
-            live_terms = (
-                terms.where(partition_key_filter(["tbl", "bucket"], touched))
-                .select(
-                    "vec_id",
-                    F.col("tbl").cast("int").alias("tbl"),
-                    "hash",
-                    F.col("bucket").cast("int").alias("bucket"),
-                )
-                .join(
-                    F.broadcast(ids_df.select(F.col(ID_FIELD).alias("vec_id"))),
-                    "vec_id",
-                    "left_anti",
-                )
-                .unionByName(new_terms)
-            )
-        # a doomed-only term dir (old hash no new doc shares) can empty, so
-        # the emptied-dir sweep stays ON unless the new parts cover it
-        pruned_dynamic_overwrite(
+        patch_lsh_terms(
             self.spark,
             self._terms_path(index),
-            live_terms,
-            ["tbl", "bucket"],
             touched,
+            terms,
+            ids_df,
+            None if hashed is None else lsh_terms(hashed, ID_FIELD),
             assume_live=doomed_parts <= new_parts,
         )
-        # docs side: the new rows land in exactly the probed buckets
-        # (id_bucket is a function of _id), so one overwrite covers purge
-        # and append, no touched directory can empty (assume_live), and
-        # the emptied-dir job is skipped
-        live_docs = pruned.join(F.broadcast(ids_df), ID_FIELD, "left_anti").unionByName(
-            hashed.withColumn(
-                "id_bucket", F.col("id_bucket").cast(dict(pruned.dtypes)["id_bucket"])
-            )
+        # docs side: new rows land in exactly their probed buckets
+        # (id_bucket is a function of _id), so a replace can empty no
+        # touched dir (assume_live skips the emptied-dir job); a delete
+        # rewrites only the buckets that held a doomed id
+        docs_touched = sorted(doomed_buckets | new_buckets)
+        live_docs = pruned.where(F.col("id_bucket").isin(docs_touched)).join(
+            F.broadcast(ids_df), ID_FIELD, "left_anti"
         )
+        if hashed is not None:
+            live_docs = live_docs.unionByName(
+                hashed.withColumn(
+                    "id_bucket", F.col("id_bucket").cast(dict(pruned.dtypes)["id_bucket"])
+                )
+            )
         pruned_dynamic_overwrite(
             self.spark,
             self._docs_path(index),
             live_docs,
             ["id_bucket"],
-            buckets,
-            assume_live=True,
+            docs_touched,
+            assume_live=doomed_buckets <= new_buckets,
         )
+        if hashed is None:
+            # only a delete can empty a side
+            self._keep_schema(self._docs_path(index), ["id_bucket"], pruned.schema)
+            if terms is not None:
+                self._keep_schema(self._terms_path(index), ["tbl", "bucket"], terms.schema)
+        return len(doomed_rows)
 
     def _replace_store_bulk(self, index: str, latest: DataFrame) -> None:
         """Whole-store merge for bulk refreshes (r13, ADVICE
@@ -530,18 +511,9 @@ class AknnHttpServer:
         Content is row-identical to the pruned patch path — the gated
         drive asserts it by forcing the threshold down — and the swapped
         store lands compacted (one file per directory) for free."""
-        from .operators.lsh import explode_hashes
-        from .sources.index_store import DEFAULT_HASH_BUCKETS, clustered_overwrite_swap
+        from .sources.index_store import clustered_overwrite_swap, lsh_terms
 
-        n = DEFAULT_HASH_BUCKETS
-        new_terms = explode_hashes(
-            latest.select(ID_FIELD, "hashes"), ID_FIELD, "vec_id"
-        ).select(
-            "vec_id",
-            F.col("tbl").cast("int").alias("tbl"),
-            "hash",
-            F.pmod(F.col("hash"), F.lit(n)).cast("int").alias("bucket"),
-        )
+        new_terms = lsh_terms(latest, ID_FIELD)
         if self._stored_id_type(index) is None:
             live_docs, live_terms = latest, new_terms
         else:
@@ -628,7 +600,7 @@ class AknnHttpServer:
                 .localCheckpoint(eager=True)
             )
             n_staged = latest.count()
-            if n_staged > _refresh_bulk_rows():
+            if n_staged > constants.REFRESH_BULK_ROWS:
                 # corpus-sized merge (r13, ADVICE r12): never collect the
                 # staged ids — distributed anti-join + clustered swap
                 replace, args = self._replace_store_bulk, (index, latest)
@@ -675,7 +647,7 @@ class AknnHttpServer:
 
     def delete_ids(self, index: str, raw_ids: list) -> int:
         """Bulk document delete — ES DELETE-parity (r11 verdict item 1):
-        the purge half of replace-on-index with no append, shared by the
+        replace-on-index with no new rows (_replace_store), shared by the
         single-doc DELETE /{index}/{id} endpoint and the bulk POST
         /_aknn_delete. Ids go through _coerce_ids (an id that cannot exist
         under the index's pinned _id type counts as not-found, like any
@@ -688,74 +660,7 @@ class AknnHttpServer:
             ids = self._coerce_ids(pinned, raw_ids)
             if not ids:
                 return 0
-            return self._mutate(index, self._delete_store, index, ids, pinned)
-
-    def _delete_store(self, index: str, ids: list, id_type: str) -> int:
-        """knn.index_delete's pattern behind the wire: the doomed ids'
-        stored hashes name the term dirs, their id_buckets the docs dirs;
-        both sides are patched via pruned dynamic overwrite and a
-        directory emptied by the purge is removed (index_store helper)."""
-        from .sources.index_store import (
-            DEFAULT_HASH_BUCKETS,
-            partition_key_filter,
-            pruned_dynamic_overwrite,
-        )
-
-        n = DEFAULT_HASH_BUCKETS
-        ids_df = self._ids_df(ids, id_type)
-        buckets = [
-            int(r.id_bucket)
-            for r in ids_df.select(
-                F.pmod(F.xxhash64(F.col(ID_FIELD)), F.lit(n)).alias("id_bucket")
-            )
-            .distinct()
-            .collect()
-        ]
-        # explicit-dir reads throughout (r12, see _pruned_dirs_df): the
-        # doomed ids can only live in their own id_bucket dirs, and the
-        # doomed terms only in the stored hashes' (tbl, bucket) dirs
-        pruned = self._pruned_dirs_df(
-            self._docs_path(index), ["id_bucket"], buckets
-        )
-        if pruned is None:
-            return 0
-        doomed_rows = (
-            pruned.join(F.broadcast(ids_df), ID_FIELD, "left_semi")
-            .select("hashes", "id_bucket")
-            .collect()
-        )
-        if not doomed_rows:
-            return 0
-        doomed_parts = sorted(
-            {(t, int(h) % n) for r in doomed_rows for t, h in enumerate(r.hashes)}
-        )
-        doomed_buckets = sorted({int(r.id_bucket) for r in doomed_rows})
-        terms = self._pruned_dirs_df(
-            self._terms_path(index), ["tbl", "bucket"], doomed_parts
-        )
-        if terms is not None:
-            live_terms = (
-                terms.where(partition_key_filter(["tbl", "bucket"], doomed_parts))
-                .select("vec_id", "tbl", "hash", "bucket")
-                .join(
-                    F.broadcast(ids_df.select(F.col(ID_FIELD).alias("vec_id"))),
-                    "vec_id",
-                    "left_anti",
-                )
-            )
-            pruned_dynamic_overwrite(
-                self.spark, self._terms_path(index), live_terms, ["tbl", "bucket"], doomed_parts
-            )
-        live_docs = pruned.where(F.col("id_bucket").isin(doomed_buckets)).join(
-            F.broadcast(ids_df), ID_FIELD, "left_anti"
-        )
-        pruned_dynamic_overwrite(
-            self.spark, self._docs_path(index), live_docs, ["id_bucket"], doomed_buckets
-        )
-        self._keep_schema(self._docs_path(index), ["id_bucket"], pruned.schema)
-        if terms is not None:
-            self._keep_schema(self._terms_path(index), ["tbl", "bucket"], terms.schema)
-        return len(doomed_rows)
+            return self._mutate(index, self._replace_store, index, ids)
 
     def _keep_schema(self, path: str, part_cols: list[str], schema) -> None:
         """Spark infers a store side's schema from its parquet files. A
@@ -811,8 +716,7 @@ class AknnHttpServer:
         before the checkpoint). Per-batch appends accumulate one file per
         touched directory per batch — the compaction story is
         streaming_index_compact's, unchanged."""
-        from .operators.lsh import explode_hashes
-        from .sources.index_store import DEFAULT_HASH_BUCKETS, clustered
+        from .sources.index_store import clustered, lsh_terms
 
         (
             clustered(hashed, "id_bucket")
@@ -820,11 +724,8 @@ class AknnHttpServer:
             .partitionBy("id_bucket")
             .parquet(self._docs_path(index))
         )
-        terms = explode_hashes(
-            hashed.select(ID_FIELD, "hashes"), ID_FIELD, "vec_id"
-        ).withColumn("bucket", F.pmod(F.col("hash"), F.lit(DEFAULT_HASH_BUCKETS)))
         (
-            clustered(terms, "tbl", "bucket")
+            clustered(lsh_terms(hashed, ID_FIELD), "tbl", "bucket")
             .write.mode("append")
             .partitionBy("tbl", "bucket")
             .parquet(self._terms_path(index))
@@ -875,22 +776,20 @@ class AknnHttpServer:
     def _fetch_df(self, index: str, ids: list) -> DataFrame:
         """The stored docs of the (coerced, non-empty) `ids`, read from
         their id_bucket directories only: per id (id_bucket ==
-        pmod(xxhash64(lit), n)) & (_id == lit), OR-ed. xxhash64 of a
+        doc_bucket(lit)) & (_id == lit), OR-ed. xxhash64 of a
         literal constant-folds, so the scan's PartitionFilters see only
         literal bucket equalities (asserted by tests/test_server.py). The
         literal is cast to the pinned id type — xxhash64 is type-sensitive,
         so an int probing a bigint-written bucket column must hash as
         bigint."""
-        from .sources.index_store import DEFAULT_HASH_BUCKETS
+        from .sources.index_store import doc_bucket
 
         docs = self._cached_docs(index)
         id_type = dict(docs.dtypes)[ID_FIELD]
         pred = None
         for d in ids:
             qlit = F.lit(d).cast(id_type)
-            c = (
-                F.col("id_bucket") == F.pmod(F.xxhash64(qlit), F.lit(DEFAULT_HASH_BUCKETS))
-            ) & (F.col(ID_FIELD) == qlit)
+            c = (F.col("id_bucket") == doc_bucket(qlit)) & (F.col(ID_FIELD) == qlit)
             pred = c if pred is None else pred | c
         return docs.where(pred)
 
@@ -927,9 +826,8 @@ class AknnHttpServer:
         each, and per-query results are bit-identical to the single-id
         path because every rank window partitions by query_id."""
         from .operators.knn import rank_term_matches
-        from .sources.index_store import DEFAULT_HASH_BUCKETS, partition_key_filter
+        from .sources.index_store import partition_key_filter, term_part
 
-        n = DEFAULT_HASH_BUCKETS
         docs = self._cached_docs(index)
         id_type = dict(docs.dtypes)[ID_FIELD]
         found = [(d, q) for d, q in self._fetch_docs(index, ids).items() if q is not None]
@@ -946,7 +844,7 @@ class AknnHttpServer:
         # buckets. (r13: was an OR-of-literals tree — building that
         # ~Q·T-way Column tree cost seconds of py4j round-trips per
         # msearch batch at T=16; packed IN is one expression.)
-        pairs = sorted({(t, int(h) % n) for _d, q in found for t, h in enumerate(q["hashes"])})
+        pairs = sorted({term_part(t, h) for _d, q in found for t, h in enumerate(q["hashes"])})
         idx_exp = (
             self._cached_terms(index)
             .where(partition_key_filter(["tbl", "bucket"], pairs))
@@ -970,7 +868,14 @@ class AknnHttpServer:
         """Batched search — ES `_msearch` parity, JSON-body form: one
         response per requested id, in request order, each identical to the
         single-id GET's payload. Q queries cost ONE ranked-collect job
-        (plus one batched stored-doc fetch on cache miss) instead of Q."""
+        (plus one batched stored-doc fetch on cache miss) instead of Q.
+        `doc_ids` must be a list and k1, k2 at least 1 (ValueError → 400):
+        a JSON string would otherwise be searched char by char, and a
+        non-positive k answers an empty 200 that looks like a miss."""
+        if not isinstance(doc_ids, list):
+            raise ValueError(f"ids must be a JSON list, got {type(doc_ids).__name__}")
+        if k1 < 1 or k2 < 1:
+            raise ValueError(f"k1 and k2 must be >= 1, got k1={k1}, k2={k2}")
         with self._lock:
             id_type = dict(self._cached_docs(index).dtypes)[ID_FIELD]
             ranked = self._msearch_df(index, self._coerce_ids(id_type, doc_ids), k1, k2)
@@ -1061,24 +966,25 @@ def _make_handler(server: AknnHttpServer):
 
         def do_POST(self) -> None:
             try:
-                if self.path == "/_aknn_create":
+                path = urlparse(self.path).path
+                if path == "/_aknn_create":
                     self._reply(200, server.create(self._body()))
-                elif self.path == "/_aknn_index":
+                elif path == "/_aknn_index":
                     self._reply(200, server.index(self._body()))
-                elif self.path == "/_aknn_delete":
+                elif path == "/_aknn_delete":
                     body = self._body()
                     n = server.delete_ids(body["_index"], body["ids"])
                     self._reply(200, {"_index": body["_index"], "deleted": n})
-                elif self.path == "/_aknn_refresh":
+                elif path == "/_aknn_refresh":
                     self._reply(200, server.refresh(self._body()["_index"]))
-                elif self.path == "/_aknn_compact":
+                elif path == "/_aknn_compact":
                     self._reply(200, server.compact(self._body()["_index"]))
-                elif self.path.endswith("/_aknn_msearch"):
+                elif path.endswith("/_aknn_msearch"):
                     # ES _msearch parity (JSON-body form): POST
                     # /{index}/_aknn_msearch {"ids": [...], "k1":, "k2":}
-                    parts = [p for p in self.path.split("/") if p]
+                    parts = [p for p in path.split("/") if p]
                     if len(parts) != 2:
-                        self._reply(404, {"error": f"no such endpoint: {self.path}"})
+                        self._reply(404, {"error": f"no such endpoint: {path}"})
                         return
                     body = self._body()
                     self._reply(
@@ -1091,14 +997,12 @@ def _make_handler(server: AknnHttpServer):
                         ),
                     )
                 else:
-                    self._reply(404, {"error": f"no such endpoint: {self.path}"})
+                    self._reply(404, {"error": f"no such endpoint: {path}"})
             except Exception as exc:  # noqa: BLE001 — wire boundary
                 self._fail(exc)
 
         def do_GET(self) -> None:
             try:
-                from urllib.parse import parse_qs, urlparse
-
                 parsed = urlparse(self.path)
                 parts = [p for p in parsed.path.split("/") if p]
                 if parsed.path == "/_aknn_models":
@@ -1125,7 +1029,7 @@ def _make_handler(server: AknnHttpServer):
                     else:
                         self._reply(200, doc)
                 else:
-                    self._reply(404, {"error": f"no such endpoint: {self.path}"})
+                    self._reply(404, {"error": f"no such endpoint: {parsed.path}"})
             except Exception as exc:  # noqa: BLE001 — wire boundary
                 self._fail(exc)
 
@@ -1134,7 +1038,8 @@ def _make_handler(server: AknnHttpServer):
             # torn-write recovery path); DELETE /{index}/{id} deletes one
             # document with 200 deleted / 404 not_found semantics
             try:
-                parts = [p for p in self.path.split("/") if p]
+                path = urlparse(self.path).path
+                parts = [p for p in path.split("/") if p]
                 if len(parts) == 1:
                     found = server.drop_index(parts[0])
                     self._reply(200 if found else 404, {"acknowledged": found})
@@ -1149,7 +1054,7 @@ def _make_handler(server: AknnHttpServer):
                         },
                     )
                 else:
-                    self._reply(404, {"error": f"no such endpoint: {self.path}"})
+                    self._reply(404, {"error": f"no such endpoint: {path}"})
             except Exception as exc:  # noqa: BLE001 — wire boundary
                 self._fail(exc)
 

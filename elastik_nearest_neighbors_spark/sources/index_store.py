@@ -7,9 +7,16 @@ parquet layout whose *directory partitioning* carries the pruning:
 - LSH: exploded (vec_id, tbl, hash) written partitioned by
   (tbl, bucket = pmod(hash, n_buckets)). A search that term-matches one
   (tbl, hash) pair touches exactly one directory — the scan's
-  PartitionFilters prune everything else without reading a footer.
+  PartitionFilters prune everything else without reading a footer. The
+  HTTP server's docs/ side is partitioned by
+  id_bucket = pmod(xxhash64(_id), n_buckets).
 - IVF: (vec_id, list_id) partitioned by list_id; probing nprobe of nlist
   lists reads nprobe/nlist of the data.
+
+This module is the one reader of the LSH bucket count
+(DEFAULT_HASH_BUCKETS): every other module builds the layout through
+doc_bucket, lsh_terms and term_part, and patches a term store through
+patch_lsh_terms, so a different bucket count is a change here alone.
 
 `bucket` is a *directory-count cap*, not a hash table: at nlist/n_buckets
 directories the layout stays listable at 100 TB while still pruning ~1/n of
@@ -23,9 +30,7 @@ filters; tests assert the pruning shows up in the physical plan
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 DEFAULT_HASH_BUCKETS = 64
@@ -36,6 +41,36 @@ DEFAULT_HASH_BUCKETS = 64
 # trailing key column here is a *directory-count cap* (DEFAULT_HASH_BUCKETS /
 # GRAPH_EDGE_BUCKETS / nlist), orders of magnitude below the radix.
 PACKED_KEY_RADIX = 100_000
+
+
+def doc_bucket(id_col: Column) -> Column:
+    """The docs/ directory (id_bucket) of an _id. xxhash64 is type-
+    sensitive: `id_col` must carry the index's pinned _id type. Over a
+    literal it constant-folds, so a lookup stays a literal PartitionFilter."""
+    return F.pmod(F.xxhash64(id_col), F.lit(DEFAULT_HASH_BUCKETS))
+
+
+def _term_bucket(hash_col: Column) -> Column:
+    return F.pmod(hash_col, F.lit(DEFAULT_HASH_BUCKETS))
+
+
+def lsh_terms(hashed: DataFrame, id_col: str) -> DataFrame:
+    """The (vec_id, tbl int, hash, bucket int) term rows of a hashed frame
+    (`id_col`, hashes[T]) — what the terms/ store holds per doc."""
+    from ..operators.lsh import explode_hashes
+
+    return explode_hashes(hashed, id_col, "vec_id").select(
+        "vec_id",
+        F.col("tbl").cast("int").alias("tbl"),
+        "hash",
+        _term_bucket(F.col("hash")).cast("int").alias("bucket"),
+    )
+
+
+def term_part(tbl: int, hash_val: int) -> tuple[int, int]:
+    """The (tbl, bucket) directory of one driver-side term (Python's % is
+    non-negative for a positive modulus, like pmod)."""
+    return int(tbl), int(hash_val) % DEFAULT_HASH_BUCKETS
 
 
 def clustered(df: DataFrame, *part_cols: str) -> DataFrame:
@@ -94,10 +129,11 @@ def pruned_dynamic_overwrite(
     touched,
     assume_live: bool = False,
 ) -> None:
-    """The shared patch-in-place tail used by every index-maintenance op
-    (knn.index_upsert/index_delete, ivf.ivf_upsert/ivf_delete,
-    pq.ivfpq_upsert/ivfpq_delete, graph._purge_edges, server._purge_ids —
-    seven hand-synced copies before r12; this is the single implementation).
+    """The shared patch-in-place tail used by every index-maintenance op:
+    patch_lsh_terms (the HTTP server's replace and delete,
+    knn.index_upsert, knn.index_delete), the server's docs/ side,
+    ivf.ivf_upsert/ivf_delete, pq.ivfpq_upsert/ivfpq_delete and
+    graph._purge_edges.
 
     `patched` holds the surviving/replacement rows of ONLY the `touched`
     directories (each key an int or tuple matching `part_cols`). Steps, each
@@ -150,7 +186,44 @@ def pruned_dynamic_overwrite(
             )
 
 
-def save_lsh_index(exploded: DataFrame, path: str, n_buckets: int = DEFAULT_HASH_BUCKETS) -> None:
+def patch_lsh_terms(
+    spark: SparkSession,
+    path: str,
+    touched,
+    existing: DataFrame | None,
+    drop_ids: DataFrame,
+    new_terms: DataFrame | None = None,
+    assume_live: bool = False,
+) -> None:
+    """The one LSH term-store patch: every touched (tbl, bucket) directory
+    keeps its rows minus `drop_ids` (a one-column frame of vec_ids), plus
+    `new_terms` (lsh_terms rows; None for a pure delete). Replace, upsert
+    and delete are all this call. `existing` is the caller's read of the
+    store (None when no touched directory exists yet); it is narrowed to
+    the touched directories here, so a caller may pass the whole store.
+    `touched` must cover every directory a dropped id or a new term lives
+    in — a new-only directory's existing rows are folded in, or the
+    overwrite would drop them. assume_live: see pruned_dynamic_overwrite
+    (true only when every touched directory receives a new term)."""
+    patched = new_terms
+    if existing is not None:
+        survivors = (
+            existing.where(partition_key_filter(["tbl", "bucket"], touched))
+            .select(
+                "vec_id",
+                F.col("tbl").cast("int").alias("tbl"),
+                "hash",
+                F.col("bucket").cast("int").alias("bucket"),
+            )
+            .join(F.broadcast(drop_ids.toDF("vec_id")), "vec_id", "left_anti")
+        )
+        patched = survivors if patched is None else survivors.unionByName(patched)
+    if patched is None:
+        return
+    pruned_dynamic_overwrite(spark, path, patched, ["tbl", "bucket"], touched, assume_live)
+
+
+def save_lsh_index(exploded: DataFrame, path: str) -> None:
     """Persist an exploded LSH index (vec_id, tbl, hash) partitioned by
     (tbl, bucket).
 
@@ -162,7 +235,7 @@ def save_lsh_index(exploded: DataFrame, path: str, n_buckets: int = DEFAULT_HASH
     deployment wants (each reducer owns whole buckets)."""
     (
         clustered(
-            exploded.withColumn("bucket", F.pmod(F.col("hash"), F.lit(n_buckets))),
+            exploded.withColumn("bucket", _term_bucket(F.col("hash"))),
             "tbl",
             "bucket",
         )
@@ -172,18 +245,17 @@ def save_lsh_index(exploded: DataFrame, path: str, n_buckets: int = DEFAULT_HASH
     )
 
 
-def load_lsh_bucket(
-    spark: SparkSession, path: str, tbl: int, hash_val: int, n_buckets: int = DEFAULT_HASH_BUCKETS
-) -> DataFrame:
+def load_lsh_bucket(spark: SparkSession, path: str, tbl: int, hash_val: int) -> DataFrame:
     """Candidates for one (tbl, hash) term — partition-pruned to a single
     (tbl, bucket) directory, then exact hash-matched inside it."""
     from .. import io
 
+    tbl, bucket = term_part(tbl, hash_val)
     return (
         io.read_parquet(spark, path)
         .where(
             (F.col("tbl") == tbl)
-            & (F.col("bucket") == hash_val % n_buckets)
+            & (F.col("bucket") == bucket)
             & (F.col("hash") == hash_val)
         )
         .select("vec_id", "tbl", "hash")

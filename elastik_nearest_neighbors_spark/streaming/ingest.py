@@ -136,9 +136,8 @@ def _ensure_stream_store(spark: SparkSession, sf_dir: str) -> str:
     write shape save_lsh_index uses); the checkpoint makes re-invocations
     no-ops instead of duplicate appends, which is the exactly-once
     contract the oracle then certifies content-wise."""
-    from ..operators.lsh import explode_hashes
     from ..oracles_vector import lsh_model_for
-    from ..sources.index_store import DEFAULT_HASH_BUCKETS
+    from ..sources.index_store import clustered, lsh_terms
 
     configure(spark)
     batch = io.table(spark, sf_dir, "embeddings")
@@ -150,17 +149,9 @@ def _ensure_stream_store(spark: SparkSession, sf_dir: str) -> str:
         .option("maxFilesPerTrigger", "1")
         .parquet(_split_source(batch, out))
     )
-    hashed = build_index(src, model).select("vec_id", "hashes")
-    exploded = explode_hashes(hashed, "vec_id", "vec_id").select(
-        "vec_id",
-        F.col("tbl").cast("int").alias("tbl"),
-        "hash",
-        F.pmod("hash", F.lit(DEFAULT_HASH_BUCKETS)).cast("int").alias("bucket"),
-    )
+    exploded = lsh_terms(build_index(src, model), "vec_id")
 
     def _append(bdf: DataFrame, _bid: int) -> None:
-        from ..sources.index_store import clustered
-
         (
             clustered(bdf, "tbl", "bucket")
             .write.mode("append")

@@ -14,6 +14,7 @@ import urllib.request
 
 import pytest
 
+from elastik_nearest_neighbors_spark import constants
 from elastik_nearest_neighbors_spark import io as eio
 from elastik_nearest_neighbors_spark import plans
 from elastik_nearest_neighbors_spark.api import aknn_index, aknn_search
@@ -688,7 +689,7 @@ def test_http_delete_all_docs_keeps_index_searchable(spark):
 
 
 def test_http_refresh_bulk_merge_path_matches_pruned(spark, monkeypatch):
-    """r13 (ADVICE r12): with ENN_REFRESH_BULK_ROWS forced to 1 the
+    """r13 (ADVICE r12): with constants.REFRESH_BULK_ROWS forced to 1 the
     refresh merge runs the fully distributed whole-store path (no
     driver-side id list) — wire responses must equal a fresh
     immediate-mode twin indexed with the final state,
@@ -709,7 +710,7 @@ def test_http_refresh_bulk_merge_path_matches_pruned(spark, monkeypatch):
         for i, d in enumerate(docs[:8])
     ]
     final = moved + docs[16:] + extra
-    monkeypatch.setenv("ENN_REFRESH_BULK_ROWS", "1")
+    monkeypatch.setattr(constants, "REFRESH_BULK_ROWS", 1)
     srv = _serve(spark, docs, batches=2)
     fresh = _serve(spark, final, batches=2, sample=docs[:24])
     try:
@@ -847,3 +848,157 @@ def test_http_refresh_racing_bulk_stage(spark):
         assert a == b, (a, b)
     finally:
         srv.stop(); twin.stop()
+
+
+def test_http_query_string_routes_on_delete_and_post(spark):
+    """Every verb routes on the URL path, like GET does: a query string
+    (ES clients send ?refresh=true, ?pretty) must not turn a doc DELETE
+    into a not-found id, nor a POST into an unknown endpoint — each
+    answers what its form without a query string answers."""
+    docs = _sample_docs(spark, n=32)
+    srv = _serve(spark, docs[:24])
+    try:
+        victim = docs[5]["_id"]
+        res = _json.loads(_delete_raw(srv.port, f"/idx/{victim}?refresh=true").read())
+        assert res == {"_index": "idx", "_id": str(victim), "result": "deleted"}, res
+        try:
+            _delete_raw(srv.port, f"/idx/{victim}")
+            raise AssertionError("the doc deleted with a query string must be gone")
+        except urllib.error.HTTPError as e:
+            assert e.code == 404
+
+        _http_post(srv.port, "/_aknn_index",
+                   {"model": "m", "_index": "idx", "docs": docs[24:], "refresh": False})
+        out = _http_post(srv.port, "/_aknn_refresh?pretty", {"_index": "idx"})
+        assert out == {"_index": "idx", "refreshed": True, "merged": len(docs[24:])}, out
+        assert _http_post(srv.port, "/_aknn_refresh?pretty", {"_index": "idx"}) == _http_post(
+            srv.port, "/_aknn_refresh", {"_index": "idx"}
+        )
+
+        body = {"ids": [docs[0]["_id"], docs[30]["_id"], victim], "k1": 50, "k2": 5}
+        plain = _http_post(srv.port, "/idx/_aknn_msearch", body)
+        assert _http_post(srv.port, "/idx/_aknn_msearch?pretty", body) == plain
+        assert [r["hits"]["total"] for r in plain["responses"]] == [5, 5, 0], plain
+    finally:
+        srv.stop()
+
+
+def _status(call):
+    try:
+        call()
+    except urllib.error.HTTPError as e:
+        return e.code, _json.loads(e.read())
+    raise AssertionError("expected an HTTP error")
+
+
+def test_http_msearch_ids_must_be_a_list(spark):
+    """msearch `ids` must be a JSON list: a string would be searched char
+    by char ("12" answered for docs 1 and 2), so it is a 400."""
+    docs = _sample_docs(spark, n=32)
+    srv = _serve(spark, docs)
+    try:
+        for ids in ("12", 12, {"a": 1}):
+            code, body = _status(
+                lambda: _post_raw(srv.port, "/idx/_aknn_msearch", {"ids": ids, "k1": 50, "k2": 5})
+            )
+            assert code == 400 and "ids must be a JSON list" in body["error"], (ids, body)
+        out = _http_post(srv.port, "/idx/_aknn_msearch", {"ids": ["12"], "k1": 50, "k2": 5})
+        assert out["responses"][0]["hits"]["total"] == 5, out
+    finally:
+        srv.stop()
+
+
+def test_http_search_k_must_be_positive(spark):
+    """k1 and k2 below 1 are a 400 on both GET search and msearch, not a
+    200 with zero hits that reads like an unknown doc."""
+    docs = _sample_docs(spark, n=32)
+    srv = _serve(spark, docs)
+    try:
+        base = f"http://127.0.0.1:{srv.port}"
+        for k1, k2 in ((0, 5), (50, 0), (-1, 5), (50, -3)):
+            code, body = _status(
+                lambda: urllib.request.urlopen(f"{base}/idx/1/_aknn_search?k1={k1}&k2={k2}")
+            )
+            assert code == 400 and "must be >= 1" in body["error"], (k1, k2, body)
+            code, body = _status(
+                lambda: _post_raw(srv.port, "/idx/_aknn_msearch", {"ids": [1], "k1": k1, "k2": k2})
+            )
+            assert code == 400 and "must be >= 1" in body["error"], (k1, k2, body)
+        assert _http_get(srv.port, "/idx/1/_aknn_search?k1=1&k2=1")["hits"]["total"] == 1
+    finally:
+        srv.stop()
+
+
+def test_http_mutation_sequence_matches_fresh_index(spark):
+    """A seeded interleaving of every mutation — immediate and staged
+    index batches (new and replaced ids), refresh, bulk delete and
+    single-doc DELETE — must leave the index serving exactly what a fresh
+    server indexed once with the final live set answers, for every live
+    id and for deleted ones. Staged docs are invisible (and undeletable)
+    until a refresh merges them, as in ES."""
+    import random
+
+    docs = _sample_docs(spark, n=64)
+    rng = random.Random(20261017)
+    live = {d["_id"]: d for d in docs[:40]}
+    staged: dict = {}
+    unused = [d["_id"] for d in docs[40:]]
+    by_id = {d["_id"]: d for d in docs}
+    deleted: set = set()
+    srv = _serve(spark, docs[:40], batches=2)
+
+    def scaled(i, f):
+        vec = by_id[i]["_source"]["_aknn_vector"]
+        return {"_id": i, "_source": {"_aknn_vector": [f * x for x in vec]}}
+
+    steps = ["index", "index", "stage", "stage", "refresh", "bulk_delete", "delete_one", "refresh"]
+    rng.shuffle(steps)
+    try:
+        for n, step in enumerate(steps):
+            if step in ("index", "stage"):
+                # half replaced ids (live or deleted), half never-seen ones
+                old = rng.sample(sorted(live) + sorted(deleted), 4)
+                new = [unused.pop() for _ in range(3)]
+                batch = [scaled(i, float(n + 2)) for i in old + new]
+                payload = {"model": "m", "_index": "idx", "docs": batch}
+                if step == "stage":
+                    payload["refresh"] = False
+                _http_post(srv.port, "/_aknn_index", payload)
+                target = staged if step == "stage" else live
+                target.update({d["_id"]: d for d in batch})
+                if step == "index":
+                    deleted -= set(old)
+            elif step == "refresh":
+                out = _http_post(srv.port, "/_aknn_refresh", {"_index": "idx"})
+                assert out["merged"] == len(staged), (step, out)
+                live.update(staged)
+                deleted -= set(staged)
+                staged.clear()
+            elif step == "bulk_delete":
+                doomed = rng.sample(sorted(live), 5) + [987654]
+                out = _http_post(srv.port, "/_aknn_delete", {"_index": "idx", "ids": doomed})
+                assert out["deleted"] == 5, out
+            else:
+                doomed = rng.sample(sorted(live), 1)
+                res = _json.loads(_delete_raw(srv.port, f"/idx/{doomed[0]}").read())
+                assert res["result"] == "deleted", res
+            if step in ("bulk_delete", "delete_one"):
+                for i in doomed:
+                    if live.pop(i, None) is not None:
+                        deleted.add(i)
+        final = [live[i] for i in sorted(live)]
+        fresh = _serve(spark, final, sample=docs[:24])
+        try:
+            ids = sorted(live) + sorted(deleted)[:4]
+            body = {"ids": ids, "k1": 50, "k2": 5}
+            got = _http_post(srv.port, "/idx/_aknn_msearch", body)
+            want = _http_post(fresh.port, "/idx/_aknn_msearch", body)
+            for i, a, b in zip(ids, got["responses"], want["responses"]):
+                assert a == b, (i, a, b)
+            assert deleted and all(
+                r["hits"]["total"] == 0 for r in got["responses"][len(live):]
+            )
+        finally:
+            fresh.stop()
+    finally:
+        srv.stop()

@@ -1,7 +1,7 @@
 """Phase profile of ann_search_lsh_store at the bench session shape (§1).
 
 Times each driver-visible phase of one warm search repeat separately:
-  a. query hash job (q_exp distinct collect — the probe-parts job)
+  a. query hash job (q_terms distinct collect — the probe-parts job)
   b. fs_isdir loop over the probe dirs
   c. load_lsh_partitions DataFrame construction (read.parquet + 119-term OR)
   d. full noop action of the final frame (cold + warm repeats)
@@ -56,10 +56,10 @@ def main():
         _model_for,
         _PROBE_PARTS_CACHE,
     )
-    from elastik_nearest_neighbors_spark.operators.lsh import build_index, explode_hashes
+    from elastik_nearest_neighbors_spark.operators.lsh import build_index
     from elastik_nearest_neighbors_spark.sources.index_store import (
-        DEFAULT_HASH_BUCKETS,
         load_lsh_partitions,
+        lsh_terms,
     )
 
     out = io.scratch_dir("lsh_store", SF_DIR)
@@ -68,12 +68,12 @@ def main():
     emb = _emb(spark, SF_DIR)
     model = _model_for(emb, SF_DIR)
     queries = emb.where(F.col("vec_id") < 8)
-    q_exp = explode_hashes(build_index(queries, model), "vec_id", "query_id")
+    q_terms = lsh_terms(build_index(queries, model), "vec_id")
 
     def probe_parts():
         return [
             (r.tbl, r.bucket)
-            for r in q_exp.select("tbl", F.pmod("hash", F.lit(DEFAULT_HASH_BUCKETS)).alias("bucket")).distinct().collect()
+            for r in q_terms.select("tbl", "bucket").distinct().collect()
         ]
 
     parts = t("a. probe-parts job (uncached first call)", probe_parts)
