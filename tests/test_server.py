@@ -1002,3 +1002,146 @@ def test_http_mutation_sequence_matches_fresh_index(spark):
             fresh.stop()
     finally:
         srv.stop()
+
+
+def test_http_delete_ids_must_be_a_list(spark):
+    """/_aknn_delete `ids` must be a JSON list, like msearch's: a string
+    "12" would be deleted char by char (docs 1 and 2 gone, doc 12 kept),
+    so it is a 400 that deletes nothing."""
+    docs = _sample_docs(spark, n=32)
+    srv = _serve(spark, docs)
+    try:
+        for ids in ("12", 12, {"12": 1}):
+            code, body = _status(
+                lambda: _post_raw(srv.port, "/_aknn_delete", {"_index": "idx", "ids": ids})
+            )
+            assert code == 400 and "ids must be a JSON list" in body["error"], (ids, body)
+        for i in (1, 2, 12):
+            assert _http_get(srv.port, f"/idx/{i}")["found"] is True, i
+    finally:
+        srv.stop()
+
+
+def test_http_create_checks_model_shape(spark):
+    """/_aknn_create needs nb_tables >= 1 and 1 <= nb_bits_per_table <= 64
+    (a table's hash is one int64, so a 65th bit would carry weight 0): a
+    shape outside that is a 400 that names the bounds, and both edges are
+    accepted."""
+    docs = _sample_docs(spark, n=128)
+    srv = AknnHttpServer(spark, tempfile.mkdtemp(prefix="enn_http_test_")).start()
+    try:
+        for tables, bits in ((0, 3), (-1, 3), (4, 0), (1, 65)):
+            body = {"_id": "bad", "nb_tables": tables, "nb_bits_per_table": bits, "docs": docs}
+            code, out = _status(lambda: _post_raw(srv.port, "/_aknn_create", body))
+            assert code == 400 and "nb_bits_per_table in [1, 64]" in out["error"], (tables, bits, out)
+        assert _http_get(srv.port, "/_aknn_models")["models"] == []
+        for tables, bits in ((1, 64), (1, 1)):
+            body = {"_id": f"m{bits}", "nb_tables": tables, "nb_bits_per_table": bits, "docs": docs}
+            assert _http_post(srv.port, "/_aknn_create", body)["acknowledged"] is True
+    finally:
+        srv.stop()
+
+
+def test_http_served_frames_are_local_relations(spark):
+    """The rows a request brings to the driver (msearch's query terms and
+    vectors, a mutation's ids, a posted batch) are local relations: no
+    Python-RDD scan, whose broadcast would run a job of Python-worker
+    tasks per request."""
+    docs = _sample_docs(spark, n=32)
+    srv = _serve(spark, docs)
+    try:
+        for df in (
+            srv._msearch_df("idx", [docs[0]["_id"], docs[3]["_id"]], 50, 5),
+            srv._ids_df([1, 2], "bigint"),
+            srv._docs_df(docs[:3]),
+        ):
+            plan = plans.formatted_plan(df)
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    finally:
+        srv.stop()
+
+
+def test_http_driver_sort_matches_spark_order(spark):
+    """msearch orders its hits on the driver. With duplicated vectors,
+    many neighbours tie on distance and the id breaks the tie; GET and
+    msearch must match Spark's orderBy(distance, neighbor_id) of the same
+    ranked rows, on a bigint-pinned index and on a string-pinned one whose
+    ids sort differently as strings ("15" < "3") and include non-ASCII ids
+    (U+FB01 sorts before U+1F600 in UTF-8, after it in UTF-16)."""
+    sample = _sample_docs(spark, n=24)
+    vec = [d["_source"] for d in sample[:12]]
+    int_docs = [{"_id": i, "_source": vec[i % 12]} for i in range(48)]
+    str_docs = [{"_id": str(i), "_source": vec[i % 12]} for i in range(48)]
+    str_docs += [{"_id": "\ufb01", "_source": vec[3]}, {"_id": "\U0001f600", "_source": vec[3]}]
+    srv = _serve(spark, int_docs, sample=sample)
+    try:
+        _http_post(srv.port, "/_aknn_index", {"model": "m", "_index": "sidx", "docs": str_docs})
+        for index, qids, first, ties in (
+            ("idx", [15, 3, 7, 40], 15, [3, 27, 39]),
+            ("sidx", ["27", "\U0001f600", "9", "10"], "27", ["15", "3", "39", "\ufb01", "\U0001f600"]),
+        ):
+            ranked = srv._msearch_df(index, qids, 50, 20).orderBy(
+                "query_id", "distance", "neighbor_id"
+            ).collect()
+            want = {q: [r.neighbor_id for r in ranked if r.query_id == q] for q in qids}
+            assert want[first][: len(ties)] == ties, want[first]
+            out = _http_post(srv.port, f"/{index}/_aknn_msearch", {"ids": qids, "k1": 50, "k2": 20})
+            for q, res in zip(qids, out["responses"]):
+                assert [h["_id"] for h in res["hits"]["hits"]] == want[q], (index, q, res)
+                if str(q).isascii():
+                    got = _http_get(srv.port, f"/{index}/{q}/_aknn_search?k1=50&k2=20")
+                    assert got == res, (index, q)
+    finally:
+        srv.stop()
+
+
+def test_http_cached_search_job_budget(spark):
+    """Job budget of one GET search whose query doc is already cached: the
+    ranked collect's shuffle and broadcast stages only. The query-side
+    rows are local relations (their broadcasts run no job) and the hits
+    are sorted on the driver (no range-partition exchange)."""
+    docs = _sample_docs(spark)
+    srv = _serve(spark, docs, batches=3)
+    sc = spark.sparkContext
+    try:
+        qid = docs[7]["_id"]
+        srv.search("idx", qid, 50, 5)  # fills the doc and snapshot caches
+        group = f"enn-job-budget-{srv.port}"
+        sc.setJobGroup(group, "cached GET search")
+        try:
+            res = srv.search("idx", qid, 50, 5)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+        assert res["hits"]["total"] == 5
+        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
+    finally:
+        srv.stop()
+
+
+def test_http_bad_batch_values_are_400(spark):
+    """A posted batch whose values its column types cannot hold is a 400
+    that leaves the store as it was: on a bigint-pinned index a JSON true
+    id, mixed int and string ids and an int beyond int64; anywhere, a
+    vector component that is not a finite number (msearch sorts distances
+    on the driver)."""
+    docs = _sample_docs(spark, n=32)
+    srv = _serve(spark, docs)
+    vec = docs[0]["_source"]
+    nan = {"_aknn_vector": [float("nan")] + vec["_aknn_vector"][1:]}
+    try:
+        before = _http_get(srv.port, f"/idx/{docs[0]['_id']}/_aknn_search?k1=50&k2=5")
+        for batch in (
+            [{"_id": True, "_source": vec}],
+            [{"_id": 0, "_source": vec}, {"_id": "a", "_source": vec}],
+            [{"_id": 2**63, "_source": vec}],
+            [{"_id": 0, "_source": {"_aknn_vector": ["x"] + vec["_aknn_vector"][1:]}}],
+            [{"_id": 0, "_source": nan}],
+        ):
+            body = {"model": "m", "_index": "idx", "docs": batch}
+            code, _out = _status(lambda: _post_raw(srv.port, "/_aknn_index", body))
+            assert code == 400, batch
+        after = _http_get(srv.port, f"/idx/{docs[0]['_id']}/_aknn_search?k1=50&k2=5")
+        assert after == before
+    finally:
+        srv.stop()
