@@ -60,25 +60,33 @@ and further mutations answer 503 TornIndexError; DELETE /{index} +
 re-index recovers) instead of silent recall loss. An index that was never
 written answers 404 index_not_found, like ES.
 
-Deployment shape: the server is a DRIVER-side facade — each request plans
-a Spark job over the parquet-backed index (candidate generation is the
-broadcast hash join; the corpus never shuffles per query). Every index is
-stored in ONE layout, the partition-pruned store — the reference's
-keyword-field term index re-expressed as parquet directories:
-`/_aknn_index` writes the hashed docs under `docs/` partitioned by
-id_bucket (index_store.doc_bucket; doc-by-id lookup prunes to ONE
-directory) and the exploded terms under `terms/` partitioned by
-(tbl, bucket) (index_store.lsh_terms) — sources.index_store owns the
-layout and its bucket count; this module never names it. A search
-touches ≤ T of the T·n_buckets term directories plus one docs
-directory; only the ≤ k1-candidate re-rank gather reads the docs table
-un-pruned (the same shape the gated batch ann_search_lsh_store pays).
-tests/test_server.py asserts the PartitionFilters in the served plan.
-The rows a request brings to the driver (the query terms and vectors, a
-delete's ids, a posted batch) become driver-local Arrow relations
-(_local_df): broadcasting one runs no job and starts no Python worker.
-msearch collects its ≤ Q·k2 ranked rows unsorted and orders them on the
-driver.
+Deployment shape: the server is a DRIVER-side facade over the
+parquet-backed index. Every index is stored in ONE layout, the
+partition-pruned store — the reference's keyword-field term index
+re-expressed as parquet directories: `/_aknn_index` writes the hashed docs
+under `docs/` partitioned by id_bucket (index_store.doc_bucket; doc-by-id
+lookup prunes to ONE directory) and the exploded terms under `terms/`
+partitioned by (tbl, bucket) (index_store.lsh_terms) — sources.index_store
+owns the layout and its bucket count; this module never names it.
+A search ranks on the driver, like the reference ranks inside its
+Elasticsearch node, and makes two Spark reads, neither of which shuffles:
+  1. the terms read: the ≤ T probed (tbl, bucket) term directories per
+     query, collected as Arrow. The term-match count and the top-k1 cut
+     by (-n_match, neighbor_id) run in numpy on the driver.
+  2. the re-rank gather: the ≤ Q·k1 candidates, a driver-local Arrow
+     relation (_local_df), broadcast against the docs snapshot, which is
+     read un-pruned (the same shape the gated batch ann_search_lsh_store
+     pays). The distance is functions.vector.euclidean rounded to
+     DIST_ROUND, as in knn.rank_term_matches.
+     The ≤ Q·k1 scored rows are sorted on the driver and cut to k2.
+A cached search runs 3 Spark jobs (the terms read, the candidates'
+broadcast, the docs scan; test-pinned, also for a 4-id msearch);
+a doc-cache miss adds one pruned stored-doc fetch. On a 10k-vector store
+(64 dims, T=16, k1=100, a 4-core VM) the median GET search takes about
+310 ms (perfbench serve_search).
+tests/test_server.py asserts the PartitionFilters in the served plans.
+Every other frame built from request rows (a delete's ids, a posted batch)
+is a _local_df relation too.
 
 Registry entries `aknn_http_search` and `aknn_http_search_store` drive
 all three endpoints over a real localhost socket (one shared server) and
@@ -93,14 +101,14 @@ import os
 import re
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from urllib.parse import parse_qs, urlparse
+from urllib.parse import parse_qs, unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import constants
 from .api import ID_FIELD, VECTOR_FIELD, AknnModelRegistry, aknn_index
-from .constants import ANN_K1, ANN_K2, LSH_BITS, LSH_TABLES
+from .constants import ANN_K1, ANN_K2, DIST_ROUND, LSH_BITS, LSH_TABLES
 
 # stored-doc cache entries across all indexes (FIFO): a scan over many
 # distinct ids can't grow it unboundedly
@@ -110,9 +118,10 @@ DOC_CACHE_ENTRIES = 4096
 def _local_df(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
     """`rows` (tuples in `ddl`'s column order) as a DataFrame backed by a
     driver-local Arrow table. Spark plans it as a LocalRelation, so a join
-    broadcasts it without running a job; createDataFrame over a Python
-    list is instead a Python-RDD scan, whose every broadcast starts a job
-    of Python-worker tasks just to unpickle the rows. Each column is built
+    broadcasts it from a JVM job over rows already held in the JVM;
+    createDataFrame over a Python list is instead a Python-RDD scan, whose
+    every broadcast starts a job of Python-worker tasks just to unpickle
+    the rows. Each column is built
     with its exact Arrow type, so a value the type cannot hold (a JSON
     true or a string as a bigint, an int beyond int64) raises here."""
     import pyarrow as pa
@@ -851,91 +860,112 @@ class AknnHttpServer:
             out.update(got)
         return out
 
-    def _msearch_df(self, index: str, ids: list, k1: int, k2: int) -> DataFrame | None:
-        """The pruned serving read for a BATCH of (coerced) query ids,
-        returned BEFORE the collect so tests can assert its physical plan;
-        None when no id is stored (every response is then a 200 with zero
-        hits). The query docs come from their ≤ |batch| id_bucket
-        directories (_fetch_docs), candidates from the ≤ Q·T probed
-        (tbl, bucket) term directories of the cached terms snapshot; only
-        the ≤ Q·k1 re-rank vector gather touches docs/ un-pruned.
-
-        The query terms and vectors are local relations (_local_df), so
-        their broadcasts run no job: the jobs of the ranked collect are
-        the shuffle and broadcast stages of the term-match count and the
-        two rank windows (7 on the tests' cached-GET budget). Batching is
-        where the per-request fixed driver cost goes away — Q queries
-        share ONE stored-doc fetch (cache misses only) and ONE ranked
-        collect instead of Q of each, and per-query results are
-        bit-identical to the single-id path because every rank window
-        partitions by query_id."""
-        from .operators.knn import rank_term_matches
+    def _probed_terms_df(self, index: str, queries: list) -> DataFrame:
+        """The (vec_id, tbl, hash) term rows of the ≤ Q·T (tbl, bucket)
+        directories the stored query rows `queries` probe, read from the
+        cached terms snapshot: the same packed-key IN PartitionFilters
+        shape as load_lsh_partitions, without its per-call listing (see
+        the _terms_cache note in __init__); directories shared by several
+        queries are read once. A scan and a projection: one job, no
+        shuffle."""
         from .sources.index_store import partition_key_filter, term_part
+
+        pairs = sorted({term_part(t, h) for q in queries for t, h in enumerate(q["hashes"])})
+        return (
+            self._cached_terms(index)
+            .where(partition_key_filter(["tbl", "bucket"], pairs))
+            .select("vec_id", "tbl", "hash")
+        )
+
+    def _candidates(self, index: str, ids: list, k1: int) -> list:
+        """The reference's term-match step for the (coerced) query `ids`,
+        ranked on the driver: (query_id, neighbor_id, n_match, query
+        vector) for each query's top k1 neighbours by (-n_match,
+        neighbor_id). The stored query docs come from _fetch_docs, their
+        candidates from ONE Arrow read of the probed term directories
+        (_probed_terms_df). A neighbour matches a query once per table
+        whose hash it shares; a term of a table the query doc lacks (an
+        index may mix models across batches) matches nothing. Python
+        orders ints like Spark's bigint and str by code point like
+        Spark's UTF-8 bytes, so the cut equals a rank window's."""
+        import numpy as np
+
+        found = [(d, q) for d, q in self._fetch_docs(index, ids).items() if q is not None]
+        if not found:
+            return []
+        terms = self._probed_terms_df(index, [q for _d, q in found]).toArrow()
+        vec_id = terms.column("vec_id").to_numpy(zero_copy_only=False)
+        tbl = terms.column("tbl").to_numpy()
+        hsh = terms.column("hash").to_numpy()
+        out = []
+        for d, q in found:
+            qh = np.asarray(q["hashes"], dtype=np.int64)
+            own = tbl < len(qh)
+            hit = own & (hsh == qh[np.where(own, tbl, 0)]) & (vec_id != d)
+            # unique sorts the ids ascending; a stable sort keeps that
+            # order among equal counts
+            nbrs, n_match = np.unique(vec_id[hit], return_counts=True)
+            top = np.argsort(-n_match, kind="stable")[:k1]
+            qv = list(q[VECTOR_FIELD])
+            out += [(d, nid, n, qv) for nid, n in zip(nbrs[top].tolist(), n_match[top].tolist())]
+        return out
+
+    def _gather_df(self, index: str, candidates: list) -> DataFrame:
+        """The exact re-rank gather of _candidates' rows: one local
+        relation joined to the docs snapshot on neighbor_id, each pair
+        scored by the same rounded euclidean expression as
+        knn.rank_term_matches. The collect runs two jobs, the local
+        side's broadcast and the streamed docs scan, and no shuffle; the
+        top k2 per query is kept by msearch."""
+        from .functions.vector import euclidean
 
         docs = self._cached_docs(index)
         id_type = dict(docs.dtypes)[ID_FIELD]
-        found = [(d, q) for d, q in self._fetch_docs(index, ids).items() if q is not None]
-        if not found:
-            return None
-        q_exp = _local_df(
+        cands = _local_df(
             self.spark,
-            [(d, t, int(h)) for d, q in found for t, h in enumerate(q["hashes"])],
-            f"query_id {id_type}, tbl int, hash bigint",
+            candidates,
+            f"query_id {id_type}, neighbor_id {id_type}, n_match bigint, qv array<double>",
         )
-        # prune the cached terms snapshot to the ≤ Q·T probed (tbl, bucket)
-        # directories — same packed-key IN PartitionFilters shape as
-        # load_lsh_partitions, without its per-call listing (see the
-        # _terms_cache note in __init__); deduped across queries sharing
-        # buckets. (r13: was an OR-of-literals tree — building that
-        # ~Q·T-way Column tree cost seconds of py4j round-trips per
-        # msearch batch at T=16; packed IN is one expression.)
-        pairs = sorted({term_part(t, h) for _d, q in found for t, h in enumerate(q["hashes"])})
-        idx_exp = (
-            self._cached_terms(index)
-            .where(partition_key_filter(["tbl", "bucket"], pairs))
-            .select(F.col("vec_id").alias("neighbor_id"), "tbl", "hash")
-        )
-        counts = (
-            idx_exp.join(F.broadcast(q_exp), ["tbl", "hash"])
-            .where(F.col("neighbor_id") != F.col("query_id"))
-            .groupBy("query_id", "neighbor_id")
-            .agg(F.count(F.lit(1)).alias("n_match"))
-        )
-        query_df = _local_df(
-            self.spark,
-            [(d, list(q[VECTOR_FIELD])) for d, q in found],
-            f"{ID_FIELD} {id_type}, {VECTOR_FIELD} array<double>",
-        )
-        return rank_term_matches(
-            counts, docs, query_df, k1, k2, ID_FIELD, VECTOR_FIELD
+        nvec = docs.select(F.col(ID_FIELD).alias("neighbor_id"), F.col(VECTOR_FIELD).alias("nv"))
+        return F.broadcast(cands).join(nvec, "neighbor_id").select(
+            "query_id",
+            "neighbor_id",
+            "n_match",
+            F.round(euclidean(F.col("qv"), F.col("nv")), DIST_ROUND).alias("distance"),
         )
 
     def msearch(self, index: str, doc_ids: list, k1: int = ANN_K1, k2: int = ANN_K2) -> dict:
         """Batched search — ES `_msearch` parity, JSON-body form: one
         response per requested id, in request order, each identical to the
-        single-id GET's payload. Q queries cost ONE ranked collect (plus
-        one batched stored-doc fetch job on cache miss) instead of Q; the
-        collect's rows are sorted here, not by a Spark orderBy, so a
-        cached search runs only _msearch_df's jobs.
-        `doc_ids` must be a list and k1, k2 at least 1 (ValueError → 400):
-        a JSON string would otherwise be searched char by char, and a
-        non-positive k answers an empty 200 that looks like a miss."""
+        single-id GET's payload. A cached search is two Spark reads: the
+        probed term directories (_candidates ranks the term matches on the
+        driver) and the ≤ Q·k1 re-rank gather (_gather_df), whose scored
+        rows are sorted here; a stored-doc fetch job is added on a doc
+        cache miss. Neither read shuffles, and Q queries share each one.
+        `doc_ids` must be a list and k1, k2 integers of at least 1
+        (ValueError → 400): a JSON string would otherwise be searched char
+        by char, a JSON 1.5 or true would be truncated, and a non-positive
+        k answers an empty 200 that looks like a miss."""
         if not isinstance(doc_ids, list):
             raise ValueError(f"ids must be a JSON list, got {type(doc_ids).__name__}")
+        if type(k1) is not int or type(k2) is not int:
+            raise ValueError(f"k1 and k2 must be integers, got k1={k1!r}, k2={k2!r}")
         if k1 < 1 or k2 < 1:
             raise ValueError(f"k1 and k2 must be >= 1, got k1={k1}, k2={k2}")
         with self._lock:
             id_type = dict(self._cached_docs(index).dtypes)[ID_FIELD]
-            ranked = self._msearch_df(index, self._coerce_ids(id_type, doc_ids), k1, k2)
-            rows = [] if ranked is None else ranked.collect()
-        # at most Q·k2 rows: sorting them here spares the range-partition
-        # exchange (and its jobs) of a Spark orderBy, in the same order —
-        # no distance is NaN (_docs_df refuses non-finite components),
+            cands = self._candidates(index, self._coerce_ids(id_type, doc_ids), k1)
+            rows = self._gather_df(index, cands).collect() if cands else []
+        # at most Q·k1 rows: the top k2 of each query in (distance,
+        # neighbor_id) order, as a rank window would keep them — no
+        # distance is NaN (_docs_df refuses non-finite components),
         # neighbor ids are unique per query, and str order is code-point
         # order, which is Spark's UTF-8 byte order
         by_qid: dict = {}
         for r in sorted(rows, key=lambda r: (r.distance, r.neighbor_id)):
-            by_qid.setdefault(r.query_id, []).append(r)
+            hits = by_qid.setdefault(r.query_id, [])
+            if len(hits) < k2:
+                hits.append(r)
         responses = []
         for d in doc_ids:
             keyed = self._coerce_ids(id_type, [d])
@@ -978,6 +1008,13 @@ class AknnHttpServer:
 
     def models(self) -> dict:
         return {"models": self.registry.names()}
+
+
+def _path_parts(path: str) -> list[str]:
+    """The non-empty segments of a URL path, each percent-decoded: a
+    client encodes a space or non-ASCII char of an id (and a '/' inside
+    one stays inside its segment)."""
+    return [unquote(p) for p in path.split("/") if p]
 
 
 def _make_handler(server: AknnHttpServer):
@@ -1033,7 +1070,7 @@ def _make_handler(server: AknnHttpServer):
                 elif path.endswith("/_aknn_msearch"):
                     # ES _msearch parity (JSON-body form): POST
                     # /{index}/_aknn_msearch {"ids": [...], "k1":, "k2":}
-                    parts = [p for p in path.split("/") if p]
+                    parts = _path_parts(path)
                     if len(parts) != 2:
                         self._reply(404, {"error": f"no such endpoint: {path}"})
                         return
@@ -1043,8 +1080,8 @@ def _make_handler(server: AknnHttpServer):
                         server.msearch(
                             parts[0],
                             body["ids"],
-                            int(body.get("k1", ANN_K1)),
-                            int(body.get("k2", ANN_K2)),
+                            body.get("k1", ANN_K1),
+                            body.get("k2", ANN_K2),
                         ),
                     )
                 else:
@@ -1055,7 +1092,7 @@ def _make_handler(server: AknnHttpServer):
         def do_GET(self) -> None:
             try:
                 parsed = urlparse(self.path)
-                parts = [p for p in parsed.path.split("/") if p]
+                parts = _path_parts(parsed.path)
                 if parsed.path == "/_aknn_models":
                     self._reply(200, server.models())
                 elif len(parts) == 3 and parts[2] == "_aknn_search":
@@ -1090,7 +1127,7 @@ def _make_handler(server: AknnHttpServer):
             # document with 200 deleted / 404 not_found semantics
             try:
                 path = urlparse(self.path).path
-                parts = [p for p in path.split("/") if p]
+                parts = _path_parts(path)
                 if len(parts) == 1:
                     found = server.drop_index(parts[0])
                     self._reply(200 if found else 404, {"acknowledged": found})

@@ -11,6 +11,7 @@ import json as _json
 import tempfile
 import urllib.error
 import urllib.request
+from urllib.parse import quote
 
 import pytest
 
@@ -52,12 +53,20 @@ def _serve(spark, docs, batches=1, sample=None):
     return srv
 
 
+def _query_rows(srv, index, ids):
+    """The stored rows of the query docs `ids` (the input of the served
+    search's terms read)."""
+    return [q for q in srv._fetch_docs(index, ids).values() if q is not None]
+
+
 def _reference(spark, srv, docs, qids, k1=50, k2=5):
     """The wire response each of `qids` must get, computed by the in-memory
-    api.aknn_search over the server's own model and the same docs."""
+    api.aknn_search over the server's own model and the same docs (string
+    ids if any doc id is a string)."""
+    id_type = "string" if any(isinstance(d["_id"], str) for d in docs) else "bigint"
     frame = spark.createDataFrame(
         [(d["_id"], d["_source"]["_aknn_vector"]) for d in docs],
-        "_id bigint, _aknn_vector array<double>",
+        f"_id {id_type}, _aknn_vector array<double>",
     )
     indexed = aknn_index(frame, srv.registry.get("m"))
     rows = aknn_search(indexed, qids, k1, k2).orderBy(
@@ -93,7 +102,7 @@ def test_http_store_mode_matches_flat_and_prunes(spark):
             assert got["hits"]["total"] == 5
         # the pruned plans: literal PartitionFilters on BOTH store reads —
         # candidate terms by (tbl, bucket), query doc by id_bucket
-        df = store._msearch_df("idx", [docs[0]["_id"]], 50, 5)
+        df = store._probed_terms_df("idx", _query_rows(store, "idx", [docs[0]["_id"]]))
         pf = " ".join(plans.partition_filters(df))
         assert "tbl" in pf and "bucket" in pf, plans.formatted_plan(df)
         qdf = store._fetch_df("idx", [docs[0]["_id"]])
@@ -533,7 +542,7 @@ def test_http_msearch_matches_per_id_both_modes(spark):
         assert out["responses"][1]["hits"]["total"] == 0
         assert out["responses"][3]["hits"]["total"] == 0
         assert out["responses"][0]["hits"]["total"] > 0
-        df = srv._msearch_df("idx", [docs[0]["_id"], docs[7]["_id"]], 50, 5)
+        df = srv._probed_terms_df("idx", _query_rows(srv, "idx", [docs[0]["_id"], docs[7]["_id"]]))
         pf = " ".join(plans.partition_filters(df))
         assert "tbl" in pf and "bucket" in pf, plans.formatted_plan(df)
         qdf = srv._fetch_df("idx", [docs[0]["_id"], docs[7]["_id"]])
@@ -1043,15 +1052,15 @@ def test_http_create_checks_model_shape(spark):
 
 
 def test_http_served_frames_are_local_relations(spark):
-    """The rows a request brings to the driver (msearch's query terms and
-    vectors, a mutation's ids, a posted batch) are local relations: no
+    """The rows a request brings to the driver (msearch's re-rank
+    candidates, a mutation's ids, a posted batch) are local relations: no
     Python-RDD scan, whose broadcast would run a job of Python-worker
     tasks per request."""
     docs = _sample_docs(spark, n=32)
     srv = _serve(spark, docs)
     try:
         for df in (
-            srv._msearch_df("idx", [docs[0]["_id"], docs[3]["_id"]], 50, 5),
+            srv._gather_df("idx", srv._candidates("idx", [docs[0]["_id"], docs[3]["_id"]], 50)),
             srv._ids_df([1, 2], "bigint"),
             srv._docs_df(docs[:3]),
         ):
@@ -1064,10 +1073,11 @@ def test_http_served_frames_are_local_relations(spark):
 def test_http_driver_sort_matches_spark_order(spark):
     """msearch orders its hits on the driver. With duplicated vectors,
     many neighbours tie on distance and the id breaks the tie; GET and
-    msearch must match Spark's orderBy(distance, neighbor_id) of the same
-    ranked rows, on a bigint-pinned index and on a string-pinned one whose
-    ids sort differently as strings ("15" < "3") and include non-ASCII ids
-    (U+FB01 sorts before U+1F600 in UTF-8, after it in UTF-16)."""
+    msearch must equal api.aknn_search's Spark ordering (_reference), on a
+    bigint-pinned index and on a string-pinned one whose ids sort
+    differently as strings ("15" < "3") and include non-ASCII ids (U+FB01
+    sorts before U+1F600 in UTF-8, after it in UTF-16), which GET takes
+    percent-encoded."""
     sample = _sample_docs(spark, n=24)
     vec = [d["_source"] for d in sample[:12]]
     int_docs = [{"_id": i, "_source": vec[i % 12]} for i in range(48)]
@@ -1076,45 +1086,61 @@ def test_http_driver_sort_matches_spark_order(spark):
     srv = _serve(spark, int_docs, sample=sample)
     try:
         _http_post(srv.port, "/_aknn_index", {"model": "m", "_index": "sidx", "docs": str_docs})
-        for index, qids, first, ties in (
-            ("idx", [15, 3, 7, 40], 15, [3, 27, 39]),
-            ("sidx", ["27", "\U0001f600", "9", "10"], "27", ["15", "3", "39", "\ufb01", "\U0001f600"]),
+        for index, idocs, qids, first, ties in (
+            ("idx", int_docs, [15, 3, 7, 40], 15, [3, 27, 39]),
+            ("sidx", str_docs, ["27", "\U0001f600", "9", "10"], "27", ["15", "3", "39", "\ufb01", "\U0001f600"]),
         ):
-            ranked = srv._msearch_df(index, qids, 50, 20).orderBy(
-                "query_id", "distance", "neighbor_id"
-            ).collect()
-            want = {q: [r.neighbor_id for r in ranked if r.query_id == q] for q in qids}
-            assert want[first][: len(ties)] == ties, want[first]
+            want = _reference(spark, srv, idocs, qids, 50, 20)
+            assert [h["_id"] for h in want[first]["hits"]["hits"]][: len(ties)] == ties, want[first]
             out = _http_post(srv.port, f"/{index}/_aknn_msearch", {"ids": qids, "k1": 50, "k2": 20})
             for q, res in zip(qids, out["responses"]):
-                assert [h["_id"] for h in res["hits"]["hits"]] == want[q], (index, q, res)
-                if str(q).isascii():
-                    got = _http_get(srv.port, f"/{index}/{q}/_aknn_search?k1=50&k2=20")
-                    assert got == res, (index, q)
+                assert res == want[q], (index, q, res)
+                got = _http_get(srv.port, f"/{index}/{quote(str(q))}/_aknn_search?k1=50&k2=20")
+                assert got == res, (index, q)
     finally:
         srv.stop()
 
 
+def _jobs(spark, group, call):
+    """(call(), the number of Spark jobs it ran) under job group `group`."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_http_cached_search_job_budget(spark):
     """Job budget of one GET search whose query doc is already cached: the
-    ranked collect's shuffle and broadcast stages only. The query-side
-    rows are local relations (their broadcasts run no job) and the hits
-    are sorted on the driver (no range-partition exchange)."""
+    terms read, then the re-rank gather's broadcast of its local candidate
+    relation and its docs scan. k1 selection and the top-k2 sort run on
+    the driver, so no shuffle, window or range-partition job remains."""
     docs = _sample_docs(spark)
     srv = _serve(spark, docs, batches=3)
-    sc = spark.sparkContext
     try:
         qid = docs[7]["_id"]
         srv.search("idx", qid, 50, 5)  # fills the doc and snapshot caches
-        group = f"enn-job-budget-{srv.port}"
-        sc.setJobGroup(group, "cached GET search")
-        try:
-            res = srv.search("idx", qid, 50, 5)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-            sc.setJobDescription(None)
+        res, n = _jobs(spark, f"enn-job-budget-{srv.port}", lambda: srv.search("idx", qid, 50, 5))
         assert res["hits"]["total"] == 5
-        assert len(sc.statusTracker().getJobIdsForGroup(group)) == 7
+        assert n == 3
+    finally:
+        srv.stop()
+
+
+def test_http_cached_msearch_job_budget(spark):
+    """A cached 4-id msearch runs as many jobs as a cached single search:
+    its queries share the one terms read and the one gather."""
+    docs = _sample_docs(spark)
+    srv = _serve(spark, docs, batches=3)
+    try:
+        ids = [docs[i]["_id"] for i in (7, 40, 123, 200)]
+        srv.msearch("idx", ids, 50, 5)  # fills the doc and snapshot caches
+        out, n = _jobs(spark, f"enn-msearch-budget-{srv.port}", lambda: srv.msearch("idx", ids, 50, 5))
+        assert [r["hits"]["total"] for r in out["responses"]] == [5, 5, 5, 5]
+        assert n == 3
     finally:
         srv.stop()
 
@@ -1143,5 +1169,141 @@ def test_http_bad_batch_values_are_400(spark):
             assert code == 400, batch
         after = _http_get(srv.port, f"/idx/{docs[0]['_id']}/_aknn_search?k1=50&k2=5")
         assert after == before
+    finally:
+        srv.stop()
+
+
+def test_http_served_reads_have_no_shuffle_or_window(spark):
+    """A served search is two reads, the terms read and the re-rank
+    gather. k1 selection and top-k2 run on the driver, so neither plan
+    holds a shuffle exchange or a rank window. (Their PartitionFilters and
+    local relation are asserted by the tests above.)"""
+    docs = _sample_docs(spark)
+    srv = _serve(spark, docs, batches=2)
+    try:
+        ids = [docs[0]["_id"], docs[7]["_id"]]
+        for df in (
+            srv._probed_terms_df("idx", _query_rows(srv, "idx", ids)),
+            srv._gather_df("idx", srv._candidates("idx", ids, 50)),
+        ):
+            plan = plans.formatted_plan(df)
+            assert "hashpartitioning" not in plan and "Window" not in plan, plan
+    finally:
+        srv.stop()
+
+
+def test_http_path_ids_are_percent_decoded(spark):
+    """GET search, doc GET and DELETE take a string id percent-encoded, as
+    a client must send a space or a non-ASCII char: each answers for the
+    decoded id, exactly as msearch does for the same id in a JSON body."""
+    sample = _sample_docs(spark, n=32)
+    odd = ["a b", "é", "\U0001f600"]
+    sdocs = [{"_id": str(d["_id"]), "_source": d["_source"]} for d in sample]
+    sdocs += [{"_id": i, "_source": sample[n]["_source"]} for n, i in enumerate(odd)]
+    srv = _serve(spark, sdocs, sample=sample[:24])
+    try:
+        out = _http_post(srv.port, "/idx/_aknn_msearch", {"ids": odd, "k1": 50, "k2": 5})
+        for i, res in zip(odd, out["responses"]):
+            assert res["hits"]["total"] == 5, (i, res)
+            assert _http_get(srv.port, f"/idx/{quote(i)}/_aknn_search?k1=50&k2=5") == res, i
+            doc = _http_get(srv.port, f"/idx/{quote(i)}")
+            assert doc["found"] is True and doc["_id"] == i, doc
+        resp = _json.loads(_delete_raw(srv.port, f"/idx/{quote(odd[0])}").read())
+        assert resp == {"_index": "idx", "_id": odd[0], "result": "deleted"}, resp
+        code, body = _status(lambda: urllib.request.urlopen(f"http://127.0.0.1:{srv.port}/idx/{quote(odd[0])}"))
+        assert code == 404 and body["found"] is False, body
+        gone = _http_post(srv.port, "/idx/_aknn_msearch", {"ids": odd[:1], "k1": 50, "k2": 5})
+        assert gone["responses"][0]["hits"]["total"] == 0, gone
+    finally:
+        srv.stop()
+
+
+def test_http_msearch_k_must_be_json_integers(spark):
+    """msearch's k1 and k2 come from a JSON body: a float, a bool, a
+    string or null is a 400, not truncated to an int."""
+    docs = _sample_docs(spark, n=32)
+    srv = _serve(spark, docs)
+    try:
+        for k in (1.5, 5.0, True, "5", None):
+            for body in ({"ids": [1], "k1": k, "k2": 5}, {"ids": [1], "k1": 50, "k2": k}):
+                code, out = _status(lambda: _post_raw(srv.port, "/idx/_aknn_msearch", body))
+                assert code == 400 and "must be integers" in out["error"], (body, out)
+        out = _http_post(srv.port, "/idx/_aknn_msearch", {"ids": [1], "k1": 50, "k2": 5})
+        assert out["responses"][0]["hits"]["total"] == 5, out
+    finally:
+        srv.stop()
+
+
+def test_http_k1_boundary_ties_match_reference(spark):
+    """More than k1 neighbours tie on n_match: four groups of twelve
+    near-duplicate vectors (each scaled by its own 1 + c·1e-5, so the
+    re-rank distances differ but the hashes agree). The k1 cut must keep
+    the smallest ids of the tie, in Spark's order (bigint, or strings
+    where "15" < "3"), as api.aknn_search does (_reference); GET and
+    msearch must equal it."""
+    sample = _sample_docs(spark, n=24)
+
+    def vec(i):
+        c = 1.0 + 1e-5 * ((i * 7) % 13 + 1)
+        return {"_aknn_vector": [x * c for x in sample[i % 4]["_source"]["_aknn_vector"]]}
+
+    int_docs = [{"_id": i, "_source": vec(i)} for i in range(48)]
+    str_docs = [{"_id": str(i), "_source": vec(i)} for i in range(48)]
+    srv = _serve(spark, int_docs, sample=sample)
+    try:
+        _http_post(srv.port, "/_aknn_index", {"model": "m", "_index": "sidx", "docs": str_docs})
+        for index, idocs, qids in (
+            ("idx", int_docs, [3, 2, 15, 40]),
+            ("sidx", str_docs, ["3", "2", "15", "40"]),
+        ):
+            every = _reference(spark, srv, idocs, qids[:1], 1000, 1000)[qids[0]]["hits"]["hits"]
+            n_match = sorted((h["n_match"] for h in every), reverse=True)
+            assert n_match[4] == n_match[5], n_match  # the tie crosses k1 = 5
+            want = _reference(spark, srv, idocs, qids, 5, 3)
+            out = _http_post(srv.port, f"/{index}/_aknn_msearch", {"ids": qids, "k1": 5, "k2": 3})
+            for q, res in zip(qids, out["responses"]):
+                assert res == want[q], (index, q, res, want[q])
+                assert _http_get(srv.port, f"/{index}/{q}/_aknn_search?k1=5&k2=3") == res, (index, q)
+        # query 3's tie group is 7, 11, ..., 47: the bigint cut keeps 7 and
+        # the string cut does not ("11" < "7"), so the two answers differ
+        as_int = _reference(spark, srv, int_docs, [3], 5, 3)[3]["hits"]["hits"]
+        as_str = _reference(spark, srv, str_docs, ["3"], 5, 3)["3"]["hits"]["hits"]
+        assert [str(h["_id"]) for h in as_int] != [h["_id"] for h in as_str]
+    finally:
+        srv.stop()
+
+
+def test_http_mixed_model_index_matches_reference(spark):
+    """An index may hold batches hashed by different models. In one
+    msearch, a query doc with 4 tables meets term rows of tables 4 and 5
+    from the 6-table batch: those must match nothing for it (and raise
+    nothing), as in api.aknn_search over the same hashed docs."""
+    from pyspark.sql import functions as F
+
+    docs = _sample_docs(spark, n=120)
+    srv = _serve(spark, docs[:60])
+    try:
+        _http_post(
+            srv.port,
+            "/_aknn_create",
+            {"_id": "m6", "nb_tables": 6, "nb_bits_per_table": 3, "docs": docs[60:96]},
+        )
+        _http_post(srv.port, "/_aknn_index", {"model": "m6", "_index": "idx", "docs": docs[60:]})
+        hashed = None
+        for model, part in (("m", docs[:60]), ("m6", docs[60:])):
+            frame = spark.createDataFrame(
+                [(d["_id"], d["_source"]["_aknn_vector"]) for d in part],
+                "_id bigint, _aknn_vector array<double>",
+            )
+            h = aknn_index(frame, srv.registry.get(model))
+            hashed = h if hashed is None else hashed.unionByName(h)
+        qids = [docs[0]["_id"], docs[70]["_id"], docs[5]["_id"], docs[100]["_id"]]
+        rows = aknn_search(hashed, qids, 50, 5).orderBy("query_id", "distance", "neighbor_id").collect()
+        out = _http_post(srv.port, "/idx/_aknn_msearch", {"ids": qids, "k1": 50, "k2": 5})
+        for q, res in zip(qids, out["responses"]):
+            want = [(r.neighbor_id, r.distance, r.n_match) for r in rows if r.query_id == q]
+            got = [(h["_id"], h["_score"], h["n_match"]) for h in res["hits"]["hits"]]
+            assert got == want and len(got) == 5, (q, got, want)
+        assert hashed.select(F.max(F.size("hashes"))).first()[0] == 6
     finally:
         srv.stop()
