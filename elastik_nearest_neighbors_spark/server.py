@@ -34,9 +34,8 @@ parameter names and document field names, using only the Python stdlib
       "deleted" / 404 "not_found" — ES delete-by-id parity); bulk form
       POST /_aknn_delete {"_index": ..., "ids": [...]} → {"deleted": n}.
       Replace-on-index and delete are ONE mutation path (_replace_store;
-      a delete is a replace with no new rows): only the dropped ids'
-      docs/ and terms/ directories are patched, the terms side through
-      index_store.patch_lsh_terms like knn.index_upsert/index_delete.
+      a delete is a replace with no new rows): only the docs/ directories
+      that held a dropped id are rewritten.
       Deleting the last doc leaves an empty index: searches answer 200
       with zero hits.
 
@@ -54,39 +53,40 @@ parameter names and document field names, using only the Python stdlib
       (measured on the 200k-vector step-up — BASELINE.md r12).
 
 Every mutation runs under a per-index dirty marker: parquet has no
-transaction log, so a crash mid-commit could leave mutually-inconsistent
-docs/ and terms/ — the marker turns that into a DETECTED state (search
-and further mutations answer 503 TornIndexError; DELETE /{index} +
-re-index recovers) instead of silent recall loss. An index that was never
+transaction log, so a crash mid-commit could leave a half-rewritten docs/
+side — the marker turns that into a DETECTED state (search, doc GET and
+further mutations answer 503 TornIndexError; DELETE /{index} + re-index
+recovers) instead of silent recall loss. An index that was never
 written answers 404 index_not_found, like ES.
 
 Deployment shape: the server is a DRIVER-side facade over the
-parquet-backed index. Every index is stored in ONE layout, the
-partition-pruned store — the reference's keyword-field term index
-re-expressed as parquet directories: `/_aknn_index` writes the hashed docs
-under `docs/` partitioned by id_bucket (index_store.doc_bucket; doc-by-id
-lookup prunes to ONE directory) and the exploded terms under `terms/`
-partitioned by (tbl, bucket) (index_store.lsh_terms) — sources.index_store
-owns the layout and its bucket count; this module never names it.
-A search ranks on the driver, like the reference ranks inside its
-Elasticsearch node, and makes two Spark reads, neither of which shuffles:
-  1. the terms read: the ≤ T probed (tbl, bucket) term directories per
-     query, collected as Arrow. The term-match count and the top-k1 cut
-     by (-n_match, neighbor_id) run in numpy on the driver.
-  2. the re-rank gather: the ≤ Q·k1 candidates, a driver-local Arrow
-     relation (_local_df), broadcast against the docs snapshot, which is
-     read un-pruned (the same shape the gated batch ann_search_lsh_store
-     pays). The distance is functions.vector.euclidean rounded to
-     DIST_ROUND, as in knn.rank_term_matches.
-     The ≤ Q·k1 scored rows are sorted on the driver and cut to k2.
-A cached search runs 3 Spark jobs (the terms read, the candidates'
-broadcast, the docs scan; test-pinned, also for a 4-id msearch);
-a doc-cache miss adds one pruned stored-doc fetch. On a 10k-vector store
-(64 dims, T=16, k1=100, a 4-core VM) the median GET search takes about
-310 ms (perfbench serve_search).
-tests/test_server.py asserts the PartitionFilters in the served plans.
-Every other frame built from request rows (a delete's ids, a posted batch)
-is a _local_df relation too.
+parquet-backed index. Every index is stored in ONE layout, docs/ only: the
+hashed docs (_id, _aknn_vector, hashes) partitioned by id_bucket
+(index_store.doc_bucket), so a replace or delete rewrites only the
+directories that held its ids; sources.index_store owns the bucket count
+and this module never names it. Reads never touch that layout per request.
+Each index gets one immutable driver snapshot (_Snapshot), built by ONE
+Arrow read of docs/ on its first read: the _ids in Spark order, the n×D
+vectors, the stored hashes and, per table, the hashes sorted with their
+rows (the postings, rebuilt from docs/ since the hashes are stored there).
+A search then ranks like the reference ranks inside its Elasticsearch
+node: it counts term matches from the postings, keeps the top k1 by
+(-n_match, _id), re-ranks them by exact euclidean distance
+(functions.vector.euclidean_np and rounded_np, bit-identical to the
+Catalyst expression the batch path uses) and keeps the top k2 by
+(distance, _id). A warm search, msearch or doc GET runs 0 Spark jobs
+(test-pinned), and there is no doc cache to miss. Every mutation
+(index, delete, refresh, compact, drop) drops the index's snapshot; the
+first read after it rebuilds the snapshot, and that rebuild is where a
+torn index is detected. A snapshot holds about n·(8D + 24T + 12) bytes
+for n docs of dimension D hashed by T tables (91 MB at 100k × 64 with
+T = 16), plus the ids' strings on a string-id index. On a 10k-vector
+store (64 dims, T = 16, k1 = 100, a 4-core VM) the median GET search
+takes 2.7 ms, HTTP included (perfbench serve_search; 371 ms for the two
+Spark reads this replaced). A snapshot rebuild takes 0.6 s at 10k docs
+and 1.4 s at 100k (tools/wire_bulk_stepup.py).
+Every frame built from request rows (a delete's ids, a posted batch) is a
+_local_df relation.
 
 Registry entries `aknn_http_search` and `aknn_http_search_store` drive
 all three endpoints over a real localhost socket (one shared server) and
@@ -95,6 +95,7 @@ gate the round-trip against the shared ann_search_lsh oracle.
 
 from __future__ import annotations
 
+import bisect
 import json
 import math
 import os
@@ -103,16 +104,14 @@ import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, unquote, urlparse
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import constants
 from .api import ID_FIELD, VECTOR_FIELD, AknnModelRegistry, aknn_index
-from .constants import ANN_K1, ANN_K2, DIST_ROUND, LSH_BITS, LSH_TABLES
-
-# stored-doc cache entries across all indexes (FIFO): a scan over many
-# distinct ids can't grow it unboundedly
-DOC_CACHE_ENTRIES = 4096
+from .constants import ANN_K1, ANN_K2, LSH_BITS, LSH_TABLES
+from .functions.vector import euclidean_np, rounded_np
 
 
 def _local_df(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
@@ -132,6 +131,76 @@ def _local_df(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
     arrow = to_arrow_schema(schema)
     cols = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
     return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)
+
+
+def _lists(col) -> tuple[np.ndarray, np.ndarray]:
+    """(per-row lengths, flat values) of an Arrow list column."""
+    arr = col.combine_chunks()
+    return arr.value_lengths().to_numpy(zero_copy_only=False), arr.flatten().to_numpy()
+
+
+class _Snapshot:
+    """One index's live docs held on the driver as numpy arrays, from one
+    Arrow read of docs/ (_id, _aknn_vector, hashes). Immutable: a mutation
+    drops it and the next read builds a new one. Rows are in Spark's _id
+    order (bigint, or str by code point, which is Spark's UTF-8 byte
+    order), so ordering rows by number orders them by _id. An index may mix
+    models, so rows may have different table counts (`ntab`); a table's
+    postings hold only the rows that have it."""
+
+    def __init__(self, id_type: str, table) -> None:
+        ids = table.column(ID_FIELD).to_numpy()
+        order = np.argsort(ids, kind="stable")
+        n = len(order)
+        self.id_type = id_type
+        self.ids = ids[order]
+        dims, flat = _lists(table.column(VECTOR_FIELD))
+        if len(set(dims.tolist())) > 1:
+            raise ValueError(f"the index mixes vector dimensions {sorted(set(dims.tolist()))}")
+        self.vecs = flat.reshape(n, dims[0] if n else 0)[order]
+        ntab, flat = _lists(table.column("hashes"))
+        hashes = np.zeros((n, ntab.max(initial=0)), dtype=np.int64)
+        starts = np.repeat(np.cumsum(ntab) - ntab, ntab)
+        hashes[np.repeat(np.arange(n), ntab), np.arange(len(flat)) - starts] = flat
+        self.hashes, self.ntab = hashes[order], ntab[order]
+        self.postings = []
+        for t in range(hashes.shape[1]):
+            rows = np.flatnonzero(self.ntab > t)
+            by_hash = np.argsort(self.hashes[rows, t], kind="stable")
+            self.postings.append((self.hashes[rows[by_hash], t], rows[by_hash]))
+
+    def row(self, doc_id) -> int | None:
+        """The row of a (coerced) _id, or None if the index lacks it."""
+        i = bisect.bisect_left(self.ids, doc_id)
+        return i if i < len(self.ids) and self.ids[i] == doc_id else None
+
+    def search(self, doc_ids: list, k1: int, k2: int) -> dict:
+        """The reference's _aknn_search for each (coerced) id the index
+        holds: id -> [(neighbor_id, distance, n_match)]. A neighbour
+        matches once per table whose hash it shares with the query doc
+        (never the query itself); the top k1 by (-n_match, _id) are
+        re-ranked by rounded exact distance, and the top k2 by (distance,
+        _id) kept. np.unique returns rows, so ids, ascending, and both
+        sorts are stable on them."""
+        out = {}
+        for d in dict.fromkeys(doc_ids):
+            r = self.row(d)
+            if r is None:
+                continue
+            matched = [
+                rows[np.searchsorted(h, v, "left") : np.searchsorted(h, v, "right")]
+                for (h, rows), v in zip(self.postings, self.hashes[r, : self.ntab[r]])
+            ]
+            cand = np.concatenate(matched) if matched else np.zeros(0, dtype=np.int64)
+            nbrs, n_match = np.unique(cand[cand != r], return_counts=True)
+            top = np.argsort(-n_match, kind="stable")[:k1]
+            nbrs, n_match = nbrs[top], n_match[top]
+            dist = rounded_np(euclidean_np(self.vecs[r], self.vecs[nbrs]))
+            best = np.lexsort((nbrs, dist))[:k2]
+            out[d] = list(
+                zip(self.ids[nbrs[best]].tolist(), dist[best].tolist(), n_match[best].tolist())
+            )
+        return out
 
 
 class TornIndexError(RuntimeError):
@@ -169,18 +238,13 @@ class AknnHttpServer:
         self.spark = spark
         self.root = root
         self.registry = AknnModelRegistry(os.path.join(root, "models"))
-        # per-index docs/terms DataFrames, invalidated on append: a
-        # DataFrame's FileIndex snapshots the directory listing, so reusing
-        # one across searches skips the per-request re-list + footer read
-        # of the partitioned stores (measured ~2× per-search latency).
-        # Searches prune the SNAPSHOT via PartitionFilters — for a
-        # long-lived server this is the right 100 TB trade: one listing
-        # amortized over every request, versus load_lsh_partitions'
-        # per-call explicit-directory read, which is built for one-shot
-        # batch jobs. A mutation makes the snapshot stale, so _forget drops
-        # the entries.
+        # per-index docs/ DataFrame for the write paths and the snapshot
+        # build: a DataFrame's FileIndex snapshots the directory listing, so
+        # reusing one skips a re-list + footer read of the partitioned
+        # store. A mutation makes it stale, so _forget drops it.
         self._docs_cache: dict[str, DataFrame] = {}
-        self._terms_cache: dict[str, DataFrame] = {}
+        # per-index driver snapshot that every read answers from (_snapshot)
+        self._snapshots: dict[str, _Snapshot] = {}
         # next batch_seq per index for refresh=false staging; a cache miss
         # re-derives it from the staged parquet (max+1), so staged batches
         # survive a server restart with their order intact
@@ -195,17 +259,12 @@ class AknnHttpServer:
         # staging pins from its first STAGED batch); cleared on refresh
         # (the live store takes over) and on drop_index
         self._staged_id_type: dict[str, str] = {}
-        # doc-by-id lookup cache (r12): a search is two Spark reads — fetch
-        # the stored query doc, then rank its candidates; a repeated GET of
-        # the same doc (the ES hot-query reality) need not re-run the
-        # fetch. (index, id) -> stored row, or None for an id the index
-        # lacks. Invalidated per-index on every mutation, exactly like the
-        # snapshot caches; filled only by _fetch_docs, which applies the
-        # DOC_CACHE_ENTRIES cap.
-        self._doc_cache: dict[tuple, object] = {}
+        # vector dimension per index, pinned like the _id type: immutable
+        # once a batch lands, cleared only by drop_index (_pinned_dim)
+        self._dim_cache: dict[str, int] = {}
         # indexes with a mutation in flight (all ops serialize under the
-        # lock): their own dirty marker must not trip _check_clean when a
-        # snapshot cache misses mid-mutation
+        # lock): their own dirty marker must not trip _check_clean when the
+        # docs cache misses mid-mutation
         self._mutating: set[str] = set()
         self._lock = threading.RLock()
         self._httpd = ThreadingHTTPServer(("127.0.0.1", 0), _make_handler(self))
@@ -243,18 +302,15 @@ class AknnHttpServer:
 
     def _docs_path(self, index: str) -> str:
         """Where the (_id, _aknn_vector, hashes, id_bucket) doc rows of
-        `index` live: the store's docs/ side."""
+        `index` live."""
         return os.path.join(self._index_path(index), "docs")
-
-    def _terms_path(self, index: str) -> str:
-        return os.path.join(self._index_path(index), "terms")
 
     def _stored_id_type(self, index: str) -> str | None:
         """The _id dtype already persisted for this index, or None if the
-        index has no data yet. Reads through the docs snapshot cache — a
-        pre-append snapshot has the same schema, and a fresh
+        index has no data yet. Reads through the docs cache — a
+        pre-append DataFrame has the same schema, and a fresh
         spark.read.parquet here would re-list the partitioned store on
-        every append batch (the exact cost the caches exist to avoid).
+        every append batch (the exact cost the cache exists to avoid).
         LIVE store only — staged (unrefreshed) batches don't count; use
         _pinned_id_type where they must."""
         t = self._id_type_cache.get(index)
@@ -305,6 +361,39 @@ class AknnHttpServer:
             f"batch has {batch} ids — re-index under a new index name"
         )
 
+    def _pinned_dim(self, index: str) -> int | None:
+        """The vector dimension the index is committed to, or None while it
+        holds no doc: read from any one live (else staged) row once, then
+        kept until drop_index, like the _id type."""
+        from . import io
+
+        dim = self._dim_cache.get(index)
+        if dim is None:
+            frames = [self._cached_docs(index)] if self._stored_id_type(index) else []
+            if io.fs_isdir(self.spark, self._staging_path(index)):
+                frames.append(self.spark.read.parquet(self._staging_path(index)))
+            for df in frames:
+                row = df.select(F.size(VECTOR_FIELD)).first()
+                if row is not None:
+                    dim = self._dim_cache[index] = row[0]
+                    break
+        return dim
+
+    def _pin_dim(self, index: str, docs: list[dict]) -> int | None:
+        """The vector dimension of a posted batch, which must be the
+        index's pinned one (ValueError → 400): the first batch, live or
+        staged, pins it, as it pins the _id type. A batch of another
+        model's dimension would make the index's distances null (zip_with
+        pads the shorter vector) and its snapshot's matrix ragged."""
+        dims = {len(d["_source"][VECTOR_FIELD]) for d in docs}
+        pinned = self._pinned_dim(index)
+        if pinned is not None and dims - {pinned}:
+            raise ValueError(
+                f"index {index!r} pins vector dimension {pinned}; "
+                f"batch has dimension {sorted(dims - {pinned})[0]}"
+            )
+        return next(iter(dims), None)
+
     def create(self, body: dict) -> dict:
         name = body["_id"]
         nb_tables = int(body.get("nb_tables", LSH_TABLES))
@@ -343,6 +432,7 @@ class AknnHttpServer:
             # rows are dropped in the SAME write that lands the new ones.
             posted = list({d[ID_FIELD]: d for d in body["docs"]}.values())
             docs = self._pin_id_type(name, self._docs_df(posted))
+            dim = self._pin_dim(name, posted)
             # hash + materialize BEFORE touching the store: a replace must
             # not destroy the stored doc when the incoming one is invalid
             # (wrong dimension etc. — the hash matmul fails HERE, with the
@@ -356,23 +446,23 @@ class AknnHttpServer:
                 # the append itself materializes (and validates) the batch,
                 # and a failed append commits nothing (parquet job commit)
                 self._stage(name, hashed)
-                return {
-                    "acknowledged": True,
-                    "_index": name,
-                    "staged": len(body["docs"]),
-                }
-            hashed = hashed.localCheckpoint(eager=True)
-            ids = [d[ID_FIELD] for d in posted]
-            if dict(docs.dtypes)[ID_FIELD] == "string":
-                # _pin_id_type may have cast an int batch onto a string-
-                # pinned index; mirror that cast on the raw posted ids
-                ids = [str(i) for i in ids]
-            self._mutate(name, self._replace_store, name, ids, hashed)
-        return {"acknowledged": True, "_index": body["_index"], "indexed": len(body["docs"])}
+                out = {"acknowledged": True, "_index": name, "staged": len(body["docs"])}
+            else:
+                hashed = hashed.localCheckpoint(eager=True)
+                ids = [d[ID_FIELD] for d in posted]
+                if dict(docs.dtypes)[ID_FIELD] == "string":
+                    # _pin_id_type may have cast an int batch onto a string-
+                    # pinned index; mirror that cast on the raw posted ids
+                    ids = [str(i) for i in ids]
+                self._mutate(name, self._replace_store, name, ids, hashed)
+                out = {"acknowledged": True, "_index": name, "indexed": len(body["docs"])}
+            if dim is not None:
+                self._dim_cache.setdefault(name, dim)
+        return out
 
     # ---- torn-write detection (ADVICE r11): parquet has no transaction
-    # log, so a crash mid-mutation can leave a half-overwritten side or
-    # mutually-inconsistent docs/ and terms/. Every mutation runs under a
+    # log, so a crash mid-mutation can leave a half-overwritten docs/
+    # side. Every mutation runs under a
     # marker; a surviving marker turns silent recall loss into a refused,
     # diagnosable state. ----
 
@@ -396,10 +486,10 @@ class AknnHttpServer:
     def _mutate(self, index: str, fn, *args):
         """Run a store mutation under the torn-write marker: set it, run,
         clear it only on success. The marker sits OUTSIDE the data dir (a
-        bulk merge swaps whole docs/ and terms/ sides — a marker inside
-        them would vanish with the files it guards). Snapshot caches are
-        dropped in all cases: a failure after files were rewritten must
-        not leave them pointing at deleted parquet."""
+        bulk merge swaps the whole docs/ side — a marker inside it would
+        vanish with the files it guards). The index's cached docs and
+        snapshot are dropped in all cases: a failure after files were
+        rewritten must not leave them describing deleted parquet."""
         from . import io
 
         self._check_clean(index)
@@ -415,34 +505,25 @@ class AknnHttpServer:
         return out
 
     def _forget(self, index: str) -> None:
-        """Drop what a mutation of `index` made stale: its snapshot caches
-        and its doc-cache entries (keys match `index` exactly)."""
+        """Drop what a mutation of `index` made stale: its cached docs
+        DataFrame and its snapshot."""
         self._docs_cache.pop(index, None)
-        self._terms_cache.pop(index, None)
-        for k in [k for k in self._doc_cache if k[0] == index]:
-            del self._doc_cache[k]
+        self._snapshots.pop(index, None)
 
     def _ids_df(self, ids: list, id_type: str) -> DataFrame:
         return _local_df(self.spark, [(i,) for i in ids], f"{ID_FIELD} {id_type}")
 
-    def _pruned_dirs_df(self, base: str, part_cols: list[str], keys) -> DataFrame | None:
-        """Rows of exactly the named partition directories, read via
-        EXPLICIT paths + basePath (r12): a mutation previously re-read the
-        store through a fresh full snapshot (its FileIndex lists ALL
-        T·n_buckets + n_buckets directories) because the previous mutation
-        dropped the caches — the listing, not the data, dominated the
-        point-update latency. Directories that don't exist are skipped
-        (manifest-level probe); None = none of them do. The snapshot
-        caches stay what they are good at: amortizing ONE listing over
-        many searches."""
+    def _pruned_docs(self, index: str, buckets) -> DataFrame | None:
+        """Rows of exactly the named id_bucket directories, read via
+        EXPLICIT paths + basePath (r12): a store-wide read lists every
+        directory, and for a point update the listing, not the data,
+        dominated the latency. Directories that don't exist are skipped;
+        None = none of them do."""
         from . import io
 
-        dirs = []
-        for k in keys:
-            k = k if isinstance(k, (tuple, list)) else (k,)
-            d = io.fs_join(base, *[f"{c}={int(v)}" for c, v in zip(part_cols, k)])
-            if io.fs_isdir(self.spark, d):
-                dirs.append(d)
+        base = self._docs_path(index)
+        dirs = [io.fs_join(base, f"id_bucket={int(b)}") for b in buckets]
+        dirs = [d for d in dirs if io.fs_isdir(self.spark, d)]
         if not dirs:
             return None
         return self.spark.read.option("basePath", base).parquet(*dirs)
@@ -450,76 +531,43 @@ class AknnHttpServer:
     def _replace_store(self, index: str, ids: list, hashed: DataFrame | None = None) -> int:
         """The one store mutation: drop the stored docs of `ids` and add
         `hashed`'s rows (replace-on-index and refresh), or add nothing (a
-        delete). Each side (docs/, terms/) transitions old→new in ONE
-        pruned dynamic overwrite carrying survivors ∪ new rows, so a
-        replaced doc is never absent. Bounds: ≤ |ids| id_bucket docs
-        dirs, ≤ |ids|·T (tbl, bucket) term dirs (old ∪ new hashes), and a
-        delete rewrites only the dirs that held a doomed id; everything
-        else is untouched. Returns the number of stored docs dropped."""
-        from .sources.index_store import (
-            doc_bucket,
-            lsh_terms,
-            patch_lsh_terms,
-            pruned_dynamic_overwrite,
-            term_part,
-        )
+        delete). docs/ transitions old→new in ONE pruned dynamic overwrite
+        carrying survivors ∪ new rows, so a replaced doc is never absent.
+        It rewrites ≤ |ids| id_bucket directories, and a delete only the
+        ones that held a doomed id; everything else is untouched. Returns
+        the number of stored docs dropped."""
+        from .sources.index_store import doc_bucket, pruned_dynamic_overwrite
 
         id_type = self._stored_id_type(index)
         if id_type is None:
             self._append_store(index, hashed)
             return 0
         ids_df = self._ids_df(ids, id_type)
-        # ONE collect gives the pruning all it needs driver-side: the ids'
-        # docs buckets and the NEW hashes' term directories (≤ |ids|·T
-        # ints — no vectors). A delete's collect is a projection of a
-        # local relation, which Spark answers without a job.
+        # the ids' docs buckets, driver-side: a delete's collect is a
+        # projection of a local relation, which Spark answers without a job
         if hashed is None:
-            new_buckets, new_parts = set(), set()
-            buckets = {
-                int(r.id_bucket)
-                for r in ids_df.select(doc_bucket(F.col(ID_FIELD)).alias("id_bucket")).collect()
-            }
+            bucket_df = ids_df.select(doc_bucket(F.col(ID_FIELD)).alias("id_bucket"))
         else:
-            brows = hashed.select("id_bucket", "hashes").collect()
-            new_buckets = buckets = {int(r.id_bucket) for r in brows}
-            new_parts = {term_part(t, h) for r in brows for t, h in enumerate(r.hashes)}
+            bucket_df = hashed.select("id_bucket")
+        buckets = {int(r.id_bucket) for r in bucket_df.collect()}
+        new_buckets = set() if hashed is None else buckets
         # r12: the ids can only live in their own id_bucket dirs — read
-        # exactly those via explicit paths (no store-wide listing; see
-        # _pruned_dirs_df)
-        pruned = self._pruned_dirs_df(self._docs_path(index), ["id_bucket"], sorted(buckets))
-        # the overlap probe doubles as doomed-terms discovery: the stored
-        # hashes of the dropped ids name the term dirs to patch
+        # exactly those via explicit paths (no store-wide listing)
+        pruned = self._pruned_docs(index, sorted(buckets))
         doomed_rows = (
             []
             if pruned is None
-            else pruned.join(F.broadcast(ids_df), ID_FIELD, "left_semi")
-            .select("hashes", "id_bucket")
-            .collect()
+            else pruned.join(F.broadcast(ids_df), ID_FIELD, "left_semi").select("id_bucket").collect()
         )
         if not doomed_rows:
             if hashed is not None:
                 self._append_store(index, hashed)
             return 0
-        doomed_parts = {term_part(t, h) for r in doomed_rows for t, h in enumerate(r.hashes)}
         doomed_buckets = {int(r.id_bucket) for r in doomed_rows}
-        # terms side: explicit-dir read of the touched dirs only. A dir
-        # only a dropped id's old hash names can empty, so the emptied-dir
-        # sweep stays ON unless the new terms cover it.
-        touched = sorted(doomed_parts | new_parts)
-        terms = self._pruned_dirs_df(self._terms_path(index), ["tbl", "bucket"], touched)
-        patch_lsh_terms(
-            self.spark,
-            self._terms_path(index),
-            touched,
-            terms,
-            ids_df,
-            None if hashed is None else lsh_terms(hashed, ID_FIELD),
-            assume_live=doomed_parts <= new_parts,
-        )
-        # docs side: new rows land in exactly their probed buckets
-        # (id_bucket is a function of _id), so a replace can empty no
-        # touched dir (assume_live skips the emptied-dir job); a delete
-        # rewrites only the buckets that held a doomed id
+        # new rows land in exactly their probed buckets (id_bucket is a
+        # function of _id), so a replace can empty no touched dir
+        # (assume_live skips the emptied-dir job); a delete rewrites only
+        # the buckets that held a doomed id
         docs_touched = sorted(doomed_buckets | new_buckets)
         live_docs = pruned.where(F.col("id_bucket").isin(docs_touched)).join(
             F.broadcast(ids_df), ID_FIELD, "left_anti"
@@ -539,62 +587,32 @@ class AknnHttpServer:
             assume_live=doomed_buckets <= new_buckets,
         )
         if hashed is None:
-            # only a delete can empty a side
-            self._keep_schema(self._docs_path(index), ["id_bucket"], pruned.schema)
-            if terms is not None:
-                self._keep_schema(self._terms_path(index), ["tbl", "bucket"], terms.schema)
+            # only a delete can empty the store
+            self._keep_schema(index, pruned.schema)
         return len(doomed_rows)
 
     def _replace_store_bulk(self, index: str, latest: DataFrame) -> None:
         """Whole-store merge for bulk refreshes (r13, ADVICE
         r12): when the staged batch is corpus-sized, per-id pruning is
         pointless (it touches ~every directory anyway) and collecting the
-        staged ids/hashes driver-side is O(corpus) driver memory. Merge
-        fully distributed instead: survivors = live rows anti-joined
-        against the staged-id DataFrame, unioned with the staged rows,
-        clustered sibling-write + swap per side (docs/ by id_bucket,
-        terms/ by (tbl, bucket)) under the caller's torn-write marker.
-        Content is row-identical to the pruned patch path — the gated
-        drive asserts it by forcing the threshold down — and the swapped
-        store lands compacted (one file per directory) for free."""
-        from .sources.index_store import clustered_overwrite_swap, lsh_terms
+        staged ids driver-side is O(corpus) driver memory. Merge fully
+        distributed instead: survivors = live rows anti-joined against the
+        staged ids, unioned with the staged rows, clustered sibling-write +
+        swap of docs/ under the caller's torn-write marker. Content is
+        row-identical to the pruned patch path — the gated drive asserts
+        it by forcing the threshold down — and the swapped store lands
+        compacted (one file per directory) for free."""
+        from .sources.index_store import clustered_overwrite_swap
 
-        new_terms = lsh_terms(latest, ID_FIELD)
-        if self._stored_id_type(index) is None:
-            live_docs, live_terms = latest, new_terms
-        else:
-            ids_df = latest.select(ID_FIELD)
+        live_docs = latest
+        if self._stored_id_type(index) is not None:
             existing = self._cached_docs(index)
-            live_docs = (
-                existing.join(ids_df, ID_FIELD, "left_anti")
-                .unionByName(
-                    latest.withColumn(
-                        "id_bucket",
-                        F.col("id_bucket").cast(dict(existing.dtypes)["id_bucket"]),
-                    )
+            live_docs = existing.join(latest.select(ID_FIELD), ID_FIELD, "left_anti").unionByName(
+                latest.withColumn(
+                    "id_bucket", F.col("id_bucket").cast(dict(existing.dtypes)["id_bucket"])
                 )
             )
-            live_terms = (
-                self._cached_terms(index)
-                .select(
-                    "vec_id",
-                    F.col("tbl").cast("int").alias("tbl"),
-                    "hash",
-                    F.col("bucket").cast("int").alias("bucket"),
-                )
-                .join(
-                    ids_df.select(F.col(ID_FIELD).alias("vec_id")),
-                    "vec_id",
-                    "left_anti",
-                )
-                .unionByName(new_terms)
-            )
-        clustered_overwrite_swap(
-            self.spark, self._docs_path(index), live_docs, ["id_bucket"]
-        )
-        clustered_overwrite_swap(
-            self.spark, self._terms_path(index), live_terms, ["tbl", "bucket"]
-        )
+        clustered_overwrite_swap(self.spark, self._docs_path(index), live_docs, ["id_bucket"])
 
     # ---- refresh=false staging + /_aknn_refresh (r12, ES NRT parity):
     # staged batches are hashed but NOT searchable/deletable until refresh
@@ -670,23 +688,19 @@ class AknnHttpServer:
         mutation leaves one file per touched directory, and 40-50 files
         per directory was the measured cost floor of the upsert/delete
         serving drives). Runs compact_in_place on docs/ (by id_bucket)
-        and terms/ (by (tbl, bucket)) under the torn-write marker; served
-        rows are unchanged — same content, same partition values, fewer
-        files — so the gated results are identical by construction."""
+        under the torn-write marker; served rows are unchanged — same
+        content, same partition values, fewer files — so the gated
+        results are identical by construction."""
         from .sources.index_store import compact_in_place
 
         with self._lock:
             # _cached_docs raises IndexNotFoundError for an unknown index
-            sides = [
-                (self._docs_path(index), ["id_bucket"], self._cached_docs(index).schema),
-                (self._terms_path(index), ["tbl", "bucket"], self._cached_terms(index).schema),
-            ]
+            schema = self._cached_docs(index).schema
 
             def _run() -> None:
-                for path, part_cols, schema in sides:
-                    compact_in_place(self.spark, path, part_cols)
-                    # an index emptied by deletes compacts to no files
-                    self._keep_schema(path, part_cols, schema)
+                compact_in_place(self.spark, self._docs_path(index), ["id_bucket"])
+                # an index emptied by deletes compacts to no files
+                self._keep_schema(index, schema)
 
             self._mutate(index, _run)
             return {"_index": index, "acknowledged": True, "compacted": True}
@@ -711,31 +725,20 @@ class AknnHttpServer:
                 return 0
             return self._mutate(index, self._replace_store, index, ids)
 
-    def _keep_schema(self, path: str, part_cols: list[str], schema) -> None:
-        """Spark infers a store side's schema from its parquet files. A
-        side whose last row was deleted has no partition directory left,
-        so every later read would fail UNABLE_TO_INFER_SCHEMA, and after a
+    def _keep_schema(self, index: str, schema) -> None:
+        """Spark infers the store's schema from its parquet files. A store
+        whose last row was deleted has no id_bucket directory left, so
+        every later read would fail UNABLE_TO_INFER_SCHEMA, and after a
         restart the pinned _id type would be lost. Keep a zero-row file
-        under the all-zero partition directory instead: the emptied index
-        answers searches with 200 and zero hits, and keeps its _id type.
-        (The purge removes emptied leaf directories only, so a terms/ side
-        can keep empty tbl= parents: look for a full-depth leaf.)"""
+        under id_bucket=0 instead: the emptied index answers searches with
+        200 and zero hits, and keeps its _id type."""
         from . import io
 
-        leaves = [path]
-        for c in part_cols:
-            leaves = [
-                io.fs_join(d, e)
-                for d in leaves
-                for e in io.fs_list(self.spark, d)
-                if e.startswith(f"{c}=")
-            ]
-        if leaves:
+        path = self._docs_path(index)
+        if any(e.startswith("id_bucket=") for e in io.fs_list(self.spark, path)):
             return
-        empty = self.spark.createDataFrame([], schema).drop(*part_cols)
-        empty.write.mode("overwrite").parquet(
-            io.fs_join(path, *[f"{c}=0" for c in part_cols])
-        )
+        empty = self.spark.createDataFrame([], schema).drop("id_bucket")
+        empty.write.mode("overwrite").parquet(io.fs_join(path, "id_bucket=0"))
 
     def drop_index(self, index: str) -> bool:
         """DELETE /{index} — ES's delete-index, and the documented recovery
@@ -753,31 +756,22 @@ class AknnHttpServer:
             self._staging_seq.pop(index, None)
             self._staged_id_type.pop(index, None)
             self._id_type_cache.pop(index, None)
+            self._dim_cache.pop(index, None)
         return existed
 
     def _append_store(self, index: str, hashed: DataFrame) -> None:
-        """Append one all-new /_aknn_index batch into the partition-pruned
-        layout: docs/ partitioned by id_bucket (doc-by-id lookup = one
-        directory), terms/ partitioned by (tbl, bucket) —
-        sources.index_store's exact LSH layout (id column stored under its
-        vec_id name so load_lsh_partitions reads it back verbatim).
-        `hashed` arrives with id_bucket already computed (index() adds it
-        before the checkpoint). Per-batch appends accumulate one file per
-        touched directory per batch — the compaction story is
-        streaming_index_compact's, unchanged."""
-        from .sources.index_store import clustered, lsh_terms
+        """Append one all-new /_aknn_index batch to docs/, partitioned by
+        id_bucket (a doc-by-id rewrite touches one directory). `hashed`
+        arrives with id_bucket already computed (index() adds it before
+        the checkpoint). Per-batch appends accumulate one file per touched
+        directory per batch; /_aknn_compact rewrites them."""
+        from .sources.index_store import clustered
 
         (
             clustered(hashed, "id_bucket")
             .write.mode("append")
             .partitionBy("id_bucket")
             .parquet(self._docs_path(index))
-        )
-        (
-            clustered(lsh_terms(hashed, ID_FIELD), "tbl", "bucket")
-            .write.mode("append")
-            .partitionBy("tbl", "bucket")
-            .parquet(self._terms_path(index))
         )
 
     def _cached_docs(self, index: str) -> DataFrame:
@@ -786,8 +780,8 @@ class AknnHttpServer:
         df = self._docs_cache.get(index)
         if df is None:
             # cache miss is the one per-mutation re-entry point (every
-            # mutation pops the caches), so the torn-write check here
-            # covers all serving paths at zero cost to cached requests
+            # mutation drops the cache), so the torn-write check here
+            # covers the snapshot rebuild and the write paths
             self._check_clean(index)
             path = self._docs_path(index)
             if not io.fs_isdir(self.spark, path):
@@ -796,13 +790,17 @@ class AknnHttpServer:
             self._docs_cache[index] = df
         return df
 
-    def _cached_terms(self, index: str) -> DataFrame:
-        df = self._terms_cache.get(index)
-        if df is None:
-            self._check_clean(index)
-            df = self.spark.read.parquet(self._terms_path(index))
-            self._terms_cache[index] = df
-        return df
+    def _snapshot(self, index: str) -> _Snapshot:
+        """The index's driver snapshot that search, msearch and doc GET
+        answer from, built on a miss by ONE Arrow read of docs/ through
+        _cached_docs (whose miss runs the torn-write check: every mutation
+        drops both)."""
+        snap = self._snapshots.get(index)
+        if snap is None:
+            docs = self._cached_docs(index)
+            table = docs.select(ID_FIELD, VECTOR_FIELD, "hashes").toArrow()
+            snap = self._snapshots[index] = _Snapshot(dict(docs.dtypes)[ID_FIELD], table)
+        return snap
 
     def _coerce_ids(self, id_type: str, doc_ids: list) -> list:
         """The one wire-id coercion rule: `doc_ids` in the index's pinned
@@ -822,126 +820,11 @@ class AknnHttpServer:
                 out.append(d)
         return out
 
-    def _fetch_df(self, index: str, ids: list) -> DataFrame:
-        """The stored docs of the (coerced, non-empty) `ids`, read from
-        their id_bucket directories only: per id (id_bucket ==
-        doc_bucket(lit)) & (_id == lit), OR-ed. xxhash64 of a
-        literal constant-folds, so the scan's PartitionFilters see only
-        literal bucket equalities (asserted by tests/test_server.py). The
-        literal is cast to the pinned id type — xxhash64 is type-sensitive,
-        so an int probing a bigint-written bucket column must hash as
-        bigint."""
-        from .sources.index_store import doc_bucket
-
-        docs = self._cached_docs(index)
-        id_type = dict(docs.dtypes)[ID_FIELD]
-        pred = None
-        for d in ids:
-            qlit = F.lit(d).cast(id_type)
-            c = (F.col("id_bucket") == doc_bucket(qlit)) & (F.col(ID_FIELD) == qlit)
-            pred = c if pred is None else pred | c
-        return docs.where(pred)
-
-    def _fetch_docs(self, index: str, ids: list) -> dict:
-        """id -> stored row, or None where the index lacks the id, for the
-        coerced `ids`: cache hits first, then ONE pruned read (_fetch_df)
-        for every miss. The only writer of _doc_cache, so the FIFO cap is
-        applied here."""
-        out = {d: self._doc_cache[(index, d)] for d in ids if (index, d) in self._doc_cache}
-        missing = [d for d in dict.fromkeys(ids) if d not in out]
-        if missing:
-            got = dict.fromkeys(missing)
-            for r in self._fetch_df(index, missing).collect():
-                got[r[ID_FIELD]] = r
-            for d, r in got.items():
-                if len(self._doc_cache) >= DOC_CACHE_ENTRIES:
-                    self._doc_cache.pop(next(iter(self._doc_cache)))
-                self._doc_cache[(index, d)] = r
-            out.update(got)
-        return out
-
-    def _probed_terms_df(self, index: str, queries: list) -> DataFrame:
-        """The (vec_id, tbl, hash) term rows of the ≤ Q·T (tbl, bucket)
-        directories the stored query rows `queries` probe, read from the
-        cached terms snapshot: the same packed-key IN PartitionFilters
-        shape as load_lsh_partitions, without its per-call listing (see
-        the _terms_cache note in __init__); directories shared by several
-        queries are read once. A scan and a projection: one job, no
-        shuffle."""
-        from .sources.index_store import partition_key_filter, term_part
-
-        pairs = sorted({term_part(t, h) for q in queries for t, h in enumerate(q["hashes"])})
-        return (
-            self._cached_terms(index)
-            .where(partition_key_filter(["tbl", "bucket"], pairs))
-            .select("vec_id", "tbl", "hash")
-        )
-
-    def _candidates(self, index: str, ids: list, k1: int) -> list:
-        """The reference's term-match step for the (coerced) query `ids`,
-        ranked on the driver: (query_id, neighbor_id, n_match, query
-        vector) for each query's top k1 neighbours by (-n_match,
-        neighbor_id). The stored query docs come from _fetch_docs, their
-        candidates from ONE Arrow read of the probed term directories
-        (_probed_terms_df). A neighbour matches a query once per table
-        whose hash it shares; a term of a table the query doc lacks (an
-        index may mix models across batches) matches nothing. Python
-        orders ints like Spark's bigint and str by code point like
-        Spark's UTF-8 bytes, so the cut equals a rank window's."""
-        import numpy as np
-
-        found = [(d, q) for d, q in self._fetch_docs(index, ids).items() if q is not None]
-        if not found:
-            return []
-        terms = self._probed_terms_df(index, [q for _d, q in found]).toArrow()
-        vec_id = terms.column("vec_id").to_numpy(zero_copy_only=False)
-        tbl = terms.column("tbl").to_numpy()
-        hsh = terms.column("hash").to_numpy()
-        out = []
-        for d, q in found:
-            qh = np.asarray(q["hashes"], dtype=np.int64)
-            own = tbl < len(qh)
-            hit = own & (hsh == qh[np.where(own, tbl, 0)]) & (vec_id != d)
-            # unique sorts the ids ascending; a stable sort keeps that
-            # order among equal counts
-            nbrs, n_match = np.unique(vec_id[hit], return_counts=True)
-            top = np.argsort(-n_match, kind="stable")[:k1]
-            qv = list(q[VECTOR_FIELD])
-            out += [(d, nid, n, qv) for nid, n in zip(nbrs[top].tolist(), n_match[top].tolist())]
-        return out
-
-    def _gather_df(self, index: str, candidates: list) -> DataFrame:
-        """The exact re-rank gather of _candidates' rows: one local
-        relation joined to the docs snapshot on neighbor_id, each pair
-        scored by the same rounded euclidean expression as
-        knn.rank_term_matches. The collect runs two jobs, the local
-        side's broadcast and the streamed docs scan, and no shuffle; the
-        top k2 per query is kept by msearch."""
-        from .functions.vector import euclidean
-
-        docs = self._cached_docs(index)
-        id_type = dict(docs.dtypes)[ID_FIELD]
-        cands = _local_df(
-            self.spark,
-            candidates,
-            f"query_id {id_type}, neighbor_id {id_type}, n_match bigint, qv array<double>",
-        )
-        nvec = docs.select(F.col(ID_FIELD).alias("neighbor_id"), F.col(VECTOR_FIELD).alias("nv"))
-        return F.broadcast(cands).join(nvec, "neighbor_id").select(
-            "query_id",
-            "neighbor_id",
-            "n_match",
-            F.round(euclidean(F.col("qv"), F.col("nv")), DIST_ROUND).alias("distance"),
-        )
-
     def msearch(self, index: str, doc_ids: list, k1: int = ANN_K1, k2: int = ANN_K2) -> dict:
         """Batched search — ES `_msearch` parity, JSON-body form: one
         response per requested id, in request order, each identical to the
-        single-id GET's payload. A cached search is two Spark reads: the
-        probed term directories (_candidates ranks the term matches on the
-        driver) and the ≤ Q·k1 re-rank gather (_gather_df), whose scored
-        rows are sorted here; a stored-doc fetch job is added on a doc
-        cache miss. Neither read shuffles, and Q queries share each one.
+        single-id GET's payload. Ranked from the index's snapshot
+        (_Snapshot.search): no Spark job once the snapshot is built.
         `doc_ids` must be a list and k1, k2 integers of at least 1
         (ValueError → 400): a JSON string would otherwise be searched char
         by char, a JSON 1.5 or true would be truncated, and a non-positive
@@ -953,32 +836,18 @@ class AknnHttpServer:
         if k1 < 1 or k2 < 1:
             raise ValueError(f"k1 and k2 must be >= 1, got k1={k1}, k2={k2}")
         with self._lock:
-            id_type = dict(self._cached_docs(index).dtypes)[ID_FIELD]
-            cands = self._candidates(index, self._coerce_ids(id_type, doc_ids), k1)
-            rows = self._gather_df(index, cands).collect() if cands else []
-        # at most Q·k1 rows: the top k2 of each query in (distance,
-        # neighbor_id) order, as a rank window would keep them — no
-        # distance is NaN (_docs_df refuses non-finite components),
-        # neighbor ids are unique per query, and str order is code-point
-        # order, which is Spark's UTF-8 byte order
-        by_qid: dict = {}
-        for r in sorted(rows, key=lambda r: (r.distance, r.neighbor_id)):
-            hits = by_qid.setdefault(r.query_id, [])
-            if len(hits) < k2:
-                hits.append(r)
+            snap = self._snapshot(index)
+            found = snap.search(self._coerce_ids(snap.id_type, doc_ids), k1, k2)
         responses = []
         for d in doc_ids:
-            keyed = self._coerce_ids(id_type, [d])
-            hits = by_qid.get(keyed[0], []) if keyed else []
+            keyed = self._coerce_ids(snap.id_type, [d])
+            hits = found.get(keyed[0], []) if keyed else []
             responses.append(
                 {
                     "timed_out": False,
                     "hits": {
                         "total": len(hits),
-                        "hits": [
-                            {"_id": r.neighbor_id, "_score": r.distance, "n_match": r.n_match}
-                            for r in hits
-                        ],
+                        "hits": [{"_id": i, "_score": s, "n_match": n} for i, s, n in hits],
                     },
                 }
             )
@@ -989,21 +858,20 @@ class AknnHttpServer:
 
     def get_doc(self, index: str, doc_id) -> dict | None:
         """ES GET /{index}/{id} parity (r13, #163): the stored document's
-        source vector, or None → the handler's 404. Reads the id's single
-        pruned id_bucket directory through the same per-id cache the
-        serving path warms (_fetch_docs). JSON round-trips the doubles
-        exactly, so the wire doc equals the stored doc bit-for-bit."""
+        source vector from the index's snapshot, or None → the handler's
+        404. JSON round-trips the doubles exactly, so the wire doc equals
+        the stored doc bit-for-bit."""
         with self._lock:
-            id_type = dict(self._cached_docs(index).dtypes)[ID_FIELD]
-            ids = self._coerce_ids(id_type, [doc_id])
-            q = self._fetch_docs(index, ids)[ids[0]] if ids else None
-        if q is None:
+            snap = self._snapshot(index)
+            ids = self._coerce_ids(snap.id_type, [doc_id])
+            r = snap.row(ids[0]) if ids else None
+        if r is None:
             return None
         return {
             "_index": index,
-            "_id": q[ID_FIELD],
+            "_id": snap.ids[r : r + 1].tolist()[0],
             "found": True,
-            "_source": {VECTOR_FIELD: list(q[VECTOR_FIELD])},
+            "_source": {VECTOR_FIELD: snap.vecs[r].tolist()},
         }
 
     def models(self) -> dict:
@@ -1198,10 +1066,12 @@ def aknn_http_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def aknn_http_search_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry (SURVEY §2 #157, r11): the same drive as
-    aknn_http_search over the same server — docs/ by id_bucket, terms/ by
-    (tbl, bucket). Gated by the same shared ann_search_lsh oracle: the
-    pruned serving path must be bit-identical to the in-memory search,
-    proving the 100 TB layout is lossless behind the wire protocol."""
+    aknn_http_search over the same server — the docs/ store by id_bucket,
+    served from the driver snapshot built by one read of it (the postings
+    are rebuilt from the stored hashes). Gated by the same shared
+    ann_search_lsh oracle: the snapshot's numpy ranking must be
+    bit-identical to the in-memory Spark search, proving the store and
+    the snapshot are lossless behind the wire protocol."""
     return _drive_endpoints(spark, sf_dir)
 
 
@@ -1210,7 +1080,7 @@ def aknn_http_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics over the wire. An ES index op with an existing _id replaces
     the stored document — so `/_aknn_index` purges incoming ids from the
     store before appending (pruned dynamic overwrite of the ≤ |batch|
-    docs directories and the doomed ids' term directories).
+    docs directories), and the next search rebuilds the snapshot.
     The drive posts the full table, then RE-POSTS the canonical update set
     (vec_id % UPSERT_MOD == 0, every component doubled — IEEE-exact, and
     JSON round-trips doubles exactly) through the same endpoint against
@@ -1265,9 +1135,9 @@ def aknn_http_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def aknn_http_doc_get(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry (SURVEY §2 #163, r13): ES document-GET parity —
-    GET /{index}/{id} returns the stored doc from its single pruned
-    id_bucket directory (the exact read + per-id cache the serving path
-    uses), 404 for an unknown id. The drive reuses the store-backed
+    GET /{index}/{id} returns the stored doc from the index's driver
+    snapshot (the one read of docs/ the searches answer from), 404 for an
+    unknown id. The drive reuses the store-backed
     search server's built index (shared _SERVER_CACHE key — no second
     load), GETs every canonical query id plus one unknown id (asserted
     404, contributing no rows), and explodes the JSON vectors to
@@ -1378,9 +1248,8 @@ def _drive_endpoints(
 
     srv = _ensure_server(spark, sf_dir, tag, repost, mutate, bulk)
     # r13: the canonical queries go over the wire as ONE _aknn_msearch
-    # request — Q queries share one ranked collect instead of paying
-    # Q × fixed per-request driver cost (the r12 verdict's job-count
-    # item); per-query payloads are identical to the per-id GET's (the
+    # request instead of paying Q × fixed per-request cost (the r12
+    # verdict's job-count item); per-query payloads are identical to the per-id GET's (the
     # endpoint is unit-tested equal), so the gate is unchanged
     rows = []
     res = _http_post(

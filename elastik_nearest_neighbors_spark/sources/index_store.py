@@ -8,7 +8,7 @@ parquet layout whose *directory partitioning* carries the pruning:
   (tbl, bucket = pmod(hash, n_buckets)). A search that term-matches one
   (tbl, hash) pair touches exactly one directory — the scan's
   PartitionFilters prune everything else without reading a footer. The
-  HTTP server's docs/ side is partitioned by
+  HTTP server's store (docs/ only) is partitioned by
   id_bucket = pmod(xxhash64(_id), n_buckets).
 - IVF: (vec_id, list_id) partitioned by list_id; probing nprobe of nlist
   lists reads nprobe/nlist of the data.
@@ -130,10 +130,9 @@ def pruned_dynamic_overwrite(
     assume_live: bool = False,
 ) -> None:
     """The shared patch-in-place tail used by every index-maintenance op:
-    patch_lsh_terms (the HTTP server's replace and delete,
-    knn.index_upsert, knn.index_delete), the server's docs/ side,
-    ivf.ivf_upsert/ivf_delete, pq.ivfpq_upsert/ivfpq_delete and
-    graph._purge_edges.
+    patch_lsh_terms (knn.index_upsert, knn.index_delete), the HTTP
+    server's docs/ store, ivf.ivf_upsert/ivf_delete,
+    pq.ivfpq_upsert/ivfpq_delete and graph._purge_edges.
 
     `patched` holds the surviving/replacement rows of ONLY the `touched`
     directories (each key an int or tuple matching `part_cols`). Steps, each

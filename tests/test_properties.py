@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import hashlib
 
+import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -730,3 +731,80 @@ def test_register_tokenizer_plugs_in(monkeypatch):
         assert str(T.tokens(F.col("text"))) == str(F.split(F.upper(F.col("text")), " "))
     finally:
         T._TOKENIZERS.pop("upper_ws", None)
+
+
+def _tie_values(rng, n: int) -> np.ndarray:
+    """`n` doubles whose shortest decimal string has exactly seven
+    decimals, the last a 5 (a HALF_UP tie at DIST_ROUND = 6 places), over
+    integer parts from 0 to 10**6."""
+    whole = rng.integers(0, 10 ** rng.integers(0, 7, n))
+    frac = rng.integers(0, 10**6, n)
+    return np.array([float(f"{w}.{f:06d}5") for w, f in zip(whole.tolist(), frac.tolist())])
+
+
+def test_numpy_distance_twin_matches_spark_rounding(spark, tmp_path):
+    """functions.vector's numpy twin, rounded_np(euclidean_np(a, b)), must
+    equal Spark's F.round(euclidean(a, b), DIST_ROUND) bit for bit: the
+    HTTP server ranks with the twin, and the batch path and every oracle
+    with the Catalyst expression. Pairs: 10**6 random 3-d pairs with scales
+    from 1e-4 to 1e6, 2·10**4 64-d pairs, and 3·10**4 constructed
+    half-way cases (plus their neighbouring doubles) whose distance's 7th
+    decimal is a tie. At a tie the HALF_UP result rests on the decimal
+    string: Spark reads it from the JDK's Double.toString, which JDK 17
+    does not always print shortest (JDK-4511638), the twin from Python's
+    shortest repr."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pyspark.sql.functions as F
+
+    from elastik_nearest_neighbors_spark.constants import DIST_ROUND
+    from elastik_nearest_neighbors_spark.functions.vector import (
+        euclidean,
+        euclidean_np,
+        rounded_np,
+    )
+
+    rng = np.random.default_rng(20261018)
+    n = 10**6
+    scale = 10 ** rng.uniform(-4, 6, (n, 1))
+    ties = _tie_values(rng, 3 * 10**4)
+    ties = np.concatenate([ties, np.nextafter(ties, 0.0), np.nextafter(ties, np.inf)])
+    zeros = np.zeros((len(ties), 3))
+    groups = [
+        (rng.standard_normal((n, 3)) * scale, rng.standard_normal((n, 3)) * scale),
+        (rng.standard_normal((2 * 10**4, 64)), rng.standard_normal((2 * 10**4, 64))),
+        # (t, 0, 0) against the origin: the distance is sqrt(t * t) == t
+        (np.column_stack([ties, zeros[:, 1:]]), zeros),
+        (zeros, np.column_stack([zeros[:, :2], ties])),
+    ]
+    dist = np.concatenate([euclidean_np(a, b) for a, b in groups])
+    want = rounded_np(dist)
+    for a, b in groups[2:]:
+        assert np.array_equal(euclidean_np(a, b), ties)
+
+    def lists(arrays):
+        rows = np.concatenate([m.ravel() for m in arrays])
+        offsets = np.cumsum([0] + [m.shape[1] for m in arrays for _ in range(len(m))])
+        return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), pa.array(rows))
+
+    path = str(tmp_path / "pairs.parquet")
+    table = pa.table(
+        {
+            "i": pa.array(np.arange(len(want))),
+            "a": lists([a for a, _b in groups]),
+            "b": lists([b for _a, b in groups]),
+        }
+    )
+    pq.write_table(table, path)
+    d = euclidean(F.col("a"), F.col("b"))
+    got = (
+        spark.read.parquet(path)
+        .select("i", d.alias("d"), F.round(d, DIST_ROUND).alias("r"))
+        .toArrow()
+        .sort_by("i")
+    )
+    # the unrounded fold too, so a change of summation order shows
+    for col, ours in (("d", dist), ("r", want)):
+        theirs = got.column(col).to_numpy()
+        bad = np.flatnonzero(theirs != ours)
+        assert len(theirs) == len(ours) and not len(bad), (col, [(float(theirs[i]), float(ours[i])) for i in bad[:5]])

@@ -1,9 +1,9 @@
 """HTTP serving-layer contracts beyond the basic endpoint test
-(tests/test_operators.py::test_aknn_http_server_endpoints): the
-partition-pruned store equals the in-memory search and carries
-PartitionFilters in the served plan, the id-type pinning rule (ADVICE
-r10), replace/delete/refresh semantics, torn-write and unknown-index
-errors, and per-index cache invalidation."""
+(tests/test_operators.py::test_aknn_http_server_endpoints): the served
+snapshot equals the in-memory search, a warm read runs no Spark job, the
+id-type and dimension pinning rules (ADVICE r10), replace/delete/refresh
+semantics, torn-write and unknown-index errors, and per-index snapshot
+invalidation."""
 
 from __future__ import annotations
 
@@ -53,12 +53,6 @@ def _serve(spark, docs, batches=1, sample=None):
     return srv
 
 
-def _query_rows(srv, index, ids):
-    """The stored rows of the query docs `ids` (the input of the served
-    search's terms read)."""
-    return [q for q in srv._fetch_docs(index, ids).values() if q is not None]
-
-
 def _reference(spark, srv, docs, qids, k1=50, k2=5):
     """The wire response each of `qids` must get, computed by the in-memory
     api.aknn_search over the server's own model and the same docs (string
@@ -86,9 +80,12 @@ def _reference(spark, srv, docs, qids, k1=50, k2=5):
 def test_http_store_mode_matches_flat_and_prunes(spark):
     """r11 (#157): the store-backed server (MULTI-batch append) must return
     exactly the wire responses the in-memory api.aknn_search gives over the
-    same model and docs, and its serving plan must carry PartitionFilters
-    on both pruned reads (terms by (tbl, bucket), query doc by id_bucket).
-    The store is the only layout: asking for another one is an error."""
+    same model and docs. The store is docs/ alone, partitioned by
+    id_bucket (a replace or delete rewrites only its ids' directories):
+    the served postings are rebuilt from the stored hashes, so no terms/
+    side is written. It is the only layout: asking for another one is an
+    error."""
+    import os
     with pytest.raises(ValueError):
         AknnHttpServer(spark, tempfile.mkdtemp(prefix="enn_http_test_"), store_backed=False)
     docs = _sample_docs(spark)
@@ -100,14 +97,11 @@ def test_http_store_mode_matches_flat_and_prunes(spark):
             got = _http_get(store.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5")
             assert got == want[qid], (qid, got, want[qid])
             assert got["hits"]["total"] == 5
-        # the pruned plans: literal PartitionFilters on BOTH store reads —
-        # candidate terms by (tbl, bucket), query doc by id_bucket
-        df = store._probed_terms_df("idx", _query_rows(store, "idx", [docs[0]["_id"]]))
-        pf = " ".join(plans.partition_filters(df))
-        assert "tbl" in pf and "bucket" in pf, plans.formatted_plan(df)
-        qdf = store._fetch_df("idx", [docs[0]["_id"]])
-        qpf = " ".join(plans.partition_filters(qdf))
-        assert "id_bucket" in qpf and "=" in qpf, plans.formatted_plan(qdf)
+        base = os.path.join(store.root, "indexes", "idx")
+        assert sorted(os.listdir(base)) == ["docs"], os.listdir(base)
+        docs_dir = os.path.join(base, "docs")
+        parts = [p for p in os.listdir(docs_dir) if os.path.isdir(os.path.join(docs_dir, p))]
+        assert len(parts) > 1 and all(p.startswith("id_bucket=") for p in parts), parts
     finally:
         store.stop()
 
@@ -322,13 +316,13 @@ def test_http_torn_marker_503_and_drop_recovers(spark):
     try:
         qid = docs[0]["_id"]
         assert _http_get(srv.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5")["hits"]["total"] == 5
-        # simulate the crash: marker on disk, snapshot caches gone
-        # (every real mutation pops them before the marker could stay)
+        # simulate the crash: marker on disk, the index's snapshot dropped
+        # (every real mutation drops it before the marker could stay)
         open(srv._dirty_marker("idx"), "w").close()
-        srv._docs_cache.clear()
-        srv._terms_cache.clear()
+        srv._forget("idx")
         for req in (
             lambda: _http_get(srv.port, f"/idx/{qid}/_aknn_search?k1=50&k2=5"),
+            lambda: _http_get(srv.port, f"/idx/{qid}"),
             lambda: _post_raw(srv.port, "/_aknn_index", {"model": "m", "_index": "idx", "docs": docs[:4]}),
             lambda: _delete_raw(srv.port, f"/idx/{qid}"),
         ):
@@ -525,9 +519,7 @@ def test_http_msearch_matches_per_id_both_modes(spark):
     """r13 (the r12 verdict's job-count item): POST /{index}/_aknn_msearch
     must return, per id and in request order, exactly the per-id GET's
     payload — with unknown and non-numeric ids keeping the 200/zero-hits
-    contract inside a batch and a repeated id answered like its GET — and
-    the batched plan must keep literal PartitionFilters on the pruned
-    reads."""
+    contract inside a batch and a repeated id answered like its GET."""
     docs = _sample_docs(spark)
     srv = _serve(spark, docs, batches=2)
     try:
@@ -542,20 +534,14 @@ def test_http_msearch_matches_per_id_both_modes(spark):
         assert out["responses"][1]["hits"]["total"] == 0
         assert out["responses"][3]["hits"]["total"] == 0
         assert out["responses"][0]["hits"]["total"] > 0
-        df = srv._probed_terms_df("idx", _query_rows(srv, "idx", [docs[0]["_id"], docs[7]["_id"]]))
-        pf = " ".join(plans.partition_filters(df))
-        assert "tbl" in pf and "bucket" in pf, plans.formatted_plan(df)
-        qdf = srv._fetch_df("idx", [docs[0]["_id"], docs[7]["_id"]])
-        qpf = " ".join(plans.partition_filters(qdf))
-        assert "id_bucket" in qpf, plans.formatted_plan(qdf)
     finally:
         srv.stop()
 
 
 def test_http_compact_shrinks_files_and_preserves_results(spark):
     """r13 (#163 wire compaction): POST /_aknn_compact must rewrite a
-    multi-batch store's docs/ and terms/ into one file per partition
-    directory with search responses unchanged and equal to the in-memory
+    multi-batch store's docs/ into one file per partition directory
+    with search responses unchanged and equal to the in-memory
     api.aknn_search over the same model and docs, and 404 an unknown
     index."""
     import glob
@@ -580,10 +566,9 @@ def test_http_compact_shrinks_files_and_preserves_results(spark):
                 len(glob.glob(os.path.join(d, "*.parquet"))) for d in dirs
             )
 
-        assert max_files("terms") > 1  # the appends really did accumulate
+        assert max_files("docs") > 1  # the appends really did accumulate
         out = _http_post(srv.port, "/_aknn_compact", {"_index": "idx"})
         assert out == {"_index": "idx", "acknowledged": True, "compacted": True}
-        assert max_files("terms") == 1
         assert max_files("docs") == 1
         after = [
             _http_get(srv.port, f"/idx/{q}/_aknn_search?k1=50&k2=5") for q in qids
@@ -632,22 +617,77 @@ def test_http_unknown_index_is_404_index_not_found(spark):
 
 
 def test_http_cache_invalidation_is_per_index(spark):
-    """A mutation or drop of index `v` must not drop index `v2`'s
-    doc-cache entries (`v` is a prefix of `v2`), and must drop its own."""
+    """A mutation or drop of index `v` must rebuild `v`'s snapshot and
+    leave `v2`'s alone (`v` is a prefix of `v2`): after it, a search on
+    `v2` still runs no Spark job and one on `v` sees the mutation."""
     docs = _sample_docs(spark, n=32)
     srv = _serve(spark, docs)
+    moved = {"_id": docs[5]["_id"], "_source": docs[9]["_source"]}
     try:
         for name in ("v", "v2"):
             _http_post(srv.port, "/_aknn_index", {"model": "m", "_index": name, "docs": docs})
             _http_get(srv.port, f"/{name}/{docs[5]['_id']}")
-        assert {("v", docs[5]["_id"]), ("v2", docs[5]["_id"])} <= set(srv._doc_cache)
-        _http_post(srv.port, "/_aknn_index", {"model": "m", "_index": "v", "docs": docs[2:4]})
-        assert ("v", docs[5]["_id"]) not in srv._doc_cache
-        assert ("v2", docs[5]["_id"]) in srv._doc_cache
-        _http_get(srv.port, f"/v/{docs[5]['_id']}")
+        _http_post(srv.port, "/_aknn_index", {"model": "m", "_index": "v", "docs": [moved]})
+        group = f"enn-invalidation-{srv.port}"
+        got, n = _jobs(spark, group + "-v2", lambda: srv.get_doc("v2", docs[5]["_id"]))
+        assert n == 0 and got["_source"] == docs[5]["_source"]
+        got, n = _jobs(spark, group + "-v", lambda: srv.get_doc("v", docs[5]["_id"]))
+        assert n > 0 and got["_source"] == docs[9]["_source"]
         _delete_raw(srv.port, "/v")
-        assert ("v", docs[5]["_id"]) not in srv._doc_cache
-        assert ("v2", docs[5]["_id"]) in srv._doc_cache
+        _, n = _jobs(spark, group + "-drop", lambda: srv.search("v2", docs[5]["_id"], 50, 5))
+        assert n == 0
+        code, body = _status(lambda: urllib.request.urlopen(f"http://127.0.0.1:{srv.port}/v/{docs[5]['_id']}"))
+        assert code == 404 and body["error"]["type"] == "index_not_found_exception", body
+    finally:
+        srv.stop()
+
+
+def test_http_first_read_after_each_mutation_sees_it(spark):
+    """Every mutation kind drops the index's snapshot, so the first read
+    after it answers from the new state: an immediate index of a new and a
+    replaced doc, a single and a bulk delete, a staged batch (invisible)
+    and its refresh (visible), a compaction (unchanged) and a drop. Each
+    read comes right after a warm one, so a stale snapshot would answer."""
+    docs = _sample_docs(spark, n=64)
+    srv = _serve(spark, docs[:40])
+    base = f"http://127.0.0.1:{srv.port}"
+
+    def found(i):
+        try:
+            return _http_get(srv.port, f"/idx/{i}")["_source"]
+        except urllib.error.HTTPError as e:
+            assert e.code == 404
+            return None
+
+    def hits(i):
+        return [h["_id"] for h in _http_get(srv.port, f"/idx/{i}/_aknn_search?k1=50&k2=40")["hits"]["hits"]]
+
+    try:
+        q, new, old = docs[0]["_id"], docs[45]["_id"], docs[3]["_id"]
+        # a new doc at q's own vector shares every term with q
+        twin = {"_id": new, "_source": docs[0]["_source"]}
+        moved = {"_id": old, "_source": docs[50]["_source"]}
+        assert found(new) is None and new not in hits(q)
+        _http_post(srv.port, "/_aknn_index", {"model": "m", "_index": "idx", "docs": [twin, moved]})
+        assert found(new) == twin["_source"] and found(old) == docs[50]["_source"]
+        assert new in hits(q)
+        _delete_raw(srv.port, f"/idx/{new}")
+        assert found(new) is None and new not in hits(q)
+        doomed = hits(q)[:2]
+        _http_post(srv.port, "/_aknn_delete", {"_index": "idx", "ids": doomed})
+        assert not set(doomed) & set(hits(q)) and found(doomed[0]) is None
+        staged = docs[60]
+        _http_post(srv.port, "/_aknn_index",
+                   {"model": "m", "_index": "idx", "docs": [staged], "refresh": False})
+        assert found(staged["_id"]) is None
+        _http_post(srv.port, "/_aknn_refresh", {"_index": "idx"})
+        assert found(staged["_id"]) == staged["_source"]
+        before = hits(q)
+        _http_post(srv.port, "/_aknn_compact", {"_index": "idx"})
+        assert hits(q) == before
+        _delete_raw(srv.port, "/idx")
+        code, body = _status(lambda: urllib.request.urlopen(f"{base}/idx/{q}/_aknn_search"))
+        assert code == 404 and body["error"]["type"] == "index_not_found_exception", body
     finally:
         srv.stop()
 
@@ -1052,15 +1092,13 @@ def test_http_create_checks_model_shape(spark):
 
 
 def test_http_served_frames_are_local_relations(spark):
-    """The rows a request brings to the driver (msearch's re-rank
-    candidates, a mutation's ids, a posted batch) are local relations: no
-    Python-RDD scan, whose broadcast would run a job of Python-worker
-    tasks per request."""
+    """The rows a request brings to the driver (a mutation's ids, a posted
+    batch) are local relations: no Python-RDD scan, whose broadcast would
+    run a job of Python-worker tasks per request."""
     docs = _sample_docs(spark, n=32)
     srv = _serve(spark, docs)
     try:
         for df in (
-            srv._gather_df("idx", srv._candidates("idx", [docs[0]["_id"], docs[3]["_id"]], 50)),
             srv._ids_df([1, 2], "bigint"),
             srv._docs_df(docs[:3]),
         ):
@@ -1101,8 +1139,9 @@ def test_http_driver_sort_matches_spark_order(spark):
         srv.stop()
 
 
-def _jobs(spark, group, call):
-    """(call(), the number of Spark jobs it ran) under job group `group`."""
+def _jobs(spark, group, call, stages=False):
+    """(call(), the number of Spark jobs it ran) under job group `group`;
+    with `stages`, the stage count of each job instead of the number."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
@@ -1110,37 +1149,52 @@ def _jobs(spark, group, call):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setJobDescription(None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    if stages:
+        return out, [len(sc.statusTracker().getJobInfo(j).stageIds) for j in jobs]
+    return out, len(jobs)
 
 
 def test_http_cached_search_job_budget(spark):
-    """Job budget of one GET search whose query doc is already cached: the
-    terms read, then the re-rank gather's broadcast of its local candidate
-    relation and its docs scan. k1 selection and the top-k2 sort run on
-    the driver, so no shuffle, window or range-partition job remains."""
+    """A GET search on a warm snapshot runs no Spark job: the term-match
+    count, the k1 cut, the exact re-rank and the k2 sort are numpy over
+    the driver-held snapshot."""
     docs = _sample_docs(spark)
     srv = _serve(spark, docs, batches=3)
     try:
         qid = docs[7]["_id"]
-        srv.search("idx", qid, 50, 5)  # fills the doc and snapshot caches
+        srv.search("idx", docs[9]["_id"], 50, 5)  # builds the snapshot
         res, n = _jobs(spark, f"enn-job-budget-{srv.port}", lambda: srv.search("idx", qid, 50, 5))
         assert res["hits"]["total"] == 5
-        assert n == 3
+        assert n == 0
     finally:
         srv.stop()
 
 
 def test_http_cached_msearch_job_budget(spark):
-    """A cached 4-id msearch runs as many jobs as a cached single search:
-    its queries share the one terms read and the one gather."""
+    """A 4-id msearch on a warm snapshot runs no Spark job either."""
     docs = _sample_docs(spark)
     srv = _serve(spark, docs, batches=3)
     try:
         ids = [docs[i]["_id"] for i in (7, 40, 123, 200)]
-        srv.msearch("idx", ids, 50, 5)  # fills the doc and snapshot caches
+        srv.search("idx", docs[9]["_id"], 50, 5)  # builds the snapshot
         out, n = _jobs(spark, f"enn-msearch-budget-{srv.port}", lambda: srv.msearch("idx", ids, 50, 5))
         assert [r["hits"]["total"] for r in out["responses"]] == [5, 5, 5, 5]
-        assert n == 3
+        assert n == 0
+    finally:
+        srv.stop()
+
+
+def test_http_cached_doc_get_job_budget(spark):
+    """A doc GET on a warm snapshot runs no Spark job, for a stored and an
+    unknown id alike: there is no per-id fetch or doc cache to miss."""
+    docs = _sample_docs(spark)
+    srv = _serve(spark, docs, batches=3)
+    try:
+        srv.search("idx", docs[9]["_id"], 50, 5)  # builds the snapshot
+        for d, want in ((docs[7]["_id"], docs[7]["_source"]), (99999999, None)):
+            got, n = _jobs(spark, f"enn-doc-budget-{srv.port}-{d}", lambda: srv.get_doc("idx", d))
+            assert (got and got["_source"]) == want and n == 0, (d, got, n)
     finally:
         srv.stop()
 
@@ -1174,20 +1228,20 @@ def test_http_bad_batch_values_are_400(spark):
 
 
 def test_http_served_reads_have_no_shuffle_or_window(spark):
-    """A served search is two reads, the terms read and the re-rank
-    gather. k1 selection and top-k2 run on the driver, so neither plan
-    holds a shuffle exchange or a rank window. (Their PartitionFilters and
-    local relation are asserted by the tests above.)"""
+    """The first read after a mutation rebuilds the snapshot from one read
+    of docs/: every job it runs is a single stage, so there is no shuffle
+    exchange (which a rank window would need) — and the next read runs no
+    job at all."""
     docs = _sample_docs(spark)
     srv = _serve(spark, docs, batches=2)
     try:
         ids = [docs[0]["_id"], docs[7]["_id"]]
-        for df in (
-            srv._probed_terms_df("idx", _query_rows(srv, "idx", ids)),
-            srv._gather_df("idx", srv._candidates("idx", ids, 50)),
-        ):
-            plan = plans.formatted_plan(df)
-            assert "hashpartitioning" not in plan and "Window" not in plan, plan
+        _http_post(srv.port, "/_aknn_index", {"model": "m", "_index": "idx", "docs": docs[:4]})
+        group = f"enn-rebuild-{srv.port}"
+        cold, stages = _jobs(spark, group, lambda: srv.msearch("idx", ids, 50, 5), stages=True)
+        assert stages and all(n == 1 for n in stages), stages
+        warm, n = _jobs(spark, group + "-warm", lambda: srv.msearch("idx", ids, 50, 5))
+        assert warm == cold and n == 0
     finally:
         srv.stop()
 
@@ -1305,5 +1359,54 @@ def test_http_mixed_model_index_matches_reference(spark):
             got = [(h["_id"], h["_score"], h["n_match"]) for h in res["hits"]["hits"]]
             assert got == want and len(got) == 5, (q, got, want)
         assert hashed.select(F.max(F.size("hashes"))).first()[0] == 6
+    finally:
+        srv.stop()
+
+
+def test_http_index_pins_vector_dimension(spark):
+    """An index's first batch, live or staged, pins its vector dimension,
+    as it pins the _id type: a batch from a model of another dimension
+    answers 400 on the immediate and the refresh=false path, also after a
+    restart, and leaves the store as it was. Unpinned, an 8-d and a 4-d
+    batch (T=2, B=1) shared one index, and every search of it then
+    answered 400: zip_with padded the shorter vector, so distances were
+    null."""
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+
+    def batch(ids, dim):
+        return [{"_id": i, "_source": {"_aknn_vector": rng.standard_normal(dim).tolist()}} for i in ids]
+
+    d8, d4 = batch(range(100), 8), batch(range(100, 200), 4)
+
+    def refused(srv, before):
+        for index in ("idx", "sidx"):
+            for refresh in (True, False):
+                body = {"model": "m4", "_index": index, "docs": d4, "refresh": refresh}
+                code, out = _status(lambda: _post_raw(srv.port, "/_aknn_index", body))
+                assert code == 400 and "pins vector dimension 8" in out["error"], (index, out)
+        assert [_http_get(srv.port, f"/idx/{i}/_aknn_search") for i in (0, 7)] == before
+        code, _out = _status(lambda: urllib.request.urlopen(f"http://127.0.0.1:{srv.port}/idx/100"))
+        assert code == 404
+
+    srv = AknnHttpServer(spark, tempfile.mkdtemp(prefix="enn_http_test_")).start()
+    try:
+        for name, sample in (("m8", d8), ("m4", d4)):
+            body = {"_id": name, "nb_tables": 2, "nb_bits_per_table": 1, "docs": sample[:4]}
+            _http_post(srv.port, "/_aknn_create", body)
+        _http_post(srv.port, "/_aknn_index", {"model": "m8", "_index": "idx", "docs": d8})
+        _http_post(srv.port, "/_aknn_index", {"model": "m8", "_index": "sidx", "docs": d8, "refresh": False})
+        before = [_http_get(srv.port, f"/idx/{i}/_aknn_search") for i in (0, 7)]
+        assert all(r["hits"]["total"] > 0 for r in before), before
+        refused(srv, before)
+    finally:
+        srv.stop()
+    # a restarted server reads the pins back from the store and the staging
+    srv = AknnHttpServer(spark, srv.root).start()
+    try:
+        refused(srv, before)
+        assert _http_post(srv.port, "/_aknn_refresh", {"_index": "sidx"})["merged"] == len(d8)
+        assert _http_get(srv.port, "/sidx/0/_aknn_search") == before[0]
     finally:
         srv.stop()

@@ -8,19 +8,29 @@ Both arms load the same corpus into the same store layout and both are
 verified by the same post-load searches, so the comparison is
 load-path-only. Target (verdict): bulk ≥ 5× faster end-to-end.
 
+After the bulk load it also measures serving at that size: the first
+search, which builds the index's driver snapshot (snapshot_build_s), the
+median of 50 GET /_aknn_search calls over spread-out ids
+(search_p50_ms), the snapshot's array bytes (snapshot_mb), and the
+high-water resident memory (VmHWM) of this Python driver process, which
+holds the snapshot, and of the Spark driver JVM (vmhwm_python_mb,
+vmhwm_jvm_mb). Spark runs local[SPARK_GRAFT_CPUS] (default 32).
+
 Usage: python tools/wire_bulk_stepup.py [SF_DIR] [--skip-immediate]
        (default /tmp/enn_scale/sf10 — 200k vectors; --skip-immediate
        reuses r11's committed 749 s instead of re-measuring, for quick
        re-runs.)
 
 Prints one JSON line {n_docs, immediate_s, bulk_stage_s, bulk_refresh_s,
-bulk_total_s, speedup, search_equal}.
+bulk_total_s, snapshot_build_s, search_p50_ms, snapshot_mb, vmhwm_python_mb,
+vmhwm_jvm_mb, speedup, search_equal}.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import tempfile
 import time
@@ -52,6 +62,27 @@ def _load(srv_port, docs, _http_post, bulk: bool) -> dict:
     return out
 
 
+def _vmhwm_mb(pid: int | str) -> float:
+    with open(f"/proc/{pid}/status") as fh:
+        return next(int(line.split()[1]) for line in fh if line.startswith("VmHWM")) / 1024.0
+
+
+def _serving(srv_port, docs, _http_get) -> dict:
+    """Snapshot build (the first search after the load), then the median
+    of 50 searches over ids spread across the corpus."""
+    t0 = time.perf_counter()
+    res = _http_get(srv_port, f"/v/{docs[100]['_id']}/_aknn_search?k1=100&k2=10")
+    out = {"snapshot_build_s": round(time.perf_counter() - t0, 2)}
+    assert res["hits"]["total"] > 0
+    lat = []
+    for d in docs[:: max(1, len(docs) // 50)][:50]:
+        t0 = time.perf_counter()
+        _http_get(srv_port, f"/v/{d['_id']}/_aknn_search?k1=100&k2=10")
+        lat.append((time.perf_counter() - t0) * 1000.0)
+    out["search_p50_ms"] = round(statistics.median(lat), 2)
+    return out
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("--") else "/tmp/enn_scale/sf10"
     skip_immediate = "--skip-immediate" in sys.argv
@@ -63,7 +94,7 @@ def main() -> None:
     )
     from elastik_nearest_neighbors_spark.session import get_spark
 
-    spark = get_spark(app_name="enn-wire-bulk", cpus=32, shuffle_partitions=32)
+    spark = get_spark(app_name="enn-wire-bulk")
     spark.sparkContext.setLogLevel("ERROR")
     emb = io.table(spark, sf_dir, "embeddings", widen=True)
     docs = [
@@ -78,8 +109,12 @@ def main() -> None:
     report["bulk_refresh_s"] = b["refresh_s"]
     report["bulk_total_s"] = b["total_s"]
 
-    res = _http_get(bulk_srv.port, f"/v/{docs[100]['_id']}/_aknn_search?k1=100&k2=10")
-    assert res["hits"]["total"] > 0
+    report.update(_serving(bulk_srv.port, docs, _http_get))
+    snap = bulk_srv._snapshot("v")
+    arrays = [snap.ids, snap.vecs, snap.hashes, snap.ntab] + [a for p in snap.postings for a in p]
+    report["snapshot_mb"] = round(sum(a.nbytes for a in arrays) / 2**20, 1)
+    report["vmhwm_python_mb"] = round(_vmhwm_mb("self"), 1)
+    report["vmhwm_jvm_mb"] = round(_vmhwm_mb(spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()), 1)
 
     if skip_immediate:
         report["immediate_s"] = 749.0
