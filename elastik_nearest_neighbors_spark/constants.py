@@ -328,8 +328,7 @@ FLAT_FIT_MAX = 1 << 22
 # BEFORE the cliff. Every oracle-gated SF is ~KB-sized, so the closure path
 # (and its bit-exact DuckDB mirror) is what the gate always exercises; the
 # sharded path is asserted bit-equal by forcing this threshold down in
-# tests (tests/test_plans.py) and in one gated run via
-# ENN_SHARDED_MODEL_BYTES (the env override the scale test uses).
+# tests (ivf reads it at call time, so a test patches this constant).
 SHARDED_MODEL_BYTES = 512 << 20
 # Sharded-FIT speed crossover (r9, closing the r8 verdict's reach-seam
 # observation): below the broadcast ceiling the DataFrame-sharded Lloyd
@@ -356,19 +355,9 @@ SHARDED_FIT_SAMPLE_MIN = 40_000
 # re-scored with the identical elementwise float ops — bit-equal by
 # construction) once the sub level has this many groups. Below it the
 # flat scan is cheaper than building the pruning structure; every
-# oracle-gated SF sits far below (L=16 → |sub|=1). Override:
-# ENN_MEMBERS_PRUNE_MIN (tests force the pruned path at tiny scale).
+# oracle-gated SF sits far below (L=16 → |sub|=1). Tests force the
+# pruned path at tiny scale by patching this constant (read at call time).
 MEMBERS_PRUNE_MIN = 4096
-# r13 (ADVICE r12): /_aknn_refresh's merge switches from the pruned
-# per-id patch (driver holds the staged id list + per-row bucket/hash
-# rows — O(staged) driver memory, right for point updates) to a fully
-# distributed whole-store merge (anti-join against the staged-id
-# DataFrame + clustered sibling-write swap — no driver-side id list)
-# once the staged count exceeds this. Gated SFs stage fewer rows, so the
-# oracle-gated drive keeps the pruned path; the bulk path is asserted
-# result-identical by a test that patches this constant down (the server
-# reads it at call time).
-REFRESH_BULK_ROWS = 100_000
 # Sample size for _prune_levels' level-0 center fit — the pruning
 # hierarchy's quality knob (its exactness is unconditional; see
 # _argmin_rounded_pruned). 8192 keeps the sampled Lloyd seconds-cheap

@@ -815,33 +815,16 @@ def _sharded_scores_levels(
     )
 
 
-def sharded_model_bytes_threshold() -> int:
-    """The broadcast ceiling for shipping the fine centroid table as a
-    closure — SHARDED_MODEL_BYTES, overridable via ENN_SHARDED_MODEL_BYTES
-    so tests (and an operator at a gated SF) can force the sharded path
-    end-to-end on a KB-sized model."""
-    from ..constants import SHARDED_MODEL_BYTES
-
-    env = os.environ.get("ENN_SHARDED_MODEL_BYTES")
-    return int(env) if env else SHARDED_MODEL_BYTES
-
-
-def sharded_fit_sample_min() -> int:
-    """The measured speed crossover of the sharded FIT (constants.
-    SHARDED_FIT_SAMPLE_MIN, overridable via ENN_SHARDED_FIT_SAMPLE_MIN so
-    tests can force either routing on a tiny corpus)."""
-    from ..constants import SHARDED_FIT_SAMPLE_MIN
-
-    env = os.environ.get("ENN_SHARDED_FIT_SAMPLE_MIN")
-    return int(env) if env else SHARDED_FIT_SAMPLE_MIN
-
-
 def use_sharded(model: IvfModel) -> bool:
     """True when assignment/probing must leave the driver: the model has a
     hierarchy to split (flat models are KB-sized by construction) and its
-    closure payload exceeds the broadcast ceiling. Deterministic in the
-    model alone, so the engaged plan is stable across stages of one query."""
-    return bool(model.levels) and model.model_bytes > sharded_model_bytes_threshold()
+    closure payload exceeds the broadcast ceiling (constants.
+    SHARDED_MODEL_BYTES, read at call time so tests can force the sharded
+    path on a KB-sized model). Deterministic in the model alone, so the
+    engaged plan is stable across stages of one query."""
+    from ..constants import SHARDED_MODEL_BYTES
+
+    return bool(model.levels) and model.model_bytes > SHARDED_MODEL_BYTES
 
 
 # ---- r8: DataFrame-sharded FINE-LEVEL FIT -----------------------------------
@@ -860,7 +843,7 @@ def use_sharded(model: IvfModel) -> bool:
 #   update = sequential left fold in sample order (np.cumsum along axis 0 ==
 #   np.add.at's per-index accumulation) divided by the member count.
 # Inactive at every oracle-gated SF (routing mirrors use_sharded), so all
-# gates stay bit-exact; ENN_SHARDED_MODEL_BYTES forces it for tests.
+# gates stay bit-exact; tests force it by lowering SHARDED_MODEL_BYTES.
 
 
 def _sample_df(spark: SparkSession, sf_dir: str, sample_n: int) -> tuple[DataFrame, int]:
@@ -993,17 +976,6 @@ def _fit_centroids_df(xdf: DataFrame, n: int, k: int, iters: int) -> "np.ndarray
         for row in _centroid_updates(assigned, "flat" if flat else "hier").collect():
             cent[row.list_id] = row.centroid
     return cent
-
-
-def members_prune_min() -> int:
-    """Sub-group count above which _coarse_members_df's membership pass
-    uses the exact ball-pruned descent instead of the flat argmin —
-    constants.MEMBERS_PRUNE_MIN, overridable via ENN_MEMBERS_PRUNE_MIN so
-    tests force the pruned path on KB-sized models."""
-    from ..constants import MEMBERS_PRUNE_MIN
-
-    env = os.environ.get("ENN_MEMBERS_PRUNE_MIN")
-    return int(env) if env else MEMBERS_PRUNE_MIN
 
 
 def _prune_levels(
@@ -1173,8 +1145,10 @@ def _coarse_members_df(
     structure is driver-built once per call: `sub` is ≤ L/HIER_BRANCH
     (driver-sized by the same argument as _fit_centroids_df's output) and
     the hierarchy adds ~1/HIER_BRANCH of that."""
+    from ..constants import MEMBERS_PRUNE_MIN
+
     spark = cdf.sparkSession
-    sub_levels = _prune_levels(sub) if len(sub) >= members_prune_min() else []
+    sub_levels = _prune_levels(sub) if len(sub) >= MEMBERS_PRUNE_MIN else []
     sub_radii = _ball_radii(sub, sub_levels) if sub_levels else []
 
     @pandas_udf("int")
@@ -1410,7 +1384,11 @@ def model_for(sf_dir: str) -> IvfModel:
     dedup."""
     m = _MODEL_CACHE.get(sf_dir)
     if m is None:
-        from ..constants import TWO_LEVEL_MIN_NLIST
+        from ..constants import (
+            SHARDED_FIT_SAMPLE_MIN,
+            SHARDED_MODEL_BYTES,
+            TWO_LEVEL_MIN_NLIST,
+        )
 
         if IVF_NLIST >= TWO_LEVEL_MIN_NLIST and not io.is_uri(sf_dir):
             dim = _embedding_dim(sf_dir)
@@ -1421,13 +1399,13 @@ def model_for(sf_dir: str) -> IvfModel:
             # ceiling (perf-only mis-route; results stay bit-equal)
             eff_nlist = min(IVF_NLIST, IVF_SAMPLE)
             past_ceiling = bool(
-                dim and eff_nlist * dim * 8 > sharded_model_bytes_threshold()
+                dim and eff_nlist * dim * 8 > SHARDED_MODEL_BYTES
             )
             fit_faster = bool(
                 dim
                 and not past_ceiling
                 and min(IVF_SAMPLE, corpus_counts(sf_dir)[1])
-                >= sharded_fit_sample_min()
+                >= SHARDED_FIT_SAMPLE_MIN
             )
             if past_ceiling or fit_faster:
                 from pyspark.sql import SparkSession

@@ -46,17 +46,28 @@ parameter names and document field names, using only the Python stdlib
       {"_index": ...} → ES near-real-time semantics: a refresh=false
       batch is HASHED and staged (one narrow append, no store jobs) but
       not searchable; /_aknn_refresh merges everything staged into the
-      live store in ONE replace-on-index pass (last staged occurrence of
-      an id wins, exactly ES op order). This is the wire BULK-LOAD path:
-      per-request cost drops from ~8 store jobs to one append, and the
-      merge pays the batch store builder's clustered writes once
-      (measured on the 200k-vector step-up — BASELINE.md r12).
+      live store through the same _replace_store as an immediate batch
+      (last staged occurrence of an id wins, exactly ES op order). This
+      is the wire BULK-LOAD path: per-request cost drops from ~8 store
+      jobs to one append. Into an empty index the merge is one clustered
+      append; into a populated one it rewrites the id_bucket directories
+      the staged ids fall in.
 
-Every mutation runs under a per-index dirty marker: parquet has no
-transaction log, so a crash mid-commit could leave a half-rewritten docs/
-side — the marker turns that into a DETECTED state (search, doc GET and
-further mutations answer 503 TornIndexError; DELETE /{index} + re-index
-recovers) instead of silent recall loss. An index that was never
+A posted batch must be a non-empty list of docs, and every index name
+is checked against one alphabet (_index_path) before any path is built
+from it. An index's first batch, live or staged, pins its _id type and
+vector dimension; the server keeps that pin record on the driver until
+the index is dropped.
+
+Every mutation runs under a per-index dirty marker (<index>#dirty, beside
+the index's directory): parquet has no transaction log, so a crash
+mid-commit could leave a half-rewritten docs/ side — the marker turns
+that into a DETECTED state (search, doc GET and further mutations answer
+503 TornIndexError; DELETE /{index} + re-index recovers) instead of
+silent recall loss. A whole-index read of docs/ (the snapshot build,
+compact, a pin read) goes through _read_docs, which refuses a marked
+index; a mutation checks the marker before it sets its own, and then
+reads only the id_bucket directories it rewrites. An index that was never
 written answers 404 index_not_found, like ES.
 
 Deployment shape: the server is a DRIVER-side facade over the
@@ -108,7 +119,6 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import constants
 from .api import ID_FIELD, VECTOR_FIELD, AknnModelRegistry, aknn_index
 from .constants import ANN_K1, ANN_K2, LSH_BITS, LSH_TABLES
 from .functions.vector import euclidean_np, rounded_np
@@ -238,34 +248,15 @@ class AknnHttpServer:
         self.spark = spark
         self.root = root
         self.registry = AknnModelRegistry(os.path.join(root, "models"))
-        # per-index docs/ DataFrame for the write paths and the snapshot
-        # build: a DataFrame's FileIndex snapshots the directory listing, so
-        # reusing one skips a re-list + footer read of the partitioned
-        # store. A mutation makes it stale, so _forget drops it.
-        self._docs_cache: dict[str, DataFrame] = {}
         # per-index driver snapshot that every read answers from (_snapshot)
         self._snapshots: dict[str, _Snapshot] = {}
         # next batch_seq per index for refresh=false staging; a cache miss
         # re-derives it from the staged parquet (max+1), so staged batches
         # survive a server restart with their order intact
         self._staging_seq: dict[str, int] = {}
-        # pinned _id dtype per index (r12): the type is IMMUTABLE once the
-        # first batch lands (that's the pinning rule), so unlike the
-        # snapshot caches it survives mutations — without it every point
-        # update re-listed the whole docs store just to re-learn a fact
-        # that cannot change. Cleared only by drop_index.
-        self._id_type_cache: dict[str, str] = {}
-        # staged-only twin (an index that exists only as refresh=false
-        # staging pins from its first STAGED batch); cleared on refresh
-        # (the live store takes over) and on drop_index
-        self._staged_id_type: dict[str, str] = {}
-        # vector dimension per index, pinned like the _id type: immutable
-        # once a batch lands, cleared only by drop_index (_pinned_dim)
-        self._dim_cache: dict[str, int] = {}
-        # indexes with a mutation in flight (all ops serialize under the
-        # lock): their own dirty marker must not trip _check_clean when the
-        # docs cache misses mid-mutation
-        self._mutating: set[str] = set()
+        # per-index pin record (_id type, vector dimension) (_pin): fixed
+        # by the first batch, so it survives every mutation but drop_index
+        self._pins: dict[str, tuple[str, int | None]] = {}
         self._lock = threading.RLock()
         self._httpd = ThreadingHTTPServer(("127.0.0.1", 0), _make_handler(self))
         self.port = self._httpd.server_address[1]
@@ -282,7 +273,10 @@ class AknnHttpServer:
     # ---- endpoint logic (HTTP-independent; the handler is a thin shim) ----
 
     def _index_path(self, index: str) -> str:
-        if not re.fullmatch(r"[A-Za-z0-9._-]+", index):
+        """Where `index` lives; the one check of an index name (ValueError
+        → 400). "." and ".." would name the store's own directories, and
+        '#' stays outside the alphabet for the marker and staging paths."""
+        if index in (".", "..") or not re.fullmatch(r"[A-Za-z0-9._-]+", index):
             raise ValueError(f"bad index name: {index!r}")
         return os.path.join(self.root, "indexes", index)
 
@@ -305,94 +299,62 @@ class AknnHttpServer:
         `index` live."""
         return os.path.join(self._index_path(index), "docs")
 
-    def _stored_id_type(self, index: str) -> str | None:
-        """The _id dtype already persisted for this index, or None if the
-        index has no data yet. Reads through the docs cache — a
-        pre-append DataFrame has the same schema, and a fresh
-        spark.read.parquet here would re-list the partitioned store on
-        every append batch (the exact cost the cache exists to avoid).
-        LIVE store only — staged (unrefreshed) batches don't count; use
-        _pinned_id_type where they must."""
-        t = self._id_type_cache.get(index)
-        if t is not None:
-            return t
-        try:
-            t = dict(self._cached_docs(index).dtypes)[ID_FIELD]
-        except IndexNotFoundError:
-            return None
-        self._id_type_cache[index] = t
-        return t
-
-    def _pinned_id_type(self, index: str) -> str | None:
-        """The _id dtype the index is committed to: the live store's, or —
-        for an index that so far exists only as refresh=false staging —
-        the staging schema's (the FIRST staged batch pins, like the first
-        indexed batch does, or the merge would hit a schema split)."""
+    def _pin(self, index: str) -> tuple[str | None, int | None]:
+        """The index's pin record (_id type, vector dimension), or (None,
+        None) while it holds no batch. A write sets it from the batch it
+        lands (index); an index written before a restart reads it once,
+        from the live store, else from the staging. A store emptied by
+        deletes keeps its _id type but holds no row to read a dimension
+        from, so that part stays None until the next batch."""
         from . import io
 
-        t = self._stored_id_type(index)
-        if t is not None:
-            return t
-        t = self._staged_id_type.get(index)
-        if t is not None:
-            return t
-        sp = self._staging_path(index)
-        if io.fs_isdir(self.spark, sp):
-            t = dict(self.spark.read.parquet(sp).dtypes)[ID_FIELD]
-            self._staged_id_type[index] = t
-        return t
+        pin = self._pins.get(index)
+        if pin is not None:
+            return pin
+        frames = []
+        try:
+            frames.append(self._read_docs(index))
+        except IndexNotFoundError:
+            pass
+        staging = self._staging_path(index)
+        if io.fs_isdir(self.spark, staging):
+            frames.append(self.spark.read.parquet(staging))
+        if not frames:
+            return None, None
+        rows = (df.select(F.size(VECTOR_FIELD)).first() for df in frames)
+        dim = next((r[0] for r in rows if r is not None), None)
+        pin = self._pins[index] = (dict(frames[0].dtypes)[ID_FIELD], dim)
+        return pin
 
-    def _pin_id_type(self, index: str, docs: DataFrame) -> DataFrame:
-        """ADVICE r10: _docs_df infers the _id type PER BATCH (bigint iff
+    def _pin_batch(self, index: str, posted: list[dict]) -> tuple[DataFrame, int]:
+        """A posted batch as _docs_df rows held to the index's pins, and its
+        vector dimension (ValueError → 400 on a pin it breaks).
+
+        ADVICE r10: _docs_df infers the _id type PER BATCH (bigint iff
         every id is an int), so a later string-id batch would append string
         _id files next to bigint ones and break every subsequent search on
-        schema merge. The id type is pinned by the index's FIRST batch:
-        later int-id batches against a string-pinned index are cast
-        (lossless), a string-id batch against a bigint-pinned index is
-        rejected with a 400 (the caller's ids don't round-trip)."""
-        pinned = self._pinned_id_type(index)
-        batch = dict(docs.dtypes)[ID_FIELD]
-        if pinned is None or pinned == batch:
-            return docs
-        if pinned == "string":
-            return docs.withColumn(ID_FIELD, F.col(ID_FIELD).cast("string"))
-        raise ValueError(
-            f"index {index!r} pins {ID_FIELD} type {pinned}; "
-            f"batch has {batch} ids — re-index under a new index name"
-        )
-
-    def _pinned_dim(self, index: str) -> int | None:
-        """The vector dimension the index is committed to, or None while it
-        holds no doc: read from any one live (else staged) row once, then
-        kept until drop_index, like the _id type."""
-        from . import io
-
-        dim = self._dim_cache.get(index)
-        if dim is None:
-            frames = [self._cached_docs(index)] if self._stored_id_type(index) else []
-            if io.fs_isdir(self.spark, self._staging_path(index)):
-                frames.append(self.spark.read.parquet(self._staging_path(index)))
-            for df in frames:
-                row = df.select(F.size(VECTOR_FIELD)).first()
-                if row is not None:
-                    dim = self._dim_cache[index] = row[0]
-                    break
-        return dim
-
-    def _pin_dim(self, index: str, docs: list[dict]) -> int | None:
-        """The vector dimension of a posted batch, which must be the
-        index's pinned one (ValueError → 400): the first batch, live or
-        staged, pins it, as it pins the _id type. A batch of another
-        model's dimension would make the index's distances null (zip_with
+        schema merge. Later int-id batches against a string-pinned index
+        are cast (lossless), a string-id batch against a bigint-pinned
+        index is rejected (the caller's ids don't round-trip). A batch of
+        another dimension would make the index's distances null (zip_with
         pads the shorter vector) and its snapshot's matrix ragged."""
-        dims = {len(d["_source"][VECTOR_FIELD]) for d in docs}
-        pinned = self._pinned_dim(index)
-        if pinned is not None and dims - {pinned}:
+        pinned_type, pinned_dim = self._pin(index)
+        docs = self._docs_df(posted)
+        batch = dict(docs.dtypes)[ID_FIELD]
+        if pinned_type == "string" and batch == "bigint":
+            docs = docs.withColumn(ID_FIELD, F.col(ID_FIELD).cast("string"))
+        elif pinned_type not in (None, batch):
             raise ValueError(
-                f"index {index!r} pins vector dimension {pinned}; "
-                f"batch has dimension {sorted(dims - {pinned})[0]}"
+                f"index {index!r} pins {ID_FIELD} type {pinned_type}; "
+                f"batch has {batch} ids — re-index under a new index name"
             )
-        return next(iter(dims), None)
+        dims = {len(d["_source"][VECTOR_FIELD]) for d in posted}
+        if pinned_dim is not None and dims - {pinned_dim}:
+            raise ValueError(
+                f"index {index!r} pins vector dimension {pinned_dim}; "
+                f"batch has dimension {sorted(dims - {pinned_dim})[0]}"
+            )
+        return docs, next(iter(dims))
 
     def create(self, body: dict) -> dict:
         name = body["_id"]
@@ -424,6 +386,9 @@ class AknnHttpServer:
 
         with self._lock:
             model = self.registry.get(body["model"])
+            # an empty batch would leave a store with no schema to infer
+            if not isinstance(body["docs"], list) or not body["docs"]:
+                raise ValueError("docs must be a non-empty JSON list of documents")
             name = body["_index"]
             # ES semantics (the reference host's): indexing an existing _id
             # REPLACES the stored document, it does not append a duplicate.
@@ -431,8 +396,8 @@ class AknnHttpServer:
             # applies index ops in order); against the store, replaced ids'
             # rows are dropped in the SAME write that lands the new ones.
             posted = list({d[ID_FIELD]: d for d in body["docs"]}.values())
-            docs = self._pin_id_type(name, self._docs_df(posted))
-            dim = self._pin_dim(name, posted)
+            docs, dim = self._pin_batch(name, posted)
+            id_type = dict(docs.dtypes)[ID_FIELD]
             # hash + materialize BEFORE touching the store: a replace must
             # not destroy the stored doc when the incoming one is invalid
             # (wrong dimension etc. — the hash matmul fails HERE, with the
@@ -450,14 +415,13 @@ class AknnHttpServer:
             else:
                 hashed = hashed.localCheckpoint(eager=True)
                 ids = [d[ID_FIELD] for d in posted]
-                if dict(docs.dtypes)[ID_FIELD] == "string":
-                    # _pin_id_type may have cast an int batch onto a string-
+                if id_type == "string":
+                    # _pin_batch may have cast an int batch onto a string-
                     # pinned index; mirror that cast on the raw posted ids
                     ids = [str(i) for i in ids]
-                self._mutate(name, self._replace_store, name, ids, hashed)
+                self._mutate(name, self._replace_store, name, ids, id_type, hashed)
                 out = {"acknowledged": True, "_index": name, "indexed": len(body["docs"])}
-            if dim is not None:
-                self._dim_cache.setdefault(name, dim)
+            self._pins[name] = (id_type, dim)
         return out
 
     # ---- torn-write detection (ADVICE r11): parquet has no transaction
@@ -469,13 +433,11 @@ class AknnHttpServer:
     def _dirty_marker(self, index: str) -> str:
         # '#' is outside the legal index-name alphabet (_index_path), so
         # the marker can never collide with another index's data directory
-        return os.path.join(self.root, "indexes", f"{index}#dirty")
+        return self._index_path(index) + "#dirty"
 
     def _check_clean(self, index: str) -> None:
         from . import io
 
-        if index in self._mutating:
-            return
         if io.fs_exists(self.spark, self._dirty_marker(index)):
             raise TornIndexError(
                 f"index {index!r} has a torn write (a mutation crashed "
@@ -486,28 +448,26 @@ class AknnHttpServer:
     def _mutate(self, index: str, fn, *args):
         """Run a store mutation under the torn-write marker: set it, run,
         clear it only on success. The marker sits OUTSIDE the data dir (a
-        bulk merge swaps the whole docs/ side — a marker inside it would
-        vanish with the files it guards). The index's cached docs and
-        snapshot are dropped in all cases: a failure after files were
-        rewritten must not leave them describing deleted parquet."""
+        compaction swaps the whole docs/ side — a marker inside it would
+        vanish with the files it guards). `fn` must not read docs/ through
+        _read_docs, whose check would trip on this very marker: callers
+        resolve the _id type before. The index's snapshot is dropped in all
+        cases: a failure after files were rewritten must not leave it
+        describing deleted parquet."""
         from . import io
 
         self._check_clean(index)
         marker = self._dirty_marker(index)
         io.fs_touch(self.spark, marker)
-        self._mutating.add(index)
         try:
             out = fn(*args)
         finally:
-            self._mutating.discard(index)
             self._forget(index)
         io.fs_delete(self.spark, marker)
         return out
 
     def _forget(self, index: str) -> None:
-        """Drop what a mutation of `index` made stale: its cached docs
-        DataFrame and its snapshot."""
-        self._docs_cache.pop(index, None)
+        """Drop what a mutation of `index` made stale: its snapshot."""
         self._snapshots.pop(index, None)
 
     def _ids_df(self, ids: list, id_type: str) -> DataFrame:
@@ -528,20 +488,20 @@ class AknnHttpServer:
             return None
         return self.spark.read.option("basePath", base).parquet(*dirs)
 
-    def _replace_store(self, index: str, ids: list, hashed: DataFrame | None = None) -> int:
-        """The one store mutation: drop the stored docs of `ids` and add
-        `hashed`'s rows (replace-on-index and refresh), or add nothing (a
-        delete). docs/ transitions old→new in ONE pruned dynamic overwrite
-        carrying survivors ∪ new rows, so a replaced doc is never absent.
-        It rewrites ≤ |ids| id_bucket directories, and a delete only the
-        ones that held a doomed id; everything else is untouched. Returns
-        the number of stored docs dropped."""
+    def _replace_store(
+        self, index: str, ids: list, id_type: str, hashed: DataFrame | None = None
+    ) -> int:
+        """The one store mutation: drop the stored docs of `ids` (of the
+        index's pinned `id_type`) and add `hashed`'s rows (replace-on-index
+        and refresh), or add nothing (a delete). docs/ transitions old→new
+        in ONE pruned dynamic overwrite carrying survivors ∪ new rows, so a
+        replaced doc is never absent. It rewrites ≤ |ids| id_bucket
+        directories, and a delete only the ones that held a doomed id;
+        everything else is untouched. Where no touched directory holds a
+        doomed id (an empty index among them), the new rows are one
+        clustered append. Returns the number of stored docs dropped."""
         from .sources.index_store import doc_bucket, pruned_dynamic_overwrite
 
-        id_type = self._stored_id_type(index)
-        if id_type is None:
-            self._append_store(index, hashed)
-            return 0
         ids_df = self._ids_df(ids, id_type)
         # the ids' docs buckets, driver-side: a delete's collect is a
         # projection of a local relation, which Spark answers without a job
@@ -591,37 +551,14 @@ class AknnHttpServer:
             self._keep_schema(index, pruned.schema)
         return len(doomed_rows)
 
-    def _replace_store_bulk(self, index: str, latest: DataFrame) -> None:
-        """Whole-store merge for bulk refreshes (r13, ADVICE
-        r12): when the staged batch is corpus-sized, per-id pruning is
-        pointless (it touches ~every directory anyway) and collecting the
-        staged ids driver-side is O(corpus) driver memory. Merge fully
-        distributed instead: survivors = live rows anti-joined against the
-        staged ids, unioned with the staged rows, clustered sibling-write +
-        swap of docs/ under the caller's torn-write marker. Content is
-        row-identical to the pruned patch path — the gated drive asserts
-        it by forcing the threshold down — and the swapped store lands
-        compacted (one file per directory) for free."""
-        from .sources.index_store import clustered_overwrite_swap
-
-        live_docs = latest
-        if self._stored_id_type(index) is not None:
-            existing = self._cached_docs(index)
-            live_docs = existing.join(latest.select(ID_FIELD), ID_FIELD, "left_anti").unionByName(
-                latest.withColumn(
-                    "id_bucket", F.col("id_bucket").cast(dict(existing.dtypes)["id_bucket"])
-                )
-            )
-        clustered_overwrite_swap(self.spark, self._docs_path(index), live_docs, ["id_bucket"])
-
     # ---- refresh=false staging + /_aknn_refresh (r12, ES NRT parity):
     # staged batches are hashed but NOT searchable/deletable until refresh
     # — exactly ES's near-real-time contract. Staging lives OUTSIDE the
     # data dir ('#' is outside the legal index-name alphabet, like the
-    # dirty marker) so store reads and bulk swaps never see it. ----
+    # dirty marker) so store reads and compaction swaps never see it. ----
 
     def _staging_path(self, index: str) -> str:
-        return os.path.join(self.root, "indexes", f"{index}#staging")
+        return self._index_path(index) + "#staging"
 
     def _stage(self, index: str, hashed: DataFrame) -> None:
         from . import io
@@ -638,16 +575,16 @@ class AknnHttpServer:
             "append"
         ).parquet(path)
         self._staging_seq[index] = seq + 1
-        self._staged_id_type.setdefault(index, dict(hashed.dtypes)[ID_FIELD])
 
     def refresh(self, index: str) -> dict:
         """POST /_aknn_refresh — merge everything staged into the live
-        store in one replace-on-index pass. The last staged occurrence of
-        an id wins (batch_seq rank — ES applies index ops in order); the
-        merge runs under the dirty marker like any mutation, and staging
-        is deleted only after both sides commit, so a crash either leaves
-        the staged batches intact (re-refresh) or a detected-torn index
-        (drop + re-index — drop_index clears staging too)."""
+        store through _replace_store, as one replace-on-index batch. The
+        last staged occurrence of an id wins (batch_seq rank — ES applies
+        index ops in order); the merge runs under the dirty marker like
+        any mutation, and staging is deleted only after the store commits,
+        so a crash either leaves the staged batches intact (re-refresh) or
+        a detected-torn index (drop + re-index — drop_index clears staging
+        too)."""
         from . import io
         from pyspark.sql import Window
 
@@ -663,23 +600,18 @@ class AknnHttpServer:
                 .drop("rn", "batch_seq")
                 .localCheckpoint(eager=True)
             )
-            n_staged = latest.count()
-            if n_staged > constants.REFRESH_BULK_ROWS:
-                # corpus-sized merge (r13, ADVICE r12): never collect the
-                # staged ids — distributed anti-join + clustered swap
-                replace, args = self._replace_store_bulk, (index, latest)
-            else:
-                ids = [r[0] for r in latest.select(ID_FIELD).collect()]
-                replace, args = self._replace_store, (index, ids, latest)
+            ids = [r[0] for r in latest.select(ID_FIELD).collect()]
+            # staged batches were held to the index's pins, so the staging
+            # schema carries its _id type
+            id_type = dict(latest.dtypes)[ID_FIELD]
 
             def _merge() -> None:
-                replace(*args)
+                self._replace_store(index, ids, id_type, latest)
                 io.fs_delete(self.spark, path)
 
             self._mutate(index, _merge)
             self._staging_seq.pop(index, None)
-            self._staged_id_type.pop(index, None)
-            return {"_index": index, "refreshed": True, "merged": n_staged}
+            return {"_index": index, "refreshed": True, "merged": len(ids)}
 
     def compact(self, index: str) -> dict:
         """POST /_aknn_compact — rewrite the index's accumulated append
@@ -694,8 +626,8 @@ class AknnHttpServer:
         from .sources.index_store import compact_in_place
 
         with self._lock:
-            # _cached_docs raises IndexNotFoundError for an unknown index
-            schema = self._cached_docs(index).schema
+            # _read_docs raises IndexNotFoundError for an unknown index
+            schema = self._read_docs(index).schema
 
             def _run() -> None:
                 compact_in_place(self.spark, self._docs_path(index), ["id_bucket"])
@@ -717,13 +649,13 @@ class AknnHttpServer:
         if not isinstance(raw_ids, list):
             raise ValueError(f"ids must be a JSON list, got {type(raw_ids).__name__}")
         with self._lock:
-            pinned = self._stored_id_type(index)
-            if pinned is None:
+            id_type = self._pin(index)[0]
+            if id_type is None:
                 return 0
-            ids = self._coerce_ids(pinned, raw_ids)
+            ids = self._coerce_ids(id_type, raw_ids)
             if not ids:
                 return 0
-            return self._mutate(index, self._replace_store, index, ids)
+            return self._mutate(index, self._replace_store, index, ids, id_type)
 
     def _keep_schema(self, index: str, schema) -> None:
         """Spark infers the store's schema from its parquet files. A store
@@ -754,9 +686,7 @@ class AknnHttpServer:
             io.fs_delete(self.spark, self._staging_path(index))
             self._forget(index)
             self._staging_seq.pop(index, None)
-            self._staged_id_type.pop(index, None)
-            self._id_type_cache.pop(index, None)
-            self._dim_cache.pop(index, None)
+            self._pins.pop(index, None)
         return existed
 
     def _append_store(self, index: str, hashed: DataFrame) -> None:
@@ -774,30 +704,26 @@ class AknnHttpServer:
             .parquet(self._docs_path(index))
         )
 
-    def _cached_docs(self, index: str) -> DataFrame:
+    def _read_docs(self, index: str) -> DataFrame:
+        """The index's docs/ (IndexNotFoundError if it has none), after the
+        torn-write check: the snapshot build, compact and a pin read all
+        read docs/ here, so each refuses a torn index."""
         from . import io
 
-        df = self._docs_cache.get(index)
-        if df is None:
-            # cache miss is the one per-mutation re-entry point (every
-            # mutation drops the cache), so the torn-write check here
-            # covers the snapshot rebuild and the write paths
-            self._check_clean(index)
-            path = self._docs_path(index)
-            if not io.fs_isdir(self.spark, path):
-                raise IndexNotFoundError(index)
-            df = self.spark.read.parquet(path)
-            self._docs_cache[index] = df
-        return df
+        self._check_clean(index)
+        path = self._docs_path(index)
+        if not io.fs_isdir(self.spark, path):
+            raise IndexNotFoundError(index)
+        return self.spark.read.parquet(path)
 
     def _snapshot(self, index: str) -> _Snapshot:
         """The index's driver snapshot that search, msearch and doc GET
         answer from, built on a miss by ONE Arrow read of docs/ through
-        _cached_docs (whose miss runs the torn-write check: every mutation
-        drops both)."""
+        _read_docs (every mutation drops the snapshot, so the first read
+        after one runs the torn-write check)."""
         snap = self._snapshots.get(index)
         if snap is None:
-            docs = self._cached_docs(index)
+            docs = self._read_docs(index)
             table = docs.select(ID_FIELD, VECTOR_FIELD, "hashes").toArrow()
             snap = self._snapshots[index] = _Snapshot(dict(docs.dtypes)[ID_FIELD], table)
         return snap
@@ -806,7 +732,7 @@ class AknnHttpServer:
         """The one wire-id coercion rule: `doc_ids` in the index's pinned
         _id type, in request order. A string-pinned index takes str(id)
         (an int id posted to it was stored as its string, see
-        _pin_id_type). A bigint-pinned index takes only ints and integer
+        _pin_batch). A bigint-pinned index takes only ints and integer
         strings in range; any other id (non-numeric, a JSON 1.5 or true)
         cannot exist there and is dropped, so it reads as not-found
         instead of being truncated onto another doc."""

@@ -307,7 +307,7 @@ def test_sharded_fine_level_assignment_bit_equals_closure_path(spark, monkeypatc
 
 
 def test_sharded_auto_engage_end_to_end(spark, monkeypatch):
-    """The broadcast-ceiling auto-engage (r6): with ENN_SHARDED_MODEL_BYTES
+    """The broadcast-ceiling auto-engage (r6): with SHARDED_MODEL_BYTES
     forced to 0 and a hierarchical model installed as the serving model,
     the PUBLIC gated entries (ivf_index, ann_search_ivf) must route
     assignment through assign_sharded and probing through probe_sharded —
@@ -316,6 +316,7 @@ def test_sharded_auto_engage_end_to_end(spark, monkeypatch):
     verdict flagged: past L ≈ 10^6 nothing switched; now use_sharded does,
     and this test runs the switched plan through the same public surface
     the driver gates."""
+    from elastik_nearest_neighbors_spark import constants
     from elastik_nearest_neighbors_spark.operators import ivf as ivf_mod
 
     hier = ivf_mod.IvfModel.fit_path(SF_SMALL, nlist=64, sample_n=320, two_level=True)
@@ -339,7 +340,7 @@ def test_sharded_auto_engage_end_to_end(spark, monkeypatch):
 
     assert not ivf_mod.use_sharded(hier)  # KB-sized model: closure default
     closure_idx, closure_srch = run()
-    monkeypatch.setenv("ENN_SHARDED_MODEL_BYTES", "0")
+    monkeypatch.setattr(constants, "SHARDED_MODEL_BYTES", 0)
     assert ivf_mod.use_sharded(hier)
     sharded_idx, sharded_srch = run()
 
@@ -385,9 +386,10 @@ def test_pruned_argmin_bit_equals_flat_argmin():
 
 def test_coarse_members_df_pruned_bit_equals_flat(spark, monkeypatch):
     """r13: _coarse_members_df with the pruned path FORCED
-    (ENN_MEMBERS_PRUNE_MIN=1) must return the identical kept-sub array and
+    (MEMBERS_PRUNE_MIN=1) must return the identical kept-sub array and
     identical (group_id, list_id) fine rows as the flat path — the
     membership pass is exact by contract at any threshold."""
+    from elastik_nearest_neighbors_spark import constants
     from elastik_nearest_neighbors_spark.operators import ivf as ivf_mod
 
     rng = np.random.default_rng(3)
@@ -407,9 +409,9 @@ def test_coarse_members_df_pruned_bit_equals_flat(spark, monkeypatch):
         )
         return kept, rows
 
-    monkeypatch.delenv("ENN_MEMBERS_PRUNE_MIN", raising=False)
+    monkeypatch.setattr(constants, "MEMBERS_PRUNE_MIN", len(sub) + 1)
     flat_kept, flat_rows = run()
-    monkeypatch.setenv("ENN_MEMBERS_PRUNE_MIN", "1")
+    monkeypatch.setattr(constants, "MEMBERS_PRUNE_MIN", 1)
     pruned_kept, pruned_rows = run()
     assert np.array_equal(flat_kept, pruned_kept)
     assert len(flat_rows) == len(pruned_rows)
@@ -421,10 +423,11 @@ def test_sharded_fit_with_pruned_membership_bit_equals_driver_fit(spark, monkeyp
     """r13 fit-ceiling 'done' criterion: the whole sharded fit with the
     pruned membership FORCED must still reproduce the driver fit's
     centroid doubles bit-for-bit at a gated SF."""
+    from elastik_nearest_neighbors_spark import constants
     from elastik_nearest_neighbors_spark.operators import ivf as ivf_mod
 
     driver = ivf_mod.IvfModel.fit_path(SF_SMALL, nlist=64, sample_n=320, two_level=True)
-    monkeypatch.setenv("ENN_MEMBERS_PRUNE_MIN", "1")
+    monkeypatch.setattr(constants, "MEMBERS_PRUNE_MIN", 1)
     sharded = ivf_mod.fit_path_sharded(spark, SF_SMALL, nlist=64, sample_n=320)
     assert np.array_equal(sharded.centroids, driver.centroids)
     assert len(sharded.levels) == len(driver.levels)
@@ -463,10 +466,11 @@ def test_sharded_fine_level_fit_bit_equals_closure_fit(spark, monkeypatch):
 
 def test_sharded_fit_end_to_end_search_identical(spark, monkeypatch):
     """r8 (the r7 verdict's Missing #3 'done' criterion): with
-    ENN_SHARDED_MODEL_BYTES forced, FIT sharded and SERVE sharded through
+    SHARDED_MODEL_BYTES forced, FIT sharded and SERVE sharded through
     the public gated entries — rows bit-identical to the closure fit +
     closure serve at the default threshold, i.e. oracle-identical at a
     gated SF by transitivity with the driver gate."""
+    from elastik_nearest_neighbors_spark import constants
     from elastik_nearest_neighbors_spark.operators import ivf as ivf_mod
 
     closure_model = ivf_mod.IvfModel.fit_path(
@@ -491,7 +495,7 @@ def test_sharded_fit_end_to_end_search_identical(spark, monkeypatch):
 
     closure_idx, closure_srch = run()
 
-    monkeypatch.setenv("ENN_SHARDED_MODEL_BYTES", "0")  # force past the ceiling
+    monkeypatch.setattr(constants, "SHARDED_MODEL_BYTES", 0)  # force past the ceiling
     sharded_model = ivf_mod.fit_path_sharded(spark, SF_SMALL, nlist=64, sample_n=320)
     assert ivf_mod.use_sharded(sharded_model)  # serving is sharded too
     monkeypatch.setitem(ivf_mod._MODEL_CACHE, SF_SMALL, sharded_model)
@@ -1796,6 +1800,7 @@ def test_model_for_speed_routes_sharded_fit_at_crossover(spark, monkeypatch):
     measured SHARDED_FIT_SAMPLE_MIN crossover — and stays on the closure
     fit below it. Routing-only: both paths are bit-equal (asserted by the
     sharded-fit equality tests)."""
+    from elastik_nearest_neighbors_spark import constants
     from elastik_nearest_neighbors_spark.operators import ivf as ivf_mod
 
     calls = []
@@ -1808,12 +1813,12 @@ def test_model_for_speed_routes_sharded_fit_at_crossover(spark, monkeypatch):
     monkeypatch.setattr(ivf_mod, "fit_path_sharded", spy)
     monkeypatch.setattr(ivf_mod, "IVF_NLIST", 128)  # hierarchical band
     # SF_SMALL distinct vectors >> 10, so projected sample = IVF_SAMPLE=256
-    monkeypatch.setenv("ENN_SHARDED_FIT_SAMPLE_MIN", "10")
+    monkeypatch.setattr(constants, "SHARDED_FIT_SAMPLE_MIN", 10)
     ivf_mod._MODEL_CACHE.pop(SF_SMALL, None)
     m1 = ivf_mod.model_for(SF_SMALL)
     assert calls == [SF_SMALL]
 
-    monkeypatch.setenv("ENN_SHARDED_FIT_SAMPLE_MIN", "10000000")
+    monkeypatch.setattr(constants, "SHARDED_FIT_SAMPLE_MIN", 10000000)
     ivf_mod._MODEL_CACHE.pop(SF_SMALL, None)
     m2 = ivf_mod.model_for(SF_SMALL)
     assert calls == [SF_SMALL]  # no second sharded call — closure path

@@ -281,7 +281,7 @@ def test_http_bulk_delete_empties_directories(spark):
     docs = _sample_docs(spark, n=64)
     srv = _serve(spark, docs, batches=2)
     try:
-        stored = srv._cached_docs("idx").select("_id", "id_bucket").collect()
+        stored = srv._read_docs("idx").select("_id", "id_bucket").collect()
         by_bucket: dict[int, list] = {}
         for r in stored:
             by_bucket.setdefault(int(r.id_bucket), []).append(r._id)
@@ -737,16 +737,10 @@ def test_http_delete_all_docs_keeps_index_searchable(spark):
         srv.stop()
 
 
-def test_http_refresh_bulk_merge_path_matches_pruned(spark, monkeypatch):
-    """r13 (ADVICE r12): with constants.REFRESH_BULK_ROWS forced to 1 the
-    refresh merge runs the fully distributed whole-store path (no
-    driver-side id list) — wire responses must equal a fresh
-    immediate-mode twin indexed with the final state,
-    including replace-of-existing + brand-new ids; and the swapped store
-    lands compacted (one file per directory)."""
-    import glob
-    import os
-
+def test_http_refresh_bulk_merge_path_matches_pruned(spark):
+    """r13 (ADVICE r12): a refresh that replaces existing ids and adds
+    brand-new ones into a populated index — wire responses must equal a
+    fresh immediate-mode twin indexed with the final state."""
     docs = _sample_docs(spark, n=96)
     moved = [
         {"_id": d["_id"],
@@ -759,7 +753,6 @@ def test_http_refresh_bulk_merge_path_matches_pruned(spark, monkeypatch):
         for i, d in enumerate(docs[:8])
     ]
     final = moved + docs[16:] + extra
-    monkeypatch.setattr(constants, "REFRESH_BULK_ROWS", 1)
     srv = _serve(spark, docs, batches=2)
     fresh = _serve(spark, final, batches=2, sample=docs[:24])
     try:
@@ -775,11 +768,6 @@ def test_http_refresh_bulk_merge_path_matches_pruned(spark, monkeypatch):
             a = _http_get(srv.port, f"/idx/{q}/_aknn_search?k1=50&k2=5")
             b = _http_get(fresh.port, f"/idx/{q}/_aknn_search?k1=50&k2=5")
             assert a == b, (q, a, b)
-        for sub in ("docs", "terms"):
-            base = os.path.join(srv.root, "indexes", "idx", sub)
-            for d, _s, files in os.walk(base):
-                pq = [f for f in files if f.endswith(".parquet")]
-                assert len(pq) <= 1, (sub, d, pq)
     finally:
         srv.stop()
         fresh.stop()
@@ -808,7 +796,7 @@ def test_http_doc_get_200_404_both_modes(spark):
 
 def test_http_concurrent_mutations_on_different_indexes(spark):
     """r13 (r12 verdict stretch 7): concurrent mutations on DIFFERENT
-    indexes — the `_mutating` set, staging-seq dict, and snapshot caches
+    indexes — the staging-seq dict, the pin records and the snapshots
     are shared state keyed by index name. Two threads replace/delete on
     their own index while searches hammer both; every response must be
     well-formed and each index must end exactly at its own fresh-twin
@@ -1408,5 +1396,97 @@ def test_http_index_pins_vector_dimension(spark):
         refused(srv, before)
         assert _http_post(srv.port, "/_aknn_refresh", {"_index": "sidx"})["merged"] == len(d8)
         assert _http_get(srv.port, "/sidx/0/_aknn_search") == before[0]
+    finally:
+        srv.stop()
+
+
+def test_http_empty_or_non_list_docs_is_400(spark):
+    """A batch must be a non-empty JSON list of docs, on the immediate and
+    the refresh=false path alike. An empty batch once answered 200
+    `indexed: 0` and left a store Spark could not infer a schema from, so
+    every later search, msearch and index of that index answered 400
+    until a drop. The refused batch leaves the store as it was."""
+    docs = _sample_docs(spark, n=32)
+    srv = _serve(spark, docs)
+    try:
+        before = _http_get(srv.port, f"/idx/{docs[0]['_id']}/_aknn_search?k1=50&k2=5")
+        for index in ("e", "idx"):
+            for batch in ([], {}, "x", None):
+                for refresh in (True, False):
+                    body = {"model": "m", "_index": index, "docs": batch, "refresh": refresh}
+                    code, out = _status(lambda: _post_raw(srv.port, "/_aknn_index", body))
+                    assert code == 400 and "docs must be a non-empty JSON list" in out["error"], (body, out)
+        assert _http_post(srv.port, "/_aknn_refresh", {"_index": "e"})["merged"] == 0
+        code, _out = _status(lambda: urllib.request.urlopen(f"http://127.0.0.1:{srv.port}/e/1"))
+        assert code == 404
+        assert _http_get(srv.port, f"/idx/{docs[0]['_id']}/_aknn_search?k1=50&k2=5") == before
+        _http_post(srv.port, "/_aknn_index", {"model": "m", "_index": "e", "docs": docs})
+        assert _http_get(srv.port, f"/e/{docs[0]['_id']}/_aknn_search?k1=50&k2=5") == before
+        out = _http_post(srv.port, "/e/_aknn_msearch", {"ids": [docs[0]["_id"]], "k1": 50, "k2": 5})
+        assert out["responses"] == [before]
+    finally:
+        srv.stop()
+
+
+def test_http_bad_index_name_is_400_everywhere(spark):
+    """Every endpoint validates the index name before it builds a path
+    from it, the staging and dirty-marker paths included: a name outside
+    the alphabet, or one that is only dots, answers 400 and touches
+    nothing. "." and ".." once passed, so DELETE /.. dropped the whole
+    server root, models included."""
+    import os
+
+    docs = _sample_docs(spark, n=32)
+    srv = _serve(spark, docs)
+    try:
+        for bad in ("../../x", "x#dirty", "a b", "", ".", ".."):
+            for path, body in (
+                ("/_aknn_refresh", {"_index": bad}),
+                ("/_aknn_compact", {"_index": bad}),
+                ("/_aknn_delete", {"_index": bad, "ids": [1]}),
+                ("/_aknn_index", {"model": "m", "_index": bad, "docs": docs[:2]}),
+                ("/_aknn_index", {"model": "m", "_index": bad, "docs": docs[:2], "refresh": False}),
+            ):
+                code, out = _status(lambda: _post_raw(srv.port, path, body))
+                assert code == 400 and "bad index name" in out["error"], (path, body, out)
+            if bad:
+                seg = quote(bad, safe="")
+                base = f"http://127.0.0.1:{srv.port}/{seg}"
+                for req in (
+                    lambda: urllib.request.urlopen(f"{base}/1/_aknn_search"),
+                    lambda: urllib.request.urlopen(f"{base}/1"),
+                    lambda: _post_raw(srv.port, f"/{seg}/_aknn_msearch", {"ids": [1]}),
+                    lambda: _delete_raw(srv.port, f"/{seg}/1"),
+                    lambda: _delete_raw(srv.port, f"/{seg}"),
+                ):
+                    code, out = _status(req)
+                    assert code == 400 and "bad index name" in out["error"], (bad, out)
+        assert sorted(os.listdir(os.path.join(srv.root, "indexes"))) == ["idx"]
+        assert _http_get(srv.port, "/_aknn_models")["models"] == ["m"]
+        assert _http_get(srv.port, f"/idx/{docs[0]['_id']}/_aknn_search?k1=50&k2=5")["hits"]["total"] == 5
+    finally:
+        srv.stop()
+
+
+def test_http_write_job_budget(spark):
+    """An immediate one-doc replace and a one-doc DELETE /{index}/{id} on a
+    warm index run a fixed number of Spark jobs: the index's pins are
+    held on the driver, so neither write re-reads the store to learn its
+    _id type or vector dimension, and only the touched id_bucket
+    directory is read and rewritten."""
+    docs = _sample_docs(spark)
+    srv = _serve(spark, docs, batches=3)
+    moved = {"_id": docs[5]["_id"], "_source": docs[9]["_source"]}
+    try:
+        srv.search("idx", docs[9]["_id"], 50, 5)  # builds the snapshot
+        group = f"enn-write-budget-{srv.port}"
+        body = {"model": "m", "_index": "idx", "docs": [moved]}
+        out, n_index = _jobs(spark, group + "-index", lambda: srv.index(body))
+        assert out["indexed"] == 1
+        gone, n_delete = _jobs(spark, group + "-delete", lambda: srv.delete_ids("idx", [str(docs[7]["_id"])]))
+        assert gone == 1
+        assert (n_index, n_delete) == (9, 9), (n_index, n_delete)
+        assert srv.get_doc("idx", docs[5]["_id"])["_source"] == docs[9]["_source"]
+        assert srv.get_doc("idx", docs[7]["_id"]) is None
     finally:
         srv.stop()

@@ -2,7 +2,8 @@
 the r11 verdict's stretch 7): immediate mode (every /_aknn_index batch
 pays the full replace-on-index machinery — r11 measured 749 s for 200k in
 40 batches) versus bulk mode (refresh=false staging appends + ONE
-/_aknn_refresh merge through the batch builder's clustered writes).
+/_aknn_refresh, which merges into the empty index as one clustered
+append).
 
 Both arms load the same corpus into the same store layout and both are
 verified by the same post-load searches, so the comparison is
@@ -16,6 +17,10 @@ high-water resident memory (VmHWM) of this Python driver process, which
 holds the snapshot, and of the Spark driver JVM (vmhwm_python_mb,
 vmhwm_jvm_mb). Spark runs local[SPARK_GRAFT_CPUS] (default 32).
 
+Last, it re-stages the whole corpus with every component doubled (exact
+in IEEE) and refreshes again: a corpus-sized replace into the populated
+index (restage_s, rerefresh_s), checked by one doc GET of a doubled doc.
+
 Usage: python tools/wire_bulk_stepup.py [SF_DIR] [--skip-immediate]
        (default /tmp/enn_scale/sf10 — 200k vectors; --skip-immediate
        reuses r11's committed 749 s instead of re-measuring, for quick
@@ -23,7 +28,7 @@ Usage: python tools/wire_bulk_stepup.py [SF_DIR] [--skip-immediate]
 
 Prints one JSON line {n_docs, immediate_s, bulk_stage_s, bulk_refresh_s,
 bulk_total_s, snapshot_build_s, search_p50_ms, snapshot_mb, vmhwm_python_mb,
-vmhwm_jvm_mb, speedup, search_equal}.
+vmhwm_jvm_mb, restage_s, rerefresh_s, speedup, search_equal}.
 """
 
 from __future__ import annotations
@@ -59,6 +64,27 @@ def _load(srv_port, docs, _http_post, bulk: bool) -> dict:
         out["refresh_s"] = round(time.perf_counter() - t0, 1)
         assert merged == len(docs), (merged, len(docs))
     out["total_s"] = out["stage_s"] + out.get("refresh_s", 0.0)
+    return out
+
+
+def _rerefresh(srv_port, docs, _http_get, _http_post) -> dict:
+    """Stage every doc again with its components doubled, then time the
+    refresh that merges them into the populated index."""
+
+    def doubled(d: dict) -> dict:
+        return {"_id": d["_id"], "_source": {"_aknn_vector": [2.0 * x for x in d["_source"]["_aknn_vector"]]}}
+
+    t0 = time.perf_counter()
+    for i in range(0, len(docs), BATCH):
+        batch = [doubled(d) for d in docs[i : i + BATCH]]
+        _http_post(srv_port, "/_aknn_index", {"model": "m", "_index": "v", "docs": batch, "refresh": False})
+    out = {"restage_s": round(time.perf_counter() - t0, 1)}
+    t0 = time.perf_counter()
+    merged = _http_post(srv_port, "/_aknn_refresh", {"_index": "v"})["merged"]
+    out["rerefresh_s"] = round(time.perf_counter() - t0, 1)
+    assert merged == len(docs), (merged, len(docs))
+    d = doubled(docs[100])
+    assert _http_get(srv_port, f"/v/{d['_id']}")["_source"] == d["_source"]
     return out
 
 
@@ -119,7 +145,6 @@ def main() -> None:
     if skip_immediate:
         report["immediate_s"] = 749.0
         report["immediate_source"] = "r11 committed step-up (same corpus/batching)"
-        bulk_srv.stop()
     else:
         imm_srv = AknnHttpServer(spark, tempfile.mkdtemp(prefix="enn_wire_imm_")).start()
         report["immediate_s"] = _load(imm_srv.port, docs, _http_post, bulk=False)["total_s"]
@@ -132,8 +157,9 @@ def main() -> None:
         )
         report["search_equal"] = equal
         imm_srv.stop()
-        bulk_srv.stop()
         assert equal
+    report.update(_rerefresh(bulk_srv.port, docs, _http_get, _http_post))
+    bulk_srv.stop()
 
     report["speedup"] = round(report["immediate_s"] / report["bulk_total_s"], 2)
     print(json.dumps(report))
