@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .constants import ANN_K1, ANN_K2, LSH_BITS, LSH_TABLES
-from .operators.knn import rank_term_matches
+from .operators.knn import rank_term_matches, term_match_counts
 from .operators.lsh import LshModel, explode_hashes
 
 ID_FIELD = "_id"
@@ -54,7 +54,14 @@ def aknn_create(
     The reference receives an explicit 2·T·B sample in the request body;
     here the sample is the first 2·T·B docs ordered by id — deterministic
     on any DataFrame, and only the KB-sized sample is ever collected.
+    A model shape outside nb_tables >= 1 and 1 <= nb_bits_per_table <= 64
+    is a ValueError: a table's hash packs its bits into one int64 term.
     """
+    if nb_tables < 1 or not 1 <= nb_bits_per_table <= 64:
+        raise ValueError(
+            "nb_tables must be >= 1 and nb_bits_per_table in [1, 64], "
+            f"got nb_tables={nb_tables}, nb_bits_per_table={nb_bits_per_table}"
+        )
     need = 2 * nb_tables * nb_bits_per_table
     rows = docs.select(vector_field).orderBy(id_field).limit(need).collect()
     sample = np.array([r[0] for r in rows], dtype=np.float64)
@@ -81,6 +88,16 @@ def aknn_index(
     )
 
 
+def check_k(k1, k2) -> None:
+    """k1 and k2 must be integers of at least 1 (ValueError otherwise): a
+    bool or a float would be truncated, and a k below 1 returns an empty
+    result that looks like a miss."""
+    if type(k1) is not int or type(k2) is not int:
+        raise ValueError(f"k1 and k2 must be integers, got k1={k1!r}, k2={k2!r}")
+    if k1 < 1 or k2 < 1:
+        raise ValueError(f"k1 and k2 must be >= 1, got k1={k1}, k2={k2}")
+
+
 def aknn_search(
     indexed: DataFrame,
     ids: Iterable,
@@ -95,17 +112,11 @@ def aknn_search(
     terms, take top-k1, exact-euclidean re-rank, return top-k2.
 
     Output: (query_id, neighbor_id, n_match, distance)."""
-    ids = list(ids)
-    queries = indexed.where(F.col(id_field).isin(ids))
-    q_exp = explode_hashes(queries.select(id_field, "hashes"), id_field, "query_id")
-    idx_exp = explode_hashes(
-        indexed.select(id_field, "hashes"), id_field, "neighbor_id"
-    )
-    counts = (
-        idx_exp.join(F.broadcast(q_exp), ["tbl", "hash"])
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.count(F.lit(1)).alias("n_match"))
+    check_k(k1, k2)
+    queries = indexed.where(F.col(id_field).isin(list(ids)))
+    counts = term_match_counts(
+        explode_hashes(indexed.select(id_field, "hashes"), id_field, "neighbor_id"),
+        explode_hashes(queries.select(id_field, "hashes"), id_field, "query_id"),
     )
     return rank_term_matches(
         counts, indexed, queries, k1, k2, id_field, vector_field

@@ -432,3 +432,10 @@ Q20_PART_WORD = "gear"  # p_name LIKE %word%
 Q20_YEAR = 1997  # shipped-quantity year
 Q20_NATION = "NATION_5"
 Q20_AVAIL_FRAC = 0.5  # post-year qty > frac × in-year qty
+# Family searches ann_recall_families builds at once (read at call time).
+# With two in flight one family's straggler tail back-fills with the
+# next family's tasks at bounded shuffle/write churn. Twelve measured ~10%
+# faster cold on an idle 32-core host, but 8x slower (19.8 -> 160.0 s) in
+# a loaded 32-core run, where each job chain's stall multiplies the
+# others'.
+FAMILY_RECALL_THREADS = 2

@@ -51,8 +51,9 @@ from ..constants import (
     N_QUERIES,
 )
 from .. import io
-from ..functions.vector import as_double, euclidean
+from ..functions.vector import as_double
 from .ivf import IvfModel, _emb, ann_search_ivf, model_for, probe_pairs
+from .knn import exact_scores, top_k
 
 # graph edges, materialized once per (SparkContext, sf_dir) — the search
 # entry and the recall entry both consume them; same localCheckpoint-once
@@ -361,19 +362,7 @@ def _expand_and_rerank(
         .where(F.col("neighbor_id") != F.col("query_id"))
         .distinct()
     )
-    nvec = index_df.select(F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("nv"))
-    qvec = query_df.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv"))
-    scored = (
-        nvec.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(qvec), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(euclidean(F.col("qv"), F.col("nv")), DIST_ROUND).alias("distance"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("distance"), F.asc("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k).drop("rn")
+    return top_k(exact_scores(cand, index_df, query_df, id_col, vec_col), k, "distance")
 
 
 def ann_search_graph(
@@ -427,8 +416,6 @@ def ann_search_graph_beam(
     Output: (query_id, neighbor_id, distance)."""
     from ..constants import BEAM_ROUNDS, BEAM_WIDTH
 
-    nvec = index_df.select(F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("nv"))
-    qvec = query_df.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv"))
     # r13 (opt guide §2.6/§5): ONE eager barrier per round instead of two.
     # The previously separate `expanded` frame (union of checkpointed beams —
     # its own localCheckpoint job per round) is now a boolean column ON the
@@ -444,7 +431,6 @@ def ann_search_graph_beam(
         .withColumn("expanded", F.lit(False))
         .localCheckpoint(eager=True)
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("distance"), F.asc("neighbor_id"))
     # r14: the beam membership test is a WINDOW over the checkpointed pool,
     # not a self-join. Ranking within (query_id, expanded) groups gives the
     # not-yet-expanded rows exactly the rank the old filtered window gave
@@ -467,25 +453,14 @@ def ann_search_graph_beam(
             .distinct()
         )
         new = hop.join(pool.select("query_id", "neighbor_id"), ["query_id", "neighbor_id"], "left_anti")
-        scored_new = (
-            nvec.join(F.broadcast(new), "neighbor_id")
-            .join(F.broadcast(qvec), "query_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(euclidean(F.col("qv"), F.col("nv")), DIST_ROUND).alias("distance"),
-                F.lit(False).alias("expanded"),
-            )
+        scored_new = exact_scores(new, index_df, query_df, id_col, vec_col).withColumn(
+            "expanded", F.lit(False)
         )
         marked = ranked.withColumn("expanded", F.col("expanded") | in_beam).drop("rn")
         # localCheckpoint per round: the pool stays KB-sized but its lineage
         # would otherwise deepen by ~4 joins per round
         pool = marked.unionByName(scored_new).localCheckpoint(eager=True)
-    return (
-        pool.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .drop("rn", "expanded")
-    )
+    return top_k(pool, k, "distance").drop("expanded")
 
 
 # ---- registry entries (spark, sf_dir) → DataFrame ---------------------------
@@ -775,22 +750,8 @@ def ann_recall_graph_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).select("query_id", F.col("vec_b").alias("neighbor_id"))
             frontier = frontier.unionByName(hop).distinct().localCheckpoint(eager=True)
         cand = frontier.where(F.col("neighbor_id") != F.col("query_id")).distinct()
-        nvec = emb.select(F.col("vec_id").alias("neighbor_id"), as_double(F.col("embedding")).alias("nv"))
-        qvec = queries.select(F.col("vec_id").alias("query_id"), as_double(F.col("embedding")).alias("qv"))
-        scored = (
-            nvec.join(F.broadcast(cand), "neighbor_id")
-            .join(F.broadcast(qvec), "query_id")
-            .select(
-                "query_id",
-                "neighbor_id",
-                F.round(euclidean(F.col("qv"), F.col("nv")), DIST_ROUND).alias("distance"),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(F.asc("distance"), F.asc("neighbor_id"))
-        ann = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= ANN_K2)
-            .select("query_id", "neighbor_id")
+        ann = top_k(exact_scores(cand, emb, queries), ANN_K2, "distance").select(
+            "query_id", "neighbor_id"
         )
         out.append(_recall_of(ann, gt).select(F.lit(hops).alias("hops"), "query_id", "recall"))
     res = out[0]

@@ -43,8 +43,9 @@ from ..constants import (
     IVF_SAMPLE,
     N_QUERIES,
 )
-from ..functions.vector import as_double, euclidean
+from ..functions.vector import as_double
 from ..session import configure
+from .knn import exact_scores, top_k
 
 
 def _chunked_sq_dists(v: "np.ndarray", cent: "np.ndarray") -> "np.ndarray":
@@ -1460,23 +1461,7 @@ def ann_search_ivf(
     cand = assigned.join(F.broadcast(probes), "list_id").where(
         F.col("neighbor_id") != F.col("query_id")
     )
-    nvec = index_df.select(F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("nv"))
-    qvec = query_df.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv"))
-    # broadcast the probed-members candidate list (Q·nprobe·list-size id
-    # rows), stream the vector side: without the hint Catalyst broadcasts
-    # nvec — the whole corpus — because bench-SF parquet stats are tiny
-    scored = (
-        F.broadcast(cand).join(nvec, "neighbor_id")
-        .join(F.broadcast(qvec), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "list_id",
-            F.round(euclidean(F.col("qv"), F.col("nv")), DIST_ROUND).alias("distance"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("distance"), F.asc("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k).drop("rn")
+    return top_k(exact_scores(cand, index_df, query_df, id_col, vec_col), k, "distance")
 
 
 # ---- registry entries (spark, sf_dir) → DataFrame ---------------------------
@@ -1562,22 +1547,7 @@ def _search_ivf_store(
     cand = assigned.join(F.broadcast(probes), "list_id").where(
         F.col("neighbor_id") != F.col("query_id")
     )
-    nvec = emb.select(F.col("vec_id").alias("neighbor_id"), as_double(F.col("embedding")).alias("nv"))
-    qvec = queries.select(F.col("vec_id").alias("query_id"), as_double(F.col("embedding")).alias("qv"))
-    # broadcast the pruned-read candidates, stream the re-rank vector side
-    # (§3 build-side fix — same rationale as ann_search_ivf)
-    scored = (
-        F.broadcast(cand).join(nvec, "neighbor_id")
-        .join(F.broadcast(qvec), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "list_id",
-            F.round(euclidean(F.col("qv"), F.col("nv")), DIST_ROUND).alias("distance"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("distance"), F.asc("neighbor_id"))
-    return scored.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= ANN_K2).drop("rn")
+    return top_k(exact_scores(cand, emb, queries), ANN_K2, "distance")
 
 
 def ann_search_ivf_store(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,11 +7,17 @@ as a batch of queries:
    tie-broken by neighbor id;
 2. exact euclidean re-rank of the k1 candidates, top-k2.
 
+Every ANN family (LSH, IVF, IVFPQ-refine, bitsign, Matryoshka, graph) keeps
+that two-stage contract and differs only in its stage-1 scorer. Three
+helpers here are the whole of what they share: `term_match_counts` (the LSH
+stage-1 score), `exact_scores` (the stage-2 gather and rounded distance)
+and `top_k` (each stage's cut). `rank_term_matches` composes them.
+
 Scale shape (100 TB): the query side is small → broadcast; candidate
 generation is a broadcast hash join against the exploded index (index never
 shuffles); match counts partial-aggregate map-side; re-rank touches ≤ Q·k1
-rows. Exact kNN avoids the Q×N shuffle entirely via per-partition top-k
-(mapInPandas) before a tiny global top-k.
+rows. Exact kNN avoids the Q×N shuffle via the native WindowGroupLimit's
+per-partition top-k before a tiny global top-k.
 
 Determinism: distances rounded to DIST_ROUND decimals before ranking; all
 ties broken by neighbor id. Self-matches are excluded.
@@ -100,6 +106,60 @@ def knn_exact(
     )
 
 
+def term_match_counts(idx_terms: DataFrame, q_terms: DataFrame) -> DataFrame:
+    """Stage 1's score: (neighbor_id, tbl, hash) index terms against the
+    broadcast (query_id, tbl, hash) query terms → (query_id, neighbor_id,
+    n_match), the number of tables whose bucket the two share. The index
+    never shuffles, the count partial-aggregates map-side, and a query
+    never matches itself."""
+    return (
+        idx_terms.join(F.broadcast(q_terms), ["tbl", "hash"])
+        .where(F.col("neighbor_id") != F.col("query_id"))
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.count(F.lit(1)).alias("n_match"))
+    )
+
+
+def exact_scores(
+    cand: DataFrame,
+    index_df: DataFrame,
+    query_df: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Stage 2's score: the (query_id, neighbor_id, ...) candidates plus
+    `round(euclidean, DIST_ROUND) AS distance`. The candidate list (≤ Q·k1
+    rows) is broadcast and the corpus vectors stream past it; the query
+    vectors are broadcast too. Without the candidate hint Catalyst
+    broadcasts the corpus side instead (its parquet stats are tiny at
+    bench scales; at 100 TB that is a full-corpus shuffle or an OOM), and
+    the gather inverts into corpus-ships-to-candidates."""
+    nvec = index_df.select(F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("nv"))
+    qvec = query_df.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv"))
+    rest = [c for c in cand.columns if c not in ("query_id", "neighbor_id")]
+    return (
+        F.broadcast(cand).join(nvec, "neighbor_id")
+        .join(F.broadcast(qvec), "query_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            *rest,
+            F.round(euclidean(F.col("qv"), F.col("nv")), DIST_ROUND).alias("distance"),
+        )
+    )
+
+
+def top_k(
+    df: DataFrame, k: int, order_col: str, ascending: bool = True, by=("query_id",)
+) -> DataFrame:
+    """The first k rows of each `by` group by `order_col`, ties broken by
+    ascending neighbor_id. Spark plans the `row_number() <= k` window with
+    a native WindowGroupLimit on each side of its exchange."""
+    order = F.col(order_col).asc() if ascending else F.col(order_col).desc()
+    w = Window.partitionBy(*by).orderBy(order, F.asc("neighbor_id"))
+    return df.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= k).drop("rn")
+
+
 def rank_term_matches(
     counts: DataFrame,
     index_df: DataFrame,
@@ -111,33 +171,9 @@ def rank_term_matches(
 ) -> DataFrame:
     """Shared tail of every `_aknn_search`-shaped query: term-match counts
     (query_id, neighbor_id, n_match) → top-k1 by match count → exact
-    euclidean re-rank → top-k2. The re-rank gather broadcasts the query
-    side; only ≤ Q·k1 index vectors are touched."""
-    w1 = Window.partitionBy("query_id").orderBy(F.desc("n_match"), F.asc("neighbor_id"))
-    k1_sel = counts.withColumn("rn", F.row_number().over(w1)).where(F.col("rn") <= k1).drop("rn")
-
-    nvec = index_df.select(F.col(id_col).alias("neighbor_id"), as_double(F.col(vec_col)).alias("nv"))
-    qvec = query_df.select(F.col(id_col).alias("query_id"), as_double(F.col(vec_col)).alias("qv"))
-    # broadcast the ≤ Q·k1 candidate list, STREAM the index side: without
-    # the hint Catalyst broadcasts nvec (the whole corpus — tiny parquet
-    # stats at bench SFs, a full-corpus shuffle-or-OOM at 100 TB) and the
-    # gather inverts into corpus-ships-to-candidates
-    scored = (
-        F.broadcast(k1_sel).join(nvec, "neighbor_id")
-        .join(F.broadcast(qvec), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "n_match",
-            F.round(euclidean(F.col("qv"), F.col("nv")), DIST_ROUND).alias("distance"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.asc("distance"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w2))
-        .where(F.col("rn") <= k2)
-        .drop("rn")
-    )
+    euclidean re-rank → top-k2."""
+    k1_sel = top_k(counts, k1, "n_match", ascending=False)
+    return top_k(exact_scores(k1_sel, index_df, query_df, id_col, vec_col), k2, "distance")
 
 
 def ann_search_lsh(
@@ -158,15 +194,9 @@ def ann_search_lsh(
     # hash pass it would save — the index side is consumed exactly once here
     idx_hashed = build_index(index_df, model, vec_col, id_col).select(id_col, "hashes")
     q_hashed = build_index(query_df, model, vec_col, id_col)
-
-    idx_exp = explode_hashes(idx_hashed, id_col, "neighbor_id")
-    q_exp = explode_hashes(q_hashed, id_col, "query_id")
-
-    counts = (
-        idx_exp.join(F.broadcast(q_exp), ["tbl", "hash"])
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.count(F.lit(1)).alias("n_match"))
+    counts = term_match_counts(
+        explode_hashes(idx_hashed, id_col, "neighbor_id"),
+        explode_hashes(q_hashed, id_col, "query_id"),
     )
     return rank_term_matches(counts, index_df, query_df, k1, k2, id_col, vec_col)
 
@@ -238,13 +268,7 @@ def ann_search_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pos", "hash"
         ),
     ).select("query_id", (F.col("pos") / step).cast("int").alias("tbl"), "hash")
-    counts = (
-        idx_exp.join(F.broadcast(qp), ["tbl", "hash"])
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.count(F.lit(1)).alias("n_match"))
-    )
-    return rank_term_matches(counts, emb, queries)
+    return rank_term_matches(term_match_counts(idx_exp, qp), emb, queries)
 
 
 def ann_recall_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -480,34 +504,10 @@ def ann_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("s.n_tables", "n_bits", "query_id", "neighbor_id", "s.n_match").where(
         F.col("n_match") > 0
     )
-    w1 = Window.partitionBy("n_tables", "n_bits", "query_id").orderBy(
-        F.desc("n_match"), F.asc("neighbor_id")
-    )
-    k1_sel = swept.withColumn("rn", F.row_number().over(w1)).where(
-        F.col("rn") <= ANN_K1
-    ).drop("rn")
-    nvec = emb.select(F.col("vec_id").alias("neighbor_id"), as_double(F.col("embedding")).alias("nv"))
-    qvec = queries.select(F.col("vec_id").alias("query_id"), as_double(F.col("embedding")).alias("qv"))
-    # broadcast the grid-bounded shortlist (|sweep grid|·Q·K1 rows), not
-    # the corpus — same §3 build-side fix as rank_term_matches
-    scored = (
-        F.broadcast(k1_sel).join(nvec, "neighbor_id")
-        .join(F.broadcast(qvec), "query_id")
-        .select(
-            "n_tables",
-            "n_bits",
-            "query_id",
-            "neighbor_id",
-            F.round(euclidean(F.col("qv"), F.col("nv")), DIST_ROUND).alias("distance"),
-        )
-    )
-    w2 = Window.partitionBy("n_tables", "n_bits", "query_id").orderBy(
-        F.asc("distance"), F.asc("neighbor_id")
-    )
-    ann = (
-        scored.withColumn("rn", F.row_number().over(w2))
-        .where(F.col("rn") <= ANN_K2)
-        .select("n_tables", "n_bits", "query_id", "neighbor_id")
+    grid_q = ("n_tables", "n_bits", "query_id")
+    k1_sel = top_k(swept, ANN_K1, "n_match", ascending=False, by=grid_q)
+    ann = top_k(exact_scores(k1_sel, emb, queries), ANN_K2, "distance", by=grid_q).select(
+        "n_tables", "n_bits", "query_id", "neighbor_id"
     )
     hits = ann.join(F.broadcast(exact), ["query_id", "neighbor_id"]).groupBy(
         "n_tables", "n_bits", "query_id"
@@ -687,13 +687,7 @@ def search_lsh_store(
     idx_exp = load_lsh_partitions(spark, store, parts).withColumnRenamed(
         "vec_id", "neighbor_id"
     )
-    counts = (
-        idx_exp.join(F.broadcast(q_exp), ["tbl", "hash"])
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.count(F.lit(1)).alias("n_match"))
-    )
-    return rank_term_matches(counts, emb, queries)
+    return rank_term_matches(term_match_counts(idx_exp, q_exp), emb, queries)
 
 
 def ann_search_lsh_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -944,20 +938,9 @@ def ann_recall_families(spark: SparkSession, sf_dir: str) -> DataFrame:
             # runs is exactly what the un-memoized union ran here anyway
             _FAMILY_RECALL_MEMO[(app, sf_dir, name)] = build().localCheckpoint()
 
-        import os as _os
+        from .. import constants
 
-        # default 2 (r14): the r13 default of 12 was tuned under co-tenant
-        # load and refuted by the driver's own 32-core run (19.8 s ->
-        # 160.0 s — twelve concurrent job chains multiply shuffle/write
-        # churn exactly when the host shows I/O pressure, and each chain's
-        # stall multiplies the others'). r14 idle-host A/B at 32 cores
-        # (fresh session per run, 3 interleaved pairs): 12 is ~10% faster
-        # cold (16.6/19.5/18.7 s vs 19.0/21.8/20.5 s for 2) — a small
-        # upside against a catastrophic loaded-host downside. Two in
-        # flight is the guide's §2.6 recommendation: one family's
-        # straggler tail back-fills with the next family's tasks, with
-        # bounded concurrent churn. Env-tunable for other cluster shapes.
-        workers = max(1, int(_os.environ.get("ENN_FAMILY_RECALL_THREADS", "2")))
+        workers = constants.FAMILY_RECALL_THREADS
         with ThreadPoolExecutor(max_workers=workers) as tp:
             list(tp.map(_build, missing))
     parts = []
@@ -1069,9 +1052,10 @@ def ann_search_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: stage 1 is the only corpus-wide scan and touches MRL_DIMS/D
     of the vector payload (a real MRL deployment stores the prefix as its
     own column, making this a column-pruned scan — here the slice happens
-    post-read, the plan shape is the same); _partial_topk folds N·Q coarse
-    rows to ≤ Q·K1 per partition before any shuffle; stage 2 gathers only
-    Q·K1 full vectors (hash-join point lookups) for the exact distances.
+    post-read, the plan shape is the same); top_k's native WindowGroupLimit
+    folds N·Q coarse rows to ≤ Q·K1 per partition before the shuffle;
+    stage 2 (exact_scores) gathers only Q·K1 full vectors for the exact
+    distances.
 
     Output: (query_id, neighbor_id, coarse_distance, distance)."""
     from ..constants import MRL_DIMS, MRL_K1
@@ -1088,35 +1072,8 @@ def ann_search_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:
         "neighbor_id",
         F.round(euclidean(F.col("qv"), F.col("nv")), DIST_ROUND).alias("coarse_distance"),
     )
-    local = _partial_topk(scored, "coarse_distance", MRL_K1, True)
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.asc("coarse_distance"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        local.withColumn("rn", F.row_number().over(w1))
-        .where(F.col("rn") <= MRL_K1)
-        .drop("rn")
-    )
-    nvec = emb.select(
-        F.col("vec_id").alias("neighbor_id"), as_double(F.col("embedding")).alias("nvf")
-    )
-    qvec = q.select(
-        F.col("vec_id").alias("query_id"), as_double(F.col("embedding")).alias("qvf")
-    )
-    # broadcast the ≤ Q·MRL_K1 shortlist, stream the full-dim corpus scan
-    # (§3 build-side fix; without the hint Catalyst broadcasts the corpus)
-    full = F.broadcast(shortlist).join(nvec, "neighbor_id").join(F.broadcast(qvec), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        "coarse_distance",
-        F.round(euclidean(F.col("qvf"), F.col("nvf")), DIST_ROUND).alias("distance"),
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.asc("distance"), F.asc("neighbor_id"))
-    return (
-        full.withColumn("rn", F.row_number().over(w2))
-        .where(F.col("rn") <= ANN_K2)
-        .drop("rn")
-    )
+    shortlist = top_k(scored, MRL_K1, "coarse_distance")
+    return top_k(exact_scores(shortlist, emb, q), ANN_K2, "distance")
 
 
 def ann_recall_matryoshka(spark: SparkSession, sf_dir: str) -> DataFrame:

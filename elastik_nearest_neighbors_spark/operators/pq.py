@@ -305,34 +305,15 @@ def ann_search_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (query_id, neighbor_id, distance) top-ANN_K2 per query, with
     true euclidean distances (unlike ann_search_ivfpq's ADC estimates)."""
-    from ..constants import DIST_ROUND, REFINE_R
-    from ..functions.vector import as_double, euclidean
+    from ..constants import REFINE_R
+    from .knn import exact_scores, top_k
 
-    adc = _ivfpq_adc(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    shortlist = (
-        adc.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= REFINE_R)
-        .select("query_id", "neighbor_id")
+    shortlist = top_k(_ivfpq_adc(spark, sf_dir), REFINE_R, "adc_dist").select(
+        "query_id", "neighbor_id"
     )
     emb = _emb(spark, sf_dir)
-    qv = emb.where(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), as_double("embedding").alias("qv")
-    )
-    nv = emb.select(F.col("vec_id").alias("neighbor_id"), as_double("embedding").alias("nv"))
-    refined = (
-        nv.join(F.broadcast(shortlist), "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(euclidean(F.col("qv"), F.col("nv")), DIST_ROUND).alias("distance"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.asc("distance"), F.asc("neighbor_id"))
-    return (
-        refined.withColumn("rn", F.row_number().over(w2)).where(F.col("rn") <= ANN_K2).drop("rn")
-    )
+    queries = emb.where(F.col("vec_id") < N_QUERIES)
+    return top_k(exact_scores(shortlist, emb, queries), ANN_K2, "distance")
 
 
 def ann_search_ivfpq_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -770,14 +751,13 @@ def ann_search_bitsign(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-dim euclidean re-rank → top-ANN_K2. Same k1/k2 contract and plan
     shape as ann_search_matryoshka: the corpus-wide stage touches ONLY the
     8-byte codes (at scale a stored column — the scan reads 1/64 of the
-    vector bytes), _partial_topk folds N·Q coarse rows to ≤ Q·K1 per
-    partition before the only shuffle, stage 2 gathers Q·K1 full vectors
-    by hash-join point lookups.
+    vector bytes), top_k's native WindowGroupLimit folds N·Q coarse rows to
+    ≤ Q·K1 per partition before the only shuffle, stage 2 (exact_scores)
+    gathers Q·K1 full vectors.
 
     Output: (query_id, neighbor_id, hamming, distance)."""
     from ..constants import BITSIGN_K1
-    from ..functions.vector import as_double, euclidean
-    from .knn import _emb, _partial_topk
+    from .knn import _emb, exact_scores, top_k
 
     configure(spark)
     emb = _emb(spark, sf_dir)
@@ -802,33 +782,8 @@ def ann_search_bitsign(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("hamming"),
     )
-    local = _partial_topk(scored, "hamming", BITSIGN_K1, True)
-    w1 = Window.partitionBy("query_id").orderBy(F.asc("hamming"), F.asc("neighbor_id"))
-    shortlist = (
-        local.withColumn("rn", F.row_number().over(w1))
-        .where(F.col("rn") <= BITSIGN_K1)
-        .drop("rn")
-    )
-    nvec = emb.select(
-        F.col("vec_id").alias("neighbor_id"), as_double(F.col("embedding")).alias("nv")
-    )
-    qvec = q.select(
-        F.col("vec_id").alias("query_id"), as_double(F.col("embedding")).alias("qv")
-    )
-    # broadcast the ≤ Q·BITSIGN_K1 shortlist, stream the corpus gather
-    # (§3 build-side fix; the hintless join broadcast the whole emb table)
-    full = F.broadcast(shortlist).join(nvec, "neighbor_id").join(F.broadcast(qvec), "query_id").select(
-        "query_id",
-        "neighbor_id",
-        "hamming",
-        F.round(euclidean(F.col("qv"), F.col("nv")), DIST_ROUND).alias("distance"),
-    )
-    w2 = Window.partitionBy("query_id").orderBy(F.asc("distance"), F.asc("neighbor_id"))
-    return (
-        full.withColumn("rn", F.row_number().over(w2))
-        .where(F.col("rn") <= ANN_K2)
-        .drop("rn")
-    )
+    shortlist = top_k(scored, BITSIGN_K1, "hamming")
+    return top_k(exact_scores(shortlist, emb, q), ANN_K2, "distance")
 
 
 def ann_recall_bitsign(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -119,7 +119,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .api import ID_FIELD, VECTOR_FIELD, AknnModelRegistry, aknn_index
+from .api import ID_FIELD, VECTOR_FIELD, AknnModelRegistry, aknn_index, check_k
 from .constants import ANN_K1, ANN_K2, LSH_BITS, LSH_TABLES
 from .functions.vector import euclidean_np, rounded_np
 
@@ -360,12 +360,6 @@ class AknnHttpServer:
         name = body["_id"]
         nb_tables = int(body.get("nb_tables", LSH_TABLES))
         nb_bits = int(body.get("nb_bits_per_table", LSH_BITS))
-        # a table's hash packs its bits into one int64 term
-        if nb_tables < 1 or not 1 <= nb_bits <= 64:
-            raise ValueError(
-                "nb_tables must be >= 1 and nb_bits_per_table in [1, 64], "
-                f"got nb_tables={nb_tables}, nb_bits_per_table={nb_bits}"
-            )
         with self._lock:
             self.registry.create(
                 name,
@@ -757,10 +751,7 @@ class AknnHttpServer:
         k answers an empty 200 that looks like a miss."""
         if not isinstance(doc_ids, list):
             raise ValueError(f"ids must be a JSON list, got {type(doc_ids).__name__}")
-        if type(k1) is not int or type(k2) is not int:
-            raise ValueError(f"k1 and k2 must be integers, got k1={k1!r}, k2={k2!r}")
-        if k1 < 1 or k2 < 1:
-            raise ValueError(f"k1 and k2 must be >= 1, got k1={k1}, k2={k2}")
+        check_k(k1, k2)
         with self._lock:
             snap = self._snapshot(index)
             found = snap.search(self._coerce_ids(snap.id_type, doc_ids), k1, k2)

@@ -578,15 +578,10 @@ def streaming_graph_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _drain(q, 300)
     from ..constants import GRAPH_SEED_K
-    from pyspark.sql.window import Window
+    from ..operators.knn import top_k
 
     sunk = spark.sql(f"SELECT query_id, neighbor_id, distance FROM {name}")
-    w = Window.partitionBy("query_id").orderBy(F.asc("distance"), F.asc("neighbor_id"))
-    seeds = (
-        sunk.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= GRAPH_SEED_K)
-        .select("query_id", "neighbor_id")
-    )
+    seeds = top_k(sunk, GRAPH_SEED_K, "distance").select("query_id", "neighbor_id")
     queries = emb.where(F.col("vec_id") < N_QUERIES)
     return _expand_and_rerank(emb, queries, seeds, graph_edges(spark, sf_dir))
 

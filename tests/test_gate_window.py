@@ -29,8 +29,17 @@ GATE_WINDOW_SIZE = 50
 # decontaminate, seq_pack, source_cap, stratified_sample,
 # ann_recall_graph_beam, bm25_doc_search_char, phrase_match).
 # Rotation since r14: streaming_index_store in (its store build and
-# search_lsh_store moved onto index_store.lsh_terms), hybrid_search_rrf
-# out (its code is unchanged since its last gated run).
+# search_lsh_store moved onto index_store.lsh_terms). Then the two-stage
+# re-rank moved into knn.term_match_counts / exact_scores / top_k: all 16
+# keys reaching it from outside the window came in (the LSH multiprobe,
+# filtered and recall keys, aknn_search_api, aknn_model_registry,
+# ann_recall_sweep, the matryoshka and bitsign pairs, ann_recall_graph,
+# ann_recall_graph_beam, streaming_ann_search, streaming_graph_search,
+# hybrid_search_rrf), and 16 keys whose code none of it reaches went out
+# (the dedup trio, dup_clusters, embedding_clusters, ivf_index,
+# dedup_semantic, knn_graph, index_stats, pq_codes, ann_search_pq,
+# ann_recall_pq, ann_search_ivfpq, ann_recall_ivfpq, knn_graph_multiprobe,
+# bm25_doc_search).
 EXPECTED_GATE_WINDOW = [
     "aknn_http_search_store",
     "aknn_http_upsert",
@@ -52,36 +61,36 @@ EXPECTED_GATE_WINDOW = [
     "ann_search_graph_store",
     "graph_delete",
     "graph_rebuild",
-    "dedup_minhash_canonical",
-    "dedup_exact",
-    "dedup_simhash",
     "similarity_join_lsh",
     "knn_exact_euclidean",
     "ann_recall_families",
-    "dup_clusters",
-    "embedding_clusters",
     "ann_search_lsh",
     "semantic_doc_search",
-    "ivf_index",
     "ann_search_ivf",
     "ann_recall_ivf",
     "ann_search_ivf_filtered",
-    "dedup_semantic",
-    "knn_graph",
-    "index_stats",
-    "pq_codes",
-    "ann_search_pq",
-    "ann_recall_pq",
-    "ann_search_ivfpq",
     "ann_search_ivfpq_refined",
-    "ann_recall_ivfpq",
     "ann_recall_ivfpq_refined",
     "ann_search_graph",
     "ann_search_graph_beam",
     "ann_recall_graph_sweep",
-    "knn_graph_multiprobe",
-    "bm25_doc_search",
     "streaming_index_store",
+    "ann_search_lsh_multiprobe",
+    "ann_recall_lsh_multiprobe",
+    "ann_search_lsh_filtered",
+    "ann_recall",
+    "aknn_search_api",
+    "aknn_model_registry",
+    "ann_recall_sweep",
+    "ann_search_matryoshka",
+    "ann_recall_matryoshka",
+    "ann_search_bitsign",
+    "ann_recall_bitsign",
+    "ann_recall_graph",
+    "ann_recall_graph_beam",
+    "streaming_ann_search",
+    "streaming_graph_search",
+    "hybrid_search_rrf",
 ]
 
 

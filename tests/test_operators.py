@@ -1057,6 +1057,42 @@ def test_aknn_facade_matches_lsh_search(spark):
     assert got == want
 
 
+def test_aknn_create_checks_model_shape(spark):
+    """aknn_create refuses a model shape outside nb_tables >= 1 and
+    1 <= nb_bits_per_table <= 64, as the wire's /_aknn_create does (a
+    table's hash is one int64 term): nb_tables=0 used to die in a numpy
+    reshape, and a 66-bit table was fitted with bits 64 and 65 silently
+    weightless (1 << 64 is 0 in int64)."""
+    import pyspark.sql.functions as F
+
+    from elastik_nearest_neighbors_spark import api
+
+    emb = io.table(spark, SF_SMALL, "embeddings")
+    docs = emb.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_aknn_vector"))
+    for tables, bits in ((0, 6), (16, 66), (4, 0)):
+        with pytest.raises(ValueError, match=r"nb_bits_per_table in \[1, 64\]"):
+            api.aknn_create(docs, nb_tables=tables, nb_bits_per_table=bits)
+        # checked before the sample query: a frame without the vector
+        # field would otherwise fail analysis first
+        with pytest.raises(ValueError, match=r"nb_bits_per_table in \[1, 64\]"):
+            api.aknn_create(spark.range(1), nb_tables=tables, nb_bits_per_table=bits)
+    assert api.aknn_create(docs, nb_tables=1, nb_bits_per_table=64).bits == 64
+
+
+def test_aknn_search_checks_k(spark):
+    """aknn_search takes the wire's k1/k2 rule (api.check_k): integers of
+    at least 1. k1=0 used to return an empty frame that looks like a miss,
+    and a bool or float was passed on to the window cut."""
+    from elastik_nearest_neighbors_spark import api
+
+    for k1, k2 in ((0, 10), (100, 0), (-1, 10)):
+        with pytest.raises(ValueError, match="k1 and k2 must be >= 1"):
+            api.aknn_search(spark.range(1), [1], k1, k2)
+    for k1, k2 in ((True, 10), (100, 2.0), ("100", 10)):
+        with pytest.raises(ValueError, match="k1 and k2 must be integers"):
+            api.aknn_search(spark.range(1), [1], k1, k2)
+
+
 def test_wav_decode_roundtrip():
     """synth_wav produces a real RIFF/PCM16 file and decode_audio recovers
     the exact int16 samples; stereo payloads downmix by mean; non-WAV bytes
@@ -2068,6 +2104,7 @@ def test_ann_recall_families_parallel_equals_sequential(spark, monkeypatch):
     (guide §2.6). The result must be identical to the sequential build —
     same 11 families, same recalls — and the memo must end up fully
     populated either way."""
+    from elastik_nearest_neighbors_spark import constants
     from elastik_nearest_neighbors_spark.operators import knn
 
     app = spark.sparkContext.applicationId
@@ -2079,12 +2116,12 @@ def test_ann_recall_families_parallel_equals_sequential(spark, monkeypatch):
             del knn._FAMILY_RECALL_MEMO[k]
 
     _clear()
-    monkeypatch.setenv("ENN_FAMILY_RECALL_THREADS", "4")
+    monkeypatch.setattr(constants, "FAMILY_RECALL_THREADS", 4)
     par = {r.family: r.recall for r in knn.ann_recall_families(spark, SF_SMALL).collect()}
     n_memo = len([k for k in knn._FAMILY_RECALL_MEMO if k[0] == app and k[1] == SF_SMALL])
     assert n_memo == len(par) == 11
 
     _clear()
-    monkeypatch.setenv("ENN_FAMILY_RECALL_THREADS", "1")  # pool, but serial
+    monkeypatch.setattr(constants, "FAMILY_RECALL_THREADS", 1)  # pool, but serial
     seq = {r.family: r.recall for r in knn.ann_recall_families(spark, SF_SMALL).collect()}
     assert par == seq

@@ -3,6 +3,9 @@ around must be visible in the plan, not just claimed in docstrings."""
 
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from elastik_nearest_neighbors_spark import io, plans, sources
@@ -45,6 +48,37 @@ def test_ann_search_broadcasts_query_side(spark):
     df = knn.ann_search_lsh(emb, emb.where(F.col("vec_id") < 8), model)
     # both the candidate join and the re-rank gather broadcast the query side
     assert plans.broadcast_join_count(df) >= 2, plans.formatted_plan(df)
+
+
+def _two_stage_searches():
+    from elastik_nearest_neighbors_spark import api
+    from elastik_nearest_neighbors_spark.operators import graph, pq
+
+    return {
+        "aknn_search": api.aknn_search_api,
+        "ann_search_lsh": knn.ann_search_lsh_q,
+        "ann_search_ivf": ivf.ann_search_ivf_q,
+        "ann_search_ivfpq_refined": pq.ann_search_ivfpq_refined,
+        "ann_search_bitsign": pq.ann_search_bitsign,
+        "ann_search_matryoshka": knn.ann_search_matryoshka,
+        "ann_search_graph": graph.ann_search_graph_q,
+        "ann_recall_sweep": knn.ann_recall_sweep,
+    }
+
+
+@pytest.mark.parametrize("name", list(_two_stage_searches()))
+def test_rerank_gather_never_broadcasts_corpus_vectors(spark, name):
+    """Every two-stage search's exact re-rank (knn.exact_scores) broadcasts
+    the candidate list and streams the corpus vectors (`nv`) past it. No
+    BroadcastExchange of the executed plan may carry `nv`: broadcasting the
+    corpus is what Catalyst picks on stats alone, because bench-scale
+    parquet looks tiny."""
+    df = _two_stage_searches()[name](spark, SF_SMALL)
+    df.collect()  # the adaptive plan below is the executed, final one
+    plan = plans.formatted_plan(df)
+    inputs = re.findall(r"\) BroadcastExchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
+    assert inputs and re.search(r"\bnv#", plan), plan
+    assert not [i for i in inputs if re.search(r"\bnv#", i)], plan
 
 
 def test_lsh_index_store_partition_prunes(spark, tmp_path):
