@@ -329,40 +329,9 @@ FLAT_FIT_MAX = 1 << 22
 # (and its bit-exact DuckDB mirror) is what the gate always exercises; the
 # sharded path is asserted bit-equal by forcing this threshold down in
 # tests (ivf reads it at call time, so a test patches this constant).
+# It routes serving only: every fit, at any L, is the driver-side
+# ivf.IvfModel.fit_path.
 SHARDED_MODEL_BYTES = 512 << 20
-# Sharded-FIT speed crossover (r9, closing the r8 verdict's reach-seam
-# observation): below the broadcast ceiling the DataFrame-sharded Lloyd
-# fit is still FASTER than the single-threaded driver loop once the fit
-# SAMPLE is large enough — the driver's per-iteration descent cost is
-# ~linear in the sample while the sharded fit is ~140 s of fixed
-# per-iteration job overhead until compute dominates. Measured on
-# /tmp/enn_scale/sfdistinct2m (2M distinct 64-dim, fresh process per fit,
-# bit-equal at every point; BASELINE.md r9 table): driver wins 2.3× at
-# n=20k (even at L=8192, 1.45×), sharded wins 1.3× at n=50k and 1.9× at
-# n=200k. The crossover is sample-driven, not L-driven, so the engage
-# rule keys on the PROJECTED sample min(IVF_SAMPLE, corpus distinct).
-# r10 pinned the bracket (same corpus, same cold protocol, bit-equal
-# at every point, BASELINE.md r10 table): driver wins 1.20× at n=35k,
-# sharded wins 0.92× at n=42k and 0.77× at n=50k (the r9 50k ratio
-# reproduced exactly) — crossover in (35k, 42k], so engage at 40k; the
-# residual mis-routing cost anywhere inside the bracket is ≤ ~10%.
-SHARDED_FIT_SAMPLE_MIN = 40_000
-# r13: the sharded fit's MEMBERSHIP pass (_coarse_members_df — fine
-# centroid → level-0 group, EXACT rounded argmin by contract) switches
-# from the flat O(L · L/HIER_BRANCH · D) scan to the exact ball-pruned
-# descent (_argmin_rounded_pruned: triangle-inequality bounds over the
-# sub-hierarchy, margin sized to the DIST_ROUND tie window, survivors
-# re-scored with the identical elementwise float ops — bit-equal by
-# construction) once the sub level has this many groups. Below it the
-# flat scan is cheaper than building the pruning structure; every
-# oracle-gated SF sits far below (L=16 → |sub|=1). Tests force the
-# pruned path at tiny scale by patching this constant (read at call time).
-MEMBERS_PRUNE_MIN = 4096
-# Sample size for _prune_levels' level-0 center fit — the pruning
-# hierarchy's quality knob (its exactness is unconditional; see
-# _argmin_rounded_pruned). 8192 keeps the sampled Lloyd seconds-cheap
-# at any |sub| with prune rates driver-measured equal to the full fit.
-PRUNE_FIT_SAMPLE = 8192
 # single-linkage clustering over the graph's edges. Threshold swept at
 # sf0.01 (min pair distance ≈ 1.05): 1.2 percolates into one 474-member
 # blob, 1.05 leaves only pairs; 1.12 gives 63 non-singleton clusters up to

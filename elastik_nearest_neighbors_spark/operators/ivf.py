@@ -334,18 +334,6 @@ def _descend_rows(
     raise AssertionError("levels must be non-empty")
 
 
-def _pruned_rows(
-    v: "np.ndarray",
-    cent: "np.ndarray",
-    coarse: "np.ndarray",
-    members: list["np.ndarray"],
-    w: int,
-) -> tuple["np.ndarray", "np.ndarray", "np.ndarray"]:
-    """Two-level candidate rows — the single-level case of _descend_rows
-    (kept as the primitive the property tests pin down)."""
-    return _descend_rows(v, cent, [(coarse, members)], w)
-
-
 def _build_levels(
     cent: "np.ndarray",
 ) -> list[tuple["np.ndarray", list["np.ndarray"]]]:
@@ -418,40 +406,22 @@ class IvfModel:
     Model-size envelope (honest version, r5): the model itself is the
     FULL fine-centroid table — L × D float64 (+ ~1/HIER_BRANCH for the
     hierarchy). With lists ∝ N/250 that is ~4 MB at 2M vectors (sf100),
-    ~40 MB at 20M, and ~2 GB at 10^9 vectors — the practical
-    closure/broadcast ceiling sits near L ≈ 10^6-10^7 (0.5-5 GB). Beyond
-    that the fine level must leave the driver: `assign_sharded` (r6)
-    does exactly that for SERVING — fine centroids as a DataFrame keyed
-    by level-0 group (`fine_level_table`), upper hierarchy as the only
-    closure, assignment as a co-partitioned shuffle join + numpy distance
-    pass, bit-equal to this closure path (asserted in tests) — and
-    `fit_fine_df` (r8) does it for the FIT: every Lloyd iteration keeps
-    the fine level in a DataFrame, bit-equal to fit_path and measured
-    ~1.9x faster than the driver loop already at L=4096 (BASELINE.md r8).
-    The closure path stays the default below the ceiling (model_for
-    routes on projected bytes); see graph.graph_model_for."""
+    ~40 MB at 20M, and ~2 GB at 10^9 vectors. The fit always runs on the
+    driver (fit_path); past the closure/broadcast ceiling
+    (SHARDED_MODEL_BYTES) SERVING leaves the closure: `assign_sharded`
+    and `probe_sharded` (r6) keep only the upper hierarchy in the closure
+    and meet the fine centroids as a DataFrame keyed by level-0 group
+    (`fine_level_table`) in a co-partitioned shuffle join + numpy distance
+    pass, bit-equal to this closure path (asserted in tests). Below the
+    ceiling the closure path is the plan; see graph.graph_model_for."""
 
     def __init__(
         self,
         centroids: np.ndarray,
-        coarse: np.ndarray | None = None,
         levels: list[tuple[np.ndarray, list[np.ndarray]]] | None = None,
     ):
         self.centroids = np.asarray(centroids, dtype=np.float64)
-        if levels is not None:
-            self.levels = levels
-        elif coarse is not None:
-            self.levels = [
-                _coarse_members(self.centroids, np.asarray(coarse, dtype=np.float64))
-            ]
-        else:
-            self.levels = []
-
-    # level-0 views, kept for callers/tests written against the two-level
-    # model shape (None/[] when the model is flat)
-    @property
-    def coarse(self) -> np.ndarray | None:
-        return self.levels[0][0] if self.levels else None
+        self.levels = levels if levels is not None else []
 
     @property
     def model_bytes(self) -> int:
@@ -463,10 +433,6 @@ class IvfModel:
         for c_level, _members in self.levels:
             n += c_level.nbytes
         return n
-
-    @property
-    def members(self) -> list[np.ndarray]:
-        return self.levels[0][1] if self.levels else []
 
     @classmethod
     def fit_path(
@@ -538,7 +504,7 @@ class IvfModel:
 
         @pandas_udf("struct<list_id:int, center_dist:double>")
         def _assign(vecs: pd.Series) -> pd.DataFrame:
-            if model.coarse is not None:
+            if model.levels:
                 v = np.array(vecs.tolist(), dtype=np.float64)
                 rows, lids, dists = model._pruned_candidates(v)
                 first = np.unique(rows, return_index=True)[1]  # rows cover 0..n-1
@@ -566,7 +532,7 @@ class IvfModel:
 
         @pandas_udf("array<int>")
         def _probe(vecs: pd.Series) -> pd.Series:
-            if model.coarse is not None:
+            if model.levels:
                 v = np.array(vecs.tolist(), dtype=np.float64)
                 rows, lids, dists = model._pruned_candidates(v)
                 starts = np.unique(rows, return_index=True)[1]
@@ -715,28 +681,10 @@ def _sharded_scores(
 ) -> DataFrame:
     """(vec_id, list_id, center_dist) over each vector's selected level-0
     groups' fine members — the shared candidate-scoring pipeline under
-    assign_sharded (rank 1) and probe_sharded (rank ≤ nprobe)."""
-    if not model.levels:
-        raise ValueError("sharded assignment needs a hierarchical model")
-    if fine is None:
-        fine = fine_level_table(df.sparkSession, model)
-    return _sharded_scores_levels(df, model.levels, fine, vec_col, id_col, per_group_k)
-
-
-def _sharded_scores_levels(
-    df: DataFrame,
-    upper: list[tuple["np.ndarray", list["np.ndarray"]]],
-    fine: DataFrame,
-    vec_col: str,
-    id_col: str,
-    per_group_k: int = 1,
-) -> DataFrame:
-    """_sharded_scores against explicit (upper levels, fine DataFrame) —
-    the form the r8 sharded FIT uses mid-iteration, when no IvfModel object
-    exists yet (the fine level never materializes driver-side). Only
-    upper[0][0] (the level-0 group centroids) and upper[1:] are read for
-    group selection; level-0 members live in `fine` (group_id, list_id,
-    centroid).
+    assign_sharded (rank 1) and probe_sharded (rank ≤ nprobe). Group
+    selection reads only the upper hierarchy (model.levels); the level-0
+    members arrive in `fine` (group_id, list_id, centroid), built from the
+    model by fine_level_table when not given.
 
     Shape (r12 rewrite): COGROUPED per-group scoring. The r6 form joined
     the exploded (vector, group) pairs row-against-row with the fine table
@@ -754,6 +702,12 @@ def _sharded_scores_levels(
     same index order as the old per-pair sum (numpy pairwise summation
     either way), so the rounded doubles are identical — asserted by the
     closure-equality tests."""
+    if not model.levels:
+        raise ValueError("sharded assignment needs a hierarchical model")
+    if fine is None:
+        fine = fine_level_table(df.sparkSession, model)
+    upper = model.levels  # the udf closes over this, never model.centroids
+
     @pandas_udf("array<int>")
     def _groups(vecs: pd.Series) -> pd.Series:
         # imported inside the udf so the constant is read at EXECUTION
@@ -784,9 +738,8 @@ def _sharded_scores_levels(
         c = np.array(right["centroid"].tolist(), dtype=np.float64)
         # row-chunk the LEFT side (ADVICE r12): a skewed/popular group at
         # unbounded L can carry an arbitrary share of the query batch, and
-        # converting every row's vector at once rebuilds the same
-        # unbounded-block failure mode _coarse_members_df's chunking
-        # fixed. Per-row top-k is independent across rows, so chunked
+        # converting every row's vector at once would build one unbounded
+        # block. Per-row top-k is independent across rows, so chunked
         # output is bit-equal concatenation.
         ids_all = left["vec_id"].to_numpy()
         step = max(1, int(2e7) // max(len(c) * c.shape[1], 1))
@@ -828,502 +781,6 @@ def use_sharded(model: IvfModel) -> bool:
     return bool(model.levels) and model.model_bytes > SHARDED_MODEL_BYTES
 
 
-# ---- r8: DataFrame-sharded FINE-LEVEL FIT -----------------------------------
-# The last "later rounds" scale seam (IvfModel size-envelope docstring):
-# past L ≈ 10^6-10^7 lists the L×D fine centroid table no longer fits the
-# driver, so the FIT itself — not just serving — must keep the fine level in
-# a DataFrame. Mirrors the r6 assign_sharded seam: the upper hierarchy
-# (~L/HIER_BRANCH and smaller) is the only closure; every L-sized object
-# (sample, fine centroids, assignments) lives in DataFrames. Float ops
-# replicate the driver fit bit-for-bit (asserted in tests):
-# - flat sub-fits: RAW squared-distance argmin (un-rounded, like _lloyd) in
-#   a pandas_udf; update = members.mean(axis=0) over idx-sorted members
-#   (numpy pairwise summation on the identical ordered array).
-# - hier assignment: the same _descend_rows / _select_level0_groups code
-#   through _sharded_scores_levels (rank (dist, list_id) == lexsort rule);
-#   update = sequential left fold in sample order (np.cumsum along axis 0 ==
-#   np.add.at's per-index accumulation) divided by the member count.
-# Inactive at every oracle-gated SF (routing mirrors use_sharded), so all
-# gates stay bit-exact; tests force it by lowering SHARDED_MODEL_BYTES.
-
-
-def _sample_df(spark: SparkSession, sf_dir: str, sample_n: int) -> tuple[DataFrame, int]:
-    """The fit sample as a DataFrame (idx, v) + its deduped row count —
-    the distributed twin of _fit_sample + unique_rows first-occurrence
-    dedup: first `sample_n` rows by vec_id, duplicates collapsed keeping
-    each value's first occurrence, idx = position in that kept order (so
-    `idx < k` IS the driver path's `x[:k]` init slice).
-
-    The row_number windows are single-partition exchanges over sample-
-    sized data (∝ L rows, the quantity that outgrew the driver's RAM, not
-    its disk/shuffle) — acceptable once per fit; the iteration loop never
-    re-sorts.
-
-    Dedup groups on the raw BIT PATTERN of the vector (r9, ADVICE r8): a
-    plain groupBy('v') would normalize -0.0 to 0.0 (and all NaNs equal)
-    in the grouping key, while the driver path's unique_rows deliberately
-    splits bit-distinct values — a sample holding both zero signs would
-    dedup to different counts/idx order and break the claimed
-    bit-equality with fit_path. tobytes() reproduces unique_rows'
-    bit-pattern equality exactly; within a group every v is bit-identical,
-    so min_by picks the same array regardless of which row supplies it."""
-    emb = io.table(spark, sf_dir, "embeddings", widen=True)
-
-    @pandas_udf("binary")
-    def _vbits(vs: pd.Series) -> pd.Series:
-        return vs.map(lambda a: np.asarray(a, dtype=np.float64).tobytes())
-
-    base = (
-        emb.select("vec_id", as_double(F.col("embedding")).alias("v"))
-        .withColumn("rn", F.row_number().over(Window.orderBy("vec_id")))
-        .where(F.col("rn") <= sample_n)
-    )
-    firsts = base.groupBy(_vbits(F.col("v")).alias("vb")).agg(
-        F.min("rn").alias("frn"), F.min_by("v", "rn").alias("v")
-    )
-    xdf = (
-        firsts.withColumn(
-            "idx", (F.row_number().over(Window.orderBy("frn")) - 1).cast("long")
-        )
-        .select("idx", "v")
-        # the global window above leaves ONE partition — without this every
-        # downstream pandas_udf of the sharded fit runs in a single task
-        # (r12, found at the L=1.5M step-up: one worker pegged for the
-        # whole fit). Results are partitioning-independent: assignment is
-        # per-row, updates sort by idx inside each group.
-        .repartition(spark.sparkContext.defaultParallelism)
-        # LAZY (r13 §5, same fold as _connected_components): the count()
-        # below is the first action, so it materializes the checkpoint AND
-        # returns n in one job instead of eager-materialize + count
-        .localCheckpoint(eager=False)
-    )
-    return xdf, xdf.count()
-
-
-def _flat_assign_udf(cent: "np.ndarray"):
-    """_lloyd's assignment (RAW sq-dist argmin, first-min tie) as a
-    pandas_udf — per-row, so batching cannot change any assignment."""
-
-    @pandas_udf("int")
-    def _assign(vecs: pd.Series) -> pd.Series:
-        v = np.array(vecs.tolist(), dtype=np.float64)
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        return pd.Series(_chunked_sq_dists(v, cent).argmin(axis=1).astype(np.int32))
-
-    return _assign
-
-
-def _hier_assign_udf(cent: "np.ndarray", levels):
-    """_lloyd_hier's assignment (rounded hierarchical descent, first-of-
-    lexsorted-run) as a pandas_udf over the SAME _descend_rows code."""
-    from ..constants import IVF_COARSE_PROBES
-
-    @pandas_udf("int")
-    def _assign(vecs: pd.Series) -> pd.Series:
-        v = np.array(vecs.tolist(), dtype=np.float64)
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        rows, lids, _d = _descend_rows(v, cent, levels, IVF_COARSE_PROBES)
-        first = np.unique(rows, return_index=True)[1]
-        return pd.Series(lids[first].astype(np.int32))
-
-    return _assign
-
-
-def _centroid_updates(assigned: DataFrame, mode: str) -> DataFrame:
-    """Per-cluster centroid update from (idx, v, list_id) rows — one
-    applyInPandas group per NON-EMPTY cluster (empty clusters keep their
-    previous centroid via the caller's left join, like both driver paths).
-
-    mode='flat' replays _lloyd: members.mean(axis=0) over the idx-sorted
-    member block (the same ordered array x[assign == j] sees, so numpy's
-    pairwise summation produces the identical double).
-    mode='hier' replays _lloyd_hier: np.add.at accumulates row-by-row in
-    sample order — a sequential left fold, which np.cumsum along axis 0
-    reproduces op-for-op (0.0 + x ≡ x in IEEE) — then one division by the
-    member count."""
-
-    def _upd(key, pdf):
-        arr = np.array(pdf.sort_values("idx")["v"].tolist(), dtype=np.float64)
-        if mode == "flat":
-            c = arr.mean(axis=0)
-        else:
-            c = np.cumsum(arr, axis=0)[-1] / len(arr)
-        return pd.DataFrame({"list_id": [int(key[0])], "centroid": [c.tolist()]})
-
-    return assigned.groupBy("list_id").applyInPandas(
-        _upd, "list_id int, centroid array<double>"
-    )
-
-
-def _fit_centroids_df(xdf: DataFrame, n: int, k: int, iters: int) -> "np.ndarray":
-    """_fit_centroids with the input POINTS in a DataFrame and the k
-    output centroids driver-held (every caller passes k ≤ L/HIER_BRANCH,
-    which fits the driver by the same 1/branch argument as assign_sharded's
-    upper-hierarchy closure). Routing (flat vs hier) replicates
-    _fit_centroids' predicate on (n, k) exactly."""
-    from ..constants import FLAT_FIT_MAX, TWO_LEVEL_MIN_NLIST
-
-    init = xdf.where(F.col("idx") < k).orderBy("idx").collect()
-    cent = np.array([r.v for r in init], dtype=np.float64)
-    flat = k < TWO_LEVEL_MIN_NLIST or n * k <= FLAT_FIT_MAX
-    for _ in range(iters):
-        if flat:
-            assign = _flat_assign_udf(cent)
-        else:
-            assign = _hier_assign_udf(cent, _build_levels(cent))
-        assigned = xdf.select("idx", "v", assign(F.col("v")).alias("list_id"))
-        for row in _centroid_updates(assigned, "flat" if flat else "hier").collect():
-            cent[row.list_id] = row.centroid
-    return cent
-
-
-def _prune_levels(
-    sub: "np.ndarray",
-) -> list[tuple["np.ndarray", list["np.ndarray"]]]:
-    """Cheap hierarchy over `sub` for _argmin_rounded_pruned's bounds.
-
-    Pruning EXACTNESS never depends on this structure — any partition of
-    `sub` yields valid triangle-inequality bounds through _ball_radii —
-    only the prune RATE does. So unlike _build_levels (a full Lloyd over
-    all of `sub`: driver-measured 141 s at |sub|=47k), the level-0
-    centers fit on a strided PRUNE_FIT_SAMPLE-row sample and the only
-    full-|sub| pass is one unrounded flat assign; upper levels recurse
-    through _build_levels on the (|sub|/HIER_BRANCH)-sized kept centers,
-    which is flat-Lloyd cheap. Strided (not head) sampling keeps the
-    sample spread across the centroid table's id order."""
-    from ..constants import HIER_BRANCH, PRUNE_FIT_SAMPLE
-
-    k0 = max(2, -(-len(sub) // HIER_BRANCH))
-    stride = max(1, len(sub) // PRUNE_FIT_SAMPLE)
-    samp = sub[::stride][:PRUNE_FIT_SAMPLE]
-    cents = _fit_centroids(samp, min(k0, len(samp)), 2)
-    f2c = np.empty(len(sub), dtype=np.int64)
-    step = max(1, int(2e7) // max(len(cents), 1))
-    for s in range(0, len(sub), step):
-        f2c[s : s + step] = _chunked_sq_dists(sub[s : s + step], cents).argmin(axis=1)
-    keep = np.unique(f2c)
-    remap = np.empty(len(cents), dtype=np.int64)
-    remap[keep] = np.arange(len(keep))
-    members0 = groups_by_inv(np.arange(len(sub)), remap[f2c], len(keep))
-    kept = cents[keep]
-    return [(kept, members0)] + _build_levels(kept)
-
-
-def _ball_radii(
-    sub: "np.ndarray", levels: list[tuple["np.ndarray", list["np.ndarray"]]]
-) -> list["np.ndarray"]:
-    """Per-level subtree-LEAF radii for the exact pruned argmin:
-    radii[li][g] = max euclidean from levels[li]'s centroid g to any `sub`
-    leaf in its subtree. members at each level partition the level below
-    (and level 0 partitions `sub`), so each leaf has exactly one ancestor
-    per level — one O(|sub|·D) distance pass per level, maximized per
-    ancestor with np.maximum.at."""
-    anc: "np.ndarray | None" = None
-    radii: list[np.ndarray] = []
-    for li, (cents, members) in enumerate(levels):
-        below = len(sub) if li == 0 else len(levels[li - 1][0])
-        lt = np.empty(below, dtype=np.int64)
-        for g, m in enumerate(members):
-            lt[m] = g
-        anc = lt if anc is None else lt[anc]
-        d = np.sqrt(((sub - cents[anc]) ** 2).sum(axis=1))
-        r = np.zeros(len(cents), dtype=np.float64)
-        np.maximum.at(r, anc, d)
-        radii.append(r)
-    return radii
-
-
-def _argmin_rounded_pruned(
-    v: "np.ndarray",
-    sub: "np.ndarray",
-    levels: list[tuple["np.ndarray", list["np.ndarray"]]],
-    radii: list["np.ndarray"],
-) -> "np.ndarray":
-    """EXACT rounded-argmin of each v row over `sub` — bit-equal to
-    `np.round(np.sqrt(_chunked_sq_dists(v, sub)), DIST_ROUND).argmin(1)`
-    (including the lowest-index tie rule) — in ~log depth instead of a
-    full |sub|-wide scan. This is the r13 fit-ceiling fix: the membership
-    pass was the last O(L · L/HIER_BRANCH · D) step of the sharded fit
-    (4.5 PFLOP at L=1.5M; see _coarse_members_df).
-
-    Ball-tree branch-and-bound, level-synchronous and vectorized like
-    _descend_rows: per level, UB_v = min over scanned nodes of
-    (d(v, node) + subtree_radius) upper-bounds the true nearest-leaf
-    distance (every leaf of a node lies within its radius), and a node is
-    pruned iff d(v, node) − radius > UB_v + margin — by the triangle
-    inequality every leaf under it is then > d_min + 10^-DIST_ROUND away.
-    margin = 2·10^-DIST_ROUND covers the decimal-rounding tie window:
-    round(d_c) ≤ round(d_min) forces d_c ≤ d_min + 10^-DIST_ROUND, so
-    every possible rounded winner (and every tie) SURVIVES pruning, and
-    pruned leaves satisfy round(d) > round(d_min) strictly. Survivors are
-    re-scored with the identical elementwise ops the flat path uses —
-    ((v−c)²).sum over the dim axis is per-pair independent of which other
-    pairs share the matrix, so the rounded doubles are bit-identical —
-    and the (dist, leaf_id) lexsort picks the same winner."""
-    n = len(v)
-    if n == 0:
-        return np.empty(0, dtype=np.int64)
-    margin = 2.0 * 10.0 ** (-DIST_ROUND)
-    top_c = levels[-1][0]
-    d = np.sqrt(_chunked_sq_dists(v, top_c))
-    r = radii[-1]
-    ub = (d + r[None, :]).min(axis=1)
-    sel = (d - r[None, :]) <= (ub[:, None] + margin)
-    for li in range(len(levels) - 1, 0, -1):
-        # intermediate levels: candidate volume per row is bounded by the
-        # node count of the level below (≤ |sub|/HIER_BRANCH), so the
-        # concatenated (row, node, dist) arrays stay small
-        cents, members = levels[li]
-        child_c = levels[li - 1][0]
-        rows_l, gids_l, dists_l = [], [], []
-        for g in range(len(cents)):
-            rr = np.nonzero(sel[:, g])[0]
-            if not len(rr):
-                continue
-            ch = members[g]
-            dd = np.sqrt(_chunked_sq_dists(v[rr], child_c[ch]))
-            rows_l.append(np.repeat(rr, len(ch)))
-            gids_l.append(np.tile(ch, len(rr)))
-            dists_l.append(dd.ravel())
-        rows = np.concatenate(rows_l)
-        gids = np.concatenate(gids_l)
-        dists = np.concatenate(dists_l)
-        child_r = radii[li - 1][gids]
-        ub_c = np.full(n, np.inf)
-        np.minimum.at(ub_c, rows, dists + child_r)
-        keep = (dists - child_r) <= (ub_c[rows] + margin)
-        sel = np.zeros((n, len(child_c)), dtype=bool)
-        sel[rows[keep], gids[keep]] = True
-    # LEAF level: running per-row (dist, leaf_id) best, never the full
-    # candidate stream — on weak-pruning data (high-dim near-uniform:
-    # radii ≈ distances) survivors approach ALL |sub| leaves and the
-    # concatenated form is O(rows · |sub|) — 4.6 GB/worker at |sub|=47k,
-    # which OOM-killed the JVM at the r13 L=1.5M step-up. The running
-    # (dist, gid) lexicographic min over bounded group blocks is the
-    # same winner: per-block argmin takes the block's lowest gid
-    # (members ascend), and the cross-block merge prefers strictly
-    # smaller dist, then smaller gid — associative and order-free.
-    cents0, members0 = levels[0]
-    best_d = np.full(n, np.inf)
-    best_g = np.full(n, np.iinfo(np.int64).max, dtype=np.int64)
-    for g in range(len(cents0)):
-        rr = np.nonzero(sel[:, g])[0]
-        if not len(rr):
-            continue
-        ch = members0[g]
-        inner = max(1, int(2e7) // max(len(ch), 1))
-        for s in range(0, len(rr), inner):
-            r2 = rr[s : s + inner]
-            dd = np.round(np.sqrt(_chunked_sq_dists(v[r2], sub[ch])), DIST_ROUND)
-            j = dd.argmin(axis=1)  # first occurrence = lowest gid (ch ascends)
-            dmin = dd[np.arange(len(r2)), j]
-            gmin = ch[j]
-            upd = (dmin < best_d[r2]) | ((dmin == best_d[r2]) & (gmin < best_g[r2]))
-            ru = r2[upd]
-            best_d[ru] = dmin[upd]
-            best_g[ru] = gmin[upd]
-    return best_g
-
-
-def _coarse_members_df(
-    cdf: DataFrame, sub: "np.ndarray"
-) -> tuple["np.ndarray", DataFrame]:
-    """_coarse_members with the fine level in a DataFrame: per fine row the
-    rounded-argmin group (same round/tie rule), empty groups dropped in
-    ascending group order (matching the driver's `keep` list), membership
-    returned as the fine_level_table shape (group_id, list_id, centroid)
-    instead of driver-side index lists.
-
-    r12 measured the flat rounded-argmin here as the LAST fit ceiling —
-    O(L · L/HIER_BRANCH · D), ~4.5 PFLOP at L=1.5M. r13 removes it: above
-    MEMBERS_PRUNE_MIN sub-groups the pass routes through
-    _argmin_rounded_pruned (exact ball-tree branch-and-bound over a
-    hierarchy built on `sub`, bit-equal to the flat scan by construction
-    — see its docstring), turning the per-fine-row cost from |sub| into
-    ~HIER_TOP + depth·survivors·HIER_BRANCH distance rows. The pruning
-    structure is driver-built once per call: `sub` is ≤ L/HIER_BRANCH
-    (driver-sized by the same argument as _fit_centroids_df's output) and
-    the hierarchy adds ~1/HIER_BRANCH of that."""
-    from ..constants import MEMBERS_PRUNE_MIN
-
-    spark = cdf.sparkSession
-    sub_levels = _prune_levels(sub) if len(sub) >= MEMBERS_PRUNE_MIN else []
-    sub_radii = _ball_radii(sub, sub_levels) if sub_levels else []
-
-    @pandas_udf("int")
-    def _g(vecs: pd.Series) -> pd.Series:
-        v = np.array(vecs.tolist(), dtype=np.float64)
-        if len(v) == 0:
-            return pd.Series([], dtype="int32")
-        # row-chunked so the (rows × |sub|) ROUNDED matrix stays bounded —
-        # _chunked_sq_dists bounds its (n, k, d) intermediate but still
-        # RETURNS the full n×k result; at k≈47k groups a 10k-row Arrow
-        # batch would materialize two ~3.75 GB copies per worker and 32
-        # workers OOM the box (r12, found at the L=1.5M step-up). argmin
-        # is per-row, so chunking is bit-equal.
-        out = np.empty(len(v), dtype=np.int32)
-        # the pruned path's peak memory is bounded by SURVIVING candidate
-        # rows, not |sub|, and its per-call overhead (top-level scan +
-        # frontier bookkeeping) amortizes over rows — 4096-row chunks
-        # measured within 1.4x of one unchunked call at |sub|=47k where
-        # |sub|-scaled chunks (425 rows) would pay the overhead 10x more
-        step = 4096 if sub_levels else max(1, int(2e7) // max(len(sub), 1))
-        for s in range(0, len(v), step):
-            if sub_levels:
-                out[s : s + step] = _argmin_rounded_pruned(
-                    v[s : s + step], sub, sub_levels, sub_radii
-                ).astype(np.int32)
-            else:
-                d = np.round(
-                    np.sqrt(_chunked_sq_dists(v[s : s + step], sub)), DIST_ROUND
-                )
-                out[s : s + step] = d.argmin(axis=1).astype(np.int32)
-        return pd.Series(out)
-
-    f2c = cdf.select("list_id", "centroid", _g(F.col("centroid")).alias("g")).localCheckpoint()
-    present = sorted(r.g for r in f2c.select("g").distinct().collect())
-    remap = spark.createDataFrame(
-        [(int(g), i) for i, g in enumerate(present)], "g int, group_id int"
-    )
-    fine = f2c.join(F.broadcast(remap), "g").select("group_id", "list_id", "centroid")
-    return sub[present], fine
-
-
-def _upper_levels_from(sub_kept: "np.ndarray"):
-    """_build_levels' continuation above level 0 — the remaining while-loop
-    iterations run driver-side verbatim on the ≤ L/HIER_BRANCH kept group
-    centroids (driver-sized by construction)."""
-    from ..constants import HIER_BRANCH, HIER_TOP
-
-    levels: list[tuple[np.ndarray, list[np.ndarray]]] = []
-    cur = sub_kept
-    while len(cur) > HIER_TOP:
-        k_next = max(2, -(-len(cur) // HIER_BRANCH))
-        s2 = _fit_centroids(cur, k_next, 2)
-        s2, mem2 = _coarse_members(cur, s2)
-        levels.append((s2, mem2))
-        cur = s2
-    return levels
-
-
-def _lloyd_hier_df(
-    spark: SparkSession, xdf: DataFrame, n: int, k: int, iters: int
-) -> DataFrame:
-    """_lloyd_hier with every L-sized object in DataFrames: the fine
-    centroid table (list_id, centroid) never materializes driver-side.
-    Per iteration: (1) level-0 hierarchy sub-fit over the fine DataFrame
-    (its k/HIER_BRANCH output IS driver-sized), membership as a sharded
-    fine table, upper levels driver-side as in _build_levels; (2) sample
-    assignment through _sharded_scores_levels + the (center_dist, list_id)
-    rank-1 window — the bit-equal shuffle-join form of _descend_rows'
-    lexsort-first rule; (3) per-cluster sequential-fold update, empty
-    clusters keeping their previous centroid through the left join.
-
-    Returns the final fine table as a DataFrame. localCheckpoint truncates
-    the per-iteration lineage (an iters-deep plan otherwise re-runs every
-    earlier iteration per action); a multi-executor deployment would use
-    reliable checkpoint() or a per-iteration parquet write instead."""
-    from ..constants import HIER_BRANCH, HIER_TOP
-
-    cdf = (
-        xdf.where(F.col("idx") < k)
-        .select(F.col("idx").cast("int").alias("list_id"), F.col("v").alias("centroid"))
-        .localCheckpoint()
-    )
-    if k <= HIER_TOP:
-        # a ≤ HIER_TOP-list model is KB-sized by construction — nothing to
-        # shard; callers route those through the closure fit
-        raise ValueError("sharded fit requires k > HIER_TOP (hierarchical models only)")
-    for _ in range(iters):
-        k_next = max(2, -(-k // HIER_BRANCH))
-        pts = cdf.select(F.col("list_id").cast("long").alias("idx"), F.col("centroid").alias("v"))
-        sub = _fit_centroids_df(pts, k, k_next, 2)
-        sub_kept, fine = _coarse_members_df(cdf, sub)
-        levels = [(sub_kept, [])] + _upper_levels_from(sub_kept)
-        scored = _sharded_scores_levels(xdf, levels, fine, "v", "idx")
-        w = Window.partitionBy("vec_id").orderBy(F.asc("center_dist"), F.asc("list_id"))
-        assign = (
-            scored.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1)
-            .select(F.col("vec_id").alias("idx"), "list_id")
-        )
-        upd = _centroid_updates(xdf.join(assign, "idx"), "hier")
-        cdf = (
-            cdf.join(upd.withColumnRenamed("centroid", "new_c"), "list_id", "left")
-            .select("list_id", F.coalesce("new_c", "centroid").alias("centroid"))
-            .localCheckpoint()
-        )
-    return cdf
-
-
-def fit_fine_df(
-    spark: SparkSession,
-    sf_dir: str,
-    nlist: int = IVF_NLIST,
-    sample_n: int = IVF_SAMPLE,
-    iters: int = IVF_ITERS,
-) -> DataFrame:
-    """The sharded-fit primitive: fine centroids fit WITHOUT ever holding
-    an L-sized array on the driver. Returns (list_id, centroid) — at true
-    scale the caller persists this (partitioned fine_level_table shape),
-    derives the upper hierarchy from its level-0 sub-fit, and serves
-    through assign_sharded/probe_sharded; the model never exists as a
-    single in-memory object.
-
-    Requires the EFFECTIVE k = min(nlist, deduped sample) to exceed
-    HIER_TOP (hierarchical models only) — callers with a possibly
-    duplicate-saturated corpus go through fit_path_sharded, which falls
-    back to the closure fit below that floor instead of raising."""
-    xdf, n = _sample_df(spark, sf_dir, sample_n)
-    return _lloyd_hier_df(spark, xdf, n, min(nlist, n), iters)
-
-
-def fit_path_sharded(
-    spark: SparkSession,
-    sf_dir: str,
-    nlist: int = IVF_NLIST,
-    sample_n: int = IVF_SAMPLE,
-    iters: int = IVF_ITERS,
-) -> IvfModel:
-    """Collecting wrapper over the sharded fit — for models that fit the
-    driver once FIT (the forced tests, and the auto-engage band where the
-    closure ceiling bites before driver RAM does). Bit-identical to
-    fit_path(two_level=True) at the same parameters (asserted in tests):
-    the collected centroids feed the same _build_levels the closure fit
-    runs, so serving — closure or sharded — sees the identical model.
-
-    r9 (ADVICE r8): a duplicate-saturated corpus can dedup the fit sample
-    below the hierarchy floor even when the PROJECTED model bytes crossed
-    the sharded threshold — _lloyd_hier_df would raise on
-    k = min(nlist, n) ≤ HIER_TOP. Such a model is KB-sized by definition,
-    so fall back to the closure fit_path (which handles the tiny-k case
-    and applies the identical dedup + nlist cap)."""
-    from ..constants import HIER_TOP
-
-    xdf, n = _sample_df(spark, sf_dir, sample_n)
-    if min(nlist, n) <= HIER_TOP:
-        return IvfModel.fit_path(sf_dir, nlist=nlist, sample_n=sample_n, iters=iters)
-    cdf = _lloyd_hier_df(spark, xdf, n, min(nlist, n), iters)
-    rows = cdf.orderBy("list_id").collect()
-    cent = np.array([r.centroid for r in rows], dtype=np.float64)
-    return IvfModel(cent, levels=_build_levels(cent))
-
-
-def _embedding_dim(sf_dir: str) -> int | None:
-    """Dimension of the embeddings table from one arrow batch — enough to
-    project the fine-table bytes (nlist·D·8) before any fit work."""
-    try:
-        import pyarrow.parquet as papq
-
-        pf = papq.ParquetFile(os.path.join(sf_dir, "embeddings.parquet"))
-        batch = next(pf.iter_batches(batch_size=1, columns=["embedding"]))
-        return len(batch.column(0)[0].as_py())
-    except Exception:
-        return None
-
-
 def probe_pairs(
     qdf: DataFrame,
     model: IvfModel,
@@ -1362,61 +819,12 @@ _MODEL_CACHE: dict[str, IvfModel] = {}
 
 
 def model_for(sf_dir: str) -> IvfModel:
-    """The per-SF quantizer, fit once per process. r8: the FIT routes like
-    serving (use_sharded) — when the projected fine-table bytes exceed the
-    broadcast ceiling, a hierarchy is warranted, and a session is active,
-    the fine level stays in a DataFrame throughout the fit
-    (fit_path_sharded); below the ceiling — every oracle-gated SF — the
-    closure fit is bit-for-bit the r1 path.
-
-    r9 (the r8 verdict's crossover ask): the sharded fit ALSO engages
-    below the byte ceiling when the projected fit sample
-    min(IVF_SAMPLE, corpus distinct) reaches the MEASURED speed crossover
-    (SHARDED_FIT_SAMPLE_MIN) — the sfdistinct2m sweep showed the driver
-    loop is sample-bound (~linear) while the sharded fit is overhead-
-    bound (~flat) until compute dominates, crossing between n=20k
-    (driver 2.3× faster, at L=2048 AND L=8192) and n=50k (sharded 1.3×
-    faster, 1.9× at 200k). The distinct probe is corpus_counts — cached,
-    shared with graph_model_for, and only consulted at hierarchical
-    IVF_NLIST (never a gated SF). A corpus whose sample PREFIX is more
-    duplicated than its global distinct count can still mis-route to the
-    sharded fit; that is perf-only — every point is bit-equal, and the
-    sub-HIER_TOP fallback in fit_path_sharded catches the degenerate
-    dedup."""
+    """The per-SF serving quantizer: IvfModel.fit_path(sf_dir), fit once
+    per process. IVF_NLIST lists keep it flat and KB-sized; only
+    graph.graph_model_for grows lists with N."""
     m = _MODEL_CACHE.get(sf_dir)
     if m is None:
-        from ..constants import (
-            SHARDED_FIT_SAMPLE_MIN,
-            SHARDED_MODEL_BYTES,
-            TWO_LEVEL_MIN_NLIST,
-        )
-
-        if IVF_NLIST >= TWO_LEVEL_MIN_NLIST and not io.is_uri(sf_dir):
-            dim = _embedding_dim(sf_dir)
-            # project with the EFFECTIVE nlist (r9, ADVICE r8): the fit
-            # caps nlist at the deduped sample size ≤ IVF_SAMPLE, so a
-            # raw-IVF_NLIST projection would route small/duplicated
-            # corpora to the sharded fit for a model far below the
-            # ceiling (perf-only mis-route; results stay bit-equal)
-            eff_nlist = min(IVF_NLIST, IVF_SAMPLE)
-            past_ceiling = bool(
-                dim and eff_nlist * dim * 8 > SHARDED_MODEL_BYTES
-            )
-            fit_faster = bool(
-                dim
-                and not past_ceiling
-                and min(IVF_SAMPLE, corpus_counts(sf_dir)[1])
-                >= SHARDED_FIT_SAMPLE_MIN
-            )
-            if past_ceiling or fit_faster:
-                from pyspark.sql import SparkSession
-
-                spark = SparkSession.getActiveSession()
-                if spark is not None:
-                    m = fit_path_sharded(spark, sf_dir)
-        if m is None:
-            m = IvfModel.fit_path(sf_dir)
-        _MODEL_CACHE[sf_dir] = m
+        m = _MODEL_CACHE[sf_dir] = IvfModel.fit_path(sf_dir)
     return m
 
 

@@ -34,11 +34,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.window import Window
 
 from .. import io
 from ..constants import (
     ANN_K2,
+    DEC,
     DIST_ROUND,
     N_QUERIES,
     PQ_ITERS,
@@ -47,6 +47,7 @@ from ..constants import (
     PQ_SAMPLE,
 )
 from ..session import configure
+from .knn import exact_scores, top_k
 
 
 class PqModel:
@@ -160,8 +161,6 @@ def ann_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal sum — the raw vectors are never touched after pq_codes.
 
     Output: (query_id, neighbor_id, adc_dist) top-ANN_K2 per query."""
-    from ..constants import DEC
-
     dtab = _query_dist_table(spark, sf_dir)
     codes = pq_codes(spark, sf_dir).withColumnRenamed("vec_id", "neighbor_id")
     adc = (
@@ -172,8 +171,7 @@ def ann_search_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         # is exact and order-insensitive on any partitioning
         .agg(F.sum(F.col("d2").cast(DEC)).cast("double").alias("adc_dist"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return adc.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= ANN_K2).drop("rn")
+    return top_k(adc, ANN_K2, "adc_dist")
 
 
 def ann_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -260,7 +258,6 @@ def _ivfpq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard billion-vector serving layout, here as one Spark plan: IVF
     assignment (session-cached) ⋈ broadcast probes → codes ⋈ broadcast
     distance table → exact decimal ADC sum."""
-    from ..constants import DEC
     from .ivf import list_assignments
     from .ivf import model_for as ivf_model_for
     from .ivf import probe_pairs
@@ -288,9 +285,7 @@ def ann_search_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVFPQ search: top-ANN_K2 of the ADC frame (see _ivfpq_adc).
 
     Output: (query_id, neighbor_id, adc_dist) top-ANN_K2 per query."""
-    adc = _ivfpq_adc(spark, sf_dir)
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return adc.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= ANN_K2).drop("rn")
+    return top_k(_ivfpq_adc(spark, sf_dir), ANN_K2, "adc_dist")
 
 
 def ann_search_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -306,7 +301,6 @@ def ann_search_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: (query_id, neighbor_id, distance) top-ANN_K2 per query, with
     true euclidean distances (unlike ann_search_ivfpq's ADC estimates)."""
     from ..constants import REFINE_R
-    from .knn import exact_scores, top_k
 
     shortlist = top_k(_ivfpq_adc(spark, sf_dir), REFINE_R, "adc_dist").select(
         "query_id", "neighbor_id"
@@ -314,6 +308,24 @@ def ann_search_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     queries = emb.where(F.col("vec_id") < N_QUERIES)
     return top_k(exact_scores(shortlist, emb, queries), ANN_K2, "distance")
+
+
+def _probed_adc_top_k(codes: DataFrame, probes: DataFrame, dtab: DataFrame) -> DataFrame:
+    """Top-ANN_K2 ADC search over a codes store's probed lists — the shared
+    tail of the ivfpq store search and both maintenance twins. codes
+    (neighbor_id, m, code, list_id) ⋈ broadcast probes (query_id, list_id)
+    on list_id, self-matches dropped, ⋈ broadcast distance table on
+    (query_id, m, code), exact decimal ADC sum, top_k on adc_dist.
+
+    Output: (query_id, neighbor_id, adc_dist)."""
+    adc = (
+        codes.join(F.broadcast(probes), "list_id")
+        .where(F.col("neighbor_id") != F.col("query_id"))
+        .join(F.broadcast(dtab), ["query_id", "m", "code"])
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.sum(F.col("d2").cast(DEC)).cast("double").alias("adc_dist"))
+    )
+    return top_k(adc, ANN_K2, "adc_dist")
 
 
 def ann_search_ivfpq_store(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -325,7 +337,6 @@ def ann_search_ivfpq_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     index at 1/128 the bytes of raw vectors, and the raw embeddings are
     never opened at all. Results are identical to ann_search_ivfpq (same
     oracle), proving the pruned persisted path lossless."""
-    from ..constants import DEC
     from ..sources.index_store import load_ivf_lists, save_ivf_index
     from .ivf import list_assignments
     from .ivf import model_for as ivf_model_for
@@ -344,15 +355,7 @@ def ann_search_ivfpq_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     # KB-bounded driver probe set (N_QUERIES·nprobe ids) → literal pruning
     probe_lists = _probe_lists_for(spark, probes, out, "canonical")
     codes = load_ivf_lists(spark, out, probe_lists).withColumnRenamed("vec_id", "neighbor_id")
-    adc = (
-        codes.join(F.broadcast(probes), "list_id")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .join(F.broadcast(_query_dist_table(spark, sf_dir)), ["query_id", "m", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum(F.col("d2").cast(DEC)).cast("double").alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return adc.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= ANN_K2).drop("rn")
+    return _probed_adc_top_k(codes, probes, _query_dist_table(spark, sf_dir))
 
 
 def ivfpq_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -377,7 +380,7 @@ def ivfpq_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     leave and arrive sides of the patch are exercised.
 
     Output: (query_id, neighbor_id, adc_dist) top-ANN_K2 per query."""
-    from ..constants import DEC, UPSERT_MOD
+    from ..constants import UPSERT_MOD
     from ..sources.index_store import (
         load_ivf_lists,
         pruned_dynamic_overwrite,
@@ -435,18 +438,8 @@ def ivfpq_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = probe_pairs(queries, ivfm)
     probe_lists = _probe_lists_for(spark, probes, store, "upsert")
     codes = load_ivf_lists(spark, store, probe_lists).withColumnRenamed("vec_id", "neighbor_id")
-    adc = (
-        codes.join(F.broadcast(probes), "list_id")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .join(
-            F.broadcast(_query_dist_table(spark, sf_dir, emb=memb, tag="upsert")),
-            ["query_id", "m", "code"],
-        )
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum(F.col("d2").cast(DEC)).cast("double").alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return adc.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= ANN_K2).drop("rn")
+    dtab = _query_dist_table(spark, sf_dir, emb=memb, tag="upsert")
+    return _probed_adc_top_k(codes, probes, dtab)
 
 
 def ivfpq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -473,7 +466,7 @@ def ivfpq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (query_id, neighbor_id, adc_dist) top-ANN_K2 per surviving
     query."""
-    from ..constants import DEC, DELETE_MOD, DELETE_REM
+    from ..constants import DELETE_MOD, DELETE_REM
     from ..sources.index_store import (
         load_ivf_lists,
         pruned_dynamic_overwrite,
@@ -517,15 +510,7 @@ def ivfpq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = probe_pairs(queries, ivf_model_for(sf_dir))
     probe_lists = _probe_lists_for(spark, probes, store, "delete")
     codes = load_ivf_lists(spark, store, probe_lists).withColumnRenamed("vec_id", "neighbor_id")
-    adc = (
-        codes.join(F.broadcast(probes), "list_id")
-        .where(F.col("neighbor_id") != F.col("query_id"))
-        .join(F.broadcast(_query_dist_table(spark, sf_dir)), ["query_id", "m", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum(F.col("d2").cast(DEC)).cast("double").alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    return adc.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= ANN_K2).drop("rn")
+    return _probed_adc_top_k(codes, probes, _query_dist_table(spark, sf_dir))
 
 
 def ann_recall_ivfpq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -757,7 +742,7 @@ def ann_search_bitsign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: (query_id, neighbor_id, hamming, distance)."""
     from ..constants import BITSIGN_K1
-    from .knn import _emb, exact_scores, top_k
+    from .knn import _emb
 
     configure(spark)
     emb = _emb(spark, sf_dir)

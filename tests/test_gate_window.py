@@ -39,7 +39,11 @@ GATE_WINDOW_SIZE = 50
 # (the dedup trio, dup_clusters, embedding_clusters, ivf_index,
 # dedup_semantic, knn_graph, index_stats, pq_codes, ann_search_pq,
 # ann_recall_pq, ann_search_ivfpq, ann_recall_ivfpq, knn_graph_multiprobe,
-# bm25_doc_search).
+# bm25_doc_search). Then pq.py's ADC top-ANN_K2 cuts moved onto knn.top_k:
+# ann_search_pq, ann_recall_pq, ann_search_ivfpq and ann_recall_ivfpq came
+# back in, and four keys none of that reaches went out
+# (ann_recall_lsh_multiprobe, ann_search_lsh_filtered and the matryoshka
+# pair).
 EXPECTED_GATE_WINDOW = [
     "aknn_http_search_store",
     "aknn_http_upsert",
@@ -76,14 +80,10 @@ EXPECTED_GATE_WINDOW = [
     "ann_recall_graph_sweep",
     "streaming_index_store",
     "ann_search_lsh_multiprobe",
-    "ann_recall_lsh_multiprobe",
-    "ann_search_lsh_filtered",
     "ann_recall",
     "aknn_search_api",
     "aknn_model_registry",
     "ann_recall_sweep",
-    "ann_search_matryoshka",
-    "ann_recall_matryoshka",
     "ann_search_bitsign",
     "ann_recall_bitsign",
     "ann_recall_graph",
@@ -91,6 +91,10 @@ EXPECTED_GATE_WINDOW = [
     "streaming_ann_search",
     "streaming_graph_search",
     "hybrid_search_rrf",
+    "ann_search_pq",
+    "ann_recall_pq",
+    "ann_search_ivfpq",
+    "ann_recall_ivfpq",
 ]
 
 

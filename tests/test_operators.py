@@ -160,7 +160,7 @@ def test_ivf_fit_deterministic():
     assert m1.centroids.shape[0] == 16
     # gate-SF models stay flat: two-level only auto-activates above
     # TWO_LEVEL_MIN_NLIST, so every oracle-mirrored assignment is argmin
-    assert m1.coarse is None
+    assert not m1.levels
 
 
 def test_ivf_two_level_assignment_matches_flat_contract():
@@ -179,11 +179,11 @@ def test_ivf_two_level_assignment_matches_flat_contract():
     # the hierarchical fit is its own (deterministic) approximation — only
     # the shape contract is shared with the flat fit
     assert m_two.centroids.shape == m_flat.centroids.shape
-    assert m_two.coarse is not None and m_flat.coarse is None
+    assert m_two.levels and not m_flat.levels
     m_two_b = IvfModel.fit_path(SF_SMALL, nlist=64, sample_n=320, two_level=True)
     assert np.array_equal(m_two.centroids, m_two_b.centroids)  # refit-stable
     # every fine list belongs to exactly one kept coarse group
-    all_fine = np.sort(np.concatenate(m_two.members))
+    all_fine = np.sort(np.concatenate(m_two.levels[0][1]))
     assert np.array_equal(all_fine, np.arange(64))
 
     import pyarrow.parquet as pq
@@ -342,163 +342,6 @@ def test_sharded_auto_engage_end_to_end(spark, monkeypatch):
     closure_idx, closure_srch = run()
     monkeypatch.setattr(constants, "SHARDED_MODEL_BYTES", 0)
     assert ivf_mod.use_sharded(hier)
-    sharded_idx, sharded_srch = run()
-
-    assert len(closure_idx) == len(sharded_idx)
-    for c in ("vec_id", "list_id", "center_dist"):
-        assert (closure_idx[c].values == sharded_idx[c].values).all(), c
-    assert len(closure_srch) == len(sharded_srch)
-    for c in ("query_id", "neighbor_id", "list_id", "distance"):
-        assert (closure_srch[c].values == sharded_srch[c].values).all(), c
-
-
-def test_pruned_argmin_bit_equals_flat_argmin():
-    """r13: _argmin_rounded_pruned (exact ball-pruned membership — the
-    fit-ceiling fix) must reproduce the flat rounded argmin bit-for-bit,
-    including the lowest-index tie rule, across tie-dense regimes:
-    duplicated sub rows (exact ties), near-zero scales (every distance
-    inside the DIST_ROUND window — rounding ties everywhere), and
-    ordinary clustered data."""
-    from elastik_nearest_neighbors_spark.constants import DIST_ROUND
-    from elastik_nearest_neighbors_spark.operators.ivf import (
-        _argmin_rounded_pruned,
-        _ball_radii,
-        _chunked_sq_dists,
-        _prune_levels,
-    )
-
-    rng = np.random.default_rng(7)
-    for nsub, n, d, scale in [
-        (500, 1500, 16, 1.0),
-        (700, 1000, 8, 1e-7),  # all dists within rounding noise: tie storm
-        (300, 800, 4, 1e-4),
-    ]:
-        sub = rng.normal(size=(nsub, d)) * scale
-        sub[50:60] = sub[0:10]  # exact duplicate centroids
-        v = rng.normal(size=(n, d)) * scale
-        v[:20] = sub[rng.integers(0, nsub, 20)]  # rows exactly ON centroids
-        levels = _prune_levels(sub)
-        radii = _ball_radii(sub, levels)
-        got = _argmin_rounded_pruned(v, sub, levels, radii)
-        ref = np.round(np.sqrt(_chunked_sq_dists(v, sub)), DIST_ROUND).argmin(axis=1)
-        assert (got == ref).all(), (nsub, n, d, scale)
-
-
-def test_coarse_members_df_pruned_bit_equals_flat(spark, monkeypatch):
-    """r13: _coarse_members_df with the pruned path FORCED
-    (MEMBERS_PRUNE_MIN=1) must return the identical kept-sub array and
-    identical (group_id, list_id) fine rows as the flat path — the
-    membership pass is exact by contract at any threshold."""
-    from elastik_nearest_neighbors_spark import constants
-    from elastik_nearest_neighbors_spark.operators import ivf as ivf_mod
-
-    rng = np.random.default_rng(3)
-    sub = rng.normal(size=(40, 12))
-    cent = sub[rng.integers(0, 40, 600)] + rng.normal(size=(600, 12)) * 0.1
-    cdf = spark.createDataFrame(
-        [(int(i), cent[i].tolist()) for i in range(len(cent))],
-        "list_id int, centroid array<double>",
-    )
-
-    def run():
-        kept, fine = ivf_mod._coarse_members_df(cdf, sub)
-        rows = (
-            fine.toPandas()
-            .sort_values(["group_id", "list_id"])
-            .reset_index(drop=True)
-        )
-        return kept, rows
-
-    monkeypatch.setattr(constants, "MEMBERS_PRUNE_MIN", len(sub) + 1)
-    flat_kept, flat_rows = run()
-    monkeypatch.setattr(constants, "MEMBERS_PRUNE_MIN", 1)
-    pruned_kept, pruned_rows = run()
-    assert np.array_equal(flat_kept, pruned_kept)
-    assert len(flat_rows) == len(pruned_rows)
-    for c in ("group_id", "list_id"):
-        assert (flat_rows[c].values == pruned_rows[c].values).all(), c
-
-
-def test_sharded_fit_with_pruned_membership_bit_equals_driver_fit(spark, monkeypatch):
-    """r13 fit-ceiling 'done' criterion: the whole sharded fit with the
-    pruned membership FORCED must still reproduce the driver fit's
-    centroid doubles bit-for-bit at a gated SF."""
-    from elastik_nearest_neighbors_spark import constants
-    from elastik_nearest_neighbors_spark.operators import ivf as ivf_mod
-
-    driver = ivf_mod.IvfModel.fit_path(SF_SMALL, nlist=64, sample_n=320, two_level=True)
-    monkeypatch.setattr(constants, "MEMBERS_PRUNE_MIN", 1)
-    sharded = ivf_mod.fit_path_sharded(spark, SF_SMALL, nlist=64, sample_n=320)
-    assert np.array_equal(sharded.centroids, driver.centroids)
-    assert len(sharded.levels) == len(driver.levels)
-
-
-def test_sharded_fine_level_fit_bit_equals_closure_fit(spark, monkeypatch):
-    """r8: the DataFrame-sharded FIT (fine centroid level in a DataFrame
-    for every Lloyd iteration, upper hierarchy the only closure) must
-    reproduce fit_path(two_level=True) bit-for-bit — same centroid doubles
-    — in both sub-fit regimes: flat sub-fits (raw-argmin + np.mean update,
-    the default at this k) and forced-hier sub-fits (rounded descent +
-    sequential-fold update, the 10^6-list regime's recursion)."""
-    import numpy as np
-
-    from elastik_nearest_neighbors_spark import constants
-    from elastik_nearest_neighbors_spark.operators import ivf as ivf_mod
-
-    driver = ivf_mod.IvfModel.fit_path(SF_SMALL, nlist=64, sample_n=320, two_level=True)
-    sharded = ivf_mod.fit_path_sharded(spark, SF_SMALL, nlist=64, sample_n=320)
-    assert sharded.centroids.shape == driver.centroids.shape
-    assert np.array_equal(sharded.centroids, driver.centroids)
-    assert len(sharded.levels) == len(driver.levels)
-
-    # deep hierarchy + hier-routed sub-fits: branch 4, top 4, and the flat
-    # predicate forced off (k_next=16 >= TWO_LEVEL_MIN_NLIST=8, product >
-    # FLAT_FIT_MAX=1) — both paths read the same patched constants
-    monkeypatch.setattr(constants, "HIER_BRANCH", 4)
-    monkeypatch.setattr(constants, "HIER_TOP", 4)
-    monkeypatch.setattr(constants, "TWO_LEVEL_MIN_NLIST", 8)
-    monkeypatch.setattr(constants, "FLAT_FIT_MAX", 1)
-    deep_driver = ivf_mod.IvfModel.fit_path(SF_SMALL, nlist=64, sample_n=320, two_level=True)
-    deep_sharded = ivf_mod.fit_path_sharded(spark, SF_SMALL, nlist=64, sample_n=320)
-    assert len(deep_driver.levels) >= 2
-    assert np.array_equal(deep_sharded.centroids, deep_driver.centroids)
-
-
-def test_sharded_fit_end_to_end_search_identical(spark, monkeypatch):
-    """r8 (the r7 verdict's Missing #3 'done' criterion): with
-    SHARDED_MODEL_BYTES forced, FIT sharded and SERVE sharded through
-    the public gated entries — rows bit-identical to the closure fit +
-    closure serve at the default threshold, i.e. oracle-identical at a
-    gated SF by transitivity with the driver gate."""
-    from elastik_nearest_neighbors_spark import constants
-    from elastik_nearest_neighbors_spark.operators import ivf as ivf_mod
-
-    closure_model = ivf_mod.IvfModel.fit_path(
-        SF_SMALL, nlist=64, sample_n=320, two_level=True
-    )
-    monkeypatch.setitem(ivf_mod._MODEL_CACHE, SF_SMALL, closure_model)
-
-    def run():
-        idx = (
-            ivf_mod.ivf_index(spark, SF_SMALL)
-            .toPandas()
-            .sort_values("vec_id")
-            .reset_index(drop=True)
-        )
-        srch = (
-            ivf_mod.ann_search_ivf_q(spark, SF_SMALL)
-            .toPandas()
-            .sort_values(["query_id", "distance", "neighbor_id"])
-            .reset_index(drop=True)
-        )
-        return idx, srch
-
-    closure_idx, closure_srch = run()
-
-    monkeypatch.setattr(constants, "SHARDED_MODEL_BYTES", 0)  # force past the ceiling
-    sharded_model = ivf_mod.fit_path_sharded(spark, SF_SMALL, nlist=64, sample_n=320)
-    assert ivf_mod.use_sharded(sharded_model)  # serving is sharded too
-    monkeypatch.setitem(ivf_mod._MODEL_CACHE, SF_SMALL, sharded_model)
     sharded_idx, sharded_srch = run()
 
     assert len(closure_idx) == len(sharded_idx)
@@ -1776,95 +1619,6 @@ def test_aknn_http_server_endpoints(spark):
             assert "no such model" in _json.loads(e.read())["error"]
     finally:
         srv.stop()
-
-
-def test_fit_path_sharded_falls_back_below_hier_floor(spark):
-    """r9 (ADVICE r8): a fit whose EFFECTIVE k = min(nlist, deduped sample)
-    is ≤ HIER_TOP must fall back to the closure fit_path instead of raising
-    — the duplicate-saturated-corpus case where projected bytes crossed the
-    sharded threshold but the real model is KB-sized."""
-    import numpy as np
-
-    from elastik_nearest_neighbors_spark.operators import ivf as ivf_mod
-
-    # nlist=16 <= HIER_TOP=32: previously ValueError from _lloyd_hier_df
-    m = ivf_mod.fit_path_sharded(spark, SF_SMALL, nlist=16, sample_n=320)
-    ref = ivf_mod.IvfModel.fit_path(SF_SMALL, nlist=16, sample_n=320)
-    assert np.array_equal(m.centroids, ref.centroids)
-
-
-def test_sample_df_dedups_on_bit_pattern(spark, tmp_path):
-    """r9 (ADVICE r8): _sample_df must dedup on the raw BIT PATTERN like
-    the driver path's unique_rows — -0.0 and 0.0 rows stay DISTINCT and
-    first-occurrence idx order is by vec_id, not value-normalized."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-
-    from elastik_nearest_neighbors_spark.operators import ivf as ivf_mod
-
-    vecs = [
-        [0.0, 1.0],    # idx 0
-        [-0.0, 1.0],   # bit-distinct from row 0 → kept (idx 1)
-        [0.0, 1.0],    # exact dup of row 0 → collapsed
-        [2.0, 3.0],    # idx 2
-    ]
-    t = pa.table(
-        {
-            "vec_id": pa.array(range(4), type=pa.int64()),
-            "embedding": pa.array(vecs, type=pa.list_(pa.float64())),
-            "label": pa.array([0, 0, 0, 0], type=pa.int32()),
-        }
-    )
-    papq.write_table(t, str(tmp_path / "embeddings.parquet"))
-    xdf, n = ivf_mod._sample_df(spark, str(tmp_path), 4)
-    assert n == 3
-    rows = {r.idx: r.v for r in xdf.collect()}
-    assert np.copysign(1.0, rows[0][0]) == 1.0   # +0.0 first
-    assert np.copysign(1.0, rows[1][0]) == -1.0  # -0.0 kept distinct
-    assert rows[2] == [2.0, 3.0]
-
-    # and the driver twin agrees on the same data
-    x = np.array(vecs, dtype=np.float64)
-    _, _, first_idx = ivf_mod.unique_rows(x)
-    assert sorted(first_idx.tolist()) == [0, 1, 3]
-
-
-def test_model_for_speed_routes_sharded_fit_at_crossover(spark, monkeypatch):
-    """r9: below the byte ceiling, model_for engages the sharded fit when
-    the projected sample min(IVF_SAMPLE, corpus distinct) reaches the
-    measured SHARDED_FIT_SAMPLE_MIN crossover — and stays on the closure
-    fit below it. Routing-only: both paths are bit-equal (asserted by the
-    sharded-fit equality tests)."""
-    from elastik_nearest_neighbors_spark import constants
-    from elastik_nearest_neighbors_spark.operators import ivf as ivf_mod
-
-    calls = []
-    real = ivf_mod.fit_path_sharded
-
-    def spy(spark_, sf_dir, *a, **kw):
-        calls.append(sf_dir)
-        return real(spark_, sf_dir, *a, **kw)
-
-    monkeypatch.setattr(ivf_mod, "fit_path_sharded", spy)
-    monkeypatch.setattr(ivf_mod, "IVF_NLIST", 128)  # hierarchical band
-    # SF_SMALL distinct vectors >> 10, so projected sample = IVF_SAMPLE=256
-    monkeypatch.setattr(constants, "SHARDED_FIT_SAMPLE_MIN", 10)
-    ivf_mod._MODEL_CACHE.pop(SF_SMALL, None)
-    m1 = ivf_mod.model_for(SF_SMALL)
-    assert calls == [SF_SMALL]
-
-    monkeypatch.setattr(constants, "SHARDED_FIT_SAMPLE_MIN", 10000000)
-    ivf_mod._MODEL_CACHE.pop(SF_SMALL, None)
-    m2 = ivf_mod.model_for(SF_SMALL)
-    assert calls == [SF_SMALL]  # no second sharded call — closure path
-    import numpy as np
-
-    # the spy path fell back through fit_path_sharded's own routing with
-    # the DEFAULT nlist (16 <= HIER_TOP -> closure fallback), so both
-    # models come from the same closure fit: identical centroids
-    assert np.array_equal(m1.centroids, m2.centroids)
-    ivf_mod._MODEL_CACHE.pop(SF_SMALL, None)
 
 
 def test_ivf_delete_purges_store_and_results(spark):

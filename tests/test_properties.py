@@ -178,8 +178,9 @@ def test_connected_components_matches_union_find(spark):
 
 
 def test_two_level_pruned_rows_properties():
-    """_pruned_rows on random matrices: every input row gets candidates;
-    distances are true rounded euclideans; the first candidate per row is
+    """_descend_rows over one (coarse, members) level on random matrices:
+    every input row gets candidates; distances are true rounded
+    euclideans; the first candidate per row is
     exactly the flat rounded-argmin RESTRICTED to the scanned set
     (lexsort tie rule: min dist, then min list_id); and scanning all
     coarse groups (w = #groups) reproduces flat argmin exactly."""
@@ -189,8 +190,8 @@ def test_two_level_pruned_rows_properties():
     from elastik_nearest_neighbors_spark.operators.ivf import (
         _chunked_sq_dists,
         _coarse_members,
+        _descend_rows,
         _lloyd,
-        _pruned_rows,
     )
 
     rng = np.random.default_rng(11)
@@ -203,7 +204,7 @@ def test_two_level_pruned_rows_properties():
         assert np.array_equal(np.sort(np.concatenate(members)), np.arange(len(cent)))
         v = rng.normal(size=(17, d))
         for w in (1, 2, len(coarse)):
-            rows, lids, dists = _pruned_rows(v, cent, coarse, members, w)
+            rows, lids, dists = _descend_rows(v, cent, [(coarse, members)], w)
             first = np.unique(rows, return_index=True)[1]
             assert len(first) == len(v)
             chk = np.round(
@@ -217,7 +218,7 @@ def test_two_level_pruned_rows_properties():
                 best = cand[np.lexsort((cand, full[ri, cand]))[0]]
                 assert lids[first[ri]] == best
         # w = all groups ⇒ identical to unrestricted flat argmin
-        rows, lids, dists = _pruned_rows(v, cent, coarse, members, len(coarse))
+        rows, lids, dists = _descend_rows(v, cent, [(coarse, members)], len(coarse))
         first = np.unique(rows, return_index=True)[1]
         assert np.array_equal(lids[first], full.argmin(axis=1))
 
@@ -278,8 +279,8 @@ def test_pruned_rows_and_dists_empty_batch():
     from elastik_nearest_neighbors_spark.operators.ivf import (
         IvfModel,
         _coarse_members,
+        _descend_rows,
         _lloyd,
-        _pruned_rows,
     )
 
     rng = np.random.default_rng(7)
@@ -287,13 +288,37 @@ def test_pruned_rows_and_dists_empty_batch():
     cent = _lloyd(x, 32, 3)
     coarse, members = _coarse_members(cent, _lloyd(cent, 6, 2))
     v = np.empty((0, 8), dtype=np.float64)
-    rows, lids, dists = _pruned_rows(v, cent, coarse, members, 2)
+    rows, lids, dists = _descend_rows(v, cent, [(coarse, members)], 2)
     assert rows.shape == (0,) and lids.shape == (0,) and dists.shape == (0,)
     assert rows.dtype == np.int64 and dists.dtype == np.float64
     # the flat path too: np.array([]) from an empty pd.Series is 1-D
     m = IvfModel(cent)
     d = m._dists(pd.Series([], dtype=object))
     assert d.shape == (0, 32)
+
+
+def test_unique_rows_splits_on_bit_pattern():
+    """unique_rows groups on the raw BIT PATTERN: -0.0 and 0.0 rows stay
+    distinct (np.unique would merge them), exact duplicates collapse, and
+    first_idx is each group's first occurrence — the dedup fit_path runs
+    on its sample."""
+    import numpy as np
+
+    from elastik_nearest_neighbors_spark.operators.ivf import unique_rows
+
+    x = np.array(
+        [
+            [0.0, 1.0],
+            [-0.0, 1.0],  # bit-distinct from row 0: kept
+            [0.0, 1.0],  # exact duplicate of row 0: collapsed
+            [2.0, 3.0],
+        ],
+        dtype=np.float64,
+    )
+    uvals, inv, first_idx = unique_rows(x)
+    assert sorted(first_idx.tolist()) == [0, 1, 3]
+    assert len(uvals) == 3
+    assert inv[0] == inv[2] and len({inv[0], inv[1], inv[3]}) == 3
 
 
 def test_local_knn_duplicate_collapse_equals_bruteforce(spark):

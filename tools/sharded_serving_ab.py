@@ -1,11 +1,7 @@
 """Serving-side A/B: closure (pandas_udf descent) vs sharded (fine level
-as a DataFrame) IVF assignment + probe at big L — the SERVING twin of the
-r8 fit A/B (BASELINE.md "r8 scale evidence").
-
-The r11 verdict's item 4 asks for (a) an A/B at the sf100-scale distinct
-corpus showing the sharded serve within ~1.2x of the closure serve at
-L=8000, and (b) the sharded path working at an L the closure can't hold.
-This tool is (a); tools/sharded_beyond_ceiling.py is (b).
+as a DataFrame) IVF assignment + probe at big L (BASELINE.md "r8 scale
+evidence" has the earlier fit A/B). It shows the sharded serve's cost
+against the closure serve at an sf100-scale distinct corpus, L=8000.
 
 Protocol (the repo's interleaved-A/B discipline): one process, model built
 once, then C,S,C,S (or S,C,S,C with --order rev) timed runs of
@@ -20,7 +16,7 @@ The model is an iters=0 fit: centroids = the first NLIST distinct corpus
 rows, hierarchy via the production _build_levels. Serving cost depends on
 model SHAPE (L, depth, branch), not centroid quality, and corpus-drawn
 centroids give a realistic distance distribution; skipping Lloyd keeps the
-one-time setup minutes instead of the r8 fit A/B's ~15 driver-minutes.
+one-time setup minutes instead of a full fit's ~15 driver-minutes.
 
 Usage: python tools/sharded_serving_ab.py DIR [NLIST] [--order rev]
   e.g. python tools/sharded_serving_ab.py /tmp/enn_scale/sfdistinct2m 8000
