@@ -6,9 +6,10 @@ similarity search, text analysis, multimodal columns).
 
 The reference's HTTP surface maps onto batch/stream DataFrame operators:
 
-- ``POST /_aknn_create``  → :class:`operators.lsh.LshModel.fit`
-- ``POST /_aknn_index``   → :func:`operators.lsh.hash_vectors` / ``build_index``
-- ``GET  .../_aknn_search``→ :func:`operators.knn.ann_search_lsh`
+- ``POST /_aknn_create``  → :func:`api.aknn_create` (:meth:`operators.lsh.LshModel.from_sample`)
+- ``POST /_aknn_index``   → :func:`api.aknn_index` / :func:`operators.lsh.build_index`
+- ``GET  .../_aknn_search``→ :func:`api.aknn_search` and :func:`operators.knn.ann_search_lsh`,
+  both :func:`operators.knn.collision_search`: eager, 2 Spark jobs, no shuffle
 
 See SURVEY.md §2 for the full capability inventory.
 """

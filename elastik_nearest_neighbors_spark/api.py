@@ -14,7 +14,7 @@ API-level citation — the /root/reference checkout is empty):
 This module is the programmatic equivalent with the reference's parameter
 names (`nb_tables`, `nb_bits_per_table`, `nb_dimensions`, `k1`, `k2`) and
 document field names (`_id`, `_aknn_vector`), as thin wrappers over
-LshModel / build_index / rank_term_matches. A user of the reference maps
+LshModel / build_index / knn.collision_search. A user of the reference maps
 their calls 1:1:
 
   aknn_create(docs, nb_tables=16, nb_bits_per_table=6)   → model
@@ -34,8 +34,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .constants import ANN_K1, ANN_K2, LSH_BITS, LSH_TABLES
-from .operators.knn import rank_term_matches, term_match_counts
-from .operators.lsh import LshModel, explode_hashes
+from .operators.knn import collision_search
+from .operators.lsh import LshModel
 
 ID_FIELD = "_id"
 VECTOR_FIELD = "_aknn_vector"
@@ -111,16 +111,15 @@ def aknn_search(
     like the plugin), rank candidates by number of shared (table, hash)
     terms, take top-k1, exact-euclidean re-rank, return top-k2.
 
+    Eager (knn.collision_search): 2 Spark jobs and no shuffle, and the
+    driver merges at most P·Q·k1 rows for P partitions of `indexed` and Q
+    query rows, bounded by spark.driver.maxResultSize. An id the index
+    lacks gets no rows.
+
     Output: (query_id, neighbor_id, n_match, distance)."""
     check_k(k1, k2)
     queries = indexed.where(F.col(id_field).isin(list(ids)))
-    counts = term_match_counts(
-        explode_hashes(indexed.select(id_field, "hashes"), id_field, "neighbor_id"),
-        explode_hashes(queries.select(id_field, "hashes"), id_field, "query_id"),
-    )
-    return rank_term_matches(
-        counts, indexed, queries, k1, k2, id_field, vector_field
-    )
+    return collision_search(indexed, queries, k1, k2, id_field, vector_field)
 
 
 class AknnModelRegistry:

@@ -129,6 +129,25 @@ def fs_write_text(spark: SparkSession, path: str, text: str) -> None:
         fh.write(text)
 
 
+def local_df(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """`rows` (tuples in `ddl`'s column order) as a DataFrame backed by a
+    driver-local Arrow table. Spark plans it as a LocalRelation, so a join
+    broadcasts it from a JVM job over rows already held in the JVM;
+    createDataFrame over a Python list is instead a Python-RDD scan, whose
+    every broadcast starts a job of Python-worker tasks just to unpickle
+    the rows. Each column is built
+    with its exact Arrow type, so a value the type cannot hold (a JSON
+    true or a string as a bigint, an int beyond int64) raises here."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    schema = DataType.fromDDL(ddl)
+    arrow = to_arrow_schema(schema)
+    cols = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
+    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)
+
+
 def _input_bytes(path: str, spark: SparkSession | None = None) -> int:
     """Total bytes under `path`, for ANY Hadoop-supported scheme.
 

@@ -11,13 +11,16 @@ Every ANN family (LSH, IVF, IVFPQ-refine, bitsign, Matryoshka, graph) keeps
 that two-stage contract and differs only in its stage-1 scorer. Three
 helpers here are the whole of what they share: `term_match_counts` (the LSH
 stage-1 score), `exact_scores` (the stage-2 gather and rounded distance)
-and `top_k` (each stage's cut). `rank_term_matches` composes them.
+and `top_k` (each stage's cut). `rank_term_matches` composes them for the
+LSH searches over exploded terms (the persisted store, the stream).
 
-Scale shape (100 TB): the query side is small → broadcast; candidate
-generation is a broadcast hash join against the exploded index (index never
-shuffles); match counts partial-aggregate map-side; re-rank touches ≤ Q·k1
-rows. Exact kNN avoids the Q×N shuffle via the native WindowGroupLimit's
-per-partition top-k before a tiny global top-k.
+Scale shape (100 TB): the LSH searches over unstored frames run
+`collision_search`, eagerly, in 2 Spark jobs: the Q query rows' collect,
+then one mapInArrow pass over the index (never shuffled) keeping each
+partition's top k1 per query; the driver merges those ≤ P·Q·k1 rows, a
+bound checked against spark.driver.maxResultSize. Exact kNN avoids the Q×N
+shuffle via the native WindowGroupLimit's per-partition top-k before a tiny
+global top-k.
 
 Determinism: distances rounded to DIST_ROUND decimals before ranking; all
 ties broken by neighbor id. Self-matches are excluded.
@@ -25,13 +28,15 @@ ties broken by neighbor id. Self-matches are excluded.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .. import io
 from ..constants import ANN_K1, ANN_K2, DIST_ROUND, KNN_K, N_QUERIES
-from ..functions.vector import as_double, euclidean
+from ..functions.vector import as_double, euclidean, euclidean_np, rounded_np
 from ..session import configure
 from .lsh import LshModel, build_index, explode_hashes
 
@@ -176,6 +181,133 @@ def rank_term_matches(
     return top_k(exact_scores(k1_sel, index_df, query_df, id_col, vec_col), k2, "distance")
 
 
+def list_arrays(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(per-row lengths, flat values) of an Arrow list array or column."""
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    return arr.value_lengths().fill_null(0).to_numpy(), arr.flatten().to_numpy()
+
+
+def _top_per_query(qi: np.ndarray, key: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
+    """Positions of the first k rows of each query row `qi` by (key, id),
+    in (qi, key, id) order."""
+    order = np.lexsort((ids, key, qi))
+    qs = qi[order]
+    return order[np.arange(len(order)) - np.searchsorted(qs, qs) < k]
+
+
+def _collision_pass(q_ids, q_vecs, probes, k1: int):
+    """collision_search's mapInArrow body over (id, vector, hashes) batches:
+    each table's hashes are looked up in its sorted (hash, query row)
+    probes, and each query row's top k1 by (-n_match, id) over all batches,
+    self-matches dropped, is emitted with its raw euclidean distance."""
+    nq = len(q_ids)
+
+    def run(batches):
+        keep, id_type = None, None
+        for b in (b for b in batches if b.num_rows):
+            id_type = b.schema.field(0).type
+            ids = b.column(0).to_numpy(zero_copy_only=False)
+            ntab, flat = list_arrays(b.column(2))
+            starts = np.cumsum(ntab) - ntab
+            rows, qs = [np.zeros(0, np.int64)], [np.zeros(0, np.int64)]
+            for t, (ph, pq_t) in enumerate(probes):
+                has = np.flatnonzero(ntab > t)
+                h = flat[starts[has] + t]
+                lo = np.searchsorted(ph, h, "left")
+                hits = np.searchsorted(ph, h, "right") - lo
+                has, lo, hits = has[hits > 0], lo[hits > 0], hits[hits > 0]
+                rows.append(np.repeat(has, hits))
+                # the probe run lo..lo+hits of each matched row, concatenated
+                qs.append(pq_t[np.repeat(lo - np.cumsum(hits) + hits, hits) + np.arange(hits.sum())])
+            pair, n = np.unique(np.concatenate(rows) * nq + np.concatenate(qs), return_counts=True)
+            r, q = np.divmod(pair, nq)
+            own = ids[r] != q_ids[q]
+            r, q, n = r[own], q[own], n[own]
+            top = _top_per_query(q, -n, ids[r], k1)
+            dims, vflat = list_arrays(b.column(1))
+            if (dims != dims.max(initial=0)).any():
+                raise ValueError("the index mixes vector dimensions")
+            cand = (q[top], ids[r[top]], n[top], vflat.reshape(len(dims), -1)[r[top]].astype(np.float64))
+            if keep is not None:
+                cand = tuple(np.concatenate(p) for p in zip(keep, cand))
+            keep = tuple(c[_top_per_query(cand[0], -cand[2], cand[1], k1)] for c in cand)
+        if keep is not None and len(keep[0]):
+            q, nid, n, vecs = keep
+            dist = euclidean_np(q_vecs[q], vecs)
+            yield pa.record_batch([q, pa.array(nid, id_type), n, dist], ["qi", "neighbor_id", "n_match", "distance"])
+
+    return run
+
+
+def collision_search(
+    index_df: DataFrame,
+    query_df: DataFrame,
+    k1: int = ANN_K1,
+    k2: int = ANN_K2,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    probes: int = 1,
+) -> DataFrame:
+    """Reference `_aknn_search` over an unstored frame, eager: for each
+    query row of `query_df`, the top k2 by (distance, neighbor_id) of the
+    top k1 rows of `index_df` by (-n_match, neighbor_id). Both frames hold
+    (id_col, vec_col, hashes); a query's `hashes` holds `probes` hashes per
+    table, table-major, and n_match counts a row's tables whose hash is
+    among the query's probes there (a row matches on the tables it has).
+
+    Two Spark jobs, no shuffle (C2Net's collision counting, ICDE 2019): the
+    Q query rows come to the driver as Arrow, then one mapInArrow pass over
+    the P index partitions emits each one's top k1 per query row. Merging
+    those ≤ P·Q·k1 rows on the driver is exact, as (-n_match, id) is a
+    total order; distances round with rounded_np, bit-identical to Spark's.
+    A partial row is charged 32 bytes (an int64 id; a string id makes it
+    longer), and a P·Q·k1 above spark.driver.maxResultSize / 32 is a
+    ValueError before the pass: at the default 1g, 33,554,432 is accepted.
+
+    Rows, not ids, are the unit: an _id stored twice is two candidates,
+    each with its own n_match and distance; a query id held by two query
+    rows is answered once per row; no row of a query's id is in its answer.
+
+    Output: an Arrow-backed local relation (query_id, neighbor_id,
+    n_match bigint, distance double)."""
+    spark = index_df.sparkSession
+    q_type, id_type = (df.schema[id_col].dataType.simpleString() for df in (query_df, index_df))
+    out = f"query_id {q_type}, neighbor_id {id_type}, n_match bigint not null, distance double"
+    q_tab = query_df.select(id_col, vec_col, "hashes").toArrow()
+    nq = q_tab.num_rows
+    if not nq:
+        return io.local_df(spark, [], out)
+    q_ids = q_tab.column(id_col).to_numpy(zero_copy_only=False)
+    q_vecs = list_arrays(q_tab.column(vec_col))[1].astype(np.float64).reshape(nq, -1)
+    ntab, flat = list_arrays(q_tab.column("hashes"))
+    qrow = np.repeat(np.arange(nq), ntab)
+    tbl = (np.arange(len(flat)) - np.repeat(np.cumsum(ntab) - ntab, ntab)) // probes
+    table_probes = []
+    for t in range(tbl.max(initial=-1) + 1):
+        o = np.argsort(flat[tbl == t], kind="stable")
+        table_probes.append((flat[tbl == t][o], qrow[tbl == t][o]))
+    partials = index_df.select(id_col, vec_col, "hashes").mapInArrow(
+        _collision_pass(q_ids, q_vecs, table_probes, k1),
+        f"qi bigint, neighbor_id {id_type}, n_match bigint, distance double",
+    )
+    cap = spark.sparkContext._jsc.sc().conf().getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    n_parts = partials.rdd.getNumPartitions()
+    if cap and n_parts * nq * k1 * 32 > cap:
+        raise ValueError(
+            f"{n_parts} partitions x {nq} queries x k1={k1} partial rows of 32 bytes "
+            f"exceed spark.driver.maxResultSize ({cap} bytes)"
+        )
+    part = partials.toArrow()
+    qi, n_match, dist = (part.column(c).to_numpy() for c in ("qi", "n_match", "distance"))
+    nid = part.column("neighbor_id").to_numpy(zero_copy_only=False)
+    top = _top_per_query(qi, -n_match, nid, k1)
+    qi, nid, n_match, dist = qi[top], nid[top], n_match[top], rounded_np(dist[top])
+    best = _top_per_query(qi, dist, nid, k2)
+    rows = zip(q_ids[qi[best]].tolist(), nid[best].tolist(), n_match[best].tolist(), dist[best].tolist())
+    return io.local_df(spark, list(rows), out)
+
+
 def ann_search_lsh(
     index_df: DataFrame,
     query_df: DataFrame,
@@ -185,20 +317,14 @@ def ann_search_lsh(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Reference `_aknn_search`: bucket term-match top-k1 → exact re-rank top-k2.
+    """Reference `_aknn_search`: bucket term-match top-k1 → exact re-rank
+    top-k2, both sides hashed by `model`. Eager: collision_search's 2 jobs
+    run here, and its driver merge is bounded by P·Q·k1 partial rows.
 
     Output: (query_id, neighbor_id, n_match, distance).
     """
-    # measured: persisting the hashed index costs more (materialize + cached
-    # read, and cached subtrees opt out of AQE) than the single Arrow-batched
-    # hash pass it would save — the index side is consumed exactly once here
-    idx_hashed = build_index(index_df, model, vec_col, id_col).select(id_col, "hashes")
-    q_hashed = build_index(query_df, model, vec_col, id_col)
-    counts = term_match_counts(
-        explode_hashes(idx_hashed, id_col, "neighbor_id"),
-        explode_hashes(q_hashed, id_col, "query_id"),
-    )
-    return rank_term_matches(counts, index_df, query_df, k1, k2, id_col, vec_col)
+    index_df, query_df = (build_index(df, model, vec_col, id_col) for df in (index_df, query_df))
+    return collision_search(index_df, query_df, k1, k2, id_col, vec_col)
 
 
 # ---- registry entries (spark, sf_dir) → DataFrame ---------------------------
@@ -249,26 +375,20 @@ def ann_search_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, its own bucket PLUS the LSH_MULTIPROBE buckets reached by
     flipping the lowest-|margin| bits — the recall knob that costs extra
     bucket LOOKUPS instead of extra tables: the index is untouched (same
-    size, same single hash pass) and only the broadcast query side grows
-    ×(1+P). A neighbor still matches at most one probed bucket per table
-    (hashes differ), so n_match keeps its ≤T semantics and the k1/k2
-    ranking tail is shared with the base search.
+    size, same single hash pass) and only the query probes collision_search
+    looks rows up in grow ×(1+P). A neighbor still matches at most one
+    probed bucket per table (hashes differ), so n_match keeps its ≤T
+    semantics and the k1/k2 ranking is the base search's.
 
     Output: (query_id, neighbor_id, n_match, distance) top-ANN_K2."""
     from ..constants import LSH_MULTIPROBE
 
     emb = _emb(spark, sf_dir)
     model = _model_for(emb, sf_dir)
-    queries = emb.where(F.col("vec_id") < N_QUERIES)
-    idx_exp = explode_hashes(build_index(emb, model), "vec_id", "neighbor_id")
-    step = 1 + LSH_MULTIPROBE
-    qp = queries.select(
-        F.col("vec_id").alias("query_id"),
-        F.posexplode(model.probe_hash_udf(LSH_MULTIPROBE)(F.col("embedding"))).alias(
-            "pos", "hash"
-        ),
-    ).select("query_id", (F.col("pos") / step).cast("int").alias("tbl"), "hash")
-    return rank_term_matches(term_match_counts(idx_exp, qp), emb, queries)
+    queries = emb.where(F.col("vec_id") < N_QUERIES).withColumn(
+        "hashes", model.probe_hash_udf(LSH_MULTIPROBE)(F.col("embedding"))
+    )
+    return collision_search(build_index(emb, model), queries, probes=1 + LSH_MULTIPROBE)
 
 
 def ann_recall_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -293,7 +413,7 @@ def ann_search_lsh_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the filter lands in the parquet scan (PushedFilters —
     plan-contract tested; the index side is loaded un-widened precisely so
     no repartition sits between scan and filter), then the same
-    broadcast-join candidate generation as ann_search_lsh. At 100 TB with a
+    collision-count pass as ann_search_lsh. At 100 TB with a
     label-partitioned store this becomes partition pruning for free."""
     from ..constants import ANN_FILTER_LABEL
 

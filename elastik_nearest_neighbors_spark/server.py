@@ -96,8 +96,8 @@ store (64 dims, T = 16, k1 = 100, a 4-core VM) the median GET search
 takes 2.7 ms, HTTP included (perfbench serve_search; 371 ms for the two
 Spark reads this replaced). A snapshot rebuild takes 0.6 s at 10k docs
 and 1.4 s at 100k (tools/wire_bulk_stepup.py).
-Every frame built from request rows (a delete's ids, a posted batch) is a
-_local_df relation.
+Every frame built from request rows (a delete's ids, a posted batch) is an
+io.local_df relation.
 
 Registry entries `aknn_http_search` and `aknn_http_search_store` drive
 all three endpoints over a real localhost socket (one shared server) and
@@ -122,31 +122,8 @@ from pyspark.sql import functions as F
 from .api import ID_FIELD, VECTOR_FIELD, AknnModelRegistry, aknn_index, check_k
 from .constants import ANN_K1, ANN_K2, LSH_BITS, LSH_TABLES
 from .functions.vector import euclidean_np, rounded_np
-
-
-def _local_df(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
-    """`rows` (tuples in `ddl`'s column order) as a DataFrame backed by a
-    driver-local Arrow table. Spark plans it as a LocalRelation, so a join
-    broadcasts it from a JVM job over rows already held in the JVM;
-    createDataFrame over a Python list is instead a Python-RDD scan, whose
-    every broadcast starts a job of Python-worker tasks just to unpickle
-    the rows. Each column is built
-    with its exact Arrow type, so a value the type cannot hold (a JSON
-    true or a string as a bigint, an int beyond int64) raises here."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import DataType
-
-    schema = DataType.fromDDL(ddl)
-    arrow = to_arrow_schema(schema)
-    cols = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)]
-    return spark.createDataFrame(pa.Table.from_arrays(cols, schema=arrow), schema)
-
-
-def _lists(col) -> tuple[np.ndarray, np.ndarray]:
-    """(per-row lengths, flat values) of an Arrow list column."""
-    arr = col.combine_chunks()
-    return arr.value_lengths().to_numpy(zero_copy_only=False), arr.flatten().to_numpy()
+from .io import local_df
+from .operators.knn import list_arrays
 
 
 class _Snapshot:
@@ -164,11 +141,11 @@ class _Snapshot:
         n = len(order)
         self.id_type = id_type
         self.ids = ids[order]
-        dims, flat = _lists(table.column(VECTOR_FIELD))
+        dims, flat = list_arrays(table.column(VECTOR_FIELD))
         if len(set(dims.tolist())) > 1:
             raise ValueError(f"the index mixes vector dimensions {sorted(set(dims.tolist()))}")
         self.vecs = flat.reshape(n, dims[0] if n else 0)[order]
-        ntab, flat = _lists(table.column("hashes"))
+        ntab, flat = list_arrays(table.column("hashes"))
         hashes = np.zeros((n, ntab.max(initial=0)), dtype=np.int64)
         starts = np.repeat(np.cumsum(ntab) - ntab, ntab)
         hashes[np.repeat(np.arange(n), ntab), np.arange(len(flat)) - starts] = flat
@@ -292,7 +269,7 @@ class AknnHttpServer:
         id_type = "bigint" if all(isinstance(i, int) for i, _v in rows) else "string"
         if id_type == "string":
             rows = [(str(i) if type(i) in (int, float) else i, v) for i, v in rows]
-        return _local_df(self.spark, rows, f"{ID_FIELD} {id_type}, {VECTOR_FIELD} array<double>")
+        return local_df(self.spark, rows, f"{ID_FIELD} {id_type}, {VECTOR_FIELD} array<double>")
 
     def _docs_path(self, index: str) -> str:
         """Where the (_id, _aknn_vector, hashes, id_bucket) doc rows of
@@ -465,7 +442,7 @@ class AknnHttpServer:
         self._snapshots.pop(index, None)
 
     def _ids_df(self, ids: list, id_type: str) -> DataFrame:
-        return _local_df(self.spark, [(i,) for i in ids], f"{ID_FIELD} {id_type}")
+        return local_df(self.spark, [(i,) for i in ids], f"{ID_FIELD} {id_type}")
 
     def _pruned_docs(self, index: str, buckets) -> DataFrame | None:
         """Rows of exactly the named id_bucket directories, read via
@@ -508,16 +485,17 @@ class AknnHttpServer:
         # r12: the ids can only live in their own id_bucket dirs — read
         # exactly those via explicit paths (no store-wide listing)
         pruned = self._pruned_docs(index, sorted(buckets))
-        doomed_rows = (
-            []
-            if pruned is None
-            else pruned.join(F.broadcast(ids_df), ID_FIELD, "left_semi").select("id_bucket").collect()
-        )
-        if not doomed_rows:
+        # the doomed docs' buckets as one Arrow column, not a Row per doomed
+        # doc (a groupBy's shuffle would add a job to every replace and delete)
+        doomed = np.zeros(0)
+        if pruned is not None:
+            doomed = pruned.join(F.broadcast(ids_df), ID_FIELD, "left_semi").select("id_bucket").toArrow()
+            doomed = doomed.column(0).to_numpy()
+        if not len(doomed):
             if hashed is not None:
                 self._append_store(index, hashed)
             return 0
-        doomed_buckets = {int(r.id_bucket) for r in doomed_rows}
+        doomed_buckets = set(np.unique(doomed).tolist())
         # new rows land in exactly their probed buckets (id_bucket is a
         # function of _id), so a replace can empty no touched dir
         # (assume_live skips the emptied-dir job); a delete rewrites only
@@ -543,7 +521,7 @@ class AknnHttpServer:
         if hashed is None:
             # only a delete can empty the store
             self._keep_schema(index, pruned.schema)
-        return len(doomed_rows)
+        return len(doomed)
 
     # ---- refresh=false staging + /_aknn_refresh (r12, ES NRT parity):
     # staged batches are hashed but NOT searchable/deletable until refresh

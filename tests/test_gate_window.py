@@ -43,7 +43,10 @@ GATE_WINDOW_SIZE = 50
 # ann_search_pq, ann_recall_pq, ann_search_ivfpq and ann_recall_ivfpq came
 # back in, and four keys none of that reaches went out
 # (ann_recall_lsh_multiprobe, ann_search_lsh_filtered and the matryoshka
-# pair).
+# pair). Then the unstored LSH searches moved onto knn.collision_search:
+# its two keys outside the window, ann_search_lsh_filtered and
+# ann_recall_lsh_multiprobe, came in, and ann_search_ivfpq and
+# ann_recall_ivfpq, which nothing of it reaches, went out.
 EXPECTED_GATE_WINDOW = [
     "aknn_http_search_store",
     "aknn_http_upsert",
@@ -93,8 +96,8 @@ EXPECTED_GATE_WINDOW = [
     "hybrid_search_rrf",
     "ann_search_pq",
     "ann_recall_pq",
-    "ann_search_ivfpq",
-    "ann_recall_ivfpq",
+    "ann_search_lsh_filtered",
+    "ann_recall_lsh_multiprobe",
 ]
 
 

@@ -833,3 +833,118 @@ def test_numpy_distance_twin_matches_spark_rounding(spark, tmp_path):
         theirs = got.column(col).to_numpy()
         bad = np.flatnonzero(theirs != ours)
         assert len(theirs) == len(ours) and not len(bad), (col, [(float(theirs[i]), float(ours[i])) for i in bad[:5]])
+
+
+def _lsh_rows(rng, ids, tables: int, dim: int, ragged: bool = False, probes: int = 1) -> list:
+    """(id, vector, hashes) rows over few distinct half-integer vectors and
+    3 buckets per table, so both distances and n_match tie often; `ragged`
+    rows hold 1..tables tables, and each table holds `probes` hashes."""
+    base = rng.integers(-3, 4, size=(max(len(ids) // 4, 1), dim)) / 2.0
+    vecs = base[rng.integers(0, len(base), len(ids))]
+    ntab = rng.integers(1, tables + 1, len(ids)) if ragged else np.full(len(ids), tables)
+    return [
+        (i, v.tolist(), rng.integers(0, 3, t * probes).tolist()) for i, v, t in zip(ids, vecs, ntab)
+    ]
+
+
+def _dataframe_search(idx, q, k1: int, k2: int, probes: int = 1):
+    """The DataFrame reference: explode, broadcast join, groupBy count
+    (knn.term_match_counts), then knn.rank_term_matches's two windows."""
+    import pyspark.sql.functions as F
+
+    from elastik_nearest_neighbors_spark.operators import knn
+    from elastik_nearest_neighbors_spark.operators.lsh import explode_hashes
+
+    q_terms = q.select(
+        F.col("vec_id").alias("query_id"), F.posexplode("hashes").alias("pos", "hash")
+    ).select("query_id", (F.col("pos") / probes).cast("int").alias("tbl"), "hash")
+    counts = knn.term_match_counts(explode_hashes(idx, "vec_id", "neighbor_id"), q_terms)
+    return knn.rank_term_matches(counts, idx, q, k1, k2, "vec_id", "v")
+
+
+def test_collision_search_bit_equals_dataframe_path(spark):
+    """knn.collision_search returns exactly the rows of the DataFrame path
+    it replaced, over seeded corpora with tied distances and tied n_match:
+    k1 = 1, k1 below k2 and k1 above n; a query id the index lacks and a
+    query with no matching bucket; string ids (non-ASCII among them, which
+    Spark orders by UTF-8 bytes); ragged hashes on both sides; and two
+    probes per table. Batches of 16 rows put several batches in each
+    partition, so the per-partition cut and the driver merge both run."""
+    from elastik_nearest_neighbors_spark.operators import knn
+
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "16")
+    try:
+        for seed, id_type, ragged, probes in (
+            (1, "long", False, 1),
+            (2, "string", False, 1),
+            (3, "long", True, 1),
+            (4, "string", True, 2),
+        ):
+            rng = np.random.default_rng(seed)
+            ids = list(range(90))
+            if id_type == "string":
+                ids = [f"d{i:02d}" for i in range(86)] + ["Z", "a", "é", "ü1"]
+            ddl = f"vec_id {id_type}, v array<double>, hashes array<bigint>"
+            idx = spark.createDataFrame(_lsh_rows(rng, ids, 4, 3, ragged), ddl).coalesce(2)
+            absent = "nope" if id_type == "string" else 1000
+            q_rows = _lsh_rows(rng, ids[:6] + [absent], 4, 3, ragged, probes)
+            q_rows.append((ids[7], [0.5, 0.5, 0.5], [7] * 4 * probes))  # no bucket
+            q = spark.createDataFrame(q_rows, ddl)
+            for k1, k2 in ((1, 5), (3, 5), (10, 5), (500, 5)):
+                ref = _dataframe_search(idx, q, k1, k2, probes)
+                want = sorted(map(tuple, ref.collect()))
+                got = knn.collision_search(idx, q, k1, k2, "vec_id", "v", probes)
+                assert got.schema == ref.schema
+                assert sorted(map(tuple, got.collect())) == want, (seed, k1, k2)
+                assert {r[0] for r in want} >= {absent}
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+
+
+def test_collision_search_duplicate_id_is_one_candidate_per_row(spark):
+    """An _id stored twice is two candidates, each with its own n_match and
+    distance, and as a query each of its rows is answered on its own; no
+    row of a query's id is in its answer. (The DataFrame path instead sums
+    the two rows' term matches into one n_match and pairs it with every
+    vector of the id.) An id the index lacks (9) gets no rows."""
+    from elastik_nearest_neighbors_spark import api
+
+    docs = spark.createDataFrame(
+        [
+            (1, [0.0, 0.0], [0, 0]),
+            (2, [1.0, 0.0], [0, 0]),
+            (2, [0.0, 3.0], [0, 1]),
+            (3, [5.0, 5.0], [1, 1]),
+        ],
+        "_id long, _aknn_vector array<double>, hashes array<bigint>",
+    )
+    got = sorted(map(tuple, api.aknn_search(docs, [1, 2, 9], 10, 10).collect()))
+    assert got == [
+        (1, 2, 1, 3.0),
+        (1, 2, 2, 1.0),
+        (2, 1, 1, 3.0),
+        (2, 1, 2, 1.0),
+        (2, 3, 1, 5.385165),
+    ]
+
+
+def test_collision_search_refuses_a_merge_beyond_max_result_size(spark):
+    """collision_search checks its P·Q·k1 partial rows, 32 bytes each,
+    against spark.driver.maxResultSize before the pass: the largest k1
+    that fits is accepted (and answers as any k1 above n does), one more is
+    a ValueError that names the setting."""
+    import pytest
+
+    from elastik_nearest_neighbors_spark.operators import knn
+
+    rng = np.random.default_rng(5)
+    ddl = "vec_id long, v array<double>, hashes array<bigint>"
+    idx = spark.createDataFrame(_lsh_rows(rng, list(range(40)), 4, 3), ddl).coalesce(2)
+    q = idx.where("vec_id < 3")
+    cap = spark.sparkContext._jsc.sc().conf().getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    k1 = cap // 32 // (idx.rdd.getNumPartitions() * 3)
+    want = sorted(map(tuple, knn.collision_search(idx, q, 40, 5, "vec_id", "v").collect()))
+    assert sorted(map(tuple, knn.collision_search(idx, q, k1, 5, "vec_id", "v").collect())) == want
+    with pytest.raises(ValueError, match="spark.driver.maxResultSize"):
+        knn.collision_search(idx, q, k1 + 1, 5, "vec_id", "v")
