@@ -81,8 +81,7 @@ def test_aknn_search_job_budget(spark, tmp_path):
     (the query rows' Arrow collect, then one mapInArrow pass over the
     index), so there is no shuffle, and no BroadcastExchange carries the
     corpus vectors — no exchange of any kind runs. The answer is an Arrow
-    local relation: reading it runs no job. knn.ann_search_lsh runs the
-    same kernel and broadcasts nothing either."""
+    local relation: reading it runs no job."""
     from elastik_nearest_neighbors_spark import api
 
     emb = io.table(spark, SF_SMALL, "embeddings")
@@ -95,38 +94,59 @@ def test_aknn_search_job_budget(spark, tmp_path):
     assert "MapInArrow" in ran[1] and "_aknn_vector" in ran[1], ran
     rows, stages, _ = _executed(spark, out.collect)
     assert stages == [] and {r.query_id for r in rows} == set(range(8))
-    # ann_search_lsh over the widened (repartitioned) table runs the same
-    # kernel: its exchanges are the widen repartitions, never a broadcast
-    _, _, ran = _executed(spark, lambda: knn.ann_search_lsh_q(spark, SF_SMALL))
-    assert any("MapInArrow" in p for p in ran) and not [p for p in ran if "BroadcastExchange" in p], ran
+
+
+def test_ann_search_broadcasts_query_side(spark):
+    """knn.ann_search_lsh ships the query side to every index task and
+    never moves the index: the query rows (hashed by the model) come to the
+    driver in one Arrow collect and ride in the mapInArrow closure, so the
+    one pass over the index holds no join and no exchange."""
+    from elastik_nearest_neighbors_spark.operators.lsh import LshModel
+
+    emb = io.table(spark, SF_SMALL, "embeddings")
+    model = LshModel.fit_df(emb)
+    out, stages, ran = _executed(spark, lambda: knn.ann_search_lsh(emb, emb.where(F.col("vec_id") < 8), model))
+    assert stages == [1, 1] and len(ran) == 2, (stages, ran)
+    query_side, index_side = ran
+    assert any("vec_id" in f for f in _pushed(query_side)), query_side
+    assert not _pushed(index_side) and "MapInArrow" in index_side, index_side
+    assert not re.search("Join|Exchange", index_side), index_side
+    assert {r.query_id for r in out.collect()} == set(range(8))
 
 
 def _two_stage_searches():
+    """name → (search, the column that holds its corpus vectors)."""
+    from elastik_nearest_neighbors_spark import api
     from elastik_nearest_neighbors_spark.operators import graph, pq
 
     return {
-        "ann_search_ivf": ivf.ann_search_ivf_q,
-        "ann_search_ivfpq_refined": pq.ann_search_ivfpq_refined,
-        "ann_search_bitsign": pq.ann_search_bitsign,
-        "ann_search_matryoshka": knn.ann_search_matryoshka,
-        "ann_search_graph": graph.ann_search_graph_q,
-        "ann_recall_sweep": knn.ann_recall_sweep,
+        "aknn_search": (api.aknn_search_api, "_aknn_vector"),
+        "ann_search_lsh": (knn.ann_search_lsh_q, "embedding"),
+        "ann_search_ivf": (ivf.ann_search_ivf_q, "nv"),
+        "ann_search_ivfpq_refined": (pq.ann_search_ivfpq_refined, "nv"),
+        "ann_search_bitsign": (pq.ann_search_bitsign, "nv"),
+        "ann_search_matryoshka": (knn.ann_search_matryoshka, "nv"),
+        "ann_search_graph": (graph.ann_search_graph_q, "nv"),
+        "ann_recall_sweep": (knn.ann_recall_sweep, "nv"),
     }
 
 
 @pytest.mark.parametrize("name", list(_two_stage_searches()))
 def test_rerank_gather_never_broadcasts_corpus_vectors(spark, name):
-    """Every two-stage search's exact re-rank (knn.exact_scores) broadcasts
-    the candidate list and streams the corpus vectors (`nv`) past it. No
-    BroadcastExchange of the executed plan may carry `nv`: broadcasting the
-    corpus is what Catalyst picks on stats alone, because bench-scale
-    parquet looks tiny."""
-    df = _two_stage_searches()[name](spark, SF_SMALL)
-    df.collect()  # the adaptive plan below is the executed, final one
-    plan = plans.formatted_plan(df)
+    """Every two-stage search streams the corpus vectors past its
+    candidates. No BroadcastExchange of any plan it executes may carry
+    them: broadcasting the corpus is what Catalyst picks on stats alone,
+    because bench-scale parquet looks tiny. The exact re-rank
+    (knn.exact_scores, corpus vectors `nv`) broadcasts the candidate list;
+    the LSH searches (knn.collision_search) run one mapInArrow pass over
+    the index and broadcast nothing."""
+    search, vec = _two_stage_searches()[name]
+    _, _, ran = _executed(spark, lambda: search(spark, SF_SMALL).collect())
+    plan = "\n".join(ran)  # each execution's final adaptive plan
     inputs = re.findall(r"\) BroadcastExchange\nInput \[\d+\]: \[([^\]]*)\]", plan)
-    assert inputs and re.search(r"\bnv#", plan), plan
-    assert not [i for i in inputs if re.search(r"\bnv#", i)], plan
+    assert re.search(rf"\b{vec}#", plan), plan
+    assert inputs if vec == "nv" else "MapInArrow" in plan, plan
+    assert not [i for i in inputs if re.search(rf"\b{vec}#", i)], plan
 
 
 def test_lsh_index_store_partition_prunes(spark, tmp_path):
