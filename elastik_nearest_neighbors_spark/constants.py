@@ -317,21 +317,12 @@ IVF_COARSE_PROBES = 8
 HIER_BRANCH = 32
 HIER_TOP = 32
 FLAT_FIT_MAX = 1 << 22
-# r6: the broadcast ceiling at which IVF assignment/probing stops closing
-# over the fine centroid table and auto-engages the sharded path
-# (ivf.assign_sharded / ivf.probe_sharded). Model bytes ≈ L·D·8 for the
-# fine level (float64) plus ~1/HIER_BRANCH for the upper hierarchy: with
-# lists ∝ N/GRAPH_LIST_TARGET and D=128, L = 10^6 lists (a ~2.5·10^8-vector
-# build) is ~1.0 GB — past what a per-task closure/broadcast should carry
-# (each executor deserializes it; Spark's own broadcast guidance tops out
-# well under a GB). 512 MB engages the sharded path about one binary order
-# BEFORE the cliff. Every oracle-gated SF is ~KB-sized, so the closure path
-# (and its bit-exact DuckDB mirror) is what the gate always exercises; the
-# sharded path is asserted bit-equal by forcing this threshold down in
-# tests (ivf reads it at call time, so a test patches this constant).
-# It routes serving only: every fit, at any L, is the driver-side
-# ivf.IvfModel.fit_path.
-SHARDED_MODEL_BYTES = 512 << 20
+# The largest IVF model (fine centroids plus hierarchy, ≈ L·D·8 bytes) that
+# assign_udf / probe_udf close over; above it they raise ValueError. Every
+# executor task deserializes the closure, and Spark's broadcast guidance
+# tops out well under a GB; lists ∝ N/GRAPH_LIST_TARGET at D = 64 reach it
+# past ~2.6·10^8 vectors, while the largest measured model (2M) is ~4 MB.
+IVF_CLOSURE_MAX_BYTES = 512 << 20
 # single-linkage clustering over the graph's edges. Threshold swept at
 # sf0.01 (min pair distance ≈ 1.05): 1.2 percolates into one 474-member
 # blob, 1.05 leaves only pairs; 1.12 gives 63 non-singleton clusters up to

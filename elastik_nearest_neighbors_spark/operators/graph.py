@@ -112,17 +112,12 @@ def graph_model_for(sf_dir: str) -> IvfModel:
     deterministic sample rule as the serving quantizer, so the oracle
     builder regenerates bit-identical centroid literals.
 
-    Size honesty (r5, was "KB-to-MB"): lists ∝ N means the MODEL is O(N)
-    — L × D float64 is ~4 MB at sf100 (2M vectors), ~40 MB at 20M, ~2 GB
-    at 10^9; past L ≈ 10^6-10^7 the centroid table stops being a sane
-    closure/broadcast payload and the assignment fit stops being a
-    driver-side job. The r5 log-depth hierarchy (ivf.IvfModel) fixes the
-    assignment COST (~N·log N), not the model SIZE; past the ceiling the
-    fix is ivf.assign_sharded (r5): the fine level becomes a DataFrame
-    keyed by level-0 group and assignment a co-partitioned shuffle join —
-    bit-equal to the closure path (asserted in tests), at the price of one
-    extra ~probes·N-row exchange. The closure path stays the default for
-    every model that still broadcasts (all bench/test scales)."""
+    Size: lists ∝ N means the MODEL is O(N) — L × D float64 is ~4 MB at
+    sf100 (2M vectors), ~40 MB at 20M, ~2 GB at 10^9. The log-depth
+    hierarchy (ivf.IvfModel) bounds the assignment COST (~N·log N), not
+    the model SIZE: serving closes over the whole model, and above
+    constants.IVF_CLOSURE_MAX_BYTES (512 MiB, past ~2.6·10^8 vectors at
+    D = 64) ivf's assign_udf / probe_udf raise ValueError."""
     m = _GRAPH_MODEL_CACHE.get(sf_dir)
     if m is None:
         n = _corpus_rows(sf_dir)

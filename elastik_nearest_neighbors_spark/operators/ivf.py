@@ -31,7 +31,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.window import Window
 
 from .. import io
 from ..constants import (
@@ -403,17 +402,13 @@ class IvfModel:
     Never active at the oracle-gated SFs (L=16 there), so the DuckDB
     flat-argmin mirrors stay bit-exact.
 
-    Model-size envelope (honest version, r5): the model itself is the
-    FULL fine-centroid table — L × D float64 (+ ~1/HIER_BRANCH for the
-    hierarchy). With lists ∝ N/250 that is ~4 MB at 2M vectors (sf100),
-    ~40 MB at 20M, and ~2 GB at 10^9 vectors. The fit always runs on the
-    driver (fit_path); past the closure/broadcast ceiling
-    (SHARDED_MODEL_BYTES) SERVING leaves the closure: `assign_sharded`
-    and `probe_sharded` (r6) keep only the upper hierarchy in the closure
-    and meet the fine centroids as a DataFrame keyed by level-0 group
-    (`fine_level_table`) in a co-partitioned shuffle join + numpy distance
-    pass, bit-equal to this closure path (asserted in tests). Below the
-    ceiling the closure path is the plan; see graph.graph_model_for."""
+    Model size: the model is the FULL fine-centroid table — L × D float64
+    (+ ~1/HIER_BRANCH for the hierarchy). With lists ∝ N/250 that is ~4 MB
+    at 2M vectors (sf100), ~40 MB at 20M, and ~2 GB at 10^9 vectors. The
+    fit always runs on the driver (fit_path), and serving always ships the
+    model inside a pandas_udf closure (assign_udf, probe_udf). A model
+    above constants.IVF_CLOSURE_MAX_BYTES is refused there with a
+    ValueError; there is no other serving plan."""
 
     def __init__(
         self,
@@ -425,14 +420,25 @@ class IvfModel:
 
     @property
     def model_bytes(self) -> int:
-        """Closure payload if this model ships inside a pandas_udf: the
-        fine centroid table plus every hierarchy level's centroids —
-        L·D·8 (+ ~1/HIER_BRANCH for the upper levels). The
-        SHARDED_MODEL_BYTES auto-engage compares against this."""
+        """Closure payload of assign_udf / probe_udf: the fine centroid
+        table plus every hierarchy level's centroids — L·D·8 (+ ~1/HIER_BRANCH
+        for the upper levels). Checked against IVF_CLOSURE_MAX_BYTES."""
         n = self.centroids.nbytes
         for c_level, _members in self.levels:
             n += c_level.nbytes
         return n
+
+    def _check_closure_size(self) -> None:
+        """Refuse to close over a model above the ceiling, read at call time
+        so a test can lower it."""
+        from ..constants import IVF_CLOSURE_MAX_BYTES
+
+        if self.model_bytes > IVF_CLOSURE_MAX_BYTES:
+            raise ValueError(
+                f"IVF model of {self.model_bytes} bytes exceeds "
+                f"IVF_CLOSURE_MAX_BYTES ({IVF_CLOSURE_MAX_BYTES} bytes), the most a "
+                "pandas_udf closure ships"
+            )
 
     @classmethod
     def fit_path(
@@ -500,6 +506,7 @@ class IvfModel:
         return _descend_rows(v, self.centroids, self.levels, IVF_COARSE_PROBES)
 
     def assign_udf(self):
+        self._check_closure_size()
         model = self
 
         @pandas_udf("struct<list_id:int, center_dist:double>")
@@ -528,6 +535,7 @@ class IvfModel:
         return _assign.asNondeterministic()
 
     def probe_udf(self, nprobe: int = IVF_NPROBE):
+        self._check_closure_size()
         model = self
 
         @pandas_udf("array<int>")
@@ -554,233 +562,6 @@ class IvfModel:
         return _probe.asNondeterministic()
 
 
-def _select_level0_groups(
-    v: "np.ndarray",
-    levels: list[tuple["np.ndarray", list["np.ndarray"]]],
-    w: int,
-) -> tuple["np.ndarray", "np.ndarray"]:
-    """Upper-hierarchy descent only: per input row, the `w` nearest
-    level-0 GROUPS (indices into levels[0]) under the same rounded
-    distances / (dist, id) tie rules as the full descent — without ever
-    touching the fine centroid table. Returns (rows, group_ids) with rows
-    sorted, ≤ w groups per row."""
-    c0 = levels[0][0]
-    if len(v) == 0:
-        empty = np.array([], dtype=np.int64)
-        return empty, empty
-    if len(levels) == 1:
-        d = np.round(np.sqrt(_chunked_sq_dists(v, c0)), DIST_ROUND)
-        order = np.argsort(d, axis=1, kind="stable")[:, : min(w, d.shape[1])]
-        rows = np.repeat(np.arange(len(v)), order.shape[1])
-        return rows, order.ravel()
-    rows, gids, _d = _descend_rows(v, c0, levels[1:], w)
-    starts = np.unique(rows, return_index=True)[1]
-    run_len = np.diff(np.append(starts, len(rows)))
-    idx_in_run = np.arange(len(rows)) - np.repeat(starts, run_len)
-    keep = idx_in_run < w
-    return rows[keep], gids[keep]
-
-
-def fine_level_table(spark: SparkSession, model: IvfModel) -> DataFrame:
-    """The model's fine level as a DATAFRAME (group_id, list_id, centroid)
-    — the shape the fine level takes once it outgrows the driver (the
-    lists ∝ N build quantizer makes the MODEL O(N): past L ≈ 10^6-10^7
-    the L×D centroid table stops being a broadcastable closure; see
-    IvfModel's size-envelope docstring). Here it is materialized from the
-    in-memory model; at real scale it would be a persisted parquet table
-    partitioned by group_id, written once at fit time."""
-    if not model.levels:
-        raise ValueError("fine_level_table needs a hierarchical model")
-    members = model.levels[0][1]
-    rows = [
-        (int(g), int(lid), model.centroids[lid].tolist())
-        for g in range(len(members))
-        for lid in members[g]
-    ]
-    return spark.createDataFrame(
-        rows, "group_id int, list_id int, centroid array<double>"
-    )
-
-
-def assign_sharded(
-    df: DataFrame,
-    model: IvfModel,
-    fine: DataFrame | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Scale-path assignment with the fine centroid level OUT of the
-    closure: vectors carry only the broadcast-sized upper hierarchy
-    (~L/HIER_BRANCH centroids) through a pandas_udf that picks their
-    IVF_COARSE_PROBES nearest level-0 groups; the fine level arrives as a
-    DataFrame keyed by group_id and meets the (vector, group) pairs in a
-    COGROUPED applyInPandas — co-partitioned on group_id, NOT a broadcast
-    — where one numpy distance matrix per group emits each vector's
-    per-group best; a (dist, list_id) window argmin finishes globally.
-
-    Bit-equal to the driver-side descent (asserted in tests): the group
-    selection runs the same _descend_rows code, and the distances come
-    from the same _chunked_sq_dists float ops on the same float64, so the
-    rounded doubles are identical and the (dist, list_id) winner matches
-    the lexsort rule. Cost: one extra exchange of ~probes·N rows versus
-    the closure path — the price of unbounded L; below the broadcast
-    ceiling the closure path stays the default.
-
-    Output: (vec_id, list_id, center_dist) — one row per input vector."""
-    scored = _sharded_scores(df, model, fine, vec_col, id_col)
-    # global argmin as a struct-min AGGREGATION, not a rank window (r12):
-    # min over (center_dist, list_id) structs is the identical
-    # (dist, list_id) tie rule, but it partial-aggregates map-side —
-    # probes·N candidate rows combine before the exchange instead of
-    # being shuffled and sorted whole, the difference between a window
-    # and an agg at 100 TB
-    return (
-        scored.groupBy("vec_id")
-        .agg(F.min(F.struct("center_dist", "list_id")).alias("m"))
-        .select(
-            "vec_id",
-            F.col("m.list_id").alias("list_id"),
-            F.col("m.center_dist").alias("center_dist"),
-        )
-    )
-
-
-def probe_sharded(
-    query_df: DataFrame,
-    model: IvfModel,
-    nprobe: int = IVF_NPROBE,
-    fine: DataFrame | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Scale-path probe selection: the query twin of assign_sharded.
-    Same group selection and fine-level shuffle join, but keeping the
-    `nprobe` best (center_dist, list_id) lists per query instead of the
-    single best — exactly the order the closure probe_udf's descent emits
-    (its candidate runs are lexsorted (dist, list_id) per row), so the
-    probed set is bit-equal to the closure path (asserted in tests).
-
-    Output: (query_id, list_id) — ≤ nprobe rows per query, the exploded
-    shape ann_search_ivf's candidate join consumes directly."""
-    scored = _sharded_scores(query_df, model, fine, vec_col, id_col, per_group_k=nprobe)
-    w = Window.partitionBy("vec_id").orderBy(F.asc("center_dist"), F.asc("list_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= nprobe)
-        .select(F.col("vec_id").alias("query_id"), "list_id")
-    )
-
-
-def _sharded_scores(
-    df: DataFrame,
-    model: IvfModel,
-    fine: DataFrame | None,
-    vec_col: str,
-    id_col: str,
-    per_group_k: int = 1,
-) -> DataFrame:
-    """(vec_id, list_id, center_dist) over each vector's selected level-0
-    groups' fine members — the shared candidate-scoring pipeline under
-    assign_sharded (rank 1) and probe_sharded (rank ≤ nprobe). Group
-    selection reads only the upper hierarchy (model.levels); the level-0
-    members arrive in `fine` (group_id, list_id, centroid), built from the
-    model by fine_level_table when not given.
-
-    Shape (r12 rewrite): COGROUPED per-group scoring. The r6 form joined
-    the exploded (vector, group) pairs row-against-row with the fine table
-    and shipped every (v, centroid) pair through Arrow — probes·N·branch
-    rows ≈ 512 GB at N=2M, L=8000 (measured: the sharded assign ran >10×
-    the closure path, purely on transfer). Cogrouping moves BLOCKS: each
-    group's vectors cross Arrow once and its fine members once, the
-    distance matrix is one numpy op, and only the per-group TOP-k
-    (k = 1 for assign, nprobe for probe) candidates come back —
-    probes·N·k small rows. Bit-equal winners: the per-group rank uses the
-    same rounded distances and the same (dist, list_id) tie rule (stable
-    argsort over ascending-list_id columns) as the global window that
-    consumes this, and the global top-k is always a subset of the union
-    of per-group top-ks. _chunked_sq_dists sums the same float64s in the
-    same index order as the old per-pair sum (numpy pairwise summation
-    either way), so the rounded doubles are identical — asserted by the
-    closure-equality tests."""
-    if not model.levels:
-        raise ValueError("sharded assignment needs a hierarchical model")
-    if fine is None:
-        fine = fine_level_table(df.sparkSession, model)
-    upper = model.levels  # the udf closes over this, never model.centroids
-
-    @pandas_udf("array<int>")
-    def _groups(vecs: pd.Series) -> pd.Series:
-        # imported inside the udf so the constant is read at EXECUTION
-        # time, not closure-creation time — tests monkeypatch hierarchy
-        # constants this way (ADVICE r12)
-        from ..constants import IVF_COARSE_PROBES
-
-        v = np.array(vecs.tolist(), dtype=np.float64)
-        rows, gids = _select_level0_groups(v, upper, IVF_COARSE_PROBES)
-        starts = np.unique(rows, return_index=True)[1] if len(rows) else np.array([], dtype=np.int64)
-        bounds = np.append(starts, len(rows))
-        return pd.Series(
-            [gids[bounds[i] : bounds[i + 1]].astype(np.int32) for i in range(len(starts))]
-        )
-
-    pairs = df.select(
-        F.col(id_col).alias("vec_id"),
-        as_double(F.col(vec_col)).alias("v"),
-        F.explode(_groups(F.col(vec_col))).alias("group_id"),
-    )
-    k = per_group_k
-
-    def _topk(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if not len(left) or not len(right):
-            return pd.DataFrame({"vec_id": [], "list_id": [], "center_dist": []})
-        right = right.sort_values("list_id")  # column order IS the tie order
-        lids = right["list_id"].to_numpy()
-        c = np.array(right["centroid"].tolist(), dtype=np.float64)
-        # row-chunk the LEFT side (ADVICE r12): a skewed/popular group at
-        # unbounded L can carry an arbitrary share of the query batch, and
-        # converting every row's vector at once would build one unbounded
-        # block. Per-row top-k is independent across rows, so chunked
-        # output is bit-equal concatenation.
-        ids_all = left["vec_id"].to_numpy()
-        step = max(1, int(2e7) // max(len(c) * c.shape[1], 1))
-        parts = []
-        for s in range(0, len(left), step):
-            v = np.array(left["v"].iloc[s : s + step].tolist(), dtype=np.float64)
-            d = np.round(np.sqrt(_chunked_sq_dists(v, c)), DIST_ROUND)
-            order = np.argsort(d, axis=1, kind="stable")[:, : min(k, d.shape[1])]
-            kk = order.shape[1]
-            parts.append(
-                pd.DataFrame(
-                    {
-                        "vec_id": np.repeat(ids_all[s : s + step], kk),
-                        "list_id": lids[order].ravel().astype(np.int32),
-                        "center_dist": np.take_along_axis(d, order, axis=1).ravel(),
-                    }
-                )
-            )
-        return pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
-
-    return (
-        pairs.groupby("group_id")
-        .cogroup(fine.groupby("group_id"))
-        .applyInPandas(
-            lambda l, r: _topk(l, r), "vec_id long, list_id int, center_dist double"
-        )
-    )
-
-
-def use_sharded(model: IvfModel) -> bool:
-    """True when assignment/probing must leave the driver: the model has a
-    hierarchy to split (flat models are KB-sized by construction) and its
-    closure payload exceeds the broadcast ceiling (constants.
-    SHARDED_MODEL_BYTES, read at call time so tests can force the sharded
-    path on a KB-sized model). Deterministic in the model alone, so the
-    engaged plan is stable across stages of one query."""
-    from ..constants import SHARDED_MODEL_BYTES
-
-    return bool(model.levels) and model.model_bytes > SHARDED_MODEL_BYTES
-
-
 def probe_pairs(
     qdf: DataFrame,
     model: IvfModel,
@@ -792,22 +573,9 @@ def probe_pairs(
 ) -> DataFrame:
     """(out_id, extra..., list_id) probe pairs — THE probe entry point for
     every batch consumer (IVF/PQ search, graph membership, semantic-dedup
-    seeds). Below the broadcast ceiling it is the closure probe_udf in a
-    single narrow select; above it (use_sharded) the fine level leaves the
-    closure via probe_sharded and `extra` columns rejoin on the id — same
-    pairs either way, one extra exchange above the ceiling.
-
-    Streaming consumers keep the closure form directly (probe_sharded's
-    rank window isn't expressible on an unbounded stream; a beyond-ceiling
-    streaming deployment would wrap this inside foreachBatch)."""
-    if use_sharded(model):
-        pairs = probe_sharded(qdf, model, nprobe, vec_col=vec_col, id_col=id_col)
-        if out_id != "query_id":
-            pairs = pairs.withColumnRenamed("query_id", out_id)
-        if extra:
-            side = qdf.select(F.col(id_col).alias(out_id), *extra)
-            pairs = pairs.join(side, out_id).select(out_id, *side.columns[1:], "list_id")
-        return pairs
+    seeds): the closure probe_udf in a single narrow select. Streaming
+    consumers call probe_udf directly, and it refuses a model above
+    IVF_CLOSURE_MAX_BYTES either way."""
     return qdf.select(
         F.col(id_col).alias(out_id),
         *extra,
@@ -831,17 +599,9 @@ def model_for(sf_dir: str) -> IvfModel:
 def build_ivf_index(
     df: DataFrame, model: IvfModel, vec_col: str = "embedding", id_col: str = "vec_id"
 ) -> DataFrame:
-    """(id, list_id, center_dist) — narrow pass; write partitioned by
-    list_id at scale for probe-time partition pruning.
-
-    Past the broadcast ceiling (use_sharded: model_bytes >
-    SHARDED_MODEL_BYTES) the closure-free assign_sharded path engages
-    automatically — bit-equal output, one extra co-partitioned exchange.
-    Below it (every oracle-gated SF) the closure pandas_udf is the plan."""
-    if use_sharded(model):
-        return assign_sharded(df, model, vec_col=vec_col, id_col=id_col).select(
-            F.col("vec_id").alias(id_col), "list_id", "center_dist"
-        )
+    """(id, list_id, center_dist) — narrow pass, one closure pandas_udf
+    (assign_udf refuses a model above IVF_CLOSURE_MAX_BYTES); write
+    partitioned by list_id at scale for probe-time partition pruning."""
     a = model.assign_udf()(F.col(vec_col))
     return df.select(F.col(id_col), a.alias("a")).select(
         id_col, F.col("a.list_id").alias("list_id"), F.col("a.center_dist").alias("center_dist")

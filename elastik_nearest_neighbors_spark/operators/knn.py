@@ -41,20 +41,6 @@ from ..session import configure
 from .lsh import LshModel, build_index, explode_hashes
 
 
-def _partial_topk(scored: DataFrame, val_col: str, k: int, ascending: bool) -> DataFrame:
-    """Per-partition top-k before the final window — since r13 a NO-OP:
-    Spark ≥3.5 inserts a native WindowGroupLimit (Partial before the
-    exchange, Final after) for `row_number() ≤ k` windows, which is exactly
-    the pre-shuffle shrink the old mapInPandas fold did — minus a full
-    JVM→Arrow→pandas→JVM round trip of the N·Q scored stream (guide §4.1:
-    the r13 before-plans show BOTH the Python fold AND the redundant native
-    WindowGroupLimit pair around the shuffle). Kept as a seam (and for the
-    explanation) so every corpus-wide scorer documents where its partial
-    top-k lives; callers' windows all order by (val, neighbor_id), which
-    is what lets the native group-limit keep the exact global top-k."""
-    return scored
-
-
 def knn_exact(
     index_df: DataFrame,
     query_df: DataFrame,
@@ -101,11 +87,12 @@ def knn_exact(
         idx.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", F.round(val, DIST_ROUND).alias(val_col))
     )
-    local = _partial_topk(scored, val_col, k, asc)
     order = [F.col(val_col).asc() if asc else F.col(val_col).desc(), F.col("neighbor_id").asc()]
     w = Window.partitionBy("query_id").orderBy(*order)
+    # Spark >= 3.5 plans row_number() <= k with a native WindowGroupLimit
+    # on each side of the exchange
     return (
-        local.withColumn("rn", F.row_number().over(w))
+        scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)
         .drop("rn")
     )

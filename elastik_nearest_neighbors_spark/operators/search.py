@@ -109,7 +109,6 @@ def bm25_scores(
     (score DESC, doc_id)."""
     from ..constants import BM25_LITERAL_MAX_Q
     from ..functions.text import tokens
-    from .knn import _partial_topk
 
     if max_literal_q is None:
         max_literal_q = BM25_LITERAL_MAX_Q
@@ -277,10 +276,9 @@ def bm25_scores(
                 (F.col("micros") / F.lit(1000000.0)).alias("score"),
             )
         )
-    pre = _partial_topk(scored, "score", k, ascending=False)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("neighbor_id"))
     return (
-        pre.withColumn("rn", F.row_number().over(w))
+        scored.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") <= k)
         .select("query_id", F.col("neighbor_id").alias("doc_id"), "score")
     )

@@ -259,97 +259,63 @@ def test_bm25_and_hybrid_rrf(spark):
         assert (both.rrf_score > single_max).all()
 
 
-def test_sharded_fine_level_assignment_bit_equals_closure_path(spark, monkeypatch):
-    """assign_sharded (fine centroids as a DataFrame, upper hierarchy as
-    the only closure) must reproduce the driver-side descent EXACTLY —
-    same list_id and same rounded center_dist for every vector — on both
-    a single-level hierarchy and a forced-deep one. This is the scale
-    path for models past the broadcast ceiling (L ≈ 10^6+), so bit
-    equality with the gated closure path is its correctness story."""
-    import numpy as np
-
-    from elastik_nearest_neighbors_spark import constants, io as enn_io
+def test_hierarchical_closure_path_bit_equals_numpy_descent(spark, monkeypatch):
+    """The model.levels branches of assign_udf / probe_udf, run through
+    Spark on a one-level and a forced-deep hierarchy: build_ivf_index
+    returns each row's first _pruned_candidates candidate (list_id and
+    center_dist bit-equal to the numpy descent on the same vectors) and
+    probe_pairs its first IVF_NPROBE candidates, in order. With the
+    closure ceiling at 0 both UDF factories refuse the model, naming the
+    constant, before any Spark job starts."""
+    from elastik_nearest_neighbors_spark import constants
+    from elastik_nearest_neighbors_spark.constants import IVF_NPROBE
     from elastik_nearest_neighbors_spark.operators import ivf as ivf_mod
 
-    emb = enn_io.table(spark, SF_SMALL, "embeddings", widen=True)
+    emb = io.table(spark, SF_SMALL, "embeddings", widen=True)
+    local = emb.select("vec_id", "embedding").toPandas().sort_values("vec_id")
+    ids = local.vec_id.to_numpy()
+    v = np.array(local.embedding.tolist(), dtype=np.float64)
 
     def check(model):
-        closure = (
-            ivf_mod.build_ivf_index(emb, model)
-            .toPandas()
-            .sort_values("vec_id")
-            .reset_index(drop=True)
-        )
-        sharded = (
-            ivf_mod.assign_sharded(emb, model)
-            .toPandas()
-            .sort_values("vec_id")
-            .reset_index(drop=True)
-        )
-        assert len(closure) == len(sharded)
-        assert (closure.vec_id.values == sharded.vec_id.values).all()
-        assert (closure.list_id.values == sharded.list_id.values).all()
-        assert (closure.center_dist.values == sharded.center_dist.values).all()
+        rows, lids, dists = model._pruned_candidates(v)
+        starts = np.unique(rows, return_index=True)[1]
+        ends = np.append(starts[1:], len(rows))
+        idx = ivf_mod.build_ivf_index(emb, model).toPandas().sort_values("vec_id")
+        assert (idx.vec_id.to_numpy() == ids).all()
+        assert (idx.list_id.to_numpy() == lids[starts]).all()
+        assert (idx.center_dist.to_numpy() == dists[starts]).all()
+        probed = ivf_mod.probe_pairs(emb, model).toPandas()
+        got = probed.groupby("query_id", sort=True).list_id.apply(list)
+        assert (got.index.to_numpy() == ids).all()
+        for i, (s, e) in enumerate(zip(starts, ends)):
+            assert got.iloc[i] == lids[s : min(s + IVF_NPROBE, e)].tolist(), ids[i]
 
-    check(ivf_mod.IvfModel.fit_path(SF_SMALL, nlist=64, sample_n=320, two_level=True))
+    one = ivf_mod.IvfModel.fit_path(SF_SMALL, nlist=64, sample_n=320, two_level=True)
+    assert len(one.levels) == 1
+    check(one)
     # deep hierarchy: 64 -> 16 -> 4 with branch 4, top 4
     monkeypatch.setattr(constants, "HIER_BRANCH", 4)
     monkeypatch.setattr(constants, "HIER_TOP", 4)
     deep = ivf_mod.IvfModel.fit_path(SF_SMALL, nlist=64, sample_n=320, two_level=True)
     assert len(deep.levels) >= 2
     check(deep)
-    import pytest as pt
 
-    with pt.raises(ValueError, match="hierarchical"):
-        ivf_mod.assign_sharded(
-            emb, ivf_mod.IvfModel.fit_path(SF_SMALL, nlist=16, sample_n=320, two_level=False)
-        )
-
-
-def test_sharded_auto_engage_end_to_end(spark, monkeypatch):
-    """The broadcast-ceiling auto-engage (r6): with SHARDED_MODEL_BYTES
-    forced to 0 and a hierarchical model installed as the serving model,
-    the PUBLIC gated entries (ivf_index, ann_search_ivf) must route
-    assignment through assign_sharded and probing through probe_sharded —
-    end-to-end, no test-only seams — and return bit-identical rows to the
-    closure plan at the default threshold. This is the config cliff the r5
-    verdict flagged: past L ≈ 10^6 nothing switched; now use_sharded does,
-    and this test runs the switched plan through the same public surface
-    the driver gates."""
-    from elastik_nearest_neighbors_spark import constants
-    from elastik_nearest_neighbors_spark.operators import ivf as ivf_mod
-
-    hier = ivf_mod.IvfModel.fit_path(SF_SMALL, nlist=64, sample_n=320, two_level=True)
-    assert hier.levels and hier.model_bytes > 0
-    monkeypatch.setitem(ivf_mod._MODEL_CACHE, SF_SMALL, hier)
-
-    def run():
-        idx = (
-            ivf_mod.ivf_index(spark, SF_SMALL)
-            .toPandas()
-            .sort_values("vec_id")
-            .reset_index(drop=True)
-        )
-        srch = (
-            ivf_mod.ann_search_ivf_q(spark, SF_SMALL)
-            .toPandas()
-            .sort_values(["query_id", "distance", "neighbor_id"])
-            .reset_index(drop=True)
-        )
-        return idx, srch
-
-    assert not ivf_mod.use_sharded(hier)  # KB-sized model: closure default
-    closure_idx, closure_srch = run()
-    monkeypatch.setattr(constants, "SHARDED_MODEL_BYTES", 0)
-    assert ivf_mod.use_sharded(hier)
-    sharded_idx, sharded_srch = run()
-
-    assert len(closure_idx) == len(sharded_idx)
-    for c in ("vec_id", "list_id", "center_dist"):
-        assert (closure_idx[c].values == sharded_idx[c].values).all(), c
-    assert len(closure_srch) == len(sharded_srch)
-    for c in ("query_id", "neighbor_id", "list_id", "distance"):
-        assert (closure_srch[c].values == sharded_srch[c].values).all(), c
+    monkeypatch.setattr(constants, "IVF_CLOSURE_MAX_BYTES", 0)
+    sc = spark.sparkContext
+    sc.setJobGroup("closure-ceiling", "closure-ceiling")
+    try:
+        for model in (one, deep):
+            for make in (model.assign_udf, model.probe_udf):
+                with pytest.raises(ValueError, match="IVF_CLOSURE_MAX_BYTES"):
+                    make()
+            with pytest.raises(ValueError, match="IVF_CLOSURE_MAX_BYTES"):
+                ivf_mod.build_ivf_index(emb, model)
+            with pytest.raises(ValueError, match="IVF_CLOSURE_MAX_BYTES"):
+                ivf_mod.probe_pairs(emb, model)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert sc.statusTracker().getJobIdsForGroup("closure-ceiling") == []
 
 
 def test_bm25_join_path_equals_literal_path(spark):

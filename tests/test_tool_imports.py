@@ -57,7 +57,7 @@ def _resolves(module: str, name: str | None) -> bool:
 
 def test_script_imports_of_the_package_resolve():
     scripts = _scripts()
-    assert any(p.endswith(os.path.join("tools", "sharded_serving_ab.py")) for p in scripts)
+    assert any(p.endswith(os.path.join("tools", "clustered_purge.py")) for p in scripts)
     seen, broken = 0, []
     for path in scripts:
         for module, name in _package_imports(path):
