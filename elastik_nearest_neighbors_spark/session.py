@@ -10,6 +10,8 @@ import os
 
 from pyspark.sql import SparkSession
 
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _default_driver_mem() -> str:
     """Half the host's RAM, clamped to [8g, 64g].
@@ -71,11 +73,20 @@ def get_spark(
     jvm_opts = _driver_jvm_opts(driver_mem)
     if jvm_opts:
         builder = builder.config("spark.driver.extraJavaOptions", jvm_opts)
-    return configure(
+    spark = configure(
         builder
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", driver_mem)
+        # pyspark's worker calls importlib.invalidate_caches() at the start
+        # of every task, and each zipimporter then re-reads pyspark.zip's
+        # whole directory: about 200 ms per task, even in a reused worker.
+        # Measured at local[4] on back-to-back empty 4-task mapInArrow jobs,
+        # Spark's "time to initialize Python workers" read a median of
+        # 365 ms per task, and 75-110 ms with the engine's daemon, which
+        # re-reads an archive only when it changed. Every worker forks
+        # from the daemon.
+        .config("spark.python.daemon.module", "elastik_nearest_neighbors_spark.worker_daemon")
         # r14: pip-installed Spark has no libhadoop, so the default
         # checksummed LocalFileSystem pays TWO chmod subprocess forks per
         # created file (data + .crc twin — RawLocalFileSystem.setPermission
@@ -97,6 +108,14 @@ def get_spark(
         .config("spark.hadoop.mapreduce.fileoutputcommitter.algorithm.version", "2")
         .getOrCreate()
     )
+    # The daemon and every worker import the package, whatever the driver's
+    # working directory: put the directory that holds it on the workers'
+    # PYTHONPATH. SparkContext.environment holds spark.executorEnv.* and is
+    # shipped with every Python function, so a caller's value is kept.
+    env = spark.sparkContext.environment
+    if _PACKAGE_ROOT not in env.get("PYTHONPATH", "").split(os.pathsep):
+        env["PYTHONPATH"] = os.pathsep.join(filter(None, [_PACKAGE_ROOT, env.get("PYTHONPATH")]))
+    return spark
 
 
 # sessions already configured by this process, keyed by applicationId —
