@@ -82,7 +82,11 @@ def aknn_index(
     """`POST /_aknn_index`: (_id, _aknn_vector) → (_id, _aknn_vector,
     hashes[T]). A narrow, shuffle-free Arrow-batched pass — persist the
     result (optionally via sources.index_store for the partition-pruned
-    layout) to make it the searchable store."""
+    layout) to make it the searchable store. A parquet write of it splits
+    at read time, however few tasks wrote it: session.configure caps the
+    session's row groups at 4 MiB, so aknn_search's pass over the written
+    index runs on every task the planner cuts. `io.table(widen=True)` is
+    for external single-row-group inputs."""
     return model.with_hashes(docs, vector_field).select(
         id_field, vector_field, "hashes"
     )

@@ -18,9 +18,13 @@ Scale shape (100 TB): the LSH searches over unstored frames run
 `collision_search`, eagerly, in 2 Spark jobs: the Q query rows' collect,
 then one mapInArrow pass over the index (never shuffled) keeping each
 partition's top k1 per query; the driver merges those ≤ P·Q·k1 rows, a
-bound checked against spark.driver.maxResultSize. Exact kNN avoids the Q×N
-shuffle via the native WindowGroupLimit's per-partition top-k before a tiny
-global top-k.
+bound checked against spark.driver.maxResultSize. Parquet splits only at
+row-group edges, so over a parquet index the pass's parallelism equals
+its number of row groups, up to the planner's split count:
+session.configure caps the row groups the engine writes at 4 MiB, and an
+external single-row-group input needs `io.table(widen=True)`. Exact kNN
+avoids the Q×N shuffle via the native WindowGroupLimit's per-partition
+top-k before a tiny global top-k.
 
 Determinism: distances rounded to DIST_ROUND decimals before ranking; all
 ties broken by neighbor id. Self-matches are excluded.
@@ -187,13 +191,21 @@ def _collision_pass(q_ids, q_vecs, probes, k1: int):
     """collision_search's mapInArrow body over (id, vector, hashes) batches:
     each table's hashes are looked up in its sorted (hash, query row)
     probes, and each query row's top k1 by (-n_match, id) over all batches,
-    self-matches dropped, is emitted with its raw euclidean distance."""
-    nq = len(q_ids)
+    self-matches dropped, is emitted with its raw euclidean distance. A
+    batch holding a vector whose dim is not the query rows' ends the pass
+    with one row (qi -1, n_match that dim), which the driver raises on."""
+    nq, dim = q_vecs.shape
+    names = ["qi", "neighbor_id", "n_match", "distance"]
 
     def run(batches):
         keep, id_type = None, None
         for b in (b for b in batches if b.num_rows):
             id_type = b.schema.field(0).type
+            dims, vflat = list_arrays(b.column(1))
+            if (dims != dim).any():
+                bad = dims[dims != dim][:1].astype(np.int64)
+                yield pa.record_batch([[-1], pa.nulls(1, id_type), bad, [np.nan]], names)
+                return
             ids = b.column(0).to_numpy(zero_copy_only=False)
             ntab, flat = list_arrays(b.column(2))
             starts = np.cumsum(ntab) - ntab
@@ -212,17 +224,14 @@ def _collision_pass(q_ids, q_vecs, probes, k1: int):
             own = ids[r] != q_ids[q]
             r, q, n = r[own], q[own], n[own]
             top = _top_per_query(q, -n, ids[r], k1)
-            dims, vflat = list_arrays(b.column(1))
-            if (dims != dims.max(initial=0)).any():
-                raise ValueError("the index mixes vector dimensions")
-            cand = (q[top], ids[r[top]], n[top], vflat.reshape(len(dims), -1)[r[top]].astype(np.float64))
+            cand = (q[top], ids[r[top]], n[top], vflat.reshape(len(dims), dim)[r[top]].astype(np.float64))
             if keep is not None:
                 cand = tuple(np.concatenate(p) for p in zip(keep, cand))
             keep = tuple(c[_top_per_query(cand[0], -cand[2], cand[1], k1)] for c in cand)
         if keep is not None and len(keep[0]):
             q, nid, n, vecs = keep
             dist = euclidean_np(q_vecs[q], vecs)
-            yield pa.record_batch([q, pa.array(nid, id_type), n, dist], ["qi", "neighbor_id", "n_match", "distance"])
+            yield pa.record_batch([q, pa.array(nid, id_type), n, dist], names)
 
     return run
 
@@ -251,6 +260,8 @@ def collision_search(
     A partial row is charged 32 bytes (an int64 id; a string id makes it
     longer), and a P·Q·k1 above spark.driver.maxResultSize / 32 is a
     ValueError before the pass: at the default 1g, 33,554,432 is accepted.
+    Query rows of more than one vector dim are a ValueError too, as is an
+    index row whose dim is not theirs (Spark's euclidean is null there).
 
     Rows, not ids, are the unit: an _id stored twice is two candidates,
     each with its own n_match and distance; a query id held by two query
@@ -266,7 +277,10 @@ def collision_search(
     if not nq:
         return io.local_df(spark, [], out)
     q_ids = q_tab.column(id_col).to_numpy(zero_copy_only=False)
-    q_vecs = list_arrays(q_tab.column(vec_col))[1].astype(np.float64).reshape(nq, -1)
+    q_dims, q_flat = list_arrays(q_tab.column(vec_col))
+    if (q_dims != q_dims[0]).any():
+        raise ValueError(f"the query rows mix vector dims {' and '.join(map(str, np.unique(q_dims)))}")
+    q_vecs = q_flat.astype(np.float64).reshape(nq, q_dims[0])
     ntab, flat = list_arrays(q_tab.column("hashes"))
     qrow = np.repeat(np.arange(nq), ntab)
     tbl = (np.arange(len(flat)) - np.repeat(np.cumsum(ntab) - ntab, ntab)) // probes
@@ -287,6 +301,8 @@ def collision_search(
         )
     part = partials.toArrow()
     qi, n_match, dist = (part.column(c).to_numpy() for c in ("qi", "n_match", "distance"))
+    if (qi < 0).any():
+        raise ValueError(f"an index row has vector dim {n_match[qi < 0][0]}, the query rows dim {q_dims[0]}")
     nid = part.column("neighbor_id").to_numpy(zero_copy_only=False)
     top = _top_per_query(qi, -n_match, nid, k1)
     qi, nid, n_match, dist = qi[top], nid[top], n_match[top], rounded_np(dist[top])

@@ -193,6 +193,17 @@ def configure(spark: SparkSession) -> SparkSession:
                 f"session conf {k!r} did not apply (got {got!r}, need "
                 f"{conf[k]!r}); event-time results would be wrong — refusing"
             )
+    # Parquet cannot split a row group, and parquet-mr's 128 MiB default
+    # makes most files Spark writes one row group, read by one task however
+    # many splits the planner cuts (a 50k x 64-d index at local[4]: 1 busy
+    # task of 4). 4 MiB is Spark's default spark.sql.files.openCostInBytes,
+    # the smallest split the file scan makes. The session conf is copied
+    # into the Hadoop conf of every write; a caller's value, in either, is
+    # kept.
+    if spark.conf.get("parquet.block.size", None) is None and (
+        spark.sparkContext._jsc.hadoopConfiguration().get("parquet.block.size") is None
+    ):
+        spark.conf.set("parquet.block.size", str(4 << 20))
     if app is not None:
         _CONFIGURED.add(app)
     return spark

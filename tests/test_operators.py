@@ -842,6 +842,20 @@ def test_configure_fails_loud_on_broken_timezone(spark):
         configure(FakeSpark(spark))
 
 
+def test_configure_bounds_parquet_row_groups(spark):
+    """configure() caps the row groups of the parquet a session writes at
+    4 MiB when it runs on a session that already exists, and keeps a
+    parquet.block.size that the session's caller set."""
+    from elastik_nearest_neighbors_spark.session import configure
+
+    fresh = spark.newSession()
+    assert fresh.conf.get("parquet.block.size", None) is None
+    assert configure(fresh).conf.get("parquet.block.size") == str(4 << 20)
+    mine = spark.newSession()
+    mine.conf.set("parquet.block.size", str(64 << 20))
+    assert configure(mine).conf.get("parquet.block.size") == str(64 << 20)
+
+
 def test_aknn_facade_matches_lsh_search(spark):
     """The EsAknn facade (reference param/field names, id-based search off
     the STORED hashes) returns bit-identical results to the in-memory

@@ -96,6 +96,61 @@ def test_aknn_search_job_budget(spark, tmp_path):
     assert stages == [] and {r.query_id for r in rows} == set(range(8))
 
 
+def test_written_index_reads_back_on_every_task(spark, tmp_path):
+    """session.configure bounds the parquet row groups a session writes,
+    and parquet splits only at row-group edges, so an index written from a
+    one-row-group source of 20k x 64 vectors reads back with rows in every
+    partition the planner cuts from its data file. The same write with the
+    bound at parquet-mr's 128 MiB default leaves one partition holding
+    every row. aknn_search answers bit-equal over both layouts, in the same
+    2 jobs and no exchange. (Spark's write task 0 leaves a header-only part
+    file when its input split was empty; the partition that reads it alone
+    holds no rows.)"""
+    import os
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from elastik_nearest_neighbors_spark import api
+
+    n, dim = 20_000, 64
+    vecs = np.random.default_rng(13).standard_normal((n, dim))
+    src = str(tmp_path / "src.parquet")
+    vec_col = pa.ListArray.from_arrays(np.arange(0, n * dim + 1, dim, dtype=np.int32), vecs.ravel())
+    pq.write_table(pa.table({"_id": np.arange(n), "_aknn_vector": vec_col}), src, row_group_size=n)
+    docs = spark.read.parquet(src)
+    model = api.aknn_create(docs)
+
+    def write_index(name):
+        """(the index read back, rows per read partition, header-only files)"""
+        path = str(tmp_path / name)
+        api.aknn_index(docs, model).write.parquet(path)
+        files = [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
+        indexed = spark.read.parquet(path)
+        counts = indexed.select("_id").rdd.mapPartitions(lambda rows: [sum(1 for _ in rows)]).collect()
+        return indexed, counts, sum(pq.ParquetFile(f).metadata.num_rows == 0 for f in files)
+
+    bounded, counts, headers = write_index("bounded")
+    prev = spark.conf.get("parquet.block.size", None)
+    spark.conf.set("parquet.block.size", str(128 << 20))
+    try:
+        one_group, one_counts, one_headers = write_index("one_group")
+    finally:
+        if prev is None:
+            spark.conf.unset("parquet.block.size")
+        else:
+            spark.conf.set("parquet.block.size", prev)
+    assert len(counts) - headers > 1 and counts.count(0) <= headers and sum(counts) == n, (counts, headers)
+    assert len(one_counts) - one_headers > 1 and sum(c > 0 for c in one_counts) == 1, (one_counts, one_headers)
+
+    ids = list(range(0, n, n // 16))
+    want = sorted(map(tuple, api.aknn_search(one_group, ids, 100, 10).collect()))
+    out, stages, ran = _executed(spark, lambda: api.aknn_search(bounded, ids, 100, 10))
+    assert stages == [1, 1] and len(ran) == 2 and not [p for p in ran if "Exchange" in p], (stages, ran)
+    assert sorted(map(tuple, out.collect())) == want and {r[0] for r in want} == set(ids)
+
+
 def test_ann_search_broadcasts_query_side(spark):
     """knn.ann_search_lsh ships the query side to every index task and
     never moves the index: the query rows (hashed by the model) come to the

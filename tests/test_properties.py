@@ -948,3 +948,34 @@ def test_collision_search_refuses_a_merge_beyond_max_result_size(spark):
     assert sorted(map(tuple, knn.collision_search(idx, q, k1, 5, "vec_id", "v").collect())) == want
     with pytest.raises(ValueError, match="spark.driver.maxResultSize"):
         knn.collision_search(idx, q, k1 + 1, 5, "vec_id", "v")
+
+
+def test_collision_search_refuses_mismatched_vector_dims(spark):
+    """Where the DataFrame reference (knn.exact_scores) scores null,
+    collision_search raises a ValueError that names both dims: a 2-d query
+    against a 4-d index (zipping the axes would put it at 0.0 from
+    [1, 1, 5, 5]), query rows of dims 1 and 3, and an index whose 2-row
+    batches each hold one dim but differ from one another."""
+    import pytest
+
+    from elastik_nearest_neighbors_spark.operators import knn
+
+    ddl = "vec_id long, v array<double>, hashes array<bigint>"
+    rows = [(1, [1.0, 1.0, 5.0, 5.0], [0]), (2, [0.0, 0.0, 0.0, 0.0], [0])]
+    idx = spark.createDataFrame(rows, ddl).coalesce(1)
+    q4 = spark.createDataFrame([(9, [1.0, 1.0, 5.0, 4.0], [0])], ddl)
+    assert sorted(r.distance for r in knn.collision_search(idx, q4, 10, 5, "vec_id", "v").collect()) == [1.0, 6.557439]
+    with pytest.raises(ValueError, match="vector dim 4, the query rows dim 2"):
+        knn.collision_search(idx, spark.createDataFrame([(9, [1.0, 1.0], [0])], ddl), 10, 5, "vec_id", "v")
+    ragged = spark.createDataFrame([(8, [1.0], [0]), (9, [1.0, 1.0, 5.0], [0])], ddl)
+    with pytest.raises(ValueError, match="vector dims 1 and 3"):
+        knn.collision_search(idx, ragged, 10, 5, "vec_id", "v")
+
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    try:
+        mixed = spark.createDataFrame(rows + [(3, [1.0, 1.0, 5.0], [0]), (4, [0.0, 0.0, 0.0], [0])], ddl)
+        with pytest.raises(ValueError, match="vector dim 3, the query rows dim 4"):
+            knn.collision_search(mixed.coalesce(1), q4, 10, 5, "vec_id", "v")
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
